@@ -278,56 +278,66 @@ def _rewrite_spatial_predicates(query: str) -> str:
     """The SpatialFilterRule analog for SQL TEXT (reference:
     rules/GeoMesaSpatialFilterRule.scala translates RexNode ST_* calls
     into pushed GeoMesa filters). Spark's Catalyst cannot push a Python
-    UDF predicate into a parquet scan, so each
-    ``ST_Pred(ST_MakePoint(x, y), ST_GeomFromText('...'))`` call is
-    rewritten to ``(bbox-range conjunction AND original-call)``:
+    UDF predicate into a parquet scan, and the bare call costs three
+    per-row Python UDFs (point WKB encode, literal WKB re-emit, relate).
+    Each ``ST_Pred(ST_MakePoint(x, y), ST_GeomFromText('...'))`` call,
+    in either argument order, is REPLACED by
+    ``(bbox-range conjunction AND exact coordinate predicate)``:
 
     - the bbox ranges are plain column comparisons — sargable, so they
       reach the scan as PushedFilters (row-group/file pruning, and
       cell-range pruning on a write_geo_table layout);
-    - the original UDF call stays as the exact residual (cover false
-      positives never leak — same contract as plan/filter.py).
+    - the exact predicate runs over the coordinate doubles
+      (functions/st.point_predicate_sql): plain comparisons for a
+      rectangle with intersects/within and for DWithin against a POINT,
+      otherwise one ``ST_PointPredicate`` kernel call per Arrow batch.
+      Flipped ``Contains(literal, pt)`` maps to within.
 
-    DWithin expands the envelope by the literal distance. Geometries
-    whose WKT fails to parse are left untouched (the bare UDF still
-    answers exactly).
+    The answers equal the bare call's, NULLs included: a NULL
+    coordinate gives False (and NULL for DWithin, whose bbox is ORed
+    with the NULL test so it cannot turn that NULL into False).
+
+    DWithin expands the envelope by the literal distance. Left as the
+    bare call: unparseable WKT, the order where the point would have to
+    contain the literal, and DWithinSphere (which gains only the bbox
+    conjunction, ANDed with the original call).
 
     Also normalizes the Calcite 2-arg ST_Transform idiom first (see
     _rewrite_two_arg_transform).
     """
     query = _rewrite_two_arg_transform(query)
 
-    def _bbox_and(whole: str, pred: str, x: str, y: str, wkt: str,
-                  dist: str | None, point_first: bool) -> str:
+    def _rewrite(whole: str, pred: str, x: str, y: str, wkt: str,
+                 dist: str | None, point_first: bool) -> str:
+        from geomesa_sql_spark.functions.st import point_predicate_sql
         from geomesa_sql_spark.geom import geom_from_wkt
 
-        try:
-            g = geom_from_wkt(wkt)
-        except Exception:
-            return whole
         p = pred.lower()
         # the order where the POINT would have to contain/cover the
         # other geometry gives no envelope shrink; leave the exact call
         if (point_first and p == "contains") or (not point_first and p == "within"):
             return whole
-        minx, miny, maxx, maxy = g.envelope()
-        pad = float(dist) if (dist and p == "dwithin") else 0.0
+        try:
+            g = geom_from_wkt(wkt)
+            minx, miny, maxx, maxy = g.envelope()
+            d = float(dist) if dist else None
+        except Exception:
+            return whole
+        pad = d if (d is not None and p == "dwithin") else 0.0
         pad_y = pad
         if p == "dwithinsphere":
             # metres → conservative degrees (join/spatial's proven
             # over-cover). A cap that spills past ±180 or clamps at a
             # pole isn't one box — leave just the exact UDF call there
             # (plan/filter.spatial_filter handles those shapes fully).
-            if not dist:
+            if d is None:
                 return whole
             import numpy as _np
 
             from geomesa_sql_spark.join.spatial import _sphere_deg_bounds
 
             band_lat = max(abs(miny), abs(maxy))
-            dlat, dlon = _sphere_deg_bounds(
-                _np.array([band_lat]), float(dist)
-            )
+            dlat, dlon = _sphere_deg_bounds(_np.array([band_lat]), d)
             pad_y = float(_np.atleast_1d(dlat)[0])
             pad = float(dlon[0])
             if (
@@ -342,15 +352,24 @@ def _rewrite_spatial_predicates(query: str) -> str:
             f"{x} >= {minx - pad!r} AND {x} <= {maxx + pad!r} AND "
             f"{y} >= {miny - pad_y!r} AND {y} <= {maxy + pad_y!r}"
         )
-        return f"({bbox} AND {whole})"
+        op = "within" if p == "contains" else p  # point-first name
+        if p == "dwithinsphere" or (d is None) == (op == "dwithin"):
+            # no coordinate kernel (or an arity the bare call rejects
+            # itself): keep the original call as the exact residual
+            return f"({bbox} AND {whole})"
+        exact = point_predicate_sql(op, x, y, g, wkt, d)
+        if op == "dwithin":
+            return f"((({bbox}) OR {x} IS NULL OR {y} IS NULL) AND {exact})"
+        tail = "" if exact is None else f" AND {exact}"
+        return f"({x} IS NOT NULL AND {y} IS NOT NULL AND {bbox}{tail})"
 
     def _sub(m: _re.Match) -> str:
         pred, x, y, wkt, dist = m.groups()
-        return _bbox_and(m.group(0), pred, x, y, wkt, dist, point_first=True)
+        return _rewrite(m.group(0), pred, x, y, wkt, dist, point_first=True)
 
     def _sub_flip(m: _re.Match) -> str:
         pred, wkt, x, y, dist = m.groups()
-        return _bbox_and(m.group(0), pred, x, y, wkt, dist, point_first=False)
+        return _rewrite(m.group(0), pred, x, y, wkt, dist, point_first=False)
 
     return _SPATIAL_PRED_FLIP_RE.sub(
         _sub_flip, _SPATIAL_PRED_RE.sub(_sub, query)
@@ -549,6 +568,8 @@ class Engine:
             n = n_upd + n_ins
         elif verb == "update":
             set_part, where = body
+            if where is not None:
+                where = _rewrite_spatial_predicates(where)
             exprs: dict = dict(_split_assignments(set_part))
             # SET-side scalar subqueries (r4 verdict #8): F.expr can't
             # plan them, so each such SET expression is planned by
@@ -564,7 +585,8 @@ class Engine:
                     )
             n = self.update(table, exprs, self._where_arg(table, where))
         else:
-            n = self.delete(table, self._where_arg(table, body))
+            where = None if body is None else _rewrite_spatial_predicates(body)
+            n = self.delete(table, self._where_arg(table, where))
         return self.spark.createDataFrame([(n,)], "affected bigint")
 
     def _where_arg(
@@ -579,7 +601,9 @@ class Engine:
         io/dml.py's update/delete consume as a distributed semi/anti
         join. The reference plans DML through the full Calcite planner
         so subqueries work there (ModificationTest.scala surface); this
-        closes the SQL-text gap noted in VERDICT r3 (missing #3)."""
+        closes the SQL-text gap noted in VERDICT r3 (missing #3).
+        ``where`` arrives already through _rewrite_spatial_predicates,
+        like every SELECT's text."""
         if where is None:
             return None
         if _re.search(r"(?is)\(\s*SELECT\b", _mask_literals(where)):

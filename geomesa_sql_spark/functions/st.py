@@ -19,6 +19,7 @@ UDF here is a pandas_udf over Arrow batches.
 
 from __future__ import annotations
 
+import functools
 import re as _re
 
 import numpy as np
@@ -102,89 +103,81 @@ def st_predicate_wkb(pred: str, a: Column, b: Column, distance: float | None = N
     return _udf(a, b)
 
 
+def point_literal_predicate(
+    pred: str, x: np.ndarray, y: np.ndarray, g: Geom, distance=None
+) -> np.ndarray:
+    """Exact ``ST_<pred>(POINT(x, y), g)`` over coordinate arrays — the
+    one kernel call behind every point-vs-literal-geometry predicate
+    (st_predicate_point_cols and the SQL rewrite target
+    ``ST_PointPredicate``). Equal, row for row, to the relate UDF over
+    ``ST_MakePoint`` WKB: intersects is the per-part point kernel the
+    relate path itself uses, within an areal literal is the strict
+    point-in-polygon, DWithin is the point-to-geometry distance; every
+    other case runs the pairwise relate. ``distance`` may be a per-row
+    array. NaN coordinates (Arrow's NULL) → False."""
+    pred = pred.lower()
+    x = np.asarray(x, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    if pred == "dwithin":
+        with np.errstate(invalid="ignore"):
+            return kernel.points_to_geom_dist(x, y, g) <= distance
+    if pred == "intersects":
+        return kernel.points_intersect_geom(x, y, g)
+    parts = g.flatten()
+    if pred == "within" and parts and all(p.type == model.POLYGON for p in parts):
+        # purely areal only: a mixed collection has dimension 2 too, but
+        # points_in_polygon rejects its non-polygon parts (review r3)
+        return kernel.points_in_polygon(x, y, g, boundary="exclude")
+    out = np.zeros(len(x), dtype=bool)
+    ok = ~(np.isnan(x) | np.isnan(y))
+    if ok.any():
+        wkb = geom_to_wkb(g)
+        pts = _point_wkb_array(x[ok], y[ok])
+        out[ok] = kernel.relate_many(pts, [wkb] * len(pts), pred, distance)
+    return out
+
+
 def st_predicate_point_cols(
     pred: str, x: Column, y: Column, geom: Geom | str, distance: float | None = None
 ) -> Column:
     """Relate predicate: point from lon/lat columns vs a *literal* geometry.
 
     The hot path for filters like ``ST_Within(pt, <polygon literal>)``
-    (reference: FilterTest.scala:193-227). Rectangles become pure Column
-    range predicates (JVM codegen, parquet-pushable); everything else is
-    a vectorized kernel call per Arrow batch.
+    (reference: FilterTest.scala:193-227). Rectangles and DWithin
+    against a point become pure Column predicates (JVM codegen,
+    parquet-pushable); everything else is one vectorized kernel call
+    per Arrow batch (:func:`point_literal_predicate`).
     """
     g = geom_from_wkt(geom) if isinstance(geom, str) else geom
     pred_l = pred.lower()
-    if pred_l == "dwithin":
-        if g.type == "Point":
-            gx, gy = float(g.coords[0]), float(g.coords[1])
-            return (x - gx) * (x - gx) + (y - gy) * (y - gy) <= float(distance) ** 2
-
-        @F.pandas_udf(T.DoubleType())
-        def _dist(px: pd.Series, py: pd.Series) -> pd.Series:
-            return pd.Series(
-                kernel.points_to_geom_dist(px.to_numpy(np.float64), py.to_numpy(np.float64), g)
-            )
-
-        return _dist(x, y) <= float(distance)
+    if pred_l == "dwithin" and g.type == model.POINT:
+        gx, gy = float(g.coords[0]), float(g.coords[1])
+        return (x - gx) * (x - gx) + (y - gy) * (y - gy) <= float(distance) ** 2
 
     if _is_rectangle(g) and pred_l in ("within", "intersects", "contains", "coveredby"):
         minx, miny, maxx, maxy = g.envelope()
-        inside = (x >= minx) & (x <= maxx) & (y >= miny) & (y <= maxy)
         if pred_l == "within":
-            # strict interior required somewhere: for a point, within a
-            # rectangle means inside incl. boundary minus... JTS: point on
-            # boundary is NOT within. Exclude the boundary.
+            # JTS: a point on the boundary is NOT within — strict interior
             return (x > minx) & (x < maxx) & (y > miny) & (y < maxy)
         if pred_l == "contains":  # point contains rectangle: impossible
             return F.lit(False)
-        return inside
-
-    purely_areal = all(
-        part.type == "Polygon" for part in g.flatten()
-    ) and len(g.flatten()) > 0
-    if pred_l in ("within", "intersects"):
-        boundary = "exclude" if pred_l == "within" else "include"
-        if purely_areal:
-            # dimension()==2 alone is NOT enough: a mixed collection
-            # maxes at 2 but points_in_polygon rejects non-polygon
-            # parts (review r3)
-
-            @F.pandas_udf(T.BooleanType())
-            def _pip(px: pd.Series, py: pd.Series) -> pd.Series:
-                return pd.Series(
-                    kernel.points_in_polygon(
-                        px.to_numpy(np.float64), py.to_numpy(np.float64), g, boundary=boundary
-                    )
-                )
-
-            return _pip(x, y)
-
-        if pred_l == "intersects":
-
-            @F.pandas_udf(T.BooleanType())
-            def _isect(px: pd.Series, py: pd.Series) -> pd.Series:
-                return pd.Series(
-                    kernel.points_intersect_geom(
-                        px.to_numpy(np.float64), py.to_numpy(np.float64), g
-                    )
-                )
-
-            return _isect(x, y)
-        # within against a 0/1-dim or mixed literal: boundary points
-        # do NOT qualify (JTS) — fall through to the exact relate
-
-    # general fallback: pairwise relate against the literal
-    wkb = geom_to_wkb(g)
+        return (x >= minx) & (x <= maxx) & (y >= miny) & (y <= maxy)
 
     @F.pandas_udf(T.BooleanType())
-    def _rel(px: pd.Series, py: pd.Series) -> pd.Series:
-        pts = _point_wkb_array(px.to_numpy(np.float64), py.to_numpy(np.float64))
-        return pd.Series(kernel.relate_many(pts, [wkb] * len(pts), pred_l, distance))
+    def _kernel(px: pd.Series, py: pd.Series) -> pd.Series:
+        return pd.Series(
+            point_literal_predicate(
+                pred_l, px.to_numpy(np.float64), py.to_numpy(np.float64), g, distance
+            )
+        )
 
-    return _rel(x, y)
+    return _kernel(x, y)
 
 
 def _is_rectangle(g: Geom) -> bool:
+    """Axis-aligned rectangle: one 5-vertex ring whose every edge is
+    horizontal or vertical (two distinct x and y values alone would
+    also admit the self-crossing bow-tie (0 0, 1 1, 0 1, 1 0, 0 0))."""
     if g.type != "Polygon" or len(g.coords) != 1:
         return False
     ring = g.coords[0]
@@ -192,7 +185,37 @@ def _is_rectangle(g: Geom) -> bool:
         return False
     xs = set(ring[:, 0].tolist())
     ys = set(ring[:, 1].tolist())
-    return len(xs) == 2 and len(ys) == 2
+    d = np.diff(ring, axis=0)
+    return len(xs) == 2 and len(ys) == 2 and bool(((d[:, 0] == 0) ^ (d[:, 1] == 0)).all())
+
+
+def point_predicate_sql(
+    pred: str, x: str, y: str, g: Geom, wkt: str, distance: float | None = None
+) -> str | None:
+    """SQL text of the exact ``ST_<pred>(ST_MakePoint(x, y), g)`` over
+    the coordinate columns — the SQL-text twin of
+    :func:`st_predicate_point_cols`, emitted by Engine.sql's rewrite:
+    a rectangle with intersects/within and DWithin against a point are
+    plain comparisons (no UDF); every other literal is one
+    ``ST_PointPredicate`` call. None: the bbox alone is exact
+    (intersects a rectangle). Literals carry the ``D`` suffix so the
+    arithmetic is DOUBLE whatever the column type, as ST_MakePoint's is."""
+    if pred == "dwithin" and g.type == model.POINT:
+        gx, gy = float(g.coords[0]), float(g.coords[1])
+        return (
+            f"(({x} - ({gx!r}D)) * ({x} - ({gx!r}D)) + ({y} - ({gy!r}D)) * "
+            f"({y} - ({gy!r}D)) <= ({float(distance) ** 2!r}D))"
+        )
+    if _is_rectangle(g) and pred in ("within", "intersects"):
+        if pred == "intersects":
+            return None
+        minx, miny, maxx, maxy = g.envelope()
+        return (
+            f"{x} > ({minx!r}D) AND {x} < ({maxx!r}D) AND "
+            f"{y} > ({miny!r}D) AND {y} < ({maxy!r}D)"
+        )
+    dist = "" if distance is None else f", {float(distance)!r}D"
+    return f"ST_PointPredicate('{pred}', {x}, {y}, '{wkt}'{dist})"
 
 
 def st_distance_point_cols(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
@@ -449,6 +472,40 @@ def _st_dwithin_sphere(wa: pd.Series, wb: pd.Series,
     return pd.Series(out, dtype="boolean")
 
 
+@functools.lru_cache(maxsize=64)
+def _literal_geom(wkt: str) -> Geom:
+    return geom_from_wkt(wkt)
+
+
+@F.pandas_udf(T.BooleanType())
+def _st_point_predicate(
+    pred: pd.Series, x: pd.Series, y: pd.Series, wkt: pd.Series, *distance: pd.Series
+) -> pd.Series:
+    """ST_PointPredicate(pred, x, y, wkt[, distance]) — the target of
+    Engine.sql's literal-geometry rewrite: ``ST_<pred>(ST_MakePoint(x,
+    y), ST_GeomFromText(wkt)[, distance])`` as one kernel call over the
+    coordinate doubles (no per-row WKB, the literal parsed once per
+    worker). Same answers as that call, NULLs included: NULL x/y is
+    False, except for dwithin, where NULL x/y/distance is NULL like
+    ST_DWithin's. A NULL predicate name or WKT gives NULL."""
+    xs = x.to_numpy(np.float64, na_value=np.nan)
+    ys = y.to_numpy(np.float64, na_value=np.nan)
+    d = distance[0].to_numpy(np.float64, na_value=np.nan) if distance else None
+    out = pd.array(np.zeros(len(xs), dtype=bool), dtype="boolean")
+    keys = pd.DataFrame({"p": pred, "w": wkt})
+    for (p, w), rows in keys.groupby(["p", "w"], sort=False).indices.items():
+        p = p.lower()
+        res = point_literal_predicate(
+            p, xs[rows], ys[rows], _literal_geom(w), None if d is None else d[rows]
+        )
+        res = pd.array(res, dtype="boolean")
+        if p == "dwithin":
+            res[np.isnan(xs[rows]) | np.isnan(ys[rows]) | np.isnan(d[rows])] = pd.NA
+        out[rows] = res
+    out[(pred.isna() | wkt.isna()).to_numpy()] = pd.NA
+    return pd.Series(out)
+
+
 def _envelope_schema() -> T.StructType:
     return T.StructType(
         [
@@ -536,6 +593,7 @@ def register_all(spark: SparkSession) -> None:
         return out
 
     spark.udf.register("ST_DWithin", _dwithin)
+    spark.udf.register("ST_PointPredicate", _st_point_predicate)
 
     @F.pandas_udf(T.BinaryType())
     def _buffer(wkb: pd.Series, d: pd.Series) -> pd.Series:

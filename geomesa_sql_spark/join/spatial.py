@@ -44,8 +44,8 @@ from pyspark.sql import types as T
 from geomesa_sql_spark.cells import cover_envelopes, lonlat_to_cell
 from geomesa_sql_spark.cells.column import zorder_cell_col
 from geomesa_sql_spark.cells.curve import res_for_extent
-from geomesa_sql_spark.functions.st import st_envelope_wkb
 from geomesa_sql_spark.geom import kernel
+from geomesa_sql_spark.geom.wkb import wkb_envelopes
 
 _LOG = logging.getLogger(__name__)
 
@@ -658,11 +658,14 @@ def _sample_extents(df: DataFrame, side: GeomSide):
     """(mean_w, mean_h, max_w, max_h) of a 1000-row envelope sample —
     ONE bounded collect serves both the typical-extent estimate and
     the per-row cover cap."""
-    sample = df.select(st_envelope_wkb(side.wkb).alias("e")).limit(1000).collect()
-    if not sample:
+    blobs = [r[0] for r in df.select(side.wkb).limit(1000).collect()]
+    if not blobs:
         return None
-    ws = [r.e.maxx - r.e.minx for r in sample]
-    hs = [r.e.maxy - r.e.miny for r in sample]
+    # raw WKB decoded after the bounded collect: bit-identical to the
+    # ST_Envelope UDF, without its Python-worker round trip per join plan
+    env = wkb_envelopes(blobs, strict=True)
+    ws = (env[:, 2] - env[:, 0]).tolist()
+    hs = (env[:, 3] - env[:, 1]).tolist()
     return (
         float(np.mean(ws)), float(np.mean(hs)),
         float(max(ws)), float(max(hs)),

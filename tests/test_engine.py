@@ -507,6 +507,106 @@ def test_sql_rewrite_differential_sweep(spark, sf_dir, tmp_path):
         assert got == bare, f"rewrite changed semantics for: {pred}\n{rewritten}"
 
 
+# literal geometries for the coordinate-kernel rewrite: a rectangle (plain
+# comparisons), a polygon with a hole, a MultiPolygon, a point and a line
+_LIT_RECT = "POLYGON ((-5 -5, 5 -5, 5 5, -5 5, -5 -5))"
+_LIT_HOLED = "POLYGON ((0 0, 12 1, 10 10, 1 11, 0 0), (3 3, 6 3, 6 6, 3 6, 3 3))"
+_LIT_MULTI = ("MULTIPOLYGON (((20 20, 30 20, 25 28, 20 20)), "
+              "((40 40, 50 40, 50 50, 40 50, 40 40)))")
+_LIT_POINT = "POINT (1 2)"
+_LIT_LINE = "LINESTRING (-20 -20, -10 -12, -4 -12)"
+
+
+def _literal_probe_points(spark):
+    """Every vertex and edge midpoint of the literals, points inside
+    and outside each (the hole too), a grid, and NULL lon / lat rows."""
+    from geomesa_sql_spark.geom import geom_from_wkt
+
+    pts = set()
+    for wkt in (_LIT_RECT, _LIT_HOLED, _LIT_MULTI, _LIT_POINT, _LIT_LINE):
+        g = geom_from_wkt(wkt)
+        for x, y in g.all_coords().tolist():
+            pts.add((x, y))
+        for x0, y0, x1, y1 in g.segments().tolist():
+            pts.add(((x0 + x1) / 2, (y0 + y1) / 2))
+    pts |= {(4.5, 4.5), (2.0, 2.0), (25.0, 22.0), (45.0, 45.0), (1.0, 3.5),
+            (-7.0, -12.0), (13.0, 5.0), (35.0, 35.0)}
+    pts |= {(x * 2.5 - 25.0, y * 2.5 - 25.0) for x in range(33) for y in range(33)}
+    rows = [(i, x, y) for i, (x, y) in enumerate(sorted(pts))]
+    n = len(rows)
+    rows += [(n, None, 1.0), (n + 1, 4.5, None), (n + 2, None, None),
+             (n + 3, None, 45.0), (n + 4, 2.0, None)]
+    return spark.createDataFrame(rows, "id long, lon double, lat double")
+
+
+def test_sql_literal_predicates_match_bare_udfs(spark, tmp_path):
+    """The literal-geometry rewrite REPLACES the three-UDF call with the
+    coordinate kernel (or plain comparisons): in WHERE and in the SELECT
+    list — where NULL vs False shows — every answer equals bare
+    spark.sql's, over vertices, edge midpoints, a hole, a MultiPolygon,
+    DWithin against polygon, point and line literals, and NULL coords."""
+    from geomesa_sql_spark.engine import _rewrite_spatial_predicates
+
+    eng = Engine(spark)
+    path = str(tmp_path / "lit_pts")
+    _literal_probe_points(spark).coalesce(1).write.parquet(path)
+    eng.register_table("lit_pts", path)
+    preds = []
+    for g in (_LIT_RECT, _LIT_HOLED, _LIT_MULTI, _LIT_POINT, _LIT_LINE):
+        pt, lit = "ST_MakePoint(lon, lat)", f"ST_GeomFromText('{g}')"
+        preds += [
+            f"ST_Intersects({pt}, {lit})",
+            f"ST_Intersects({lit}, {pt})",
+            f"ST_Within({pt}, {lit})",
+            f"ST_Contains({lit}, {pt})",
+            f"ST_DWithin({pt}, {lit}, 1.5)",
+            f"ST_DWithin({lit}, {pt}, 2.75)",
+        ]
+    preds += [
+        f"ST_Touches(ST_MakePoint(lon, lat), ST_GeomFromText('{_LIT_HOLED}'))",
+        f"ST_Equals(ST_MakePoint(lon, lat), ST_GeomFromText('{_LIT_POINT}'))",
+    ]
+    for pred in preds:
+        assert "ST_MakePoint" not in _rewrite_spatial_predicates(pred), pred
+    # one query per side and position: the WHERE forms as a UNION ALL
+    # keyed by predicate, the SELECT-list forms as one column each
+    where_q = " UNION ALL ".join(
+        f"SELECT {k} AS k, id FROM lit_pts WHERE {p}" for k, p in enumerate(preds)
+    )
+    select_q = "SELECT id, " + ", ".join(
+        f"{p} AS r{k}" for k, p in enumerate(preds)
+    ) + " FROM lit_pts"
+    for q in (where_q, select_q):
+        got = sorted(map(tuple, eng.sql(q).collect()))
+        want = sorted(map(tuple, spark.sql(q).collect()))
+        diff = sorted(set(got) ^ set(want))[:10]
+        assert got == want, f"answers changed; first differing rows: {diff}"
+
+
+def test_sql_dml_where_gets_spatial_rewrite(spark, sf_dir, tmp_path):
+    """DELETE ... WHERE ST_Contains(<literal>, ST_MakePoint(lon, lat))
+    runs through the same rewrite as a SELECT: the affected count and
+    the surviving rows equal the bare-UDF answer."""
+    from geomesa_sql_spark.io.fixtures import orders_points
+
+    penta = ("POLYGON ((-40.0037 -20.0013, 30.0041 -45.0029, 80.0017 10.0023, "
+             "20.0031 60.0019, -55.0043 25.0037))")
+    pred = f"ST_Contains(ST_GeomFromText('{penta}'), ST_MakePoint(lon, lat))"
+    src = orders_points(spark, sf_dir).select(
+        F.col("o_orderkey").alias("image_id"), "lon", "lat"
+    )
+    src.createOrReplaceTempView("dml_src")
+    want_gone = {r[0] for r in spark.sql(f"SELECT image_id FROM dml_src WHERE {pred}").collect()}
+    want_left = {r[0] for r in spark.sql("SELECT image_id FROM dml_src").collect()} - want_gone
+    assert want_gone and want_left
+
+    eng = Engine(spark)
+    eng.create_table("dml_pts", str(tmp_path / "dml_pts"), src)
+    n = eng.sql(f"DELETE FROM dml_pts WHERE {pred}").collect()[0][0]
+    assert n == len(want_gone)
+    assert {r[0] for r in eng.sql("SELECT image_id FROM dml_pts").collect()} == want_left
+
+
 def test_sql_right_join_not_silently_inner(spark, sf_dir, tmp_path):
     """Review r2: 'RIGHT JOIN' must never be captured as a table alias
     and planned as an INNER spatial join (silent row loss). The router

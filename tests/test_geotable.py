@@ -172,6 +172,42 @@ def test_geotable_honors_written_res(spark, sf_dir, tmp_path):
     assert want > 0 and got == want
 
 
+def test_where_spatial_on_iceberg_table_after_delete(spark, sf_dir, tmp_path):
+    """Engine.table(name).where_spatial(...) on an Iceberg table reads
+    the current snapshot with its deletes applied (it used to read the
+    table directory as plain parquet: UNABLE_TO_INFER_SCHEMA), and a
+    write_geo_iceberg layout prunes at its recorded resolution."""
+    from geomesa_sql_spark.engine import Engine
+    from geomesa_sql_spark.io.iceberg import write_geo_iceberg
+
+    penta = ("POLYGON ((-40.0037 -20.0013, 30.0041 -45.0029, 80.0017 10.0023, "
+             "20.0031 60.0019, -55.0043 25.0037))")
+    pts = orders_points(spark, sf_dir).select(
+        F.col("o_orderkey").alias("image_id"), "lon", "lat"
+    )
+    eng = Engine(spark)
+    eng.create_table("ice_pts", str(tmp_path / "ice_pts"), pts, format="iceberg")
+    assert eng.sql("DELETE FROM ice_pts WHERE image_id % 3 = 0").collect()[0][0] > 0
+
+    got = eng.table("ice_pts").where_spatial("intersects", penta, x="lon", y="lat").df()
+    want = eng.sql(
+        "SELECT count(*) FROM ice_pts WHERE ST_Intersects(ST_MakePoint(lon, lat), "
+        f"ST_GeomFromText('{penta}'))"
+    ).collect()[0][0]
+    assert want > 0 and got.count() == want
+    assert got.filter("image_id % 3 = 0").count() == 0
+
+    geo8 = str(tmp_path / "ice_geo8")
+    write_geo_iceberg(pts, geo8, res=8)
+    eng.register_table("ice_geo8", geo8)
+    got8 = eng.table("ice_geo8").where_spatial("within", penta, x="lon", y="lat")
+    assert got8.spec.data_res == 8
+    want8 = GeoTable(spark, geo8, pushdown=False).where_spatial(
+        "within", penta, x="lon", y="lat"
+    )
+    assert got8.df().count() == want8.df().count() > 0
+
+
 def test_write_tiled_cell_order_survives_and_meta(spark, sf_dir, tmp_path):
     """Review r4o: a partitioned write REQUIRES ordering on the
     partition column — sorting by cell alone let Spark inject its own

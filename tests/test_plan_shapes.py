@@ -284,3 +284,61 @@ def test_knn_adaptive_row_cap_reroutes_compressible_queries(spark, sf_dir):
     finally:
         knn_mod.knn_join_cells = orig_cells
         spatial_mod._should_broadcast = orig_bcast
+
+
+def _python_evals(plan: str) -> int:
+    return plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
+
+
+def test_sql_literal_predicates_evaluate_over_coordinates(spark, sf_dir):
+    """Engine.sql's literal-geometry rewrite: a pentagon runs ONE Python
+    eval node whose arguments are the coordinate columns (no per-row
+    ST_MakePoint / ST_GeomFromText WKB); a rectangle and DWithin against
+    a POINT run none."""
+    from geomesa_sql_spark.engine import Engine
+
+    eng = Engine(spark)
+    eng.register_view("shape_pts", orders_points(spark, sf_dir).select("lon", "lat"))
+
+    def plan(pred: str) -> str:
+        return _plan(eng.sql(f"SELECT count(*) FROM shape_pts WHERE {pred}"))
+
+    penta = plan(f"ST_Contains(ST_GeomFromText('{PENTA}'), ST_MakePoint(lon, lat))")
+    assert _python_evals(penta) == 1, penta
+    assert "ST_MakePoint" not in penta and "ST_GeomFromText" not in penta, penta
+    for pred in (
+        f"ST_Within(ST_MakePoint(lon, lat), ST_GeomFromText('{RECT}'))",
+        f"ST_Intersects(ST_GeomFromText('{RECT}'), ST_MakePoint(lon, lat))",
+        "ST_DWithin(ST_MakePoint(lon, lat), ST_GeomFromText('POINT (10 10)'), 5.0)",
+    ):
+        p = plan(pred)
+        assert _python_evals(p) == 0, p
+
+
+def test_join_resolution_sample_runs_no_python(spark, sf_dir, tmp_path, monkeypatch):
+    """spatial_join(res=None)'s envelope sample decodes raw WKB after a
+    bounded collect: at most two jobs (the bounded limit's scale-up) and no
+    Python eval node in what it collects."""
+    from geomesa_sql_spark.join.spatial import _sample_extents
+
+    path = str(tmp_path / "polys")  # stored WKB: the fixture builds it by UDF
+    nation_squares(spark, sf_dir).select("n_nationkey", "poly").write.parquet(path)
+    polys = spark.read.parquet(path)
+    plans = []
+    DataFrame = type(polys)
+    collect = DataFrame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("res_sample", "probe")
+    try:
+        ext = _sample_extents(polys, wkb_side("poly"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert ext is not None and ext[2] > 0
+    assert plans and not any(_python_evals(p) for p in plans), plans
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup("res_sample")) <= 2

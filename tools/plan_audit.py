@@ -69,9 +69,9 @@ def main() -> int:
         plan,
     ))
 
-    # 1b. geodesic (dwithin_sphere) join: exactly one Python stage — the
-    # per-row lon-radius cover on the point side; the haversine refine
-    # is a JVM Column (ASIN/SIN/COS visible in the plan), never a UDF
+    # 1b. geodesic (dwithin_sphere) join: no Python stage at all — the
+    # per-row lon-radius cover is a JVM Generate over sequence() and the
+    # haversine refine a JVM Column (ASIN/SIN/COS visible in the plan)
     centers = nation_squares(spark, sf).select("n_nationkey", "cx", "cy")
     gj = spatial_join(
         pts, centers, point_side("lon", "lat"), point_side("cx", "cy"),
@@ -79,17 +79,17 @@ def main() -> int:
     ).select("o_orderkey", "n_nationkey")
     plan = _fmt(gj)
     assert "BroadcastHashJoin" in plan, plan
-    assert plan.split("\n\n")[0].count("ArrowEvalPython") == 1, (
-        "dwithin_sphere must have exactly one Python stage (the cover)")
+    assert plan.split("\n\n")[0].count("ArrowEvalPython") == 0, (
+        "dwithin_sphere must run no Python stage (JVM cover and refine)")
     assert "BatchEvalPython" not in plan, plan
     assert "ASIN" in plan.upper(), (
         "haversine refine must be a JVM Column expression in the plan")
     sections.append((
         "Geodesic DWithin join (metres, point × point)",
         "The metres-radius join keeps the refine in whole-stage codegen "
-        "(pure-Column haversine, geom/geodesic.py); the only Python "
-        "stage is the per-row longitude-radius cell cover, and the "
-        "25-row POI side broadcasts.",
+        "(pure-Column haversine, geom/geodesic.py); the per-row "
+        "longitude-radius cell cover is a JVM sequence/explode, so no "
+        "Python stage runs at all, and the 25-row POI side broadcasts.",
         plan,
     ))
 
@@ -157,25 +157,40 @@ def main() -> int:
         plan,
     ))
 
-    # 5. SQL-text spatial predicate: sargable bbox reaches the scan,
-    # exact UDF stays as residual
+    # 5. SQL-text spatial predicate: sargable bbox reaches the scan and
+    # the exact predicate runs over the coordinate doubles — plain
+    # comparisons for a rectangle (no Python), ONE kernel eval for a
+    # pentagon, no per-row ST_MakePoint / ST_GeomFromText WKB either way
     from geomesa_sql_spark.engine import Engine
 
     eng = Engine(spark)
     eng.register_table("audit_pts", geo)
-    q = eng.sql(
-        "SELECT o_orderkey FROM audit_pts WHERE ST_Within(ST_MakePoint(lon, lat), "
-        f"ST_GeomFromText('{rect}'))"
-    )
-    plan = _fmt(q)
-    assert "PushedFilters:" in plan and "GreaterThanOrEqual(lon" in plan, plan
-    sections.append((
-        "SQL-text spatial predicate (Engine.sql rewrite)",
-        "ST_Within(...) in SQL text gains a sargable bbox conjunction "
-        "(PushedFilters on lon/lat) while the exact UDF evaluates as "
-        "the residual — the SpatialFilterRule analog.",
-        plan,
-    ))
+    penta = ("POLYGON ((-40.0037 -20.0013, 30.0041 -45.0029, 80.0017 10.0023, "
+             "20.0031 60.0019, -55.0043 25.0037))")
+    for lit, n_eval, title, note in (
+        (rect, 0, "SQL-text spatial predicate, rectangle (Engine.sql rewrite)",
+         "ST_Within(ST_MakePoint(lon, lat), <rectangle>) in SQL text becomes "
+         "a sargable bbox conjunction (PushedFilters on lon/lat) plus the "
+         "strict-interior comparisons: no Python eval node at all — the "
+         "SpatialFilterRule analog."),
+        (penta, 1, "SQL-text spatial predicate, pentagon (Engine.sql rewrite)",
+         "A non-rectangular literal keeps the sargable bbox and evaluates "
+         "the exact predicate as ONE ArrowEvalPython over the coordinate "
+         "columns (ST_PointPredicate: vectorized point-in-polygon, literal "
+         "parsed once per worker) — no per-row point WKB encode, literal "
+         "WKB re-emit or generic relate."),
+    ):
+        q = eng.sql(
+            "SELECT o_orderkey FROM audit_pts WHERE ST_Within(ST_MakePoint(lon, lat), "
+            f"ST_GeomFromText('{lit}'))"
+        )
+        plan = _fmt(q)
+        assert "PushedFilters:" in plan and "GreaterThanOrEqual(lon" in plan, plan
+        tree = plan.split("\n\n")[0]
+        assert tree.count("ArrowEvalPython") == n_eval, plan
+        assert "BatchEvalPython" not in plan, plan
+        assert "ST_MakePoint" not in plan and "ST_GeomFromText" not in plan, plan
+        sections.append((title, note, plan))
 
     # 6. cell kNN (large query sets): pure equi-join rounds, no
     # cartesian anywhere, partial top-k inside the rank window
