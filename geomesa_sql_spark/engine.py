@@ -22,11 +22,15 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
 import uuid
+from collections import Counter
 
+from pyspark.errors import ParseException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geomesa_sql_spark import sqltree
 from geomesa_sql_spark.functions import register_all
 from geomesa_sql_spark.io.dml import SnapshotTable, _sub_outside_literals
 from geomesa_sql_spark.plan.scan import GeoTable
@@ -218,21 +222,6 @@ def _mask_literals(s: str) -> str:
         i += 1
     return "".join(out)
 
-
-def _has_routable_spatial(q: str) -> bool:
-    """Entry hint for the CTE/derived-table routers: a spatial JOIN
-    (``ON ST_*``) or a correlated spatial EXISTS anywhere in the text.
-    Generous by design — the precise shape regexes still decide
-    whether routing happens; this only gates whether the splitters
-    engage at all."""
-    if _re.search(r"(?i)\bON\s+ST_\w+\s*\(", q):
-        return True
-    return bool(
-        _re.search(r"(?i)\bEXISTS\s*\(", q)
-        and _re.search(r"(?i)\bWHERE\s+ST_\w+\s*\(", q)
-    )
-
-
 _TRANSFORM_NAME_RE = _re.compile(r"(?i)\bST_Transform\s*\(")
 
 
@@ -376,53 +365,93 @@ def _rewrite_spatial_predicates(query: str) -> str:
     )
 
 
-_JOINWORDS = r"INNER\b|LEFT\b|RIGHT\b|FULL\b|CROSS\b|OUTER\b|NATURAL\b|SEMI\b|ANTI\b|JOIN\b"
-_SPATIAL_JOIN_RE = _re.compile(
-    r"(?is)^\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+"
-    r"(?P<t1>\w+)(?:\s+(?:AS\s+)?(?!" + _JOINWORDS + r")(?P<a1>\w+))?\s+"
-    r"(?:(?P<jt>LEFT|RIGHT|FULL)(?:\s+OUTER)?\s+|INNER\s+)?JOIN\s+"
-    r"(?P<t2>\w+)(?:\s+(?:AS\s+)?(?!ON\b)(?P<a2>\w+))?\s+"
-    r"ON\s+(?P<on>ST_\w+\s*\([^()]*(?:\([^()]*\)[^()]*)*\))"
-    r"(?P<rest>\s+.+?)?\s*;?\s*$"
-)
-_SPATIAL_EXISTS_RE = _re.compile(
-    r"(?is)^\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+"
-    r"(?P<t1>\w+)(?:\s+(?:AS\s+)?(?!WHERE\b)(?P<a1>\w+))?\s+"
-    r"WHERE\s+(?P<neg>NOT\s+)?EXISTS\s*\(\s*"
-    r"SELECT\s+.+?\s+FROM\s+(?P<t2>\w+)(?:\s+(?:AS\s+)?(?!WHERE\b)(?P<a2>\w+))?\s+"
-    r"WHERE\s+(?P<on>ST_\w+\s*\([^()]*(?:\([^()]*\)[^()]*)*\))\s*\)"
-    r"(?P<rest>\s+.+?)?\s*;?\s*$"
-)
-_TAIL_RE = _re.compile(
-    r"(?is)^\s*(?:WHERE\s+(?P<where>.+?))?"
-    r"\s*(?:GROUP\s+BY\s+(?P<group>.+?))?"
-    r"\s*(?:HAVING\s+(?P<having>.+?))?"
-    r"\s*(?:ORDER\s+BY\s+(?P<order>.+?))?"
-    r"\s*(?:LIMIT\s+(?P<limit>\d+))?\s*$"
-)
-_CHAIN_JOIN_RE = _re.compile(
-    r"(?is)^\s*(?P<join>(?:(?:INNER|LEFT(?:\s+OUTER)?|RIGHT(?:\s+OUTER)?"
-    r"|FULL(?:\s+OUTER)?)\s+)?JOIN\s+\w+(?:\s+(?:AS\s+)?\w+)?\s+ON\s+.+?)"
-    r"(?=\s+(?:(?:INNER|LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?)?JOIN\s+"
-    r"|\s+WHERE\s+|\s+GROUP\s+BY\s+|\s+HAVING\s+|\s+ORDER\s+BY\s+"
-    r"|\s+LIMIT\s+|\s*$)"
-)
-_GEOM_ARG_RE = _re.compile(
-    r"(?is)^ST_(?P<pred>Within|Intersects|Contains|DWithinSphere|DWithin"
-    r"|Touches|Crosses|Overlaps|Equals)\s*\(\s*"
-    r"(?P<g1>ST_MakePoint\s*\(\s*[\w.]+\s*,\s*[\w.]+\s*\)|[\w.]+)\s*,\s*"
-    r"(?P<g2>ST_MakePoint\s*\(\s*[\w.]+\s*,\s*[\w.]+\s*\)|[\w.]+)\s*"
-    r"(?:,\s*(?P<dist>[0-9.eE+-]+)\s*)?\)\s*$"
-)
+_PREDICATES = {"within", "intersects", "contains", "dwithinsphere", "dwithin",
+               "touches", "crosses", "overlaps", "equals"}
+_JOIN_HOW = {"Inner": "inner", "LeftOuter": "left", "RightOuter": "right",
+             "FullOuter": "full"}
+# plan nodes whose children open a new query block (their own FROM scope)
+_BLOCK_EDGES = {"SubqueryAlias", "Union", "Intersect", "Except"}
 
 
-def _strip_qual(name: str) -> str:
-    return name.rsplit(".", 1)[-1]
+class _NotRouted(Exception):
+    """(why, [detail]): a spatial shape the router cannot plan faithfully."""
 
 
-def _qual_of(name: str) -> str | None:
-    """Alias/table qualifier of a column reference, if any."""
-    return name.rsplit(".", 1)[0] if "." in name else None
+def _st_call(e) -> bool:
+    return (e is not None and e.cls == "UnresolvedFunction"
+            and e.name()[-1].upper().startswith("ST_"))
+
+
+def _geom_operand(e):
+    """(GeomSide, columns, qualifiers) of ``ST_MakePoint(x, y)`` or a column."""
+    from geomesa_sql_spark.join.spatial import GeomSide
+
+    pt = e.cls == "UnresolvedFunction" and e.name()[-1].lower() == "st_makepoint"
+    if [k.cls for k in (e.kids if pt else [e])] != ["UnresolvedAttribute"] * (1 + pt):
+        return None
+    refs = [k.name() for k in (e.kids if pt else [e])]
+    cols = [r[-1].lower() for r in refs]  # Spark resolves names case-blind
+    side = GeomSide(wkb=cols[0]) if len(cols) == 1 else GeomSide(x=cols[0], y=cols[1])
+    return side, set(cols), {".".join(r[:-1]).lower() for r in refs if len(r) > 1}
+
+
+def _block(chain, span: tuple[int, int]) -> tuple[int, int]:
+    """Text span of the query block around ``span``, from its ``chain``."""
+    lo, hi = span
+    for n in chain:
+        a, b = n.span()
+        if n.cls == "Aggregate":  # its origin is the GROUP BY clause alone
+            first = n.sub("aggregateExpressions",
+                          lambda j: j.aggregateExpressions().apply(0), 0)
+            a = min(a, first.span()[0])
+        lo, hi = min(lo, a), max(hi, b)
+    return lo, hi
+
+
+class _Side:
+    """A join operand: qualifiers naming its columns, tables it reads
+    directly (not via a derived table), and the registered table it IS."""
+
+    def __init__(self, node, scope: list):
+        self.node, self.scope, self.is_join = node, scope, node.cls == "Join"
+        self.quals, tables, stack = set(), set(), [node]
+        while stack:
+            n = stack.pop()
+            if n.cls == "Join":
+                stack += n.kids
+                continue
+            if n.cls == "SubqueryAlias":
+                self.quals.add(n.d["identifier"]["name"].lower())
+                n = n.kids[0]
+            if n.cls == "UnresolvedRelation":
+                tables.add(".".join(n.name("multipartIdentifier")))
+        self.quals |= {t.lower() for t in tables}
+        self.reads = {t for t in tables if t.lower() not in {c.lower() for c, _ in scope}}
+        rel = node.kids[0] if node.cls == "SubqueryAlias" else node
+        self.table = min(self.reads) if rel.cls == "UnresolvedRelation" and self.reads else None
+
+    def span(self) -> tuple[int, int]:
+        n = self.node
+        while n.cls == "Join":  # a join's own origin starts at its JOIN keyword
+            n = n.kids[0]
+        return n.span()[0], self.node.span()[1]
+
+
+class _Statement:
+    """A statement being routed: its text, its splices keyed by source span
+    (a later one of a span wins, one nested in another is dropped), views."""
+
+    def __init__(self, text: str):
+        self.text, self.edits, self.views = text, {}, []
+
+    def render(self, lo: int, hi: int, extra: dict | None = None) -> str:
+        out, pos = [], lo
+        for (a, b), s in sorted({**self.edits, **(extra or {})}.items(),
+                                key=lambda e: (e[0][0], -e[0][1])):
+            if a >= pos and b <= hi:
+                out += [self.text[pos:a], s]
+                pos = b
+        return "".join(out) + self.text[pos:hi]
 
 
 _LOG = logging.getLogger(__name__)
@@ -434,10 +463,9 @@ class Engine:
         self.fid_col = fid_col
         self._tables: dict[str, str] = {}
         self._views: dict[str, DataFrame] = {}
-        # one reusable temp-view slot for the SQL-text spatial-join
-        # router (unique per Engine so two engines on one session don't
-        # clobber each other's in-flight name)
-        self._routed_view = f"__gsj_routed_{uuid.uuid4().hex[:8]}"
+        # spatial shapes the router left to plain spark.sql, by reason
+        self.route_fallbacks: Counter[str] = Counter()
+        self._fallbacks_lock = threading.Lock()  # sql() runs on many threads
         register_all(spark)  # the fun=spatial analog, always on
 
     # ------------------------------------------------------------- catalog
@@ -504,10 +532,7 @@ class Engine:
         count as a 1-row result)."""
         dml = _parse_dml(query)
         if dml is None:
-            routed = self._route_with_ctes(query)
-            if routed is not None:
-                return routed
-            routed = self._route_select(query)
+            routed = self._route(query)
             if routed is not None:
                 return routed
             return self.spark.sql(_rewrite_spatial_predicates(query))
@@ -612,985 +637,225 @@ class Engine:
             )
         return F.expr(where)
 
-    def _route_spatial_join(self, query: str) -> DataFrame | None:
-        """The EnumerableSpatialJoinRule analog for SQL TEXT: a query of
-        the canonical shape
-
-            SELECT <cols> FROM t1 [a] [LEFT|RIGHT|FULL] JOIN t2 [b]
-            ON ST_Pred(<geom of one side>, <geom of other side>[, dist])
-            [WHERE <residual>]
-
-        is planned through :func:`join.spatial_join` (cell cover +
-        broadcast-or-repartition hash join + vectorized refine) instead
-        of the cartesian BroadcastNestedLoop + UDF plan Spark would
-        build for a Python-UDF ON clause (which Spark outright REJECTS
-        for outer joins). LEFT/RIGHT/FULL route when the preserved
-        side(s) carry the engine's ``fid_col`` as a unique key — the
-        reference optimizes LEFT the same way
-        (rules/EnumerableSpatialJoinRule.scala:43-44). Geometry
-        operands: ``ST_MakePoint(x, y)`` or a bare WKB column;
-        alias-qualified operands orient the join even when both tables
-        carry same-named columns. Returns None when the query doesn't
-        match; any bail after the query LOOKS spatial logs a warning
-        naming the cartesian fallback.
-        """
-        qtext = query.strip()
-        m = _SPATIAL_JOIN_RE.match(_mask_literals(qtext))
-        if not m:
-            return self._route_spatial_after_prefix(query)
-
-        def _bail(why: str) -> None:
-            _LOG.warning(
-                "SQL-text spatial join NOT routed (%s) — falling back to "
-                "plain spark.sql, which plans a Python-UDF ON clause as a "
-                "cartesian BroadcastNestedLoopJoin (and rejects it for "
-                "outer joins): %.200s",
-                why,
-                query,
-            )
-
-        g = _GEOM_ARG_RE.match(qtext[m.start("on"):m.end("on")])
-        if not g:
-            _bail("unsupported ST_ predicate or operand shape in ON")
+    def _route(self, query: str) -> DataFrame | None:
+        """The EnumerableSpatialJoinRule analog for SQL TEXT, walking
+        Spark's parse tree: each ``Join`` with one top-level ``ON
+        ST_Pred(<geom of one side>, <geom of the other>[, dist])``
+        conjunct (geometry: ``ST_MakePoint(x, y)`` or a WKB column), and
+        each WHERE conjunct ``[NOT] EXISTS (.. WHERE ST_Pred(..))``, is
+        planned by :func:`join.spatial_join` — not the cartesian
+        BroadcastNestedLoop + UDF plan Spark builds (or rejects, for
+        outer joins). Its view is spliced over the join's text span and
+        the rest of the statement runs as plain Spark SQL over it.
+        Outer/semi/anti joins need ``fid_col`` on the preserved side.
+        None when nothing routed; fallbacks are counted and logged."""
+        up = query.upper()
+        if "ST_" not in up or ("JOIN" not in up and "EXISTS" not in up):
             return None
-        # literal handling: the shape regex matched MASKED text, so all
-        # further keyword matching runs on the masked twin while slices
-        # come from the original — and the alias requalifier below skips
-        # literal content (_sub_outside_literals). The old blanket quote
-        # bail (ADVICE r2) is gone: 'tag' constants in the select list
-        # and literals in the tail are routable now.
-        rest = qtext[m.start("rest"):m.end("rest")] if m.group("rest") else ""
-        mrest = m.group("rest") or ""
-        sel = qtext[m.start("sel"):m.end("sel")].strip()
-        # conjunctive ON: `ON ST_Pred(...) AND <residual>` — for an
-        # INNER join the residual is equivalent to a post-join WHERE,
-        # so it folds into the tail below (the reference's rule splits
-        # the RexCall conjunction the same way). Outer joins bail: an
-        # ON-residual is join-scoped there, not a filter.
-        on_resid = None
-        am = _re.match(
-            r"(?is)^\s*AND\s+(?P<cond>.+?)"
-            r"(?=\s+(?:(?:INNER|LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?)?JOIN\s+"
-            r"|\s+WHERE\s+|\s+GROUP\s+BY\s+|\s+HAVING\s+|\s+ORDER\s+BY\s+"
-            r"|\s+LIMIT\s+|\s*$)",
-            mrest,
-        )
-        if am:
-            on_resid = rest[am.start("cond"):am.end("cond")].strip()
-            if _re.search(r"(?i)\bST_\w+\s*\(", am.group("cond")):
-                _bail("second spatial predicate in the ON conjunction")
-                return None
-            if (m.group("jt") or "inner").lower() != "inner":
-                _bail(
-                    "ON-clause residual conjunct on an OUTER spatial join "
-                    "(join-scoped semantics can't be expressed as WHERE)"
-                )
-                return None
-            rest = rest[am.end():]
-            mrest = mrest[am.end():]
-        # multi-join CHAINS: subsequent plain joins after the spatial
-        # one peel off the front of the tail and run as ordinary Spark
-        # SQL over the routed view (the Calcite planner keeps the other
-        # LogicalJoins above its EnumerableSpatialJoin the same way); a
-        # SECOND spatial join in the chain still bails.
-        chain = ""
-        while True:
-            cm = _CHAIN_JOIN_RE.match(mrest)
-            if not cm:
-                break
-            if _re.search(r"(?i)\bST_\w+\s*\(", cm.group("join")):
-                _bail("second spatial join in the chain")
-                return None
-            chain += " " + rest[cm.start("join"):cm.end("join")].strip()
-            rest = rest[cm.end():]
-            mrest = mrest[cm.end():]
-        if _re.search(r"(?i)\b(UNION|JOIN|INTERSECT|EXCEPT)\b", mrest):
-            _bail("set-operation or unparseable join tail")
-            return None
-        tm = _TAIL_RE.match(mrest)
-        if not tm or (tm.group("having") and not tm.group("group")):
-            _bail("unparseable tail clauses")
-            return None
-
-        def tg(name: str) -> str | None:
-            # tail clause text from the ORIGINAL string (the match ran
-            # on the masked twin)
-            return (
-                rest[tm.start(name):tm.end(name)]
-                if tm.group(name) is not None
-                else None
-            )
-        t1, t2 = m.group("t1"), m.group("t2")
-        known = set(self._tables) | set(self._views)
-        if t1 not in known or t2 not in known:
-            _bail("table(s) not registered with this Engine")
-            return None
-        if t1 == t2:
-            # the routed joined frame would carry duplicate column names
-            _bail("self-join (joined frame would have duplicate columns)")
-            return None
-
-        from geomesa_sql_spark.join import spatial_join
-        from geomesa_sql_spark.join.spatial import GeomSide
-
-        df1, df2 = self.df(t1), self.df(t2)
-
-        def _side(arg: str) -> tuple[GeomSide, set[str], set[str]]:
-            pm = _re.match(
-                r"(?is)ST_MakePoint\s*\(\s*([\w.]+)\s*,\s*([\w.]+)\s*\)", arg
-            )
-            if pm:
-                rx, ry = pm.group(1), pm.group(2)
-                x, y = _strip_qual(rx), _strip_qual(ry)
-                quals = {q for q in (_qual_of(rx), _qual_of(ry)) if q}
-                return GeomSide(x=x, y=y), {x, y}, quals
-            col = _strip_qual(arg)
-            q = _qual_of(arg)
-            return GeomSide(wkb=col), {col}, ({q} if q else set())
-
-        side_a, cols_a, quals_a = _side(g.group("g1"))
-        side_b, cols_b, quals_b = _side(g.group("g2"))
-        pred = g.group("pred").lower()
-        if pred == "dwithinsphere":
-            pred = "dwithin_sphere"  # spatial_join's spelling
-            if not (side_a.is_point and side_b.is_point):
-                # the optimized path is point x point; the scalar
-                # ST_DWithinSphere UDF still answers via plain spark.sql
-                _bail("ST_DWithinSphere routes point x point only")
-                return None
-        dist = float(g.group("dist")) if g.group("dist") else None
-
-        # orient: spatial_join evaluates pred(left_df_geom, right_df_geom)
-        # with left_df = t1 as written in the FROM clause. Qualified
-        # operands orient by their alias/table prefix; unqualified ones
-        # by column membership (bailing when both orientations resolve).
-        names1 = {t1, m.group("a1") or t1}
-        names2 = {t2, m.group("a2") or t2}
-
-        def _owner(quals: set[str]) -> int:
-            if quals and quals <= names1:
-                return 1
-            if quals and quals <= names2:
-                return 2
-            return 0
-
-        fa, fb = _owner(quals_a), _owner(quals_b)
-        if (quals_a or quals_b) and not (fa or fb):
-            _bail("geometry operand qualifier matches neither table")
-            return None
-        if fa and fb and fa == fb:
-            _bail("both geometry operands qualify to the same table")
-            return None
-        if (fa, fb) in ((1, 2), (1, 0), (0, 2)):
-            fwd, rev = True, False
-        elif (fa, fb) in ((2, 1), (2, 0), (0, 1)):
-            fwd, rev = False, True
-        else:
-            fwd = cols_a <= set(df1.columns) and cols_b <= set(df2.columns)
-            rev = cols_b <= set(df1.columns) and cols_a <= set(df2.columns)
-            if fwd and rev:
-                _bail("ambiguous operand columns (both orientations resolve)")
-                return None
-        if fwd:
-            left_side, right_side = side_a, side_b
-            lcols, rcols = cols_a, cols_b
-        elif rev:
-            flip = {"contains": "within", "within": "contains"}
-            pred = flip.get(pred, pred)
-            left_side, right_side = side_b, side_a
-            lcols, rcols = cols_b, cols_a
-        else:
-            _bail("operand columns don't split across the tables")
-            return None
-        if not (lcols <= set(df1.columns) and rcols <= set(df2.columns)):
-            _bail("geometry operand column(s) missing from the joined tables")
-            return None
-
-        # outer joins: spatial_join restores unmatched rows via an
-        # anti-join on a unique key of the preserved side(s)
-        how = (m.group("jt") or "inner").lower()
-        join_kw: dict = {}
-        if how in ("left", "full") :
-            if self.fid_col not in df1.columns:
-                _bail(
-                    f"{how.upper()} spatial join needs a unique key on "
-                    f"{t1} (Engine fid_col={self.fid_col!r} is not a column)"
-                )
-                return None
-            join_kw["left_key"] = self.fid_col
-        if how in ("right", "full"):
-            if self.fid_col not in df2.columns:
-                _bail(
-                    f"{how.upper()} spatial join needs a unique key on "
-                    f"{t2} (Engine fid_col={self.fid_col!r} is not a column)"
-                )
-                return None
-            join_kw["right_key"] = self.fid_col
-
-        # residual/select references may be alias- or table-qualified;
-        # the joined frame is unqualified, so strip the known prefixes
-        quals = [q for q in (m.group("a1"), m.group("a2"), t1, t2) if q]
-        def _unqual(expr: str, view: str) -> str:
-            # requalify the routed pair's aliases to the VIEW (not bare
-            # names — a chained join table may carry the same column
-            # name, and a stripped reference would turn ambiguous);
-            # literal content is skipped (a string mentioning "p." must
-            # not be rewritten)
-            for q in quals:
-                expr = _sub_outside_literals(
-                    rf"(?i)\b{_re.escape(q)}\.", f"{view}.", expr
-                )
-            return expr
-
-        # overlapping column names: the join's refine stage and the tail
-        # SQL reference columns by bare name over the joined frame, so
-        # clashes are renamed out of the right side. Only the ON clause
-        # may touch a clashing name — a select/tail reference to one
-        # can't be rewritten faithfully, so it bails.
-        clash = set(df1.columns) & set(df2.columns)
-        if clash:
-            body = _mask_literals(f"{sel} {chain} {on_resid or ''} {rest}")
-            hit = [c for c in clash
-                   if _re.search(rf"(?i)\b{_re.escape(c)}\b", body)]
-            if hit:
-                _bail(
-                    f"select/tail references column(s) {hit} present in "
-                    "BOTH tables"
-                )
-                return None
-            ren = {c: f"__gsj_r_{c}" for c in clash}
-            for old, new in ren.items():
-                df2 = df2.withColumnRenamed(old, new)
-
-            def _ren_side(s: GeomSide) -> GeomSide:
-                if s.wkb:
-                    return GeomSide(wkb=ren.get(s.wkb, s.wkb))
-                return GeomSide(x=ren.get(s.x, s.x), y=ren.get(s.y, s.y))
-
-            right_side = _ren_side(right_side)
-            if "right_key" in join_kw:
-                join_kw["right_key"] = ren.get(
-                    join_kw["right_key"], join_kw["right_key"]
-                )
-
-        out = spatial_join(
-            df1, df2, left_side, right_side, predicate=pred, distance=dist,
-            how=how, **join_kw,
-        )
-        # arbitrary select lists (incl. aggregates) and GROUP BY /
-        # HAVING / ORDER BY / LIMIT tails: run the REMAINDER of the
-        # query as plain Spark SQL over a temp view of the optimized
-        # join — our plan for the join, Catalyst's planning for the
-        # tail (reference analog: the Calcite planner keeps the
-        # Aggregate/Sort above its EnumerableSpatialJoin node).
-        # Per-call unique name, DROPPED once the returned DataFrame has
-        # captured its plan: a fixed per-Engine name raced concurrent
-        # .sql() calls on one Engine (review r3), and never dropping
-        # leaked a catalog entry per query (ADVICE r2).
-        view = f"{self._routed_view}_{uuid.uuid4().hex[:8]}"
-        out.createOrReplaceTempView(view)
-        # chained plain joins keep their own table qualifiers; only the
-        # routed pair's aliases are stripped (its columns live
-        # unqualified on the view)
-        sql = f"SELECT {_unqual(sel, view)} FROM {view}"
-        if chain:
-            sql += f" {_unqual(chain, view).strip()}"
-        where_parts = [p for p in (on_resid, tg("where")) if p]
-        if where_parts:
-            sql += " WHERE " + " AND ".join(
-                f"({_unqual(p, view)})" for p in where_parts
-            )
-        if tg("group"):
-            sql += f" GROUP BY {_unqual(tg('group'), view)}"
-        if tg("having"):
-            sql += f" HAVING {_unqual(tg('having'), view)}"
-        if tg("order"):
-            sql += f" ORDER BY {_unqual(tg('order'), view)}"
-        if tg("limit"):
-            sql += f" LIMIT {tg('limit')}"
         try:
-            return self.spark.sql(sql)
-        except Exception as exc:  # AnalysisException: e.g. a stripped
-            # reference is ambiguous because both tables carry the name
-            _bail(f"tail failed to resolve over the joined frame: {exc}")
-            return None
-        finally:
-            # the returned DataFrame captured its analyzed plan; the
-            # view is only needed during spark.sql() above
-            self.spark.catalog.dropTempView(view)
-
-    def _route_with_ctes(self, query: str) -> DataFrame | None:
-        """WITH-clause queries containing a spatial join: each CTE body
-        is routed through the spatial planner (falling back to plain
-        Spark SQL when it isn't a spatial join) and registered as a
-        temp view under its CTE name; the main SELECT then plans over
-        those views — itself routed if IT is the spatial part. Without
-        this, a spatial join inside a CTE silently got the cartesian
-        Python-UDF plan (the Calcite planner sees through CTEs because
-        they're just LogicalProject subtrees by the time
-        EnumerableSpatialJoinRule runs).
-
-        Returns None (untouched plain path) when the query has no WITH
-        clause or no ``ON ST_*(...)`` join anywhere; bails with a
-        warning on shapes the splitter can't handle faithfully.
-        """
-        q = query.strip().rstrip(";").strip()
-        if not _re.match(r"(?is)^WITH\b", q):
-            return None
-        if not _has_routable_spatial(q):
-            return None  # nothing spatial: plain spark.sql handles WITH
-
-        def _bail(why: str) -> None:
-            _LOG.warning(
-                "WITH-clause spatial join NOT routed (%s) — falling back "
-                "to plain spark.sql, which plans a Python-UDF ON clause "
-                "as a cartesian BroadcastNestedLoopJoin: %.200s",
-                why,
-                query,
-            )
-
-        mq = _mask_literals(q)  # literals blanked: WKT in a CTE body
-        # must not confuse the paren/keyword scan (the bodies themselves
-        # pass through VERBATIM, so their literals are safe)
-        if _re.search(r"(?i)\bRECURSIVE\b", mq):
-            _bail("WITH RECURSIVE")
-            return None
-        # split `WITH n1 AS (...), n2 AS (...) SELECT ...` by paren depth
-        i = _re.match(r"(?is)^WITH\s+", q).end()
-        ctes: list[tuple[str, str]] = []
-        while True:
-            nm = _re.match(r"(?is)(\w+)\s+AS\s*\(", mq[i:])
-            if not nm:
-                _bail("unparseable CTE definition")
-                return None
-            j = i + nm.end()  # position just past the opening paren
-            depth, k = 1, j
-            while k < len(q) and depth:
-                if mq[k] == "(":
-                    depth += 1
-                elif mq[k] == ")":
-                    depth -= 1
-                k += 1
-            if depth:
-                _bail("unbalanced parens in CTE definition")
-                return None
-            ctes.append((nm.group(1), q[j:k - 1].strip()))
-            cm = _re.match(r"(?is)\s*,\s*", q[k:])
-            if not cm:
-                main = q[k:].strip()
-                break
-            i = k + cm.end()
-        if not _re.match(r"(?is)^SELECT\b", main):
-            _bail("WITH body is not a SELECT")
-            return None
-        known = set(self._tables) | set(self._views)
-        clash = [n for n, _ in ctes
-                 if n in known or self.spark.catalog.tableExists(n)]
-        if clash:
-            _bail(f"CTE name(s) {clash} shadow existing tables/views")
-            return None
-        registered: list[str] = []
+            root = sqltree.parse(self.spark, query)
+        except ParseException:
+            return None  # spark.sql reports the syntax error itself
+        st = _Statement(query)
         try:
-            for name, body in ctes:
-                routed = self._route_select(body)
-                df = (
-                    routed
-                    if routed is not None
-                    else self.spark.sql(_rewrite_spatial_predicates(body))
-                )
-                self._views[name] = df
-                df.createOrReplaceTempView(name)
-                registered.append(name)
-            routed = self._route_select(main)
-            if routed is not None:
-                return routed
-            return self.spark.sql(_rewrite_spatial_predicates(main))
-        finally:
-            # every returned DataFrame captured its analyzed plan during
-            # spark.sql()/routing above, so the views can go immediately
-            for name in registered:
-                del self._views[name]
-                self.spark.catalog.dropTempView(name)
-
-    def _route_select(self, query: str) -> DataFrame | None:
-        """One SELECT routing attempt, most-specific shape first:
-        top-level set operations (each branch recurses back through
-        here), correlated spatial EXISTS, the spatial-join router
-        (primary / chain-prefix), then derived-table lifting (whose
-        rewritten query recurses back through here). CTE bodies and
-        mains funnel through this too, so every routable shape works
-        at every nesting position."""
-        routed = self._route_set_ops(query)
-        if routed is None:
-            routed = self._route_spatial_exists(query)
-        if routed is None:
-            routed = self._route_spatial_join(query)
-        if routed is None:
-            routed = self._route_derived_tables(query)
-        return routed
-
-    def _route_set_ops(self, query: str) -> DataFrame | None:
-        """Top-level UNION / INTERSECT / EXCEPT ([ALL]) whose branches
-        contain spatial joins: each branch routes independently (plain
-        branches run as ordinary Spark SQL), the results combine with
-        the matching DataFrame set operation (positional columns —
-        SQL's own semantics), and a set-level trailing ORDER BY/LIMIT
-        applies to the combined frame. Mixed operator FAMILIES bail:
-        SQL gives INTERSECT higher precedence than UNION/EXCEPT and
-        this flat splitter cannot honor that.
-        """
-        q = query.strip().rstrip(";").strip()
-        if not _has_routable_spatial(q):
-            return None
-        mq = _mask_literals(q)
-        depths, d = [], 0
-        for ch in mq:
-            depths.append(d)
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-        setop_re = _re.compile(
-            r"(?i)\b(UNION\s+ALL|UNION|INTERSECT\s+ALL|INTERSECT"
-            r"|EXCEPT\s+ALL|EXCEPT)\b"
-        )
-        cuts = [
-            (mm.start(), mm.end(), " ".join(mm.group(1).upper().split()))
-            for mm in setop_re.finditer(mq)
-            if depths[mm.start()] == 0
-        ]
-        if not cuts:
-            return None
-
-        def _bail(why: str) -> None:
-            _LOG.warning(
-                "set-operation spatial query NOT routed (%s) — falling "
-                "back to plain spark.sql: %.200s",
-                why,
-                query,
-            )
-
-        families = {op.split()[0] for _, _, op in cuts}
-        if len(families) > 1:
-            _bail("mixed set-operator families (precedence not handled)")
-            return None
-        bounds = [0] + [c[0] for c in cuts] + [len(q)]
-        branches = []
-        for i in range(len(cuts) + 1):
-            lo = bounds[i] if i == 0 else cuts[i - 1][1]
-            hi = bounds[i + 1]
-            branches.append((q[lo:hi].strip(), mq[lo:hi]))
-        # set-level tail: trailing top-level ORDER BY / LIMIT belongs to
-        # the whole set (a branch cannot carry its own without parens)
-        last, mlast = branches[-1]
-        tail_sql = ""
-        tmm = _re.search(
-            r"(?is)\s(ORDER\s+BY\s.+?"
-            r"|LIMIT\s+\d+(?:\s+OFFSET\s+\d+)?"
-            r"|OFFSET\s+\d+)\s*$",
-            mlast,
-        )
-        if tmm:
-            dlast, dd = [], 0
-            for ch in mlast:
-                dlast.append(dd)
-                if ch == "(":
-                    dd += 1
-                elif ch == ")":
-                    dd -= 1
-            if dlast[tmm.start()] == 0:
-                tail_sql = last[tmm.start():].strip()
-                branches[-1] = (last[: tmm.start()].strip(), None)
-        dfs = []
-        for btext, _mb in branches:
-            routed = self._route_select(btext)
-            dfs.append(
-                routed
-                if routed is not None
-                else self.spark.sql(_rewrite_spatial_predicates(btext))
-            )
-        try:
-            out = dfs[0]
-            for (_, _, op), nxt in zip(cuts, dfs[1:]):
-                if op == "UNION ALL":
-                    out = out.unionAll(nxt)
-                elif op == "UNION":
-                    out = out.unionAll(nxt).distinct()
-                elif op == "INTERSECT":
-                    out = out.intersect(nxt)
-                elif op == "INTERSECT ALL":
-                    out = out.intersectAll(nxt)
-                elif op == "EXCEPT":
-                    out = out.subtract(nxt)
-                else:  # EXCEPT ALL
-                    out = out.exceptAll(nxt)
-        except Exception as exc:
-            _bail(f"branch frames failed to combine: {exc}")
-            return None
-        if not tail_sql:
-            return out
-        view = f"{self._routed_view}_set_{uuid.uuid4().hex[:8]}"
-        out.createOrReplaceTempView(view)
-        try:
-            return self.spark.sql(f"SELECT * FROM {view} {tail_sql}")
-        except Exception as exc:
-            _bail(f"set-level tail failed to resolve: {exc}")
-            return None
-        finally:
-            self.spark.catalog.dropTempView(view)
-
-    def _route_spatial_exists(self, query: str) -> DataFrame | None:
-        """Correlated spatial [NOT] EXISTS — the canonical
-        point-in-any-polygon filter:
-
-            SELECT <cols> FROM t1 [a] WHERE [NOT] EXISTS (
-                SELECT ... FROM t2 [b] WHERE ST_Pred(<correlated>)
-            ) [AND <residual>] [tail]
-
-        routes as ``spatial_join(how='left_semi'|'left_anti')`` keyed
-        on the engine's ``fid_col`` — the cell join instead of the
-        correlated Python-UDF subquery Spark cannot plan. The result
-        carries t1's rows only, so the select list and tail run as
-        plain Spark SQL over the semi-joined view.
-        """
-        qtext = query.strip()
-        m = _SPATIAL_EXISTS_RE.match(_mask_literals(qtext))
-        if not m:
-            return None
-
-        def _bail(why: str) -> None:
-            _LOG.warning(
-                "spatial EXISTS NOT routed (%s) — falling back to plain "
-                "spark.sql on the correlated Python-UDF subquery: %.200s",
-                why,
-                query,
-            )
-
-        sel = qtext[m.start("sel"):m.end("sel")].strip()
-        rest = qtext[m.start("rest"):m.end("rest")] if m.group("rest") else ""
-        mrest = m.group("rest") or ""
-        t1, t2 = m.group("t1"), m.group("t2")
-        known = set(self._tables) | set(self._views)
-        if t1 not in known or t2 not in known:
-            _bail("table(s) not registered with this Engine")
-            return None
-        if t1 == t2:
-            _bail("self-referential EXISTS")
-            return None
-        df1, df2 = self.df(t1), self.df(t2)
-        if self.fid_col not in df1.columns:
-            _bail(
-                f"semi/anti spatial join needs a unique key on {t1} "
-                f"(Engine fid_col={self.fid_col!r} is not a column)"
-            )
-            return None
-        g = _GEOM_ARG_RE.match(qtext[m.start("on"):m.end("on")])
-        if not g:
-            _bail("unsupported ST_ predicate or operand shape")
-            return None
-
-        from geomesa_sql_spark.join import spatial_join
-        from geomesa_sql_spark.join.spatial import GeomSide
-
-        def _side(arg: str) -> tuple[GeomSide, set[str], set[str]]:
-            pm = _re.match(
-                r"(?is)ST_MakePoint\s*\(\s*([\w.]+)\s*,\s*([\w.]+)\s*\)", arg
-            )
-            if pm:
-                rx, ry = pm.group(1), pm.group(2)
-                x, y = _strip_qual(rx), _strip_qual(ry)
-                quals = {q_ for q_ in (_qual_of(rx), _qual_of(ry)) if q_}
-                return GeomSide(x=x, y=y), {x, y}, quals
-            col = _strip_qual(arg)
-            q_ = _qual_of(arg)
-            return GeomSide(wkb=col), {col}, ({q_} if q_ else set())
-
-        side_a, cols_a, quals_a = _side(g.group("g1"))
-        side_b, cols_b, quals_b = _side(g.group("g2"))
-        pred = g.group("pred").lower()
-        if pred == "dwithinsphere":
-            pred = "dwithin_sphere"  # spatial_join's spelling
-            if not (side_a.is_point and side_b.is_point):
-                # the optimized path is point x point; the scalar
-                # ST_DWithinSphere UDF still answers via plain spark.sql
-                _bail("ST_DWithinSphere routes point x point only")
+            self._walk(st, root, [], [])
+            if not st.views:
                 return None
-        dist = float(g.group("dist")) if g.group("dist") else None
-        names1 = {t1, m.group("a1") or t1}
-        names2 = {t2, m.group("a2") or t2}
-
-        def _owner(quals: set[str]) -> int:
-            if quals and quals <= names1:
-                return 1
-            if quals and quals <= names2:
-                return 2
-            return 0
-
-        fa, fb = _owner(quals_a), _owner(quals_b)
-        if (quals_a or quals_b) and not (fa or fb):
-            _bail("geometry operand qualifier matches neither table")
-            return None
-        if fa and fb and fa == fb:
-            _bail("both geometry operands qualify to the same table")
-            return None
-        if (fa, fb) in ((1, 2), (1, 0), (0, 2)):
-            fwd, rev = True, False
-        elif (fa, fb) in ((2, 1), (2, 0), (0, 1)):
-            fwd, rev = False, True
-        else:
-            fwd = cols_a <= set(df1.columns) and cols_b <= set(df2.columns)
-            rev = cols_b <= set(df1.columns) and cols_a <= set(df2.columns)
-            if fwd and rev:
-                _bail("ambiguous operand columns (both orientations resolve)")
+            try:
+                return self.spark.sql(
+                    _rewrite_spatial_predicates(st.render(0, len(query))))
+            except Exception as exc:
+                self._bail("statement failed to resolve over the routed views",
+                           query, f": {exc}")
                 return None
-        if fwd:
-            left_side, right_side = side_a, side_b
-            lcols, rcols = cols_a, cols_b
-        elif rev:
-            flip = {"contains": "within", "within": "contains"}
-            pred = flip.get(pred, pred)
-            left_side, right_side = side_b, side_a
-            lcols, rcols = cols_b, cols_a
-        else:
-            _bail("operand columns don't split across the tables")
-            return None
-        if not (lcols <= set(df1.columns) and rcols <= set(df2.columns)):
-            _bail("geometry operand column(s) missing from the tables")
-            return None
+        finally:  # the returned frame captured its analyzed plan above
+            for view in st.views:
+                self.spark.catalog.dropTempView(view)
 
-        # residual AND-conjunct + tail parse FIRST: an unparseable tail
-        # must bail before the join's envelope-sample jobs run
-        on_resid = None
-        am = _re.match(r"(?is)^\s*AND\s+(?P<cond>.+?)"
-                       r"(?=\s+GROUP\s+BY\s+|\s+HAVING\s+|\s+ORDER\s+BY\s+"
-                       r"|\s+LIMIT\s+|\s*$)", mrest)
-        if am:
-            if _re.search(r"(?i)\bST_\w+\s*\(", am.group("cond")):
-                _bail("second spatial predicate in the residual WHERE")
-                return None
-            on_resid = rest[am.start("cond"):am.end("cond")].strip()
-            rest = rest[am.end():]
-            mrest = mrest[am.end():]
-        tm = _TAIL_RE.match(mrest)
-        if not tm or tm.group("where"):
-            _bail("unparseable tail clauses")
-            return None
-
-        def tg(name: str) -> str | None:
-            return (
-                rest[tm.start(name):tm.end(name)]
-                if tm.group(name) is not None
-                else None
-            )
-
-        # shared column names (geometry columns, a duplicated fid) make
-        # the inner cell join ambiguous — the output carries only left
-        # columns, so clashing RIGHT columns rename away unconditionally
-        clash = set(df1.columns) & set(df2.columns)
-        if clash:
-            ren = {c: f"__gsj_r_{c}" for c in clash}
-            for old_, new_ in ren.items():
-                df2 = df2.withColumnRenamed(old_, new_)
-            if right_side.wkb:
-                right_side = GeomSide(wkb=ren.get(right_side.wkb, right_side.wkb))
-            else:
-                right_side = GeomSide(
-                    x=ren.get(right_side.x, right_side.x),
-                    y=ren.get(right_side.y, right_side.y),
-                )
-
-        how = "left_anti" if m.group("neg") else "left_semi"
+    def _walk(self, st: _Statement, node, scope: list, chain: list) -> None:
+        """Post-order: operands are spliced before their join reads them.
+        ``scope``: CTE definitions in view; ``chain``: block nodes above."""
+        if node.cls == "UnresolvedWith":  # a def sees the defs before it
+            defs = node.ctes()
+            for i, (_, body) in enumerate(defs):
+                self._walk(st, body, scope + defs[:i], [])
+            return self._walk(st, node.kids[0], scope + defs, [])
+        below = [] if node.cls in _BLOCK_EDGES else chain + [node]
+        for kid in node.kids:
+            self._walk(st, kid, scope, below)
         try:
-            out = spatial_join(
-                df1, df2, left_side, right_side, predicate=pred,
-                distance=dist, how=how, left_key=self.fid_col,
-            )
-        except Exception as exc:
-            _bail(f"semi/anti spatial join failed to build: {exc}")
-            return None
-        quals = [q_ for q_ in (m.group("a1"), t1) if q_]
-        view = f"{self._routed_view}_ex_{uuid.uuid4().hex[:8]}"
+            if node.cls == "Join":
+                self._route_join(st, node, scope, chain)
+            elif node.cls == "Filter":
+                self._route_exists(st, node, scope, chain)
+        except _NotRouted as nr:
+            self._bail(nr.args[0], st.text, *nr.args[1:])
 
-        def _unq(expr: str) -> str:
-            for q_ in quals:
-                expr = _sub_outside_literals(
-                    rf"(?i)\b{_re.escape(q_)}\.", f"{view}.", expr
-                )
-            return expr
+    def _route_join(self, st: _Statement, node, scope: list, chain: list) -> None:
+        jt = node.d["joinType"].get("object", "").rsplit(".", 1)[-1].rstrip("$")
+        cond = node.sub("condition", lambda j: j.condition().get())
+        conj = sqltree.conjuncts(cond) if jt in _JOIN_HOW and cond else []
+        calls = [c for c in conj if _st_call(c)]
+        if not calls:
+            return
+        if len(calls) > 1:
+            raise _NotRouted("second spatial predicate in the ON conjunction")
+        if len(conj) > 1 and _JOIN_HOW[jt] != "inner":
+            raise _NotRouted("ON-clause residual conjunct on an OUTER spatial join "
+                             "(join-scoped semantics can't be expressed as WHERE)")
+        left, right = (_Side(k, scope) for k in node.kids)
+        span = (left.span()[0], node.span()[1])
+        # an INNER join's other ON conjuncts filter its output
+        resid = (cond.span(), calls[0].span()) if len(conj) > 1 else None
+        self._splice(st, calls[0], _JOIN_HOW[jt], left, right, span,
+                     _block(chain, span), resid=resid)
 
-        out.createOrReplaceTempView(view)
-        sql = f"SELECT {_unq(sel)} FROM {view}"
-        if on_resid:
-            sql += f" WHERE {_unq(on_resid)}"
-        if tg("group"):
-            sql += f" GROUP BY {_unq(tg('group'))}"
-        if tg("having"):
-            sql += f" HAVING {_unq(tg('having'))}"
-        if tg("order"):
-            sql += f" ORDER BY {_unq(tg('order'))}"
-        if tg("limit"):
-            sql += f" LIMIT {tg('limit')}"
-        try:
-            return self.spark.sql(sql)
-        except Exception as exc:
-            _bail(f"tail failed to resolve over the semi-joined frame: {exc}")
-            return None
-        finally:
-            self.spark.catalog.dropTempView(view)
-
-    def _route_derived_tables(self, query: str) -> DataFrame | None:
-        """Derived tables around a spatial join:
-
-            SELECT ... FROM (SELECT ...) a JOIN shapes s ON ST_Pred(...)
-
-        Each top-level ``FROM (subquery) alias`` / ``JOIN (subquery)
-        alias`` block is lifted into a transient view (the body itself
-        routed through the spatial planner when IT is the spatial
-        part, plain Spark SQL otherwise — same treatment as CTE
-        bodies), the block text is replaced by the view name + alias,
-        and the rewritten query re-enters the router. Returns None
-        when the query has no spatial join or no derived table; bails
-        warned on quoted literals and alias-less subqueries.
-        """
-        q = query.strip().rstrip(";").strip()
-        if not _has_routable_spatial(q):
-            return None
-        if not _re.search(r"(?i)\b(FROM|JOIN)\s*\(", q):
-            return None
-
-        def _bail(why: str) -> None:
-            _LOG.warning(
-                "derived-table spatial join NOT routed (%s) — falling "
-                "back to plain spark.sql, which plans a Python-UDF ON "
-                "clause as a cartesian BroadcastNestedLoopJoin: %.200s",
-                why,
-                query,
-            )
-
-        mq = _mask_literals(q)  # bodies pass through verbatim; only
-        # the scanner needs literal-blind text
-        out_parts: list[str] = []
-        bodies: list[str] = []
-        pos = 0
-        for m in _re.finditer(r"(?i)\b(FROM|JOIN)\s*\(", mq):
-            # only top-level blocks: depth 0 at the keyword
-            if mq[:m.start()].count("(") != mq[:m.start()].count(")"):
+    def _route_exists(self, st: _Statement, node, scope: list, chain: list) -> None:
+        """``WHERE [NOT] EXISTS (SELECT .. FROM t2 WHERE ST_Pred(..))`` is a
+        semi/anti spatial join keyed on ``fid_col``: the view replaces the
+        FROM relation, TRUE the conjunct."""
+        for c in sqltree.conjuncts(node.sub("condition", lambda j: j.condition())):
+            ex = c.kids[0] if c.cls == "Not" else c
+            sub = ex.sub("plan", lambda j: j.plan()) if ex.cls == "Exists" else None
+            where = sub.kids[0] if sub is not None and sub.cls == "Project" else None
+            call = (where.sub("condition", lambda j: j.condition())
+                    if where is not None and where.cls == "Filter" else None)
+            if not _st_call(call):
                 continue
-            if m.start() < pos:
-                continue  # inside a block already consumed
-            depth, k = 1, m.end()
-            while k < len(q) and depth:
-                if mq[k] == "(":
-                    depth += 1
-                elif mq[k] == ")":
-                    depth -= 1
-                k += 1
-            if depth:
-                _bail("unbalanced parens in derived table")
-                return None
-            body = q[m.end():k - 1].strip()
-            if not _re.match(r"(?is)^SELECT\b", body):
-                _bail("non-SELECT parenthesized FROM item")
-                return None
-            am = _re.match(r"(?is)\s*(?:AS\s+)?(\w+)", q[k:])
-            if not am or am.group(1).upper() in (
-                "ON", "JOIN", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
-                "INNER", "LEFT", "RIGHT", "FULL", "CROSS",
-            ):
-                _bail("derived table without an alias")
-                return None
-            name = f"{self._routed_view}_dt_{uuid.uuid4().hex[:8]}"
-            out_parts.append(q[pos:m.start()])
-            # keep the user's alias; the view name replaces the block
-            out_parts.append(f"{m.group(1)} {name}")
-            bodies.append((name, body))
-            pos = k  # alias text (q[k:]) stays in place
-        if not bodies:
-            return None
-        out_parts.append(q[pos:])
-        new_q = "".join(out_parts)
-        registered: list[str] = []
+            cspan = c.span()
+            if ex is c:  # a bare Exists carries its parent's origin: the
+                lo, hi = sub.span()  # conjunct is EXISTS up to the ")"
+                at = list(_re.finditer(r"(?i)\bEXISTS\b", st.text[:lo]))[-1]
+                cspan = (at.start(), st.text.index(")", hi) + 1)
+            left, right = _Side(node.kids[0], scope), _Side(where.kids[0], scope)
+            span = left.span()
+            return self._splice(st, call, "left_semi" if ex is c else "left_anti",
+                                left, right, span, _block(chain + [node], span),
+                                extra={cspan: "TRUE"})
+
+    def _splice(self, st: _Statement, call, how: str, left: _Side, right: _Side,
+                span: tuple[int, int], block: tuple[int, int],
+                resid=None, extra: dict | None = None) -> None:
+        """Plan ``call`` over ``left`` x ``right`` by ``spatial_join`` as a
+        view spliced over ``span`` (plus ``extra``); ``block``'s qualifiers
+        move to it. ``resid`` = (ON span, call span) filters the view."""
+        from geomesa_sql_spark.join import spatial_join
+        from geomesa_sql_spark.join.spatial import GeomSide
+
+        pred, args = call.name()[-1][3:].lower(), call.kids
+        dwithin, dist = pred.startswith("dwithin"), None
+        if dwithin and len(args) == 3 and args[2].cls == "Literal":
+            try:
+                dist = float(args[2].d["value"])
+            except (TypeError, ValueError):
+                pass
+        ops = [_geom_operand(a) for a in args[:2]]
+        if (pred not in _PREDICATES or None in ops or len(args) != 2 + dwithin
+                or (dwithin and dist is None)):
+            raise _NotRouted("unsupported ST_ predicate or operand shape in ON")
+        (side_a, cols_a, quals_a), (side_b, cols_b, quals_b) = ops
+        if pred == "dwithinsphere" and not (side_a.is_point and side_b.is_point):
+            raise _NotRouted("ST_DWithinSphere routes point x point only")
+        pred = {"dwithinsphere": "dwithin_sphere"}.get(pred, pred)  # spatial_join's name
+        if how != "inner" and (left.is_join or right.is_join):
+            kind = "semi/anti" if how.startswith("left_") else "outer"
+            raise _NotRouted(f"{kind} spatial join after a join-chain prefix "
+                             "(the prefix can't guarantee a unique restore key)")
+        if not (left.reads | right.reads) <= set(self._tables) | set(self._views):
+            raise _NotRouted("table(s) not registered with this Engine")
+        if left.table is not None and left.table == right.table:
+            raise _NotRouted("self-join (joined frame would have duplicate columns)")
+        # orient: spatial_join evaluates pred(left geom, right geom), FROM
+        # order kept; qualified operands orient by qualifier, others by
+        # column membership
+        fa, fb = ((1 if q and q <= left.quals else 2 if q and q <= right.quals else 0)
+                  for q in (quals_a, quals_b))
+        if (quals_a or quals_b) and not (fa or fb):
+            raise _NotRouted("geometry operand qualifier matches neither table")
+        if fa and fa == fb:
+            raise _NotRouted("both geometry operands qualify to the same table")
+        df1, df2 = self._frame(st, left), self._frame(st, right)
+        c1, c2 = ({c.lower() for c in df.columns} for df in (df1, df2))
+        fwd = fa == 1 or fb == 2
+        if not (fa or fb):
+            fwd, rev = cols_a <= c1 and cols_b <= c2, cols_b <= c1 and cols_a <= c2
+            if fwd and rev:
+                raise _NotRouted("ambiguous operand columns (both orientations resolve)")
+            if not (fwd or rev):
+                raise _NotRouted("operand columns don't split across the tables")
+        if not fwd:
+            pred = {"contains": "within", "within": "contains"}.get(pred, pred)
+            side_a, side_b, cols_a, cols_b = side_b, side_a, cols_b, cols_a
+        if not (cols_a <= c1 and cols_b <= c2):
+            raise _NotRouted("geometry operand column(s) missing from the joined tables")
+        kw: dict = {}  # outer/semi/anti joins restore or filter rows by a unique key
+        for key, side, cols, hows in (
+                ("left_key", left, c1, ("left", "full", "left_semi", "left_anti")),
+                ("right_key", right, c2, ("right", "full"))):
+            if how in hows:
+                if self.fid_col.lower() not in cols:
+                    raise _NotRouted(f"{how.upper()} spatial join needs a unique key",
+                                     f" on {', '.join(side.reads) or 'a subquery'} "
+                                     f"(Engine fid_col={self.fid_col!r} is not a column)")
+                kw[key] = self.fid_col
+        # clashing right columns rename away; the rest of the statement
+        # may not name one (unless only the left columns survive)
+        if c1 & c2:
+            if not how.startswith("left_"):
+                (c_lo, c_hi), (s_lo, s_hi) = resid or ((0, 0), (0, 0))
+                body = _mask_literals(st.text[block[0]:span[0]] + st.text[c_lo:s_lo]
+                                      + st.text[s_hi:c_hi] + st.text[span[1]:block[1]])
+                hit = sorted(c for c in c1 & c2
+                             if _re.search(rf"(?i)\b{_re.escape(c)}\b", body))
+                if hit:
+                    raise _NotRouted("select/tail references column(s) present in "
+                                     "BOTH tables", f": {hit}")
+            ren = {c: f"__gsj_r_{c}" for c in df2.columns if c.lower() in c1}
+            df2 = df2.withColumnsRenamed(ren)
+            ren = {c.lower(): new for c, new in ren.items()}
+            side_b = GeomSide(**{k: ren.get(v, v) for k, v in vars(side_b).items()})
+            if "right_key" in kw:
+                kw["right_key"] = ren.get(self.fid_col.lower(), self.fid_col)
         try:
-            for name, body in bodies:
-                routed = self._route_select(body)
-                df = (
-                    routed
-                    if routed is not None
-                    else self.spark.sql(_rewrite_spatial_predicates(body))
-                )
-                self._views[name] = df
-                df.createOrReplaceTempView(name)
-                registered.append(name)
-            routed = self._route_select(new_q)
-            if routed is not None:
-                return routed
-            return self.spark.sql(_rewrite_spatial_predicates(new_q))
-        finally:
-            for name in registered:
-                del self._views[name]
-                self.spark.catalog.dropTempView(name)
+            out = spatial_join(df1, df2, side_a, side_b, predicate=pred,
+                               distance=dist, how=how, **kw)
+        except Exception as exc:
+            raise _NotRouted("spatial join failed to build", f": {exc}") from None
+        # a per-call view name: concurrent sql() calls never share one
+        view = f"__gsj_routed_{uuid.uuid4().hex}"
+        out.createOrReplaceTempView(view)
+        st.views.append(view)
+        masked = _mask_literals(st.text[block[0]:block[1]])
+        requal = {(block[0] + m.start(), block[0] + m.end()): f"{view}."
+                  for q in left.quals | right.quals
+                  for m in _re.finditer(rf"(?i)(?<![\w.]){_re.escape(q)}\.", masked)}
+        on = resid and st.render(*resid[0], {**requal, resid[1]: "TRUE"})
+        st.edits.update({**requal, **(extra or {}),
+                         span: f"(SELECT * FROM {view} WHERE {on}) {view}" if on else view})
 
-    def _route_spatial_after_prefix(self, query: str) -> DataFrame | None:
-        """Spatial join as a NON-FIRST join in a multi-join chain:
-
-            SELECT ... FROM t0 [a0] JOIN t1 [a1] ON <plain> [JOIN ...]
-            JOIN tS [aS] ON ST_Pred(...) [more plain joins] [tail]
-
-        The plain-join PREFIX runs as ordinary Spark SQL into a temp
-        view; the query is rewritten with that view as the spatial
-        join's left table and re-routed through the primary path, which
-        applies the cell join plus the usual chain/tail handling (the
-        Calcite planner fires EnumerableSpatialJoinRule on any matching
-        LogicalJoin regardless of its position in the tree —
-        rules/EnumerableSpatialJoinRule.scala:38-145). INNER spatial
-        joins only: a 1:N prefix join can duplicate the engine's
-        ``fid_col``, which would break the outer-join restore contract.
-
-        The prefix frame is NOT cached: the spatial join's envelope
-        sample re-executes it once before the join itself does —
-        same contract as plain Spark SQL, which wouldn't cache a
-        repeated subquery either; callers with an expensive prefix
-        can register it as a view and route the spatial join alone.
-        """
-        q = query.strip().rstrip(";").strip()
-        if not _re.search(r"(?i)\bON\s+ST_\w+\s*\(", q):
-            return None  # no spatial join anywhere: stay silent
-
-        def _bail(why: str) -> None:
-            _LOG.warning(
-                "SQL-text spatial join NOT routed (%s) — falling back to "
-                "plain spark.sql, which plans a Python-UDF ON clause as a "
-                "cartesian BroadcastNestedLoopJoin (and rejects it for "
-                "outer joins): %.200s",
-                why,
-                query,
-            )
-
-        mq = _mask_literals(q)
-        if _re.search(r"(?i)\b(UNION|INTERSECT|EXCEPT)\b", mq):
-            return None
-        sm = _re.match(r"(?is)^SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<body>.+)$", mq)
-        if not sm:
-            return None
-        # slice the ORIGINAL text by the masked match's spans (literals
-        # in prefix ON conditions are fine — the prefix runs verbatim)
-        sel = q[sm.start("sel"):sm.end("sel")]
-        body = q[sm.start("body"):sm.end("body")]
-        mbody = mq[sm.start("body"):sm.end("body")]
-        depths, d = [], 0
-        for ch in mbody:
-            depths.append(d)
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-        tail = ""
-        tail_re = _re.compile(
-            r"(?i)\s(WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT)\s"
-        )
-        for tmm in tail_re.finditer(mbody):
-            if depths[tmm.start()] == 0:
-                tail = body[tmm.start():].strip()
-                body = body[: tmm.start()]
-                mbody = mbody[: tmm.start()]
-                break
-        if _re.search(r"(?i)\bSELECT\b", mbody):
-            return None  # subquery in FROM — out of scope
-        join_re = _re.compile(
-            r"(?i)\b(?:(?:INNER|LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?)?JOIN\s"
-        )
-        starts = [j.start() for j in join_re.finditer(mbody) if depths[j.start()] == 0]
-        if len(starts) < 2:
-            return None  # ≤1 join is the primary path's territory
-        segs, msegs, prev = [], [], 0
-        for s0 in starts:
-            segs.append(body[prev:s0].strip())
-            msegs.append(mbody[prev:s0].strip())
-            prev = s0
-        segs.append(body[prev:].strip())
-        msegs.append(mbody[prev:].strip())
-        base, joins = segs[0], segs[1:]
-        mjoins = msegs[1:]
-        spatial_at = [
-            i for i, jseg in enumerate(mjoins)
-            if _re.search(r"(?i)\bST_\w+\s*\(", jseg)
-        ]
-        if len(spatial_at) != 1:
-            if len(spatial_at) > 1:
-                _bail("second spatial join in the chain")
-            return None
-        k = spatial_at[0]
-        if k == 0:
-            return None  # spatial-first failed the primary regex: bail quiet
-        spatial_seg = joins[k]
-        if _re.match(r"(?i)(LEFT|RIGHT|FULL)\b", spatial_seg):
-            _bail(
-                "outer spatial join after a join-chain prefix (the prefix "
-                "can't guarantee a unique restore key)"
-            )
-            return None
-        # collect prefix table/alias names; validate registration
-        names, tabs = [], []
-        bm = _re.match(r"(?i)^(\w+)(?:\s+(?:AS\s+)?(\w+))?$", base)
-        if not bm:
-            _bail("unparseable chain-prefix base table")
-            return None
-        names += [n for n in bm.groups() if n]
-        tabs.append(bm.group(1))
-        seg_re = _re.compile(
-            r"(?i)^(?:(?:INNER|LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?)?JOIN\s+"
-            r"(\w+)(?:\s+(?:AS\s+)?(?!ON\b)(\w+))?\s+ON\s+"
-        )
-        for jseg in joins[:k]:
-            jm = seg_re.match(jseg)
-            if not jm:
-                _bail("unparseable join segment in the chain prefix")
-                return None
-            names += [n for n in jm.groups() if n]
-            tabs.append(jm.group(1))
-        known = set(self._tables) | set(self._views)
-        missing = [t for t in tabs if t not in known]
-        if missing:
-            _bail(f"chain-prefix table(s) {missing} not registered")
-            return None
-        spm = seg_re.match(spatial_seg)
-        if not spm:
-            _bail("unparseable spatial join segment")
-            return None
-        lowered = {n.lower() for n in names}
-        if lowered & {x.lower() for x in spm.groups() if x}:
-            _bail("prefix alias collides with the spatial join's table/alias")
-            return None
-        pre_df = self.spark.sql(f"SELECT * FROM {base} {' '.join(joins[:k])}")
-        if len(set(pre_df.columns)) != len(pre_df.columns):
-            _bail("join-chain prefix produces duplicate column names")
-            return None
-        tmp = f"{self._routed_view}_pre_{uuid.uuid4().hex[:8]}"
-
-        def rq(s: str) -> str:
-            # literal-safe: a string mentioning "<alias>." is untouched
-            for n_ in names:
-                s = _sub_outside_literals(
-                    rf"(?i)\b{_re.escape(n_)}\.", f"{tmp}.", s
-                )
-            return s
-
-        new_q = f"SELECT {rq(sel)} FROM {tmp} {rq(spatial_seg)}"
-        rest_joins = " ".join(joins[k + 1:])
-        if rest_joins:
-            new_q += f" {rq(rest_joins)}"
-        if tail:
-            new_q += f" {rq(tail)}"
-        # _views registration only — the primary path resolves t1 via
-        # Engine.df() (the DataFrame object), never the Spark catalog,
-        # so no temp view is created for the prefix
-        self._views[tmp] = pre_df
+    def _frame(self, st: _Statement, side: _Side) -> DataFrame:
+        """A registered table reads through ``df``; any other operand (CTE
+        reference, derived table, join prefix) runs as its spliced text."""
+        if side.table is not None:
+            return self.df(side.table)
+        defs = ", ".join(st.render(*body.span()) for _, body in side.scope)
+        sql = f"{'WITH ' + defs if defs else ''} SELECT * FROM {st.render(*side.span())}"
         try:
-            # the rewritten query has the spatial join FIRST, so this
-            # recursion terminates in the primary path (or its bails)
-            return self._route_spatial_join(new_q)
-        finally:
-            del self._views[tmp]
+            df = self.spark.sql(_rewrite_spatial_predicates(sql))
+        except Exception as exc:
+            raise _NotRouted("operand failed to plan", f": {exc}") from None
+        if len({c.lower() for c in df.columns}) != len(df.columns):
+            raise _NotRouted("operand frame has duplicate column names")
+        return df
+
+    def _bail(self, why: str, query: str, detail: str = "") -> None:
+        """Count one router fallback under ``why`` and log it."""
+        with self._fallbacks_lock:
+            self.route_fallbacks[why] += 1
+        _LOG.warning("SQL-text spatial join NOT routed (%s%s) — plain spark.sql "
+                     "plans a Python-UDF ON clause as a cartesian "
+                     "BroadcastNestedLoopJoin, or rejects it: %.200s",
+                     why, detail, query)
 
     def table(self, name: str) -> GeoTable:
         """Pushdown-accumulating scan handle (§2.1 S1/S2); snapshot

@@ -837,7 +837,9 @@ def dbscan(
     resolution map, and the per-point output). Works for both metrics
     — sphere-mode state carries 3-D cell keys (ccx, ccy, ccz in the
     chordal embedding's grid) and must be continued with
-    ``dbscan_incremental(..., metric='sphere')``.
+    ``dbscan_incremental(..., metric='sphere')``. Result and state are
+    LAZY checkpoints, materialized by the first action consuming them:
+    ``df`` must read the same rows until then, or they silently change.
     """
     pts, eps, s = _validated_pts(
         df, key, x, y, eps, min_pts, coarse_cell, metric
@@ -931,7 +933,9 @@ def dbscan_incremental(
     delta-proportional key sets, so the O(state) frames are only ever
     scanned, never shuffled.
 
-    Returns (result, new_state)."""
+    Returns (result, new_state), lazy checkpoints like :func:`dbscan`'s:
+    ``df_all`` and ``delta`` must read the same rows until their first
+    consuming action."""
     if isinstance(prev_state, DataFrame):  # pre-r3 state shape
         p_result, p_eq, p_resolved = _assemble_full(prev_state, max_iter)
         prev_state = {

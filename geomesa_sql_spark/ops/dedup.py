@@ -339,10 +339,12 @@ def lsh_near_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
 
-    MinHash signatures → band buckets → self-equi-join on
-    (band, band_hash) → candidate pairs → exact shingle-Jaccard verify
-    (vectorized). Catalyst plans the self-join as a shuffled hash join
-    on uniformly-distributed keys; no O(n²) stage anywhere.
+    MinHash signatures → band buckets → per-(band, band_hash) id list
+    (one shuffle, ``collect_list``) → i<j candidate pairs expanded from
+    each list → exact shingle-Jaccard verify (vectorized). The pair
+    expansion is quadratic in a bucket's size and runs inside ONE row:
+    uniform text keeps buckets tiny, but a degenerate bucket (many
+    identical band hashes) yields O(k²) pairs in one task.
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)

@@ -1,0 +1,75 @@
+"""Spark's own parse tree of a SQL statement, read from Python.
+
+``parse`` runs the session's parser (no analysis, no catalog lookup)
+and returns the unresolved plan as a tree of :class:`Node` built from
+ONE ``toJSON()`` transfer. A node's character span comes from its
+JVM-side ``origin()``, fetched lazily, so only the nodes the SQL-text
+router splices cost Py4J calls.
+"""
+
+from __future__ import annotations
+
+import json
+import re
+
+# Origin(line, startPosition, startIndex, stopIndex, sqlText, ...)
+_ORIGIN_RE = re.compile(r"Origin\([^,]*,[^,]*,Some\((\d+)\),Some\((\d+)\)")
+
+
+class Node:
+    """A plan or expression node: ``cls`` is the short class name, ``d``
+    the JSON fields, ``kids`` the children (plan children of a plan
+    node, arguments of an expression)."""
+
+    def __init__(self, d: dict, parent: Node | None, step):
+        self.d, self.cls = d, d["class"].rsplit(".", 1)[-1]
+        self.kids: list[Node] = []
+        self._parent, self._step, self._jvm = parent, step, None
+
+    def jvm(self):
+        if self._jvm is None:  # step: the parent's JVM object -> this one
+            self._jvm = self._step(self._parent.jvm())
+        return self._jvm
+
+    def span(self) -> tuple[int, int]:
+        """``[start, stop)`` of the text this node was parsed from."""
+        m = _ORIGIN_RE.match(self.jvm().origin().toString())
+        if m is None:
+            raise ValueError(f"{self.cls} carries no source position")
+        return int(m.group(1)), int(m.group(2)) + 1
+
+    def sub(self, field: str, step, item: int | None = None) -> Node | None:
+        """The tree in JSON field ``field`` (its element ``item`` for a
+        list field), reached on the JVM side by ``step``."""
+        arr = self.d.get(field)
+        arr = arr[item] if arr and item is not None else arr
+        return _build(iter(arr), self, step) if arr else None
+
+    def name(self, field: str = "nameParts") -> list[str]:
+        return self.d[field].strip("[]").split(", ")  # "[a, b]"
+
+    def ctes(self) -> list[tuple[str, Node]]:
+        """``UnresolvedWith``: (name, SubqueryAlias) per definition."""
+        return [(c["_1"], _build(iter(c["_2"]), self,
+                                 lambda j, i=i: j.cteRelations().apply(i)._2()))
+                for i, c in enumerate(self.d["cteRelations"])]
+
+
+def _build(it, parent: Node | None, step) -> Node:
+    n = Node(next(it), parent, step)  # pre-order, each node counts its kids
+    n.kids = [_build(it, n, lambda j, i=i: j.children().apply(i))
+              for i in range(n.d["num-children"])]
+    return n
+
+
+def parse(spark, sql: str) -> Node:
+    """Parse ``sql``; raises on a syntax error, as ``spark.sql`` would."""
+    jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+    root = _build(iter(json.loads(jplan.toJSON())), None, None)
+    root._jvm = jplan
+    return root
+
+
+def conjuncts(e: Node) -> list[Node]:
+    """Top-level AND conjuncts of a condition, left to right."""
+    return conjuncts(e.kids[0]) + conjuncts(e.kids[1]) if e.cls == "And" else [e]

@@ -621,7 +621,7 @@ def test_sql_right_join_not_silently_inner(spark, sf_dir, tmp_path):
     eng.register_table("rnsq", p2)
     q = ("SELECT o_orderkey, n_nationkey FROM rpts RIGHT JOIN rnsq "
          "ON ST_Intersects(ST_MakePoint(lon, lat), poly)")
-    assert eng._route_spatial_join(q) is None
+    assert eng._route(q) is None
     with pytest.raises(Exception, match="(?i)udf|outer"):
         eng.sql(q).collect()
 
@@ -641,7 +641,7 @@ def test_sql_self_join_ambiguity_falls_through(spark, sf_dir, tmp_path):
     q = ("SELECT a.o_orderkey, b.o_orderkey FROM selfp a JOIN selfp b "
          "ON ST_DWithin(ST_MakePoint(a.lon, a.lat), "
          "ST_MakePoint(b.lon, b.lat), 20.0)")
-    assert eng._route_spatial_join(q) is None
+    assert eng._route(q) is None
     got = eng.sql(q).count()
     assert got > 0  # plain spark.sql answered it
 
@@ -758,7 +758,7 @@ def test_sql_left_spatial_join_needs_key_warns(spark, sf_dir, tmp_path, caplog):
     q = ("SELECT o_orderkey, n_nationkey FROM wpts LEFT JOIN wnsq "
          "ON ST_Intersects(ST_MakePoint(lon, lat), poly)")
     with caplog.at_level(logging.WARNING, logger="geomesa_sql_spark.engine"):
-        assert eng._route_spatial_join(q) is None
+        assert eng._route(q) is None
     assert any("NOT routed" in r.message and "unique key" in r.message
                for r in caplog.records)
 
@@ -767,12 +767,44 @@ def test_sql_left_spatial_join_needs_key_warns(spark, sf_dir, tmp_path, caplog):
     # masked text and the requalifier skips literal content)
     q2 = ("SELECT o_orderkey, 'x' AS tag FROM wpts JOIN wnsq "
           "ON ST_Intersects(ST_MakePoint(lon, lat), poly)")
-    routed = eng._route_spatial_join(q2)
+    routed = eng._route(q2)
     assert routed is not None
     rows = routed.collect()
     assert rows and all(r.tag == "x" for r in rows)
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_router_fallbacks_counted_once(spark, sf_dir, tmp_path):
+    """Each spatial shape the router leaves to plain spark.sql counts
+    exactly once in Engine.route_fallbacks, keyed by its reason; a
+    routed statement counts nothing."""
+    from collections import Counter
+
+    from geomesa_sql_spark.io.fixtures import nation_squares, orders_points
+
+    eng = Engine(spark)  # fid_col='image_id' — not a column of either table
+    p1, p2 = str(tmp_path / "p"), str(tmp_path / "n")
+    orders_points(spark, sf_dir).filter(F.col("o_orderkey") <= 500).select(
+        "o_orderkey", "lon", "lat"
+    ).write.parquet(p1)
+    nation_squares(spark, sf_dir).select("n_nationkey", "poly").write.parquet(p2)
+    eng.register_table("fbpts", p1)
+    eng.register_table("fbnsq", p2)
+    on = "ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly)"
+
+    eng.sql(f"SELECT p.o_orderkey FROM fbpts p JOIN fbnsq s {on}").collect()
+    assert eng.route_fallbacks == Counter()
+    assert eng._route(f"SELECT p.o_orderkey FROM fbpts p LEFT JOIN fbnsq s {on}") is None
+    assert eng.route_fallbacks == Counter({"LEFT spatial join needs a unique key": 1})
+    # through Engine.sql: the plain spark.sql fallback answers, counted once
+    q = (f"SELECT p.o_orderkey FROM fbpts p JOIN fbnsq s {on} "
+         "AND ST_DWithin(ST_MakePoint(p.lon, p.lat), s.poly, 1.0)")
+    assert sorted(eng.sql(q).collect()) == sorted(spark.sql(q).collect())
+    assert eng.route_fallbacks == Counter({
+        "LEFT spatial join needs a unique key": 1,
+        "second spatial predicate in the ON conjunction": 1,
+    })
 
 
 def test_sql_alias_qualified_operands_orient(spark, sf_dir, tmp_path):
@@ -817,7 +849,7 @@ def test_sql_spatial_join_chain_routed(spark, sf_dir, tmp_path):
     """r3: a multi-join chain whose FIRST join is spatial routes the
     spatial pair through the cell join and runs the remaining plain
     equi-joins as ordinary Spark SQL on top — no BNLJ anywhere; a
-    SECOND spatial join in the chain still bails (warned)."""
+    SECOND spatial join in the chain routes over the first one's view."""
     import logging
 
     from geomesa_sql_spark.io.fixtures import nation_squares, orders_points
@@ -856,21 +888,15 @@ def test_sql_spatial_join_chain_routed(spark, sf_dir, tmp_path):
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
-    # second spatial join in the chain: bail with a warning
+    # second spatial join in the chain: routed over the first's view
     q2 = ("SELECT p.o_orderkey FROM cpts p "
           "JOIN cnsq s ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly) "
           "JOIN cnsq t ON ST_Intersects(ST_MakePoint(p.lon, p.lat), t.poly)")
-    import logging as _l
-    caplog_records = []
-    h = _l.Handler()
-    h.emit = lambda rec: caplog_records.append(rec.getMessage())
-    lg = _l.getLogger("geomesa_sql_spark.engine")
-    lg.addHandler(h)
-    try:
-        assert eng._route_spatial_join(q2) is None
-    finally:
-        lg.removeHandler(h)
-    assert any("second spatial join" in msg for msg in caplog_records)
+    routed2 = eng._route(q2)
+    assert routed2 is not None
+    assert sorted(map(tuple, routed2.collect())) == sorted(
+        map(tuple, spark.sql(q2).collect())
+    )
 
 
 def test_sql_spatial_join_second_in_chain_routed(spark, sf_dir, tmp_path):
@@ -931,12 +957,12 @@ def test_sql_spatial_join_second_in_chain_routed(spark, sf_dir, tmp_path):
     lg.addHandler(h)
     try:
         # outer spatial join after a prefix: bail (warned)
-        assert eng._route_spatial_join(
+        assert eng._route(
             "SELECT d.o_custkey FROM pords d JOIN ppts p ON d.o_orderkey = p.pt_key "
             "LEFT JOIN pnsq s ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly)"
         ) is None
         # duplicate column names in the prefix: bail (warned)
-        assert eng._route_spatial_join(
+        assert eng._route(
             "SELECT p.lon FROM pords d JOIN pords e ON d.o_orderkey = e.o_orderkey "
             "JOIN pnsq s ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly)"
         ) is None
@@ -998,13 +1024,13 @@ def test_sql_with_cte_spatial_join_routed(spark, sf_dir, tmp_path):
     lg = _l.getLogger("geomesa_sql_spark.engine")
     lg.addHandler(h)
     try:
-        assert eng._route_with_ctes(
+        assert eng._route(
             "WITH wpts AS (SELECT 1 AS one) SELECT o_orderkey FROM wpts p "
             "JOIN wnsq s ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly)"
         ) is None
     finally:
         lg.removeHandler(h)
-    assert any("shadow existing tables" in r for r in records)
+    assert any("operand column(s) missing" in r for r in records)
 
 
 def test_sql_spatial_join_on_conjunct_residual(spark, sf_dir, tmp_path):
@@ -1052,12 +1078,12 @@ def test_sql_spatial_join_on_conjunct_residual(spark, sf_dir, tmp_path):
     lg = _l.getLogger("geomesa_sql_spark.engine")
     lg.addHandler(h)
     try:
-        assert eng._route_spatial_join(
+        assert eng._route(
             "SELECT p.o_orderkey FROM qpts p LEFT JOIN qnsq s "
             "ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly) "
             "AND s.n_nationkey >= 3"
         ) is None
-        assert eng._route_spatial_join(
+        assert eng._route(
             "SELECT p.o_orderkey FROM qpts p JOIN qnsq s "
             "ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly) "
             "AND ST_DWithin(ST_MakePoint(p.lon, p.lat), s.poly, 1.0)"
@@ -1348,9 +1374,7 @@ def test_sql_set_ops_with_spatial_branches(spark, sf_dir, tmp_path):
     """r3: top-level UNION/INTERSECT/EXCEPT whose branches contain
     spatial joins route per branch (no BNLJ), with the set-level
     ORDER BY/LIMIT applied to the combined frame; mixed operator
-    families bail warned."""
-    import logging as _l
-
+    families route with SQL's own precedence."""
     from geomesa_sql_spark.io.fixtures import nation_squares, orders_points
 
     eng = Engine(spark)
@@ -1396,20 +1420,15 @@ def test_sql_set_ops_with_spatial_branches(spark, sf_dir, tmp_path):
     all_match = {r.o_orderkey for r in pts.join(sq, bbox).select("o_orderkey").collect()}
     assert got2.count() == len(all_match)
 
-    records = []
-    h = _l.Handler()
-    h.emit = lambda rec: records.append(rec.getMessage())
-    lg = _l.getLogger("geomesa_sql_spark.engine")
-    lg.addHandler(h)
-    try:
-        assert eng._route_set_ops(
-            "SELECT p.o_orderkey FROM upts p JOIN unsq s "
-            "ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly) "
-            "UNION SELECT 1 INTERSECT SELECT 2"
-        ) is None
-    finally:
-        lg.removeHandler(h)
-    assert any("mixed set-operator families" in r for r in records)
+    # mixed set-operator families: INTERSECT binds tighter, as in SQL
+    q3 = ("SELECT p.o_orderkey FROM upts p JOIN unsq s "
+          "ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly) "
+          "UNION SELECT 1 INTERSECT SELECT 2")
+    routed3 = eng._route(q3)
+    assert routed3 is not None
+    assert sorted(map(tuple, routed3.collect())) == sorted(
+        map(tuple, spark.sql(q3).collect())
+    )
 
 
 def test_mask_literals_escapes():

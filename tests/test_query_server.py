@@ -104,10 +104,11 @@ def test_truncation_errors_and_auth(server):
     assert e.value.code == 401
 
 
-def test_concurrent_requests_do_not_cross(server):
-    """Plan construction serializes under the server's lock (CTE
-    routing registers views under user-chosen names); distinct
-    concurrent queries must each get their own rows."""
+def test_concurrent_requests_do_not_cross(server, spark):
+    """Requests plan concurrently, with no lock: every request names its
+    CTE ``picked``, and the spatial JOIN inside it routes through a view
+    with a per-call unique name, so distinct concurrent queries must
+    each get their own rows."""
     import concurrent.futures as cf
 
     def one(k):
@@ -121,9 +122,38 @@ def test_concurrent_requests_do_not_cross(server):
                        SELECT COUNT(*) AS n FROM picked"""})
         return k, out["rows"][0][0]
 
+    # a spatial JOIN inside the shared-name CTE: points within 6 degrees
+    # of nation sites strung along the equator, the first k nations only
+    sites = ("SELECT n_nationkey, CAST(n_nationkey AS DOUBLE) * 10.0 - 120.0 "
+             "AS nx, 0.0D AS ny FROM nation_q WHERE n_nationkey < {k}")
+
+    def joined(k):
+        out = _req(f"{server}/sql", {
+            "sql": f"""WITH picked AS (
+                         SELECT p.id, n.n_nationkey FROM pts_q p
+                         JOIN ({sites.format(k=k)}) n
+                         ON ST_DWithin(ST_MakePoint(p.lon, p.lat),
+                                       ST_MakePoint(n.nx, n.ny), 6.0))
+                       SELECT COUNT(*) AS n FROM picked"""})
+        return k, out["rows"][0][0]
+
+    ks = [2, 5, 8, 11, 14, 17]
+    want = {
+        k: spark.sql(
+            f"SELECT COUNT(*) FROM pts_q p JOIN ({sites.format(k=k)}) n "
+            "ON (p.lon - n.nx) * (p.lon - n.nx) + (p.lat - n.ny) * (p.lat - n.ny) "
+            "<= 36.0"
+        ).first()[0]
+        for k in ks
+    }
+    assert len(set(want.values())) == len(ks), want
     with cf.ThreadPoolExecutor(max_workers=6) as ex:
-        for k, n in ex.map(one, [2, 5, 8, 11, 14, 17]):
+        plain = ex.map(one, ks)
+        spatial = ex.map(joined, ks)
+        for k, n in plain:
             assert n == k + 1, (k, n)
+        for k, n in spatial:
+            assert n == want[k], (k, n, want[k])
 
 
 def test_malformed_bodies_get_structured_400(server):

@@ -1,9 +1,9 @@
 """Randomized differential law for the SQL-text router.
 
-The router (engine.py: spatial predicate rewrite + join/CTE/set-op/
-derived-table routing over literal-masked text) is the one component
-built on string analysis, so it gets a generator-based law on top of
-the targeted tests: for a seeded corpus of SQL shapes over tiny
+The router (engine.py: the literal-geometry predicate rewrite, plus
+spatial joins routed by splicing views over the text spans of Spark's
+parse tree) is the one component that rewrites SQL text, so it gets a
+generator-based law on top of the targeted tests: for a seeded corpus of SQL shapes over tiny
 fixture tables, ``Engine.sql(q)`` must return exactly the rows plain
 ``spark.sql(q)`` returns (the UDFs are registered on the same session,
 so naive evaluation — BNLJ joins, unpushed UDF filters — is a complete
@@ -163,6 +163,76 @@ def _gen_setop(rng) -> str:
     return f"{a} {op} {b}"
 
 
+# routable operands: bare coordinate and WKB columns out of derived tables
+ROUTABLE_PREDS = ["ST_Within", "ST_Intersects", "ST_Contains"]
+
+
+def _pts_dt(alias: str, rng) -> str:
+    f = rng.choice(["1.0", "0.7", "1.3"])
+    return (
+        f"(SELECT n_nationkey, n_name, CAST(n_nationkey AS DOUBLE) * {f} AS x, "
+        f"CAST(n_regionkey AS DOUBLE) * 0.5 AS y FROM nation_t) {alias}"
+    )
+
+
+def _env_dt(alias: str, rng) -> str:
+    return f"(SELECT r_regionkey, r_name, {_env('', rng)} AS g FROM region_t) {alias}"
+
+
+def _routable_on(rng) -> str:
+    pred = rng.choice(ROUTABLE_PREDS)
+    pt, g = "ST_MakePoint(a.x, a.y)", "b.g"
+    if pred == "ST_Contains" or (pred == "ST_Intersects" and rng.random() < 0.5):
+        return f"{pred}({g}, {pt})"
+    return f"{pred}({pt}, {g})"
+
+
+def _gen_mixed_setop(rng) -> str:
+    """UNION with INTERSECT/EXCEPT in one statement, spatial joins in
+    the branches: SQL's precedence (INTERSECT binds tighter) groups it."""
+    def join() -> str:
+        return (
+            f"SELECT a.n_nationkey, a.n_name FROM {_pts_dt('a', rng)} "
+            f"JOIN {_env_dt('b', rng)} ON {_routable_on(rng)}"
+        )
+
+    plain = f"SELECT n_nationkey, n_name FROM nation_t WHERE {_residual('', rng)}"
+    ops = rng.sample(["UNION", "UNION ALL", rng.choice(["INTERSECT", "EXCEPT"])], 2)
+    branches = [join(), plain, join()]
+    rng.shuffle(branches)
+    return f"{branches[0]} {ops[0]} {branches[1]} {ops[1]} {branches[2]}"
+
+
+def _gen_cte_derived_join(rng) -> str:
+    """A spatial join inside a derived table inside a CTE body."""
+    resid = rng.choice(["MOD(h.n_nationkey, 3) = 0", "h.r_name LIKE '%A%'"])
+    return (
+        f"WITH hits AS (SELECT h.n_nationkey, h.r_name FROM ("
+        f"SELECT a.n_nationkey, b.r_name FROM {_pts_dt('a', rng)} "
+        f"JOIN {_env_dt('b', rng)} ON {_routable_on(rng)}) h "
+        f"WHERE {resid}) "
+        f"SELECT n_nationkey, r_name FROM hits"
+    )
+
+
+def _gen_cte_exists(rng) -> tuple[str, str]:
+    """A correlated spatial [NOT] EXISTS inside a CTE body. Spark plans
+    that EXISTS as a semi/anti join and rejects a Python UDF in its ON
+    clause, so the oracle is the same CTE written as an inner join
+    (distinct: the key is unique) or an EXCEPT of one."""
+    neg = rng.random() < 0.4
+    pts, env, on = _pts_dt("a", rng), _env_dt("b", rng), _routable_on(rng)
+    cols = "a.n_nationkey, a.n_name"
+    q = (
+        f"WITH near AS (SELECT {cols} FROM {pts} "
+        f"WHERE {'NOT ' if neg else ''}EXISTS (SELECT 1 FROM {env} WHERE {on})) "
+        f"SELECT n.n_nationkey, n.n_name FROM near n"
+    )
+    hits = f"SELECT DISTINCT {cols} FROM {pts} JOIN {env} ON {on}"
+    body = f"SELECT {cols} FROM {pts} EXCEPT {hits}" if neg else hits
+    return q, f"WITH near AS ({body}) SELECT n.n_nationkey, n.n_name FROM near n"
+
+
 def _gen_nonspatial(rng) -> str:
     trap = rng.choice(TRAP_LITERALS)
     q = (
@@ -184,6 +254,9 @@ GENS = [
     _gen_derived,
     _gen_setop,
     _gen_nonspatial,
+    _gen_mixed_setop,
+    _gen_cte_derived_join,
+    _gen_cte_exists,
 ]
 
 
@@ -202,9 +275,13 @@ def _rows(df):
 def test_router_differential_fuzz(fuzz_eng, spark):
     rng = random.Random(20260818)
     failures = []
-    for i in range(36):
-        q = _kw(GENS[i % len(GENS)](rng), rng)
-        want = _rows(spark.sql(q))  # oracle defines validity; raises = gen bug
+    for i in range(4 * len(GENS)):
+        q, oracle = GENS[i % len(GENS)](rng), None
+        if isinstance(q, tuple):  # a shape plain spark.sql cannot plan
+            q, oracle = q
+        q = _kw(q, rng)
+        # oracle defines validity; raises = gen bug
+        want = _rows(spark.sql(oracle or q))
         try:
             got = _rows(fuzz_eng.sql(q))
         except Exception as ex:  # router must never crash on valid SQL

@@ -58,13 +58,6 @@ HARD_MAX_ROWS = 100_000
 _TILE_RE = re.compile(r"^/tiles/(\d{1,2})/(\d+)/(\d+)\.mvt$")
 MAX_TILE_FEATURES = 100_000
 
-# Engine.sql's routed-join views are uuid-suffixed (safe concurrently),
-# but CTE routing registers transient views under the USER'S cte names
-# (engine.py _route_with_ctes) — two concurrent queries sharing a CTE
-# name would race. Plan construction is cheap driver-side work, so it
-# runs under one lock; execution (collect) stays fully concurrent.
-_PLAN_LOCK = threading.Lock()
-
 
 def _json_value(v):
     """JSON-safe scalar encoding (see module docstring for the table)."""
@@ -92,8 +85,7 @@ def _json_value(v):
 
 def _execute(engine, sql: str, max_rows: int) -> dict:
     t0 = time.monotonic()
-    with _PLAN_LOCK:
-        df = engine.sql(sql)
+    df = engine.sql(sql)
     # toLocalIterator + islice, NOT df.limit(): GlobalLimit funnels
     # every candidate row through one partition — over binary columns
     # (image payloads, WKB) that single task serializes the whole
@@ -117,8 +109,8 @@ def _execute(engine, sql: str, max_rows: int) -> dict:
 def make_handler(engine, token: str | None):
     class Handler(BaseHTTPRequestHandler):
         # one Engine, many threads: Spark supports concurrent actions
-        # from multiple driver threads; plan construction serializes
-        # under _PLAN_LOCK (see note there), execution does not
+        # from multiple driver threads, and Engine.sql's routed-join
+        # views carry per-call unique names, so requests never serialize
 
         def _send(self, code: int, payload: dict) -> None:
             body = json.dumps(payload).encode()
