@@ -20,8 +20,10 @@ is a SnapshotTable directory, else to plain parquet append.
 
 from __future__ import annotations
 
+import itertools
 import logging
 import os
+import re as _re
 import threading
 import uuid
 from collections import Counter
@@ -32,147 +34,9 @@ from pyspark.sql import functions as F
 
 from geomesa_sql_spark import sqltree
 from geomesa_sql_spark.functions import register_all
-from geomesa_sql_spark.io.dml import SnapshotTable, _sub_outside_literals
+from geomesa_sql_spark.io.dml import SnapshotTable
 from geomesa_sql_spark.plan.scan import GeoTable
-
-
-import re as _re
-
-
-def _parse_dml(query: str):
-    """Minimal DML statement recognizer. Returns None for SELECT-like
-    text; otherwise (verb, table, body):
-    - INSERT INTO t VALUES (...),(...) / INSERT INTO t SELECT ...
-    - UPDATE t SET a = e1, b = e2 [WHERE cond]
-    - DELETE FROM t [WHERE cond]
-    - MERGE INTO t [a] USING s|(<subquery>) [b] ON key
-      [WHEN MATCHED THEN UPDATE [SET col = expr, ...]]
-      [WHEN NOT MATCHED THEN INSERT]
-      (key-equality upsert: without a SET list, matched rows take the
-      source's provided columns; WITH one (r3), only the SET columns
-      update — expressions may mix target columns (bare or
-      target-alias-qualified) with source columns (source-alias- or
-      src.-qualified). Omitting both WHEN clauses means full upsert.
-      Extra match predicates are not parsed — use Engine.merge.)
-    Expressions inside SET/WHERE pass verbatim to Spark's expression
-    parser (F.expr) — the same surface as the reference's Calcite SQL —
-    except subquery-carrying clauses, which Engine.sql plans through
-    spark.sql over the registered view instead: UPDATE/DELETE WHERE
-    (IN/[NOT] EXISTS/scalar — see _where_arg) and UPDATE SET-side
-    scalar subqueries (planned into a (fid, value) frame applied as a
-    distributed fid join; correlated forms resolve against the target
-    row like ANSI UPDATE, against the pre-update snapshot).
-    """
-    q = query.strip().rstrip(";")
-    m = _re.match(
-        r"(?is)^INSERT\s+INTO\s+(\w+)\s*(\([^)]*\))?\s*(VALUES\s+.*|SELECT\s+.*)$", q
-    )
-    if m:
-        cols = None
-        if m.group(2):
-            cols = [c.strip() for c in m.group(2)[1:-1].split(",")]
-        body = m.group(3)
-        if body.upper().startswith("VALUES"):
-            body = body[len("VALUES"):].strip()
-        return ("insert", m.group(1), (cols, body))
-    m = _re.match(
-        r"(?is)^MERGE\s+INTO\s+(\w+)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?\s+USING\s+"
-        r"(\w+|\([^()]*(?:\([^()]*\)[^()]*)*\))(?:\s+(?:AS\s+)?(?!ON\b)(\w+))?\s+ON\s+(\w+)"
-        r"(\s+WHEN\s+MATCHED\s+THEN\s+UPDATE"
-        r"(?:\s+SET\s+(?P<set>.+?)(?=\s+WHEN\s+NOT\s+MATCHED|\s*$))?)?"
-        r"(\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT)?\s*$",
-        q,
-    )
-    if m:
-        has_upd, has_ins = bool(m.group(6)), bool(m.group(8))
-        if not has_upd and not has_ins:  # bare MERGE = full upsert
-            has_upd = has_ins = True
-        return (
-            "merge",
-            m.group(1),
-            (m.group(3), m.group(5), has_upd, has_ins,
-             m.group("set"), m.group(2), m.group(4)),
-        )
-    m = _re.match(r"(?is)^UPDATE\s+(\w+)\s+SET\s+(.*)$", q)
-    if m:
-        set_part, where = _split_top_level_where(m.group(2))
-        return ("update", m.group(1), (set_part, where))
-    m = _re.match(r"(?is)^DELETE\s+FROM\s+(\w+)(?:\s+(.*))?$", q)
-    if m:
-        rest = m.group(2)
-        if rest is None:
-            return ("delete", m.group(1), None)
-        head, where = _split_top_level_where("__ " + rest)
-        if head.strip() != "__" or where is None:
-            return None  # junk between table name and WHERE
-        return ("delete", m.group(1), where)
-    return None
-
-
-def _split_top_level_where(s: str) -> tuple[str, str | None]:
-    """Split on the first WHERE at paren depth 0 outside quotes — a SET
-    expression or string literal containing the word WHERE must not be
-    cut (the lazy-regex version mis-split on the first ' WHERE ' text
-    anywhere; ADVICE r01). Returns (head, where_clause | None)."""
-    depth = 0
-    quote = None
-    i = 0
-    n = len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\":  # backslash escape inside a literal
-                i += 2
-                continue
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and ch in "wW" and s[i : i + 5].upper() == "WHERE":
-            before_ok = i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")
-            after = s[i + 5 : i + 6]
-            after_ok = after == "" or not (after.isalnum() or after == "_")
-            if before_ok and after_ok:
-                return s[:i].rstrip(), s[i + 5 :].strip() or None
-        i += 1
-    return s, None
-
-
-def _split_assignments(set_part: str):
-    """Split 'a = e1, b = e2' on top-level commas (not inside parens
-    or quotes)."""
-    depth = 0
-    quote = None
-    start = 0
-    parts = []
-    skip = False
-    for i, ch in enumerate(set_part):
-        if skip:
-            skip = False
-            continue
-        if quote:
-            if ch == "\\":
-                skip = True
-            elif ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(set_part[start:i])
-            start = i + 1
-    parts.append(set_part[start:])
-    for p in parts:
-        col, expr = p.split("=", 1)
-        yield col.strip(), expr.strip()
+from geomesa_sql_spark.sqltree import _mask_literals
 
 
 _SPATIAL_PRED_RE = _re.compile(
@@ -193,34 +57,6 @@ _SPATIAL_PRED_FLIP_RE = _re.compile(
     r"(?:,\s*([0-9.eE+-]+)\s*)?\)"
 )
 
-
-def _mask_literals(s: str) -> str:
-    """Blank out quoted-literal CONTENT (keeping length and the quote
-    chars) so paren-depth scans and keyword regexes can run over SQL
-    that contains string literals — e.g. WKT in ST_GeomFromText('...').
-    Handles doubled-quote escapes ('' and "")."""
-    out = list(s)
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"":
-            q = ch
-            i += 1
-            while i < n:
-                if s[i] == "\\" and i + 1 < n:  # backslash escape
-                    out[i] = out[i + 1] = " "
-                    i += 2
-                    continue
-                if s[i] == q:
-                    if i + 1 < n and s[i + 1] == q:  # doubled escape
-                        out[i] = out[i + 1] = " "
-                        i += 2
-                        continue
-                    break
-                out[i] = " "
-                i += 1
-        i += 1
-    return "".join(out)
 
 _TRANSFORM_NAME_RE = _re.compile(r"(?i)\bST_Transform\s*\(")
 
@@ -454,6 +290,52 @@ class _Statement:
         return "".join(out) + self.text[pos:hi]
 
 
+_DML_VERBS = {"INSERT", "UPDATE", "DELETE", "MERGE"}
+_SUBQUERIES = {"ScalarSubquery", "ListQuery", "InSubquery", "Exists"}
+_MERGE_SHORTHAND_RE = _re.compile(
+    r"(?i)\bTHEN\s+(?:(UPDATE)\b(?!\s+SET\b)|INSERT\b(?!\s*[(*]))")
+
+
+def _complete_merge(query: str) -> str:
+    """Spell the engine's MERGE shorthand the way Spark's grammar takes
+    it: no WHEN clause is a full upsert, ``THEN UPDATE`` without SET
+    takes the source's columns (``UPDATE SET *``) and ``THEN INSERT``
+    without a column list is ``INSERT *``. Keywords are matched in the
+    literal-masked text."""
+    masked = _mask_literals(query)
+    if not _re.search(r"(?i)\bWHEN\b", masked):
+        return (query.rstrip().rstrip(";")
+                + "\nWHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    for m in reversed(list(_MERGE_SHORTHAND_RE.finditer(masked))):
+        query = query[:m.end()] + (" SET *" if m.group(1) else " *") + query[m.end():]
+    return query
+
+
+def _text(st: _Statement, e) -> str:
+    """Source text of expression ``e``, with ``st``'s edits. A predicate
+    (IN, LIKE, BETWEEN, IS NULL, ...) is positioned from its keyword on,
+    and a NOT over one shares that position: the operands before the
+    keyword are put back in front, parenthesized, because their own
+    positions leave out any parentheses around them."""
+    lo, hi = e.span()
+    if e.kids and e.kids[0].span() == (lo, hi):
+        return _text(st, e.kids[0])
+    lead = list(itertools.takewhile(lambda k: k.span()[0] < lo, e.kids))
+    head = f"({', '.join(_text(st, k) for k in lead)}) " if lead else ""
+    return head + st.render(lo, hi)
+
+
+def _has_subquery(e) -> bool:
+    return any(n.cls in _SUBQUERIES for n in sqltree.nodes(e))
+
+
+def _unalias(rel):
+    """(relation, alias or None) of a possibly aliased relation node."""
+    if rel.cls == "SubqueryAlias":
+        return rel.kids[0], rel.d["identifier"]["name"]
+    return rel, None
+
+
 _LOG = logging.getLogger(__name__)
 
 
@@ -462,6 +344,7 @@ class Engine:
         self.spark = spark
         self.fid_col = fid_col
         self._tables: dict[str, str] = {}
+        self._frames: dict[str, DataFrame] = {}  # each table's registered read
         self._views: dict[str, DataFrame] = {}
         # spatial shapes the router left to plain spark.sql, by reason
         self.route_fallbacks: Counter[str] = Counter()
@@ -489,7 +372,8 @@ class Engine:
         """Add a table to the schema and expose it to SQL (the analog of
         GeoMesaSchema's typeName → table map, GeoMesaSchema.scala:38-50)."""
         self._tables[name] = path
-        self._read(path).createOrReplaceTempView(name)
+        self._frames[name] = self._read(path)
+        self._frames[name].createOrReplaceTempView(name)
 
     def register_view(self, name: str, df: DataFrame) -> None:
         """Register a DataFrame (not a path) as a queryable table — the
@@ -508,7 +392,7 @@ class Engine:
             return self._views[name].schema
         if name not in self._tables:
             raise ValueError(f"unknown table {name!r}")
-        return self._read(self._tables[name]).schema
+        return self._frames[name].schema
 
     def _read(self, path: str) -> DataFrame:
         if os.path.exists(os.path.join(path, "_CURRENT")):
@@ -525,117 +409,182 @@ class Engine:
     # -------------------------------------------------------------- query
 
     def sql(self, query: str) -> DataFrame:
-        """SELECT → Spark SQL; INSERT/UPDATE/DELETE on a registered
-        snapshot table → snapshot commit returning a single-row
+        """SELECT → Spark SQL; INSERT/UPDATE/DELETE/MERGE on a registered
+        snapshot or Iceberg table → snapshot commit returning a single-row
         affected-count frame, like the reference's executeUpdate
         (nodes/GeoMesaPhysicalTableModify.scala:129-143 returns the
-        count as a 1-row result)."""
-        dml = _parse_dml(query)
-        if dml is None:
+        count as a 1-row result).
+
+        A statement whose first keyword is a DML verb is read from
+        Spark's parse tree (``sqltree.parse``) — node names and text
+        spans, never a regex over the statement:
+        - INSERT INTO t [(cols)] VALUES (...), ... | <query>
+        - UPDATE t SET a = e1, b = e2 [WHERE cond]
+        - DELETE FROM t [WHERE cond]
+        - MERGE INTO t [a] USING s|(<query>) [b] ON key
+          [WHEN MATCHED THEN UPDATE [SET col = expr, ... | *]]
+          [WHEN NOT MATCHED THEN INSERT [*]]
+          (key-equality upsert on one bare column: without a SET list,
+          matched rows take the source's provided columns; WITH one,
+          only the SET columns update — expressions may mix target
+          columns (bare or target-alias-qualified) with source columns
+          (source-alias- or src.-qualified). Omitting both WHEN clauses
+          means full upsert; these shorthands are completed to Spark's
+          spelling before the parse (``_complete_merge``). Extra match
+          predicates and DELETE actions are refused — use Engine.merge.)
+        Expressions inside SET/WHERE pass verbatim to Spark's expression
+        parser (F.expr) — the same surface as the reference's Calcite SQL —
+        except subquery-carrying ones, which are planned through
+        spark.sql over the registered view instead: UPDATE/DELETE WHERE
+        (IN/[NOT] EXISTS/scalar — see _where_arg) and UPDATE SET-side
+        scalar subqueries (planned into a (fid, value) frame applied as a
+        distributed fid join; correlated forms resolve against the target
+        row like ANSI UPDATE, against the pre-update snapshot)."""
+        verb = query.split(None, 1)[0].upper() if query.strip() else ""
+        if verb not in _DML_VERBS:
             routed = self._route(query)
             if routed is not None:
                 return routed
             return self.spark.sql(_rewrite_spatial_predicates(query))
-        verb, table, body = dml
-        if table not in self._tables:
-            raise ValueError(f"unknown table {table!r} in DML")
-        if verb == "insert":
-            cols, src = body
-            names = cols or self.describe(table).names
-            if src.upper().startswith("SELECT"):
-                rows = self.spark.sql(src).toDF(*names)
-            else:
-                rows = self.spark.sql(
-                    f"SELECT * FROM (VALUES {src}) AS t({', '.join(names)})"
-                )
-            n = self.insert(table, rows)
-        elif verb == "merge":
-            src_ref, key, do_upd, do_ins, set_part, tgt_alias, src_alias = body
-            if src_ref.startswith("("):
-                source = self.spark.sql(src_ref[1:-1])
-            elif src_ref in self._views:
-                source = self._views[src_ref]
-            elif src_ref in self._tables:
-                source = self.df(src_ref)
-            else:
-                raise ValueError(f"unknown MERGE source {src_ref!r}")
-            set_exprs = None
-            if set_part:
-                # normalize qualifiers: the USING alias/name -> 'src.'
-                # (the convention io/dml.py's merge consumes); the
-                # target alias/name is stripped (bare names = target).
-                # Rewrites run OUTSIDE string literals only (review
-                # r3); a target named/aliased 'src' would still collide
-                # with the convention — refuse that loudly.
-                if "src" in (table.lower(), (tgt_alias or "").lower()):
-                    raise ValueError(
-                        "a MERGE target named/aliased 'src' collides with "
-                        "the source-qualifier convention — rename it or "
-                        "use Engine.merge(set_exprs=...)"
-                    )
-                for q_ in filter(None, (src_alias, src_ref if _re.match(r"^\w+$", src_ref) else None)):
-                    set_part = _sub_outside_literals(
-                        rf"(?i)\b{_re.escape(q_)}\.", "src.", set_part
-                    )
-                for q_ in filter(None, (tgt_alias, table)):
-                    set_part = _sub_outside_literals(
-                        rf"(?i)\b{_re.escape(q_)}\.", "", set_part
-                    )
-                set_exprs = dict(_split_assignments(set_part))
-            n_upd, n_ins = self.merge(
-                table,
-                source,
-                on=key,
-                when_matched="update" if do_upd else "ignore",
-                when_not_matched="insert" if do_ins else "ignore",
-                set_exprs=set_exprs,
-            )
-            n = n_upd + n_ins
-        elif verb == "update":
-            set_part, where = body
-            if where is not None:
-                where = _rewrite_spatial_predicates(where)
-            exprs: dict = dict(_split_assignments(set_part))
+        if verb == "MERGE":
+            query = _complete_merge(query)
+        root = sqltree.parse(self.spark, query)
+        run = {"InsertIntoStatement": self._sql_insert, "UpdateTable": self._sql_update,
+               "DeleteFromTable": self._sql_delete, "MergeIntoTable": self._sql_merge,
+               }.get(root.cls)
+        if run is None:
+            return self.spark.sql(query)
+        n = run(_Statement(query), root)
+        return self.spark.createDataFrame([(n,)], "affected bigint")
+
+    def _target(self, rel) -> str:
+        """The registered table a DML statement writes."""
+        if rel.cls != "UnresolvedRelation":
+            raise ValueError("a DML target is a table name, without an alias")
+        name = ".".join(rel.name("multipartIdentifier"))
+        if name not in self._tables:
+            raise ValueError(f"unknown table {name!r} in DML")
+        return name
+
+    def _sql_insert(self, st: _Statement, node) -> int:
+        if node.d["overwrite"] or node.d["byName"]:
+            raise ValueError("INSERT OVERWRITE and INSERT BY NAME are not supported")
+        table = self._target(node.sub("table", lambda j: j.table()))
+        names = (node.name("userSpecifiedCols") if node.d["userSpecifiedCols"]
+                 else self.describe(table).names)
+        return self.insert(table, sqltree.frame(self.spark, node.kids[0]).toDF(*names))
+
+    def _sql_update(self, st: _Statement, node) -> int:
+        table = self._target(node.kids[0])
+        sets = [node.sub("assignments", lambda j, i=i: j.assignments().apply(i), i)
+                for i in range(len(node.d["assignments"]))]
+        cond = node.sub("condition", lambda j: j.condition().get())
+        # the WHERE clause runs from the SET list (one origin shared by
+        # its assignments) to the statement's end
+        clause = st.text[sets[0].span()[1]:node.span()[1]] if cond else ""
+        where_sql = _rewrite_spatial_predicates(clause)
+        exprs: dict = {}
+        for i, (key, value) in enumerate(a.kids for a in sets):
+            ex = _text(st, value)
             # SET-side scalar subqueries (r4 verdict #8): F.expr can't
             # plan them, so each such SET expression is planned by
             # spark.sql over the registered view — Spark's subquery
             # planner handles scalar/correlated forms for free — into a
             # (fid, value) frame that io/dml.py applies as a fid join
-            where_sql = f" WHERE {where}" if where is not None else ""
-            for i, (col_, ex) in enumerate(exprs.items()):
-                if _re.search(r"(?is)\(\s*SELECT\b", _mask_literals(ex)):
-                    exprs[col_] = self.spark.sql(
-                        f"SELECT {self.fid_col}, ({ex}) AS __v{i} "
-                        f"FROM {table}{where_sql}"
-                    )
-            n = self.update(table, exprs, self._where_arg(table, where))
-        else:
-            where = None if body is None else _rewrite_spatial_predicates(body)
-            n = self.delete(table, self._where_arg(table, where))
-        return self.spark.createDataFrame([(n,)], "affected bigint")
+            exprs[key.name()[-1]] = self.spark.sql(
+                f"SELECT {self.fid_col}, ({ex}) AS __v{i} FROM {table} {where_sql}"
+            ) if _has_subquery(value) else ex
+        return self.update(table, exprs, self._where_arg(st, table, cond, where_sql))
+
+    def _sql_delete(self, st: _Statement, node) -> int:
+        table = self._target(node.kids[0])
+        cond = node.sub("condition", lambda j: j.condition())
+        if cond.cls == "Literal" and cond.d["value"] == "true":  # no WHERE
+            return self.delete(table)
+        clause = st.text[node.kids[0].span()[1]:node.span()[1]]
+        return self.delete(table, self._where_arg(
+            st, table, cond, _rewrite_spatial_predicates(clause)))
 
     def _where_arg(
-        self, table: str, where: str | None
+        self, st: _Statement, table: str, cond, where_sql: str
     ) -> Column | DataFrame | None:
-        """DML WHERE text → planner argument. Plain predicates become a
-        Column (F.expr, whole-stage codegen); predicates carrying a
-        subquery (IN/NOT IN/[NOT] EXISTS/scalar) can't live in a Column,
-        so they're planned by spark.sql over the registered view — where
-        Spark's subquery planner (semi/anti join, ANSI NOT-IN nulls) is
-        free — and handed down as the matching-fid frame that
-        io/dml.py's update/delete consume as a distributed semi/anti
-        join. The reference plans DML through the full Calcite planner
-        so subqueries work there (ModificationTest.scala surface); this
+        """DML WHERE → planner argument. Plain predicates become a
+        Column (F.expr of the condition's text, whole-stage codegen);
+        predicates carrying a subquery (IN/NOT IN/[NOT] EXISTS/scalar)
+        can't live in a Column, so the WHERE clause ``where_sql`` is
+        planned by spark.sql over the registered view — where Spark's
+        subquery planner (semi/anti join, ANSI NOT-IN nulls) is free —
+        and handed down as the matching-fid frame that io/dml.py's
+        update/delete consume as a distributed semi/anti join. The
+        reference plans DML through the full Calcite planner so
+        subqueries work there (ModificationTest.scala surface); this
         closes the SQL-text gap noted in VERDICT r3 (missing #3).
-        ``where`` arrives already through _rewrite_spatial_predicates,
-        like every SELECT's text."""
-        if where is None:
+        Both texts go through _rewrite_spatial_predicates, like every
+        SELECT's."""
+        if cond is None:
             return None
-        if _re.search(r"(?is)\(\s*SELECT\b", _mask_literals(where)):
-            return self.spark.sql(
-                f"SELECT {self.fid_col} FROM {table} WHERE {where}"
-            )
-        return F.expr(where)
+        if _has_subquery(cond):
+            return self.spark.sql(f"SELECT {self.fid_col} FROM {table} {where_sql}")
+        return F.expr(_rewrite_spatial_predicates(_text(st, cond)))
+
+    def _sql_merge(self, st: _Statement, node) -> int:
+        (tgt, t_alias), (src, s_alias) = (_unalias(k) for k in node.kids)
+        table = self._target(tgt)
+        s_name = (".".join(src.name("multipartIdentifier"))
+                  if src.cls == "UnresolvedRelation" else None)
+        if s_name is None:
+            source = sqltree.frame(self.spark, src)
+        elif s_name in self._views or s_name in self._tables:
+            source = self.df(s_name)
+        else:
+            raise ValueError(f"unknown MERGE source {s_name!r}")
+        key = node.sub("mergeCondition", lambda j: j.mergeCondition())
+        if key.cls != "UnresolvedAttribute" or len(key.name()) != 1:
+            raise ValueError("MERGE ... ON takes one bare key column that both "
+                             "tables carry (ON k); use Engine.merge(on=...)")
+        matched, not_matched = (
+            [(a[0]["class"].rsplit(".", 1)[-1], bool(a[0].get("condition")))
+             for a in node.d[f]] for f in ("matchedActions", "notMatchedActions"))
+        if (node.d["notMatchedBySourceActions"] or len(matched) > 1
+                or len(not_matched) > 1 or any(c for _, c in matched + not_matched)
+                or {k for k, _ in matched} - {"UpdateAction", "UpdateStarAction"}
+                or {k for k, _ in not_matched} - {"InsertStarAction"}):
+            raise ValueError("MERGE takes WHEN MATCHED THEN UPDATE [SET ...] and "
+                             "WHEN NOT MATCHED THEN INSERT, without AND conditions; "
+                             "use Engine.merge")
+        set_exprs = None
+        if matched and matched[0][0] == "UpdateAction":
+            # qualifiers normalize: the USING alias/name -> 'src.' (the
+            # convention io/dml.py's merge consumes); the target
+            # alias/name is dropped (bare names = target). Edits are
+            # spans of attribute nodes, so string literals are never
+            # touched; a target named/aliased 'src' would still collide
+            # with the convention — refuse that loudly.
+            if "src" in (table.lower(), (t_alias or "").lower()):
+                raise ValueError(
+                    "a MERGE target named/aliased 'src' collides with "
+                    "the source-qualifier convention — rename it or "
+                    "use Engine.merge(set_exprs=...)"
+                )
+            quals = {q.lower(): "" for q in (t_alias, table) if q}
+            quals.update({q.lower(): "src." for q in (s_alias, s_name) if q})
+            upd = node.sub("matchedActions", lambda j: j.matchedActions().apply(0), 0)
+            set_exprs = {}
+            for key_, value in (a.kids for a in upd.kids):
+                for e in sqltree.nodes(value):
+                    parts = e.name() if e.cls == "UnresolvedAttribute" else []
+                    if len(parts) > 1 and parts[0].lower() in quals:
+                        st.edits[e.span()] = quals[parts[0].lower()] + ".".join(parts[1:])
+                set_exprs[key_.name()[-1]] = _text(st, value)
+        n_upd, n_ins = self.merge(
+            table,
+            source,
+            on=key.name()[0],
+            when_matched="update" if matched else "ignore",
+            when_not_matched="insert" if not_matched else "ignore",
+            set_exprs=set_exprs,
+        )
+        return n_upd + n_ins
 
     def _route(self, query: str) -> DataFrame | None:
         """The EnumerableSpatialJoinRule analog for SQL TEXT, walking
@@ -876,9 +825,11 @@ class Engine:
         return GeoTable(self.spark, path)
 
     def df(self, name: str) -> DataFrame:
+        """The frame ``name`` was registered with; DML verbs register
+        the table again after each commit."""
         if name in self._views:
             return self._views[name]
-        return self._read(self._tables[name])
+        return self._frames[name]
 
     def register_function(self, name: str, fn) -> None:
         """UDF registry: name → pandas_udf / builder (the analog of

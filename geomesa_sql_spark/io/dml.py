@@ -38,40 +38,19 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geomesa_sql_spark.sqltree import _mask_literals
+
 
 def _sub_outside_literals(pat: str, repl: str, text: str) -> str:
     """re.sub applied only OUTSIDE quoted string literals — qualifier
     rewrites must never touch 'a string mentioning s.something'
-    (review r3)."""
-    res: list[str] = []
-    buf: list[str] = []
-    quote = None
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if quote:
-            buf.append(ch)
-            if ch == "\\" and i + 1 < n:
-                buf.append(text[i + 1])
-                i += 2
-                continue
-            if ch == quote:
-                quote = None
-                res.append("".join(buf))
-                buf = []
-            i += 1
-            continue
-        if ch in "'\"":
-            res.append(_re.sub(pat, repl, "".join(buf)))
-            buf = [ch]
-            quote = ch
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    tail = "".join(buf)
-    res.append(tail if quote else _re.sub(pat, repl, tail))
-    return "".join(res)
+    (review r3): ``pat`` runs over the literal-masked text, and each
+    match is replaced at the same position of ``text``."""
+    out, pos = [], 0
+    for m in _re.finditer(pat, _mask_literals(text)):
+        out += [text[pos:m.start()], m.expand(repl)]
+        pos = m.end()
+    return "".join(out) + text[pos:]
 
 
 class FidUpdateError(ValueError):

@@ -4,7 +4,9 @@
 and returns the unresolved plan as a tree of :class:`Node` built from
 ONE ``toJSON()`` transfer. A node's character span comes from its
 JVM-side ``origin()``, fetched lazily, so only the nodes the SQL-text
-router splices cost Py4J calls.
+router splices and the DML fields ``Engine.sql`` reads cost Py4J calls.
+``frame`` analyses a parsed query node as ``spark.sql`` analyses text;
+``_mask_literals`` is the one quote-aware scan of statement text.
 """
 
 from __future__ import annotations
@@ -70,6 +72,53 @@ def parse(spark, sql: str) -> Node:
     return root
 
 
+def frame(spark, node: Node):
+    """The query ``node`` as a DataFrame, analysed as ``spark.sql``
+    analyses its text. Used where a query's origin is not its whole
+    text: an Aggregate's covers only its GROUP BY clause, a Sort's only
+    its ORDER BY."""
+    from pyspark.sql import DataFrame
+
+    jvm = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(jvm.ofRows(spark._jsparkSession, node.jvm()), spark)
+
+
 def conjuncts(e: Node) -> list[Node]:
     """Top-level AND conjuncts of a condition, left to right."""
     return conjuncts(e.kids[0]) + conjuncts(e.kids[1]) if e.cls == "And" else [e]
+
+
+def nodes(e: Node):
+    """``e`` and every node below it, pre-order (no JVM calls)."""
+    yield e
+    for k in e.kids:
+        yield from nodes(k)
+
+
+def _mask_literals(s: str) -> str:
+    """Blank out quoted-literal CONTENT (keeping length and the quote
+    chars) so paren-depth scans and keyword regexes can run over SQL
+    that contains string literals — e.g. WKT in ST_GeomFromText('...').
+    Handles doubled-quote escapes ('' and "")."""
+    out = list(s)
+    i, n = 0, len(s)
+    while i < n:
+        ch = s[i]
+        if ch in "'\"":
+            q = ch
+            i += 1
+            while i < n:
+                if s[i] == "\\" and i + 1 < n:  # backslash escape
+                    out[i] = out[i + 1] = " "
+                    i += 2
+                    continue
+                if s[i] == q:
+                    if i + 1 < n and s[i + 1] == q:  # doubled escape
+                        out[i] = out[i + 1] = " "
+                        i += 2
+                        continue
+                    break
+                out[i] = " "
+                i += 1
+        i += 1
+    return "".join(out)

@@ -257,6 +257,22 @@ def test_sql_text_merge(spark, sf_dir, tmp_path):
     )
     assert out3.first().affected == 1
 
+    # a subquery source nested three deep, grouped at the top (an
+    # Aggregate's parse origin is its GROUP BY clause alone)
+    out4 = eng.sql(
+        "MERGE INTO mtab USING (SELECT image_id, max(n_name) AS n_name FROM "
+        "(SELECT * FROM (SELECT 8888 AS image_id, 'DEEP' AS n_name) a) b "
+        "GROUP BY image_id) c ON image_id"
+    )
+    assert out4.first().affected == 1
+    assert eng.sql(
+        "SELECT n_name FROM mtab WHERE image_id = 8888"
+    ).first().n_name == "DEEP"
+
+    # ON names one bare key column, not a join condition
+    with pytest.raises(ValueError, match="bare key column"):
+        eng.sql("MERGE INTO mtab t USING msrc s ON t.image_id = s.image_id")
+
 
 def test_merge_set_list_sql_and_api(spark, sf_dir, tmp_path):
     """r3: MERGE ... WHEN MATCHED THEN UPDATE SET col = expr — only
@@ -493,3 +509,13 @@ def test_dml_differential_fuzz(spark, sf_dir, tmp_path):
         con.execute(stmt)
         if i % 5 == 4 or i == 13:
             assert state_eng() == state_duck(), f"diverged after: {stmt}"
+
+    # comments: a WHERE inside a block comment, a line comment before WHERE
+    for stmt in (
+        "UPDATE natf SET n_name = n_name || '_C' /* WHERE all */ "
+        "WHERE n_regionkey = 2",
+        "DELETE FROM natf -- one region\n WHERE n_regionkey = 3",
+    ):
+        eng.sql(stmt)
+        con.execute(stmt)
+    assert state_eng() == state_duck(), "diverged after the commented statements"

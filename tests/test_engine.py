@@ -680,7 +680,7 @@ def test_sql_join_qualified_residual_where(spark, sf_dir, tmp_path):
 
 def test_dml_backslash_escaped_quote(spark, sf_dir, tmp_path):
     """Backslash-escaped quotes inside literals must not fool the
-    top-level-WHERE scanner."""
+    split between the SET value and the WHERE condition."""
     eng = Engine(spark, fid_col="n_nationkey")
     base = spark.read.parquet(f"{sf_dir}/nation.parquet")
     eng.create_table("nesc", str(tmp_path / "nesc"), base)

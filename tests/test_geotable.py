@@ -197,6 +197,23 @@ def test_where_spatial_on_iceberg_table_after_delete(spark, sf_dir, tmp_path):
     assert want > 0 and got.count() == want
     assert got.filter("image_id % 3 = 0").count() == 0
 
+    # df(), describe() and a routed join's operand read the frame the
+    # DELETE registered: no Iceberg metadata reload per call
+    from unittest import mock
+
+    from geomesa_sql_spark.io.iceberg_meta import IcebergTable
+
+    eng.register_view("ice_poly", spark.sql(
+        f"SELECT 1 AS pid, ST_GeomFromText('{penta}') AS poly"))
+    with mock.patch.object(IcebergTable, "load", wraps=IcebergTable.load) as load:
+        eng.df("ice_pts")
+        eng.describe("ice_pts")
+        joined = eng.sql(
+            "SELECT count(*) FROM ice_pts p JOIN ice_poly q "
+            "ON ST_Intersects(ST_MakePoint(p.lon, p.lat), q.poly)"
+        ).collect()[0][0]
+    assert (load.call_count, joined, eng.route_fallbacks) == (0, want, {})
+
     geo8 = str(tmp_path / "ice_geo8")
     write_geo_iceberg(pts, geo8, res=8)
     eng.register_table("ice_geo8", geo8)
