@@ -510,11 +510,17 @@ def test_dml_differential_fuzz(spark, sf_dir, tmp_path):
         if i % 5 == 4 or i == 13:
             assert state_eng() == state_duck(), f"diverged after: {stmt}"
 
-    # comments: a WHERE inside a block comment, a line comment before WHERE
+    # fixed shapes: a WHERE inside a block comment, a line comment before
+    # WHERE, a predicate over a parenthesized operand (a predicate's parse
+    # origin starts at its keyword), an INSERT query topped by LIMIT
     for stmt in (
         "UPDATE natf SET n_name = n_name || '_C' /* WHERE all */ "
         "WHERE n_regionkey = 2",
         "DELETE FROM natf -- one region\n WHERE n_regionkey = 3",
+        "UPDATE natf SET n_regionkey = (n_regionkey + 1) "
+        "WHERE (n_regionkey = 1 OR n_name LIKE 'A%') IS NOT TRUE",
+        "INSERT INTO natf SELECT n_nationkey + 1000, max(n_name), 0 FROM natf "
+        "GROUP BY n_nationkey ORDER BY 1 LIMIT 3",
     ):
         eng.sql(stmt)
         con.execute(stmt)
