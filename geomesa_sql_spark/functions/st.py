@@ -316,13 +316,17 @@ def inverse_utm_cols(x: Column, y: Column, epsg: int | str) -> tuple[Column, Col
     return lon, F.degrees(phi)
 
 
-def st_cell(x: Column, y: Column, res: int, curve: str = "hilbert") -> Column:
+def st_cell(
+    x: str | Column, y: str | Column, res: int, curve: str = "hilbert"
+) -> Column:
     """Space-filling-curve cell id of lon/lat columns.
 
-    Z-order compiles to a JVM Column expression (cells/column.py);
-    Hilbert needs the data-dependent rotation loop → pandas UDF.
+    Z-order over column NAMES compiles to one JVM SQL expression
+    (cells/column.py); Hilbert needs the data-dependent rotation loop →
+    pandas UDF, which also serves Z-order over Column expressions (the
+    SQL-text encode cannot embed a Column; same bits either way).
     """
-    if curve == "zorder":
+    if curve == "zorder" and isinstance(x, str) and isinstance(y, str):
         from geomesa_sql_spark.cells.column import zorder_cell_col
 
         return zorder_cell_col(x, y, res)

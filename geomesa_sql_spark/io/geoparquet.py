@@ -259,13 +259,12 @@ def write_geoparquet(
             # decoded every geometry again, and repartitionByRange's
             # sampling pass re-executed it a third time; a Column expr
             # makes that sampling re-evaluation a cheap JVM eval)
-            from geomesa_sql_spark.cells.column import zorder_cell_col
+            from geomesa_sql_spark.cells.column import col_sql, zorder_cell_sql
 
-            cell_expr = zorder_cell_col(
-                (F.col(f"{cov_col}.xmin") + F.col(f"{cov_col}.xmax")) / 2.0,
-                (F.col(f"{cov_col}.ymin") + F.col(f"{cov_col}.ymax")) / 2.0,
-                12,
-            )
+            lo_hi = [col_sql(f"{cov_col}.{k}") for k in ("xmin", "xmax", "ymin", "ymax")]
+            cell_expr = F.expr(zorder_cell_sql(
+                f"({lo_hi[0]} + {lo_hi[1]}) / 2.0D", f"({lo_hi[2]} + {lo_hi[3]}) / 2.0D", 12
+            ))
         else:
             from geomesa_sql_spark.cells.curve import lonlat_to_cell
 

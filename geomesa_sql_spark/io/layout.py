@@ -31,7 +31,7 @@ def add_cell(
 ) -> DataFrame:
     """Add the Z-order ``cell`` column from lon/lat columns (JVM-side,
     whole-stage codegen — cells/column.py)."""
-    return df.withColumn(col, zorder_cell_col(F.col(x), F.col(y), res))
+    return df.withColumn(col, zorder_cell_col(x, y, res))
 
 
 def write_geo_table(

@@ -42,7 +42,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geomesa_sql_spark.cells import cover_envelopes, lonlat_to_cell
-from geomesa_sql_spark.cells.column import zorder_cell_col
+from geomesa_sql_spark.cells.column import (
+    col_sql,
+    double_sql,
+    grid_sql,
+    grid_xy_sql,
+    interleave_sql,
+)
 from geomesa_sql_spark.cells.curve import res_for_extent
 from geomesa_sql_spark.geom import kernel
 from geomesa_sql_spark.geom.wkb import wkb_envelopes
@@ -78,10 +84,11 @@ class GeomSide:
     def is_point(self) -> bool:
         return self.wkb is None
 
-    def not_null(self) -> Column:
+    def not_null(self) -> str:
+        """SQL text: the side's geometry is present (name operands)."""
         if self.is_point:
-            return F.col(self.x).isNotNull() & F.col(self.y).isNotNull()
-        return F.col(self.wkb).isNotNull()
+            return f"{col_sql(self.x)} IS NOT NULL AND {col_sql(self.y)} IS NOT NULL"
+        return f"{col_sql(self.wkb)} IS NOT NULL"
 
 
 def point_side(x: str | Column, y: str | Column) -> GeomSide:
@@ -141,18 +148,17 @@ from geomesa_sql_spark.geom.geodesic import (  # noqa: E402
 )
 
 
-def _snap_grid_col(v: Column, off: float, span: float, res: int) -> Column:
-    """Grid-snap a coordinate Column (same clamp as
-    cells/column.grid_xy_cols)."""
-    n = 1 << res
-    g = F.floor((v + F.lit(off)) / F.lit(span) * F.lit(float(n)))
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), g)).cast("long")
+def _side_cols(right: bool) -> tuple[str, str, str]:
+    """Hidden (cell, envelope min x, envelope min y) names of one side."""
+    return (_CELL + "_r", "__gsj_rminx", "__gsj_rminy") if right else (
+        _CELL, "__gsj_minx", "__gsj_miny")
 
 
 def _explode_grid_cells(
-    df: DataFrame, gx0: str, gx1: str, gy0: str, gy1: str, max_cells: int
+    df: DataFrame, gx0: str, gx1: str, gy0: str, gy1: str, max_cells: int,
+    cell: str,
 ) -> DataFrame:
-    """Attach ``_CELL`` by exploding the [gx0..gx1]×[gy0..gy1] index
+    """Attach ``cell`` by exploding the [gx0..gx1]×[gy0..gy1] index
     rectangle (already-snapped int columns) into z-order cells. Two
     plain ``explode(sequence(...))`` generators over simple column
     refs — the bounds are computed ONCE per input row in the parent
@@ -161,121 +167,120 @@ def _explode_grid_cells(
     cell and benchmarked 4× slower than the pandas cover it replaced).
     Covers above ``max_cells`` RAISE (never silently truncate); the
     raise is folded into a consumed sequence bound per the raise_error
-    rule."""
-    from geomesa_sql_spark.cells.column import _spread_bits
-
-    over = (F.col(gx1) - F.col(gx0) + 1) * (
-        F.col(gy1) - F.col(gy0) + 1
-    ) > F.lit(int(max_cells))
-    capped = F.when(
-        over,
-        F.raise_error(
-            F.lit(
-                f"envelope cover exceeds cap {max_cells}; choose a "
-                "coarser res for this join (res_for_extent)"
-            )
-        ).cast("long"),
-    ).otherwise(F.col(gx1))
+    rule. The bound and index columns stay in the output: spatial_join
+    drops every ``__gsj_`` column, and column pruning keeps them off
+    the join."""
+    gx0, gx1, gy0, gy1 = map(col_sql, (gx0, gx1, gy0, gy1))
+    capped = (
+        f"CASE WHEN ({gx1} - {gx0} + 1) * ({gy1} - {gy0} + 1) > {int(max_cells)} "
+        f"THEN CAST(raise_error('envelope cover exceeds cap {int(max_cells)}; "
+        "choose a coarser res for this join (res_for_extent)') AS BIGINT) "
+        f"ELSE {gx1} END"
+    )
     return (
-        df.withColumn("__gsj_cx", F.explode(F.sequence(F.col(gx0), capped)))
-        .withColumn("__gsj_cy", F.explode(F.sequence(F.col(gy0), F.col(gy1))))
-        .withColumn(
-            _CELL,
-            _spread_bits(F.col("__gsj_cx")).bitwiseOR(
-                F.shiftleft(_spread_bits(F.col("__gsj_cy")), 1)
-            ),
-        )
-        .drop("__gsj_cx", "__gsj_cy", gx0, gx1, gy0, gy1)
+        df.selectExpr("*", f"explode(sequence({gx0}, {capped})) AS __gsj_cx")
+        .selectExpr("*", f"explode(sequence({gy0}, {gy1})) AS __gsj_cy")
+        .selectExpr("*", f"{interleave_sql('__gsj_cx', '__gsj_cy')} AS {cell}")
     )
 
 
 def _cells_for_side(
     df: DataFrame, side: GeomSide, res: int, expand: float, max_cells: int,
-    sphere_m: float | None = None,
+    sphere_m: float | None = None, right: bool = False,
 ) -> DataFrame:
-    """Attach exploded cell column (+ envelope min corner for dedup)."""
+    """Attach exploded cell column (+ envelope min corner for dedup),
+    named by :func:`_side_cols`. The point paths are SQL text, one
+    projection per step (cells/column.py: a Column tree costs hundreds
+    of Py4J round trips per join build)."""
+    cell, minx, miny = _side_cols(right)
+    if side.is_point:
+        x, y = col_sql(side.x), col_sql(side.y)
     if side.is_point and sphere_m is not None:
         # dwithin_sphere: per-ROW degree expansion (longitude radius
-        # grows with |lat|), as pure Column expressions — the sphere
-        # side is the 10^12-row side of a geography join, so the cover
-        # must not ride an ArrowEvalPython stage (r6; the same rule
-        # that keeps the planar point encode in cells/column.py). The
-        # cap bounds reuse sphere_deg_bounds_cols (same formulas as
-        # the numpy twin; the cover is conservative by construction —
-        # COVER_RADIUS under-states every radius by ~0.3%, so libm-ulp
-        # drift cannot un-cover a true candidate, and the haversine
-        # refine decides membership). The min-corner columns are
-        # unused here — the point right side is single-cell, so
-        # candidate pairs are already duplicate-free and refpoint
+        # grows with |lat|) — the sphere side is the 10^12-row side of a
+        # geography join, so the cover must not ride an ArrowEvalPython
+        # stage (r6; the same rule that keeps the planar point encode in
+        # cells/column.py). The cap bounds reuse sphere_deg_bounds_cols
+        # (same formulas as the numpy twin; the cover is conservative by
+        # construction — COVER_RADIUS under-states every radius by
+        # ~0.3%, so libm-ulp drift cannot un-cover a true candidate, and
+        # the haversine refine decides membership). The min-corner
+        # columns are unused here — the point right side is single-cell,
+        # so candidate pairs are already duplicate-free and refpoint
         # dedup never runs.
-        from geomesa_sql_spark.cells.column import _spread_bits
         from geomesa_sql_spark.geom.geodesic import sphere_deg_bounds_cols
 
-        meters = float(sphere_m)
-        x, y = F.col(side.x), F.col(side.y)
-        dlat, dlon = sphere_deg_bounds_cols(y, meters)
-        lo, hi = x - dlon, x + dlon
-        # nulls were filtered by the caller (left_nn), so the
-        # least/greatest null-skip trap cannot fire here
-        ylo = F.greatest(y - F.lit(dlat), F.lit(-90.0))
-        yhi = F.least(y + F.lit(dlat), F.lit(90.0))
+        dlat, dlon = sphere_deg_bounds_cols(F.col(side.y), float(sphere_m))
+        # the heavy cap-bound trig is evaluated once per input row, in
+        # its own projection; nulls were filtered by the caller
+        # (left_nn), so the least/greatest null-skip trap cannot fire
+        lo, hi = f"({x} - `__gsj_dlon`)", f"({x} + `__gsj_dlon`)"
+        full = "(`__gsj_dlon` >= 180.0D)"
+        w, e = "(-180.0D)", "180.0D"
         # the haversine metric wraps at the antimeridian but a planar
         # box doesn't: a box spilling past ±180 contributes a SECOND
         # lon-disjoint segment re-entering from the other side (unless
         # it already spans everything) — so per-row cells stay
         # duplicate-free without a distinct. Segments ride ONE small
-        # explode; the heavy cap-bound trig is evaluated once per
-        # input row in this projection.
-        full = dlon >= F.lit(180.0)
-        ax0 = F.when(full, F.lit(-180.0)).otherwise(
-            F.greatest(lo, F.lit(-180.0))
+        # explode.
+        seg_a = (
+            f"named_struct('lo', CASE WHEN {full} THEN {w} ELSE GREATEST({lo}, {w}) END, "
+            f"'hi', CASE WHEN {full} THEN {e} ELSE LEAST({hi}, {e}) END)"
         )
-        ax1 = F.when(full, F.lit(180.0)).otherwise(F.least(hi, F.lit(180.0)))
-        spill_w = (lo < F.lit(-180.0)) & ~full
-        spill_e = (hi > F.lit(180.0)) & ~full
-        seg_b = F.when(
-            spill_w,
-            F.struct((lo + F.lit(360.0)).alias("lo"), F.lit(180.0).alias("hi")),
-        ).when(
-            spill_e,
-            F.struct(F.lit(-180.0).alias("lo"), (hi - F.lit(360.0)).alias("hi")),
-        )  # NULL = no second segment
-        segs = F.filter(
-            F.array(F.struct(ax0.alias("lo"), ax1.alias("hi")), seg_b),
-            lambda s: s.isNotNull(),
+        seg_b = (  # NULL = no second segment
+            f"CASE WHEN {lo} < {w} AND NOT {full} "
+            f"THEN named_struct('lo', {lo} + 360.0D, 'hi', {e}) "
+            f"WHEN {hi} > {e} AND NOT {full} "
+            f"THEN named_struct('lo', {w}, 'hi', {hi} - 360.0D) END"
         )
         env = (
-            df.withColumn("__gsj_minx", x)
-            .withColumn("__gsj_miny", y)
-            .withColumn("__gsj_ylo", ylo)
-            .withColumn("__gsj_yhi", yhi)
-            .withColumn("__gsj_seg", F.explode(segs))
-            .withColumn(
-                "__gsj_gx0", _snap_grid_col(F.col("__gsj_seg.lo"), 180.0, 360.0, res)
+            df.withColumn("__gsj_dlon", dlon)
+            .selectExpr(
+                "*", f"{x} AS {minx}", f"{y} AS {miny}",
+                f"GREATEST({y} - {double_sql(dlat)}, (-90.0D)) AS __gsj_ylo",
+                f"LEAST({y} + {double_sql(dlat)}, 90.0D) AS __gsj_yhi",
+                f"explode(filter(array({seg_a}, {seg_b}), s -> s IS NOT NULL)) AS __gsj_seg",
             )
-            .withColumn(
-                "__gsj_gx1", _snap_grid_col(F.col("__gsj_seg.hi"), 180.0, 360.0, res)
+            .selectExpr(
+                "*",
+                f"{grid_sql('`__gsj_seg`.`lo`', 180.0, 360.0, res)} AS __gsj_gx0",
+                f"{grid_sql('`__gsj_seg`.`hi`', 180.0, 360.0, res)} AS __gsj_gx1",
+                f"{grid_sql('`__gsj_ylo`', 90.0, 180.0, res)} AS __gsj_gy0",
+                f"{grid_sql('`__gsj_yhi`', 90.0, 180.0, res)} AS __gsj_gy1",
             )
-            .withColumn(
-                "__gsj_gy0", _snap_grid_col(F.col("__gsj_ylo"), 90.0, 180.0, res)
-            )
-            .withColumn(
-                "__gsj_gy1", _snap_grid_col(F.col("__gsj_yhi"), 90.0, 180.0, res)
-            )
-            .drop("__gsj_seg", "__gsj_ylo", "__gsj_yhi")
         )
         return _explode_grid_cells(
-            env, "__gsj_gx0", "__gsj_gx1", "__gsj_gy0", "__gsj_gy1", max_cells
+            env, "__gsj_gx0", "__gsj_gx1", "__gsj_gy0", "__gsj_gy1", max_cells, cell
         )
     if side.is_point and expand == 0.0:
         # JVM-side encode: the point side is the 10^12-row side; a
-        # Column expression keeps it in whole-stage codegen (and avoids
+        # JVM expression keeps it in whole-stage codegen (and avoids
         # Catalyst double-evaluating a UDF join key via its inferred
-        # not-null constraint) — see cells/column.py
-        return df.withColumn(
-            _CELL, zorder_cell_col(F.col(side.x), F.col(side.y), res)
-        ).withColumn("__gsj_minx", F.col(side.x)).withColumn(
-            "__gsj_miny", F.col(side.y)
+        # not-null constraint) — see cells/column.py. The grid indices
+        # get their own projection, like the cover paths' bounds: the
+        # bit spread names each index 32 times, so over column refs the
+        # expression is ~30x smaller to parse, analyse and compile than
+        # with the snap inlined (same bits; CollapseProject keeps the
+        # indices apart rather than copy a non-trivial expression)
+        gx, gy = grid_xy_sql(x, y, res)
+        return df.selectExpr(
+            "*", f"{gx} AS __gsj_gx", f"{gy} AS __gsj_gy",
+            f"{x} AS {minx}", f"{y} AS {miny}",
+        ).selectExpr("*", f"{interleave_sql('__gsj_gx', '__gsj_gy')} AS {cell}")
+    if side.is_point:
+        # DWithin expansion of the point side: JVM cover (r6) — this is
+        # the 10^12-row side of a dwithin join, the same no-Python rule
+        # as the zero-expand z-order encode above
+        d = double_sql(expand)
+        env = df.selectExpr(
+            "*", f"{x} - {d} AS {minx}", f"{y} - {d} AS {miny}",
+            f"{grid_sql(f'{x} - {d}', 180.0, 360.0, res)} AS __gsj_gx0",
+            f"{grid_sql(f'{x} + {d}', 180.0, 360.0, res)} AS __gsj_gx1",
+            f"{grid_sql(f'{y} - {d}', 90.0, 180.0, res)} AS __gsj_gy0",
+            f"{grid_sql(f'{y} + {d}', 90.0, 180.0, res)} AS __gsj_gy1",
+        )
+        return _explode_grid_cells(
+            env, "__gsj_gx0", "__gsj_gx1", "__gsj_gy0", "__gsj_gy1", max_cells, cell
         )
 
     def _group_covers(
@@ -288,23 +293,6 @@ def _cells_for_side(
         for r, c in zip(rows.tolist(), cells.tolist()):
             out[r].append(c)
         return out
-
-    if side.is_point:
-        # DWithin expansion of the point side: JVM Column cover (r6) —
-        # this is the 10^12-row side of a dwithin join, the same
-        # no-Python rule as the zero-expand z-order encode below
-        x, y = F.col(side.x), F.col(side.y)
-        env = (
-            df.withColumn("__gsj_minx", x - expand)
-            .withColumn("__gsj_miny", y - expand)
-            .withColumn("__gsj_gx0", _snap_grid_col(x - expand, 180.0, 360.0, res))
-            .withColumn("__gsj_gx1", _snap_grid_col(x + expand, 180.0, 360.0, res))
-            .withColumn("__gsj_gy0", _snap_grid_col(y - expand, 90.0, 180.0, res))
-            .withColumn("__gsj_gy1", _snap_grid_col(y + expand, 90.0, 180.0, res))
-        )
-        return _explode_grid_cells(
-            env, "__gsj_gx0", "__gsj_gx1", "__gsj_gy0", "__gsj_gy1", max_cells
-        )
 
     # WKB side: ONE fused pandas UDF (decode → envelope → cover) instead
     # of chained envelope/cover UDFs — each ArrowEvalPython stage costs a
@@ -337,11 +325,11 @@ def _cells_for_side(
     # rows; on the repartition path this halves the Python work of a
     # large WKB side.
     env = df.withColumn("__gsj_ec", _env_cover.asNondeterministic()(side.wkb))
-    return env.select(
-        *df.columns,
-        F.col("__gsj_ec.minx").alias("__gsj_minx"),
-        F.col("__gsj_ec.miny").alias("__gsj_miny"),
-        F.explode(F.col("__gsj_ec.cells")).alias(_CELL),
+    return env.selectExpr(
+        *map(col_sql, df.columns),
+        f"`__gsj_ec`.`minx` AS {minx}",
+        f"`__gsj_ec`.`miny` AS {miny}",
+        f"explode(`__gsj_ec`.`cells`) AS {cell}",
     )
 
 
@@ -354,10 +342,12 @@ def _refine_predicate(
 ) -> Column:
     pred = predicate.lower()
     if left.is_point and right.is_point:
+        lx, ly, rx, ry = map(col_sql, (left.x, left.y, right.x, right.y))
         if pred == "dwithin":
-            dx = F.col(left.x) - F.col(right.x)
-            dy = F.col(left.y) - F.col(right.y)
-            return dx * dx + dy * dy <= float(distance) ** 2
+            dx, dy = f"({lx} - {rx})", f"({ly} - {ry})"
+            return F.expr(
+                f"{dx} * {dx} + {dy} * {dy} <= {double_sql(float(distance) ** 2)}"
+            )
         if pred == "dwithin_sphere":
             # metres on the real earth: pure-Column haversine — the
             # refine stays in whole-stage codegen, zero Python
@@ -366,11 +356,10 @@ def _refine_predicate(
             return sphere_distance_cols(
                 F.col(left.x), F.col(left.y), F.col(right.x), F.col(right.y)
             ) <= float(distance)
-        if pred in ("equals", "intersects", "contains", "within", "touches"):
-            eq = (F.col(left.x) == F.col(right.x)) & (F.col(left.y) == F.col(right.y))
-            return eq if pred != "touches" else F.lit(False)
-        if pred in ("crosses", "overlaps"):
-            return F.lit(False)  # single points: never, per JTS
+        if pred in ("equals", "intersects", "contains", "within"):
+            return F.expr(f"({lx} = {rx}) AND ({ly} = {ry})")
+        if pred in ("touches", "crosses", "overlaps"):
+            return F.expr("false")  # single points: never, per JTS
         # review r3: a typo used to return a silently EMPTY join here
         # while the wkb paths raise — fail loudly on both
         raise ValueError(f"unsupported spatial-join predicate {predicate!r}")
@@ -391,13 +380,13 @@ def _refine_predicate(
                 )
             )
 
-        return _ref(F.col(pt.x), F.col(pt.y), F.col(other.wkb))
+        return _ref(pt.x, pt.y, other.wkb)
 
     @F.pandas_udf(T.BooleanType())
     def _rel(wa: pd.Series, wb: pd.Series) -> pd.Series:
         return pd.Series(kernel.relate_many(list(wa), list(wb), pred, distance))
 
-    return _rel(F.col(left.wkb), F.col(right.wkb))
+    return _rel(left.wkb, right.wkb)
 
 
 def spatial_join(
@@ -543,12 +532,7 @@ def spatial_join(
     lc = _cells_for_side(
         left_nn, left, res, expand, max_cells_per_row, sphere_m=sphere_m
     )
-    rc = _cells_for_side(right_nn, right, res, 0.0, max_cells_per_row)
-    rc = (
-        rc.withColumnRenamed(_CELL, _CELL + "_r")
-        .withColumnRenamed("__gsj_minx", "__gsj_rminx")
-        .withColumnRenamed("__gsj_miny", "__gsj_rminy")
-    )
+    rc = _cells_for_side(right_nn, right, res, 0.0, max_cells_per_row, right=True)
 
     left_multi = (not left.is_point) or expand > 0.0
     right_multi = not right.is_point
@@ -556,7 +540,7 @@ def spatial_join(
     if broadcast is None:
         broadcast = _should_broadcast(right_df, broadcast_rows)
 
-    join_cond = F.col(_CELL) == F.col(_CELL + "_r")
+    join_cond = F.expr(f"{_CELL} = {_CELL}_r")
     if broadcast:
         joined = lc.join(F.broadcast(rc), join_cond)
     elif salt > 1:
@@ -584,8 +568,8 @@ def spatial_join(
                 join_cond & (lc[_SALT] == rc[_SALT]),
             ).drop(_SALT)
         else:
-            joined = lc.repartition(F.col(_CELL)).join(
-                rc.repartition(F.col(_CELL + "_r")), join_cond
+            joined = lc.repartition(_CELL).join(
+                rc.repartition(_CELL + "_r"), join_cond
             )
     else:
         joined = lc.join(rc, join_cond)
@@ -608,12 +592,15 @@ def spatial_join(
 
     if left_key is None:
         raise ValueError("how='left' requires left_key")
+    # every left row against the inner join's matches, so the cover
+    # and refine UDFs run once (a union of the inner join with an
+    # anti-join of its matched keys would run the inner join twice);
+    # NULL-geometry left rows drop, being outside left_nn (reference
+    # quirk)
     right_cols = [c for c in right_df.columns if not c.startswith("__gsj_")]
-    matched_keys = inner.select(left_key).distinct()
-    unmatched = left_nn.join(matched_keys, on=left_key, how="left_anti")
-    for c in right_cols:
-        unmatched = unmatched.withColumn(c, F.lit(None).cast(inner.schema[c].dataType))
-    return inner.unionByName(unmatched.select(inner.columns))
+    return left_nn.join(
+        inner.select(left_key, *right_cols), left_key, "left"
+    ).select(inner.columns)
 
 
 def _pad_unmatched(
@@ -648,10 +635,7 @@ def _refpoint_keep(res: int) -> Column:
         ref_cell = lonlat_to_cell(refx, refy, res)
         return pd.Series(cell.to_numpy(np.int64) == ref_cell)
 
-    return _keep(
-        F.col(_CELL), F.col("__gsj_minx"), F.col("__gsj_miny"),
-        F.col("__gsj_rminx"), F.col("__gsj_rminy"),
-    )
+    return _keep(_CELL, *_side_cols(False)[1:], *_side_cols(True)[1:])
 
 
 def _sample_extents(df: DataFrame, side: GeomSide):

@@ -328,14 +328,26 @@ def stream_stream_dwithin_join(
     # shifting raw coordinates (review r4o: float rounding of
     # x1 + step_x at a cell boundary can land the shifted coordinate
     # one cell past the true neighbor, skipping the cell a qualifying
-    # pair actually sits in — exact integer ±1 arithmetic cannot)
-    from geomesa_sql_spark.cells.column import _spread_bits, grid_xy_cols
+    # pair actually sits in — exact integer ±1 arithmetic cannot). The
+    # home indices get their own projection and the neighbor cells are
+    # SQL text over them (cells/column.py): the bit spread names its
+    # input 32 times, so inlining the snap would copy it per neighbor.
+    from geomesa_sql_spark.cells.column import (
+        col_sql,
+        grid_xy_sql,
+        int_sql,
+        interleave_sql,
+    )
 
-    gx, gy = grid_xy_cols(F.col(x1), F.col(y1), res)
+    gx, gy = grid_xy_sql(col_sql(x1), col_sql(y1), res)
+    lf = lf.selectExpr("*", f"{gx} AS __ss_gx", f"{gy} AS __ss_gy")
     nmax = (1 << res) - 1
 
-    def _clamp(c):
-        return F.greatest(F.lit(0), F.least(F.lit(nmax), c))
+    def _clamp(c: str) -> str:
+        return f"GREATEST(0, LEAST({nmax}, {c}))"
+
+    def _gy(dy: int) -> str:
+        return _clamp(f"__ss_gy + {int_sql(dy)}")
 
     if metric == "sphere":
         from geomesa_sql_spark.geom.geodesic import (
@@ -364,38 +376,25 @@ def stream_stream_dwithin_join(
             ).isNull(),
             k,
         )
-        cells = F.array_distinct(
-            F.flatten(
-                F.transform(
-                    F.sequence(-k, k),
-                    lambda dx: F.array(
-                        *[
-                            _spread_bits(
-                                F.pmod(gx + dx, F.lit(1 << res))
-                            ).bitwiseOR(
-                                F.shiftleft(
-                                    _spread_bits(_clamp(gy + F.lit(dy))), 1
-                                )
-                            )
-                            for dy in (-1, 0, 1)
-                        ]
-                    ),
-                )
-            )
+        ring = ", ".join(
+            interleave_sql(f"pmod(__ss_gx + dx, {1 << res})", _gy(dy))
+            for dy in (-1, 0, 1)
         )
-        lf = lf.withColumn("__ss_cell", F.explode(cells))
+        cells = (
+            "array_distinct(flatten(transform(sequence(-__ss_k, __ss_k), "
+            f"dx -> array({ring}))))"
+        )
+        lf = lf.withColumn("__ss_k", k)
     else:
-        neighbors = F.array(
-            *[
-                _spread_bits(_clamp(gx + F.lit(dx))).bitwiseOR(
-                    F.shiftleft(_spread_bits(_clamp(gy + F.lit(dy))), 1)
-                )
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-            ]
-        )
-        lf = lf.withColumn("__ss_cell", F.explode(F.array_distinct(neighbors)))
-    rt = rt.withColumn("__ss_cell_r", zorder_cell_col(F.col(x2), F.col(y2), res))
+        cells = "array_distinct(array({}))".format(", ".join(
+            interleave_sql(_clamp(f"__ss_gx + {int_sql(dx)}"), _gy(dy))
+            for dx in (-1, 0, 1)
+            for dy in (-1, 0, 1)
+        ))
+    lf = lf.selectExpr("*", f"explode({cells}) AS __ss_cell").drop(
+        "__ss_gx", "__ss_gy", "__ss_k"
+    )
+    rt = rt.withColumn("__ss_cell_r", zorder_cell_col(x2, y2, res))
 
     if metric == "sphere":
         space = sphere_distance_cols(

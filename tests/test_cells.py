@@ -81,13 +81,14 @@ def test_res_for_extent():
 
 
 def test_zorder_col_matches_numpy():
-    """JVM Column encode (cells/column.py) is bit-identical to numpy."""
+    """The SQL-text encode (cells/column.py) is bit-identical to numpy,
+    as one expression and as the spatial join's two-projection form."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from geomesa_sql_spark import get_spark
     from geomesa_sql_spark.cells import lonlat_to_cell
     from geomesa_sql_spark.cells.column import zorder_cell_col
+    from geomesa_sql_spark.join.spatial import _CELL, _cells_for_side, point_side
 
     s = get_spark("cells-col", master="local[4]", shuffle_partitions=8)
     n = 20000
@@ -95,9 +96,10 @@ def test_zorder_col_matches_numpy():
         "cast((id * 7919) % 36000 as double) / 100.0 - 180.0 as lon",
         "cast((id * 104729) % 18000 as double) / 100.0 - 90.0 as lat",
     )
-    for res in (1, 6, 12, 29):
+    for res in (1, 6, 12, 20, 29, 31):
         got = (
-            df.withColumn("c", zorder_cell_col(F.col("lon"), F.col("lat"), res))
+            _cells_for_side(df, point_side("lon", "lat"), res, 0.0, 256)
+            .withColumn("c", zorder_cell_col("lon", "lat", res))
             .orderBy("lon", "lat")
             .toPandas()
         )
@@ -105,14 +107,45 @@ def test_zorder_col_matches_numpy():
             got["lon"].to_numpy(np.float64), got["lat"].to_numpy(np.float64), res
         )
         assert (got["c"].to_numpy(np.int64) == want).all(), res
+        assert (got[_CELL].to_numpy(np.int64) == want).all(), res
     # world edges incl. the +180/+90 clamp
     edge = s.createDataFrame(
         [(-180.0, -90.0), (180.0, 90.0), (0.0, 0.0), (179.999999, 89.999999)],
         "lon double, lat double",
     )
-    got = edge.withColumn("c", zorder_cell_col(F.col("lon"), F.col("lat"), 12)).toPandas()
+    got = edge.withColumn("c", zorder_cell_col("lon", "lat", 12)).toPandas()
     want = lonlat_to_cell(got["lon"].to_numpy(), got["lat"].to_numpy(), 12)
     assert (got["c"].to_numpy(np.int64) == want).all()
+
+
+def test_zorder_col_null_nan_huge_rows():
+    """Rows numpy cannot stand in for: the JVM's double→long floor
+    saturates (±1e300 → the clamp bounds), NaN floors to 0, and a NULL
+    coordinate is skipped by LEAST/GREATEST (→ the top index). Pinned
+    at every resolution the encode serves."""
+    from geomesa_sql_spark import get_spark
+    from geomesa_sql_spark.cells import morton_encode
+    from geomesa_sql_spark.cells.column import zorder_cell_col
+
+    s = get_spark("cells-col", master="local[4]", shuffle_partitions=8)
+    rows = [(None, 10.0), (10.0, None), (float("nan"), float("nan")),
+            (1e300, -1e300), (-1e300, 1e300), (-180.0, 90.0), (180.0, -90.0)]
+    df = s.createDataFrame(rows, "lon double, lat double")
+    for res in (1, 6, 12, 20, 31):
+        top = (1 << res) - 1
+
+        def index(v, off, span):
+            if v is None:
+                return top
+            if v != v:
+                return 0
+            return min(max(int(np.floor((v + off) / span * float(1 << res))), 0), top)
+
+        got = [r["c"] for r in df.select(zorder_cell_col("lon", "lat", res).alias("c")).collect()]
+        want = [int(morton_encode(np.array([index(x, 180.0, 360.0)]),
+                                  np.array([index(y, 90.0, 180.0)]))[0])
+                for x, y in rows]
+        assert got == want, res
 
 
 def test_tile_partition_filter_matches_assign_tiles(spark):

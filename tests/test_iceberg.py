@@ -387,7 +387,7 @@ def test_geo_iceberg_manifest_bbox_pruning(spark, tmp_path):
             "cell",
             __import__(
                 "geomesa_sql_spark.cells.column", fromlist=["zorder_cell_col"]
-            ).zorder_cell_col(F.col("lon"), F.col("lat"), 12),
+            ).zorder_cell_col("lon", "lat", 12),
         ),
         path,
     )

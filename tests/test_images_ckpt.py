@@ -130,7 +130,7 @@ def test_checkpoint_resume_spatial_pipeline(spark, sf_dir, tmp_path):
     pts = (
         orders_points(spark, sf_dir)
         .select("o_orderkey", "lon", "lat")
-        .withColumn("coarse", zorder_cell_col(F.col("lon"), F.col("lat"), 1))
+        .withColumn("coarse", zorder_cell_col("lon", "lat", 1))
     )
     polys = nation_squares(spark, sf_dir).select("n_nationkey", "poly")
 

@@ -117,7 +117,7 @@ sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
 out = os.environ["LCCKPT_DIR"]
 pts = (orders_points(spark, sf_dir)
        .select("o_orderkey", "lon", "lat")
-       .withColumn("coarse", zorder_cell_col(F.col("lon"), F.col("lat"), 1)))
+       .withColumn("coarse", zorder_cell_col("lon", "lat", 1)))
 polys = nation_squares(spark, sf_dir).select("n_nationkey", "poly")
 
 def unit(key):

@@ -46,7 +46,7 @@ def test_full_pipeline_with_resume(spark, sf_dir, tmp_path):
     # 3-5. geo join + tiles + checkpointed write, partitioned by coarse cell
     polys = nation_squares(spark, sf_dir).select("n_nationkey", "poly")
     staged = gated.withColumn(
-        "coarse", zorder_cell_col(F.col("lon"), F.col("lat"), 1)
+        "coarse", zorder_cell_col("lon", "lat", 1)
     )
     staged.cache()
 

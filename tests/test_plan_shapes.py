@@ -342,3 +342,89 @@ def test_join_resolution_sample_runs_no_python(spark, sf_dir, tmp_path, monkeypa
     assert ext is not None and ext[2] > 0
     assert plans and not any(_python_evals(p) for p in plans), plans
     assert 1 <= len(sc.statusTracker().getJobIdsForGroup("res_sample")) <= 2
+
+
+def _final_plan(df) -> str:
+    """Executed plan after an action: under AQE, the FINAL plan only
+    (the AdaptiveSparkPlan listing repeats the initial plan below it)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_routed_left_join_evaluates_inner_once(spark, sf_dir):
+    """A routed LEFT spatial join runs its inner join ONCE: as many
+    Python eval nodes as the routed inner join (the former inner ∪
+    anti-join tail ran the cover and refine UDFs twice), and its rows
+    are the inner rows plus every unmatched left row null-padded, the
+    inner rows taken from a plain bbox join (the squares are
+    axis-aligned, so bbox ≡ intersects)."""
+    from geomesa_sql_spark.engine import Engine
+
+    pts = orders_points(spark, sf_dir).filter(F.col("o_orderkey") <= 3000)
+    polys = nation_squares(spark, sf_dir)
+    eng = Engine(spark, fid_col="o_orderkey")
+    eng.register_view("lj_pts", pts.select("o_orderkey", "lon", "lat"))
+    eng.register_view("lj_sq", polys.select("n_nationkey", "poly"))
+    on = "ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly)"
+    sel = "SELECT p.o_orderkey, s.n_nationkey FROM lj_pts p"
+    inner = eng.sql(f"{sel} JOIN lj_sq s {on}")
+    left = eng.sql(f"{sel} LEFT JOIN lj_sq s {on}")
+    assert eng.route_fallbacks == {}
+    n_inner, n_left = (_python_evals(_final_plan(q)) for q in (inner, left))
+    assert n_inner >= 1 and n_left == n_inner, (n_inner, n_left)
+
+    bbox = (
+        (F.col("lon") >= F.col("pminx")) & (F.col("lon") <= F.col("pmaxx"))
+        & (F.col("lat") >= F.col("pminy")) & (F.col("lat") <= F.col("pmaxy"))
+    )
+    matched = {tuple(r) for r in pts.join(polys, bbox).select("o_orderkey", "n_nationkey").collect()}
+    keys = {r[0] for r in pts.select("o_orderkey").collect()}
+    want = matched | {(k, None) for k in keys - {k for k, _ in matched}}
+    got = [tuple(r) for r in left.collect()]
+    assert len(got) == len(want) and set(got) == want
+    assert {tuple(r) for r in inner.collect()} == matched
+
+
+# Gateway round trips of one spatial_join BUILD (no action, res fixed).
+# The Column-tree builders spent ~880 (point x WKB) and ~1,850 (point x
+# point DWithin); the SQL-text builders ~135 and ~105.
+JOIN_BUILD_ROUND_TRIPS = 300
+
+
+def test_spatial_join_build_gateway_budget(spark, sf_dir, monkeypatch):
+    """Cell and cover expressions are SQL text, so building a join stays
+    within a fixed Py4J budget. Counts every command sent to the JVM
+    except py4j's object-release messages, which the Python GC times."""
+    from py4j.clientserver import ClientServerConnection
+
+    pts = orders_points(spark, sf_dir).select("o_orderkey", "lon", "lat")
+    polys = nation_squares(spark, sf_dir).select("n_nationkey", "poly", "cx", "cy")
+    builds = {
+        "point x wkb": lambda: spatial_join(
+            pts, polys.select("n_nationkey", "poly"), point_side("lon", "lat"),
+            wkb_side("poly"), predicate="intersects", res=6,
+        ),
+        "point x point dwithin": lambda: spatial_join(
+            pts, polys.select("n_nationkey", "cx", "cy"), point_side("lon", "lat"),
+            point_side("cx", "cy"), predicate="dwithin", distance=1.5, res=6,
+        ),
+    }
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\n"):
+            sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    counts = {}
+    for name, build in builds.items():
+        build()  # warm
+        sent[0] = 0
+        build()
+        counts[name] = sent[0]
+    assert all(0 < c <= JOIN_BUILD_ROUND_TRIPS for c in counts.values()), counts

@@ -561,3 +561,48 @@ def test_spatial_join_semi_anti_null_geom(spark, sf_dir, tmp_path):
     assert sorted(r.kid for r in semi.collect()) == [1]
     assert sorted(r.kid for r in anti.collect()) == [2, 3]
     assert semi.columns == pts.columns  # left columns only
+
+
+@pytest.mark.parametrize("distance,res", [(1e-05, 16), (2.5, 6)])
+def test_dwithin_point_cover_equals_cover_envelopes(spark, distance, res):
+    """The planar DWithin point cover (SQL text: typed-literal expansion,
+    grid snap, two explodes) yields exactly ``cover_envelopes`` of each
+    expanded box on a seeded sample; world-edge rows hit the clamp."""
+    from geomesa_sql_spark.cells import cover_envelopes
+    from geomesa_sql_spark.join.spatial import _CELL, _cells_for_side
+
+    rng = np.random.default_rng(7)
+    n = 2000
+    x = np.concatenate([rng.uniform(-180.0, 180.0, n - 4), [-180.0, 180.0, 179.99, -179.99]])
+    y = np.concatenate([rng.uniform(-90.0, 90.0, n - 4), [-90.0, 90.0, 89.99, -89.99]])
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n), "x": x, "y": y}), "id long, x double, y double"
+    )
+    got = _cells_for_side(df, point_side("x", "y"), res, distance, 4096).select("id", _CELL)
+    got = sorted(tuple(r) for r in got.collect())
+    idx, cells = cover_envelopes(
+        x - distance, y - distance, x + distance, y + distance, res, max_cells_per_row=4096
+    )
+    want = sorted(zip(idx.tolist(), cells.tolist()))
+    assert len(want) > n
+    assert got == want
+
+
+def test_point_dwithin_cover_over_cap_raises(spark):
+    """A point×point DWithin whose per-row cover exceeds
+    ``max_cells_per_row`` at a forced res fails loudly — the cap is
+    folded into the consumed sequence bound, so Catalyst cannot prune
+    it — instead of truncating the cover."""
+    a = spark.createDataFrame([(1, 10.0, 10.0)], "ia long, xa double, ya double")
+    b = spark.createDataFrame([(2, 11.0, 11.0)], "ib long, xb double, yb double")
+    j = spatial_join(
+        a, b, point_side("xa", "ya"), point_side("xb", "yb"),
+        predicate="dwithin", distance=5.0, res=10, max_cells_per_row=256,
+    )
+    with pytest.raises(Exception, match="envelope cover exceeds cap 256"):
+        j.collect()
+    ok = spatial_join(
+        a, b, point_side("xa", "ya"), point_side("xb", "yb"),
+        predicate="dwithin", distance=5.0, res=4, max_cells_per_row=256,
+    )
+    assert [tuple(r) for r in ok.select("ia", "ib").collect()] == [(1, 2)]

@@ -8,6 +8,7 @@ Run: python tools/plan_audit.py   (quick — plans only, no data jobs)
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -16,9 +17,24 @@ sys.path.insert(0, str(REPO))
 
 
 def _fmt(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # same as explain("formatted")
+    return _stable_ids(df._sc._jvm.PythonSQLUtils.explainString(  # same as explain("formatted")
         df._jdf.queryExecution(), "formatted"
-    )
+    ))
+
+
+def _stable_ids(plan: str) -> str:
+    """Renumber expression ids (``lon#123``) and exchange plan ids
+    (``plan_id=45``) in order of first appearance: the session hands
+    out fresh ones per run, and an unchanged plan set must rewrite
+    PLANS.md byte for byte."""
+    for pattern in (r"(#)(\d+)", r"(plan_id=)(\d+)"):
+        seen: dict[str, int] = {}
+        plan = re.sub(
+            pattern,
+            lambda m: f"{m.group(1)}{seen.setdefault(m.group(2), len(seen))}",
+            plan,
+        )
+    return plan
 
 
 def main() -> int:
@@ -62,7 +78,7 @@ def main() -> int:
     sections.append((
         "Broadcast spatial join (point × polygon)",
         "The 10^12-row point side never crosses into Python below the "
-        "join: cell encode is a JVM Column bit-interleave "
+        "join: cell encode is a JVM bit-interleave expression "
         "(cells/column.py), so the probe side stays in whole-stage "
         "codegen; the polygon cover (pandas UDF) runs on the broadcast "
         "side only; the vectorized refine evaluates above the join.",
@@ -234,7 +250,9 @@ def main() -> int:
     sections.append((
         "SQL-text LEFT spatial join (router outer path)",
         "A LEFT OUTER spatial join in SQL text routes through the cell "
-        "join plus an anti-join restore of unmatched left keys — Spark "
+        "join, then one keyed left join of the left rows against its "
+        "matches restores the unmatched ones (the inner join and its "
+        "Python stages run once) — Spark "
         "itself rejects Python-UDF ON clauses for outer joins, so "
         "without the router this query ERRORS rather than degrades.",
         plan,
