@@ -31,15 +31,18 @@ MAX_RES = 29
 _WORLD = (-180.0, -90.0, 180.0, 90.0)
 
 
+def _snap(v, off: float, span: float, res: int) -> np.ndarray:
+    """Grid index of ``v`` on ``span`` degrees from ``-off``, clamped as
+    floats before the cast so it saturates like the JVM encode (a numpy
+    cast of 1e300 wraps to INT64_MIN); NaN snaps to 0 like Java's cast."""
+    n = float(1 << res)
+    f = np.floor((np.asarray(v, dtype=np.float64) + off) / span * n)
+    return np.clip(np.nan_to_num(f, nan=0.0), 0.0, n - 1.0).astype(np.int64)
+
+
 def lonlat_to_xy(lon, lat, res: int):
     """Map lon/lat arrays to integer grid coords at resolution ``res``."""
-    n = np.int64(1) << res
-    # scale into [0, n); clamp the +180/+90 edge into the last cell
-    x = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n).astype(np.int64)
-    y = np.floor((np.asarray(lat, dtype=np.float64) + 90.0) / 180.0 * n).astype(np.int64)
-    np.clip(x, 0, n - 1, out=x)
-    np.clip(y, 0, n - 1, out=y)
-    return x, y
+    return _snap(lon, 180.0, 360.0, res), _snap(lat, 90.0, 180.0, res)
 
 
 def xy_to_lonlat(x, y, res: int):

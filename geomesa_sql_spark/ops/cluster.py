@@ -17,8 +17,12 @@ dense spots is quadratic: ~25k points in a 2°×2° blob with eps=0.5 is
    is the ONLY shuffle in the whole operator — uniformly spread unless
    the data is skewed, in which case shrink ``S`` (more, smaller
    partitions).
-2. **Fused local pass** — per coarse cell, ONE ``applyInPandas`` call
-   computes core flags AND local components. The 2·eps halo means
+2. **Fused local pass** — ONE ``mapInPandas`` walk over cell-sorted
+   partitions (``ops/tilewalk.tile_carry_map``, not a per-cell
+   ``applyInPandas`` dispatch) runs, per coarse cell, a kernel that
+   computes core flags AND local components; a cell with fewer than
+   ``min_pts`` points has no core point and returns its own points
+   as noise. The 2·eps halo means
    every point within eps of the cell has its full eps-ball present,
    so core status (|N_eps| ≥ min_pts, counting the point itself) is
    exact for exactly the points the clustering consumes. Inside a
@@ -67,14 +71,20 @@ The same grid machinery runs in 3-D: fine side eps/√3 (cube diagonal
 
 from __future__ import annotations
 
-import itertools
+import logging
 import math
+import threading
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from geomesa_sql_spark.ops.tilewalk import tile_carry_map
+
+_LOG = logging.getLogger(__name__)
 
 
 def _connected_components(
@@ -352,12 +362,9 @@ def _local_cluster(
     Core flags are computed IN this pass — under the 2·eps replication
     halo, every point within eps of the cell region has its entire
     eps-ball present, so |N_eps| is exact for exactly the points the
-    clustering logic consumes (the eps-membership "inner" set, the same
-    membership the former two-pass shape shuffled twice to assemble).
-    The former pass 1 (separate core-flag shuffle + applyInPandas) and
-    the pts⋈flags id-join are gone: one shuffle, one Python stage.
+    clustering logic consumes (the eps-membership "inner" set).
 
-    Emits (unchanged contract)
+    Emits
       kind='corelab': (id, lab, own) for every inner core point;
       kind='border' : (id, lab) per distinct core-neighbor label of an
                       OWN non-core point;
@@ -369,10 +376,13 @@ def _local_cluster(
     zs = pdf["z"].to_numpy(dtype=np.float64) if "z" in pdf.columns else None
     own = pdf["own"].to_numpy(dtype=bool)
     n = len(ids)
-    if n == 0:
+    cells = {c: int(pdf[c].iloc[0]) if n else 0 for c in _cell_cols_of(pdf.columns)}
+    if n < min_pts:
+        # even an inner point's whole eps-ball is among these n < min_pts
+        # points, so no point here is core: every own point is noise
         return pd.DataFrame(
-            {c: [] for c in ("id", "kind", "lab", "own", "ccx", "ccy")}
-            | ({"ccz": []} if zs is not None else {})
+            {"id": ids[own], "kind": "noise", "lab": np.int64(-1), "own": True}
+            | cells
         )
     # eps-membership ("inner"): the exact floor-range test the former
     # eps-halo replication used as its cell cover — same IEEE ops, so
@@ -458,17 +468,9 @@ def _local_cluster(
                     out_kind.append("noise")
                     out_lab.append(-1)
                     out_own.append(True)
-    out = {
-        "id": out_id,
-        "kind": out_kind,
-        "lab": out_lab,
-        "own": out_own,
-        "ccx": int(pdf["ccx"].iloc[0]) if len(pdf) else 0,
-        "ccy": int(pdf["ccy"].iloc[0]) if len(pdf) else 0,
-    }
-    if "ccz" in pdf.columns:
-        out["ccz"] = int(pdf["ccz"].iloc[0]) if len(pdf) else 0
-    return pd.DataFrame(out)
+    return pd.DataFrame(
+        {"id": out_id, "kind": out_kind, "lab": out_lab, "own": out_own} | cells
+    )
 
 
 # max label-equivalence edges resolved driver-side before falling back
@@ -582,9 +584,8 @@ def _dilate_cells_np(cells: "pd.DataFrame", r: int) -> "pd.DataFrame":
 
 
 # above this many distinct delta home cells, incremental maintenance
-# expands cell rings distributedly instead of on the driver (a spray
-# delta over a huge grid); below it, LocalRelation cell sets avoid
-# ~6 tiny shuffle jobs per batch — the dominant cost of a small delta.
+# rebuilds instead (a spray delta over a huge grid); below it, every
+# ring is a driver numpy dilation broadcast as a LocalRelation.
 # Calibrated in 2-D for the widest dilation (r=4: 81 offsets → ≤8.1M
 # pre-unique rows, ~130 MB of driver numpy); _driver_cells_cap scales
 # it down in 3-D, where the same r is 729 offsets (9× the rows per
@@ -595,6 +596,12 @@ _DRIVER_CELLS_MAX = 100_000
 def _driver_cells_cap(dim: int) -> int:
     return _DRIVER_CELLS_MAX // (9 ** (dim - 2))
 
+
+# above this many `local` rows in the ring-2 slice (previous + new),
+# incremental maintenance rebuilds instead of diffing the slice on the
+# driver (eight columns a row: ~100 MB of pandas at the cap)
+_DRIVER_SLICE_MAX = 2_000_000
+
 # above this many affected point ids, the incremental assembly stops
 # broadcasting the id set (two int64 columns; 20M ids ≈ 160 MB on the
 # driver and per executor) and rebuilds the per-point output from the
@@ -602,33 +609,32 @@ def _driver_cells_cap(dim: int) -> int:
 # anti-join union saves little
 _AFFECTED_BROADCAST_MAX = 20_000_000
 
+#: times dbscan_incremental rebuilt (or fully reassembled) instead of
+#: applying its delta, by reason — every such path also logs a warning
+incremental_fallbacks: Counter[str] = Counter()
+_FALLBACKS_LOCK = threading.Lock()
 
-def _expand_cells(cells: DataFrame, r: int) -> DataFrame:
-    """Chebyshev-r dilation of a cell set (2-D or 3-D, decided by the
-    columns present)."""
-    ccols = _cell_cols_of(cells.columns)
-    if r == 0:
-        return cells.select(*ccols).distinct()
-    offs = list(itertools.product(range(-r, r + 1), repeat=len(ccols)))
-    return (
-        cells.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            *[
-                                (F.col(c) + F.lit(o)).alias(c)
-                                for c, o in zip(ccols, off)
-                            ]
-                        )
-                        for off in offs
-                    ]
-                )
-            ).alias("c")
-        )
-        .select(*[f"c.{c}" for c in ccols])
-        .distinct()
-    )
+
+def _count_fallback(reason: str, detail: str) -> None:
+    with _FALLBACKS_LOCK:
+        incremental_fallbacks[reason] += 1
+    _LOG.warning("dbscan_incremental did not apply its delta (%s): %s", reason, detail)
+
+
+def _home_cells(pts: DataFrame, s: float) -> DataFrame:
+    """Distinct home coarse cells of ``pts``."""
+    return pts.select(*[
+        F.floor(F.col(d) / F.lit(s)).cast("long").alias(_CELL_COLS[d])
+        for d in _dims(pts.columns)
+    ]).distinct()
+
+
+def _cell_groups(pdf: pd.DataFrame, cell_cols: list[str]):
+    """Contiguous cell-key groups of a cell-sorted frame."""
+    keys = pdf[cell_cols].to_numpy(np.int64)
+    cut = np.flatnonzero(np.any(keys[1:] != keys[:-1], axis=1)) + 1
+    bounds = [0, *cut.tolist(), len(pdf)]
+    return (pdf.iloc[a:b] for a, b in zip(bounds[:-1], bounds[1:]))
 
 
 def _compute_local(
@@ -638,35 +644,44 @@ def _compute_local(
     min_pts: int,
     p2_cells: DataFrame | None = None,
 ) -> DataFrame:
-    """ONE fused pass (2·eps-halo replication → per-cell core flags +
-    local components in the same applyInPandas) → the per-cell `local`
-    rows. The former two-pass shape shuffled the table three times
-    (eps-halo replication for flags, a pts⋈flags id-join, eps-halo
-    replication again for clustering); the fused pass shuffles once
-    with a 2·eps halo — strictly fewer bytes and two fewer stages,
-    with byte-identical `local` output (guide §2.4).
+    """ONE fused pass (2·eps-halo replication, one shuffle → per-cell
+    core flags + local components) → the per-cell `local` rows. The
+    kernel runs through ``tile_carry_map`` keyed on the cell columns:
+    one Python call per Arrow batch walking its contiguous cells, not
+    one dispatch per cell.
 
-    With ``p2_cells`` set (already broadcast-wrapped by the caller if
-    small), only those coarse cells are recomputed; their 2·eps-halo
-    support rides the same replication, so no extra ring pass is
-    needed."""
+    With ``p2_cells`` set (already broadcast-wrapped by the caller),
+    only those coarse cells are recomputed; their 2·eps-halo support
+    rides the same replication, so no extra ring pass is needed."""
     cell_cols = [_CELL_COLS[d] for d in _dims(pts.columns)]
     rep = _replicate_to_cells(pts, s, eps, halo=2)
     if p2_cells is not None:
         rep = rep.join(p2_cells, cell_cols, "left_semi")
 
-    def pf(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _local_cluster(pdf, eps, s, int(min_pts))
+    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.concat(
+            [_local_cluster(g, eps, s, int(min_pts)) for g in _cell_groups(pdf, cell_cols)],
+            ignore_index=True,
+        )
 
-    # lazy checkpoint: materializes inside the first consuming action
-    # (the label-merge toPandas) instead of as its own barrier job, and
-    # still truncates lineage for every later scan (guide §1.2: fewer
-    # stages/barriers is the win at this operator's row counts)
-    return (
-        rep.groupBy(*cell_cols)
-        .applyInPandas(pf, _p2_schema(len(cell_cols)))
-        .localCheckpoint(eager=False)
-    )
+    # lazy checkpoint: every consumer (label merge, assembly, the
+    # incremental slice) reads the Python pass once; under AQE the
+    # replication shuffle runs when this is called, the pass itself
+    # inside the first consuming action
+    return tile_carry_map(
+        rep, walk, _p2_schema(len(cell_cols)), keys=cell_cols
+    ).localCheckpoint(eager=False)
+
+
+def _min_labels(i: np.ndarray, j: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Driver union-find over edges (i, j): every edge-touched node
+    (sorted) and the minimum node id of its component."""
+    nodes, inv = np.unique(np.concatenate([i, j]), return_inverse=True)
+    uf = _UF(len(nodes))
+    for a, b in zip(inv[: len(i)].tolist(), inv[len(i) :].tolist()):
+        uf.union(a, b)
+    # _UF roots every component at its smallest index = its min id
+    return nodes, nodes[[uf.find(k) for k in range(len(nodes))]]
 
 
 def min_label_components(
@@ -686,24 +701,12 @@ def min_label_components(
     # int64 columns (~32 MB) instead of transient GBs (ADVICE r2)
     pdf = uniq.limit(_DRIVER_MERGE_MAX + 1).toPandas()
     if len(pdf) <= _DRIVER_MERGE_MAX:
-        uf_parent: dict[int, int] = {}
-
-        def find(a: int) -> int:
-            while uf_parent.setdefault(a, a) != a:
-                uf_parent[a] = uf_parent.setdefault(uf_parent[a], uf_parent[a])
-                a = uf_parent[a]
-            return a
-
-        for a, b in zip(pdf["i"].to_numpy(), pdf["j"].to_numpy()):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                uf_parent[max(ra, rb)] = min(ra, rb)
-        mapping = [(n, find(n)) for n in list(uf_parent)]
-        if mapping:
-            return F.broadcast(
-                spark.createDataFrame(mapping, "id long, lab long")
+        ids, labs = _min_labels(pdf["i"].to_numpy(np.int64), pdf["j"].to_numpy(np.int64))
+        return F.broadcast(
+            spark.createDataFrame(
+                pd.DataFrame({"id": ids, "lab": labs}), "id long, lab long"
             )
-        return F.broadcast(spark.createDataFrame([], "id long, lab long"))
+        )
     sym = uniq.unionByName(
         uniq.select(F.col("j").alias("i"), F.col("i").alias("j"))
     )
@@ -848,17 +851,12 @@ def dbscan(
     if not return_state:
         return _assemble(local, max_iter)
     result, eq, resolved = _assemble_full(local, max_iter)
-    # lazy checkpoints (guide §1.2), consistent with the state frames
-    # dbscan_incremental itself returns: they persist + truncate
-    # lineage but materialize inside the first consuming action (the
-    # caller's count / sink write / the next apply's joins) instead of
-    # as three barrier jobs here. Safe for the limit-probe hazard: the
-    # next apply consumes `eq` under _resolve_labels' bounded toPandas,
-    # but that probe sits ABOVE distinct's shuffle, so the upstream
-    # still runs at full parallelism (same exposure the incremental
-    # path's lazy `eq` already carries). Streaming inputs are pinned
-    # eager by the maintainer before this is called, so a lazy frame
-    # first consumed next batch recomputes from pinned data.
+    # lazy checkpoints (guide §1.2): persisted and lineage-truncated,
+    # but the result stage runs inside the first consuming action (the
+    # caller's count / sink write / the next apply's collects). The
+    # streaming maintainer pins its inputs eagerly before this is
+    # called, so a frame first consumed next batch recomputes from
+    # pinned data.
     result = result.localCheckpoint(eager=False)
     state = {
         "local": local,
@@ -924,18 +922,28 @@ def dbscan_incremental(
     Chebyshev 1 of its home cell, so only points with home in
     ring1(dirty) can change their row-set — their equivalence edges
     are re-derived from the ring2(dirty) slice and swapped into the
-    persisted provenance-tagged edge list. The label resolution map is
-    re-solved (label-level, tiny) and DIFFED against the previous one;
-    per-point output is recomputed only for (points with a row in a
-    dirty cell) ∪ (points carrying a label whose resolution changed),
-    anti-join-unioned with the untouched remainder of the previous
-    result. Everything id-keyed joins against broadcast
-    delta-proportional key sets, so the O(state) frames are only ever
-    scanned, never shuffled.
+    persisted provenance-tagged edge list. This bookkeeping runs on
+    the driver over ONE bounded collect of the slice (previous `local`
+    rows in ring2 plus the fresh rows) and one of the edge list; the
+    label resolution is re-solved with :func:`min_label_components`'
+    union-find and DIFFED against the previous one. Per-point output
+    is recomputed only for (points with a row in a dirty cell) ∪
+    (points carrying a label whose resolution changed — one scan of
+    the new `local` rows when any did), anti-join-unioned with the
+    untouched remainder of the previous result. The O(state) frames
+    are only scanned through broadcast semi/anti joins.
 
-    Returns (result, new_state), lazy checkpoints like :func:`dbscan`'s:
-    ``df_all`` and ``delta`` must read the same rows until their first
-    consuming action."""
+    Each cap ends in the exact fallback, a full ``dbscan(...,
+    return_state=True)`` (home cells over ``_driver_cells_cap``, slice
+    rows over ``_DRIVER_SLICE_MAX``, edges over ``_DRIVER_MERGE_MAX``,
+    or a dirty set covering every occupied cell); past
+    ``_AFFECTED_BROADCAST_MAX`` affected ids every point is
+    reassembled. Each logs a warning and counts once in
+    ``incremental_fallbacks`` under its reason.
+
+    Returns (result, new_state); ``result`` and ``local`` are lazy
+    checkpoints like :func:`dbscan`'s: ``df_all`` and ``delta`` must
+    read the same rows until their first consuming action."""
     if isinstance(prev_state, DataFrame):  # pre-r3 state shape
         p_result, p_eq, p_resolved = _assemble_full(prev_state, max_iter)
         prev_state = {
@@ -964,165 +972,151 @@ def dbscan_incremental(
             "continued with the metric it was built with"
         )
 
+    def rebuild(reason: str, detail: str):
+        _count_fallback(reason, f"{detail}; rebuilt the state with a full dbscan")
+        return dbscan(
+            df_all, key, x, y, eps_user, int(min_pts), coarse_cell,
+            max_iter, return_state=True, metric=metric,
+        )
+
     spark = df_all.sparkSession
-    home = pts_delta.select(
-        *[
-            F.floor(F.col(d) / F.lit(s)).cast("long").alias(_CELL_COLS[d])
-            for d in _dims(pts_delta.columns)
-        ]
-    ).distinct()
-    # bounded branch probe (the min_label_components pattern, ADVICE
-    # r2): collect at most cap+1 home cells to pick the branch — under
-    # the cap, limit() returns the complete set (the dilations below
-    # need every home cell); over it, the distributed branch reads the
-    # full `home` frame and the driver never holds a planet-wide spray
-    # delta's cell set. The short-circuit's len >= 16 check below is
-    # unaffected (cap+1 >> 16).
-    _cells_cap = _driver_cells_cap(len(cell_cols))
-    home_pdf = home.limit(_cells_cap + 1).toPandas()
-    if len(home_pdf) <= _cells_cap:
-        # LocalRelation cell sets: every ring is a numpy dilation of the
-        # home cells, so the per-batch fixed cost is one tiny toPandas
-        # job instead of ~6 distinct-shuffle jobs (ring re-expansions)
-        schema = ", ".join(f"{c} long" for c in cell_cols)
-
-        def _cells(r: int) -> DataFrame:
-            return spark.createDataFrame(_dilate_cells_np(home_pdf, r), schema)
-
-        dirty, ring1, ring2 = _cells(2), _cells(3), _cells(4)
-        bcast = F.broadcast
-    else:  # spray delta over a huge grid: expand distributedly and do
-        # NOT force-broadcast multi-million-cell frames (review r3) —
-        # Catalyst/AQE picks the join side from stats
-        dirty = _expand_cells(home, 2).localCheckpoint(eager=True)
-        ring1 = _expand_cells(dirty, 1)
-        ring2 = _expand_cells(dirty, 2)
-        bcast = lambda df_: df_  # noqa: E731
+    # bounded probe (the min_label_components pattern, ADVICE r2):
+    # under the cap, limit() returns the complete set of home cells
+    cap = _driver_cells_cap(len(cell_cols))
+    home_pdf = _home_cells(pts_delta, s).limit(cap + 1).toPandas()
+    if len(home_pdf) > cap:
+        return rebuild("home_cells", f"more than {cap} delta home cells")
+    # every ring is a numpy dilation of the home cells, broadcast as a
+    # LocalRelation: dirty = Chebyshev 2, ring1 = 3, ring2 = 4
+    rings = {r: _dilate_cells_np(home_pdf, r) for r in (2, 3, 4)}
+    schema = ", ".join(f"{c} long" for c in cell_cols)
+    dirty, ring2 = (F.broadcast(spark.createDataFrame(rings[r], schema)) for r in (2, 4))
 
     # degenerate-delta short-circuit (r6, guide §1.2): when the dirty
     # set covers EVERY occupied coarse cell, the incremental machinery
     # provably reduces to a full rebuild — kept is empty, every prev eq
-    # edge is refreshed, and the affected set is every id — so diffing
-    # a fully-dirty state pays ~10 join/distinct stages for the same
-    # answer a rebuild gets directly. One bounded probe (anti-join
-    # isEmpty, full-parallelism map side): its ~0.1 s costs far less
-    # than the machinery it can skip, so it runs for any delta wide
-    # enough to plausibly qualify — only the localized/streaming shape
-    # (a handful of home cells) skips it outright.
-    if len(home_pdf) >= 16:
-        occ = pts_all.select(
-            *[
-                F.floor(F.col(d) / F.lit(s)).cast("long").alias(_CELL_COLS[d])
-                for d in _dims(pts_all.columns)
-            ]
-        ).distinct()
-        if occ.join(bcast(dirty), cell_cols, "left_anti").isEmpty():
-            return dbscan(
-                df_all, key, x, y, eps_user, int(min_pts), coarse_cell,
-                max_iter, return_state=True, metric=metric,
-            )
+    # edge is refreshed, and the affected set is every id. One bounded
+    # probe (anti-join isEmpty, full-parallelism map side): its ~0.1 s
+    # costs far less than the machinery it can skip, so it runs for any
+    # delta wide enough to plausibly qualify — only the
+    # localized/streaming shape (a handful of home cells) skips it.
+    if len(home_pdf) >= 16 and (
+        _home_cells(pts_all, s).join(dirty, cell_cols, "left_anti").isEmpty()
+    ):
+        return rebuild("dirty_covers_all", "the dirty cells cover every occupied cell")
 
-    fresh = _compute_local(pts_all, s, eps, int(min_pts), p2_cells=bcast(dirty))
-    kept = prev_local.join(bcast(dirty), cell_cols, "left_anti")
-    new_local = kept.unionByName(fresh).localCheckpoint(eager=False)
+    fresh = _compute_local(pts_all, s, eps, int(min_pts), p2_cells=dirty)
+    new_local = (
+        prev_local.join(dirty, cell_cols, "left_anti")
+        .unionByName(fresh)
+        .localCheckpoint(eager=False)
+    )
+    # the ring-2 slice of the previous `local` rows plus the fresh rows
+    # (all in dirty ⊂ ring2), in ONE bounded collect: every delta-sized
+    # set below is computed from it on the driver
+    sl = (
+        prev_local.join(ring2, cell_cols, "left_semi")
+        .withColumn("new", F.lit(False))
+        .unionByName(fresh.withColumn("new", F.lit(True)))
+        .limit(_DRIVER_SLICE_MAX + 1)
+        .toPandas()
+    )
+    if len(sl) > _DRIVER_SLICE_MAX:
+        return rebuild("slice_rows", f"more than {_DRIVER_SLICE_MAX} ring-2 local rows")
+    prev_eq = (
+        prev_state["eq"].select("pid", "i", "j")
+        .limit(_DRIVER_MERGE_MAX + 1)
+        .toPandas()
+    )
+    if len(prev_eq) > _DRIVER_MERGE_MAX:
+        return rebuild("eq_edges", f"more than {_DRIVER_MERGE_MAX} equivalence edges")
 
-    def _own_core_ids(local_rows: DataFrame) -> DataFrame:
-        return (
-            local_rows.filter((F.col("kind") == "corelab") & F.col("own"))
-            .join(bcast(ring1), cell_cols, "left_semi")
-            .select("id")
-            .distinct()
-        )
-
+    cells = pd.MultiIndex.from_frame(sl[cell_cols])
+    in_dirty = cells.isin(pd.MultiIndex.from_frame(rings[2]))
+    in_ring1 = cells.isin(pd.MultiIndex.from_frame(rings[3]))
+    ids = sl["id"].to_numpy(np.int64)
+    corelab = (sl["kind"] == "corelab").to_numpy()
     # points whose corelab row-set may differ between prev and new
-    # state: any replica cell dirty => home within ring1(dirty)
-    refresh_ids = (
-        _own_core_ids(prev_local)
-        .unionByName(_own_core_ids(new_local))
-        .distinct()
-        .localCheckpoint(eager=False)
+    # state: any replica cell dirty => home within ring1(dirty); fresh
+    # rows all sit in dirty, so one mask covers both sides
+    refresh = np.unique(ids[corelab & sl["own"].to_numpy(bool) & in_ring1])
+    # their replicas all live within ring2(dirty): re-derive their
+    # edges from the new rows of the slice (fresh + kept) only
+    now = sl["new"].to_numpy(bool) | ~in_dirty
+    pick = now & corelab & np.isin(ids, refresh)
+    edges = pd.DataFrame({"pid": ids[pick], "j": sl["lab"].to_numpy(np.int64)[pick]})
+    edges = edges.drop_duplicates()
+    edges["i"] = edges.groupby("pid")["j"].transform("min")
+    eq_pdf = pd.concat(
+        [prev_eq[~np.isin(prev_eq["pid"].to_numpy(np.int64), refresh)],
+         edges[edges["i"] != edges["j"]][["pid", "i", "j"]]],
+        ignore_index=True,
     )
-    # their replicas all live within ring2(dirty) — re-derive edges
-    # from that slice only
-    slice_eq = (
-        new_local.filter(F.col("kind") == "corelab")
-        .join(bcast(ring2), cell_cols, "left_semi")
-        .join(F.broadcast(refresh_ids), "id", "left_semi")
+    # labels whose resolution changed; the previous resolution is
+    # re-solved from the previous edge list (it is that list's
+    # union-find by construction) instead of collecting it too
+    p_ids, p_labs = _min_labels(*(prev_eq[c].to_numpy(np.int64) for c in ("i", "j")))
+    n_ids, n_labs = _min_labels(*(eq_pdf[c].to_numpy(np.int64) for c in ("i", "j")))
+    keys = np.union1d(p_ids, n_ids)
+    changed = keys[_lookup(p_ids, p_labs, keys) != _lookup(n_ids, n_labs, keys)]
+    nt = n_ids != n_labs
+    resolved = spark.createDataFrame(
+        pd.DataFrame({"lab": n_ids[nt], "cluster": n_labs[nt]}), "lab long, cluster long"
     )
-    eq = (
-        prev_state["eq"]
-        .join(
-            F.broadcast(refresh_ids.withColumnRenamed("id", "pid")),
-            "pid",
-            "left_anti",
+    # affected = (points with a row in a dirty cell) ∪ (points carrying a
+    # label whose resolution changed) — the latter may sit anywhere
+    affected = ids[in_dirty]
+    if len(changed):
+        relabel = (
+            new_local.filter(F.col("kind") != "noise")
+            .join(spark.createDataFrame(pd.DataFrame({"lab": changed}), "lab long"),
+                  "lab", "left_semi")
+            .select("id")
+            .limit(_AFFECTED_BROADCAST_MAX + 1)
+            .toPandas()
         )
-        .unionByName(_eq_edges(slice_eq))
-        .localCheckpoint(eager=False)
-    )
-    resolved = _resolve_labels(eq, max_iter)
-    resolved_nt = resolved.filter(F.col("lab") != F.col("cluster")).localCheckpoint(
-        eager=False
-    )
-    # labels whose resolution changed (identity entries are omitted on
-    # both sides, so appearing/disappearing from the map IS a change)
-    p = prev_state["resolved"].withColumnRenamed("cluster", "pc")
-    n = resolved_nt.withColumnRenamed("cluster", "nc")
-    changed_labs = (
-        p.join(n, "lab", "full_outer")
-        .filter(
-            F.coalesce("pc", F.col("lab")) != F.coalesce("nc", F.col("lab"))
-        )
-        .select("lab")
-    )
-    ids_dirty = (
-        prev_local.join(bcast(dirty), cell_cols, "left_semi")
-        .select("id")
-        .unionByName(fresh.select("id"))
-        .distinct()
-    )
-    ids_relabel = (
-        new_local.filter(F.col("kind") != "noise")
-        # no forced broadcast: a mega-merge batch can change millions
-        # of labels, and this runs BEFORE the affected-id size guard
-        # (review r3) — let Catalyst pick from stats
-        .join(changed_labs, "lab", "left_semi")
-        .select("id")
-        .distinct()
-    )
-    affected = (
-        ids_dirty.unionByName(ids_relabel).distinct().localCheckpoint(eager=False)
-    )
+        affected = np.concatenate([affected, relabel["id"].to_numpy(np.int64)])
+    affected = np.unique(affected)
     # pathological batches (a spray delta merging giant clusters) can
     # make the affected-id set a large fraction of the table; past the
     # broadcast comfort zone a full reassembly is both safer for the
     # driver and cheaper than shipping the id set to every task
-    if affected.count() > _AFFECTED_BROADCAST_MAX:
-        new_rows = _assemble_rows(new_local, resolved)
+    full = len(affected) > _AFFECTED_BROADCAST_MAX
+    if full:
+        _count_fallback("affected_ids", f"more than {_AFFECTED_BROADCAST_MAX} "
+                        "affected ids; reassembled every point")
+        new_rows = _assemble_rows(new_local, F.broadcast(resolved))
         result = new_rows.localCheckpoint(eager=False)
-        new_rows_delta = result
     else:
-        slice_pts = new_local.join(F.broadcast(affected), "id", "left_semi")
-        new_rows = _assemble_rows(slice_pts, resolved)
-        result = (
-            prev_state["result"]
-            .join(F.broadcast(affected), "id", "left_anti")
-            .unionByName(new_rows)
-            .localCheckpoint(eager=False)
+        aff = F.broadcast(spark.createDataFrame(pd.DataFrame({"id": affected}), "id long"))
+        new_rows = _assemble_rows(
+            new_local.join(aff, "id", "left_semi"), F.broadcast(resolved)
         )
-        new_rows_delta = new_rows
+        result = (
+            prev_state["result"].join(aff, "id", "left_anti").unionByName(new_rows)
+        ).localCheckpoint(eager=False)
     new_state = {
         "local": new_local,
-        "eq": eq,
-        "resolved": resolved_nt,
+        "eq": spark.createDataFrame(eq_pdf, "pid long, i long, j long"),
+        "resolved": resolved,
         "result": result,
         # per-batch UPSERT delta (not persisted by save_dbscan_state —
         # derivable): the recomputed rows of every affected point.
         # A sink that MERGEs these on id into the previous output gets
         # exactly the new result, writing O(delta) instead of O(state)
-        # rows per batch (the full result when the fallback rebuilt).
-        "delta": new_rows_delta,
+        # rows per batch (the full result when it reassembled).
+        "delta": result if full else new_rows,
     }
     return result, new_state
+
+
+def _lookup(nodes: np.ndarray, labs: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Resolve ``q`` through the sorted (nodes → labs) map; ids absent
+    from it resolve to themselves."""
+    if not len(nodes):
+        return q
+    pos = np.minimum(np.searchsorted(nodes, q), len(nodes) - 1)
+    return np.where(nodes[pos] == q, labs[pos], q)
 
 
 _STATE_FRAMES = ("local", "eq", "resolved", "result")

@@ -10,8 +10,9 @@ generator walks contiguous key groups, carrying the (possibly split)
 last group across Arrow batch boundaries. Same single shuffle; the
 per-tile cost drops to a pandas ``groupby`` slice.
 
-Used by ops/vector_tiles.render_mvt + render_mvt_wkb and
-ops/raster._assemble_tiles. Reference parity: bxkftechteam/geomesa-sql
+Used by ops/vector_tiles.render_mvt + render_mvt_wkb,
+ops/raster._assemble_tiles and DBSCAN's per-cell local pass
+(ops/cluster._compute_local, keyed on the coarse-cell columns). Reference parity: bxkftechteam/geomesa-sql
 has no tile renderer; this backs the raster↔vector handoff surface the
 engine adds on top of its query semantics.
 """

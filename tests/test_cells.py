@@ -148,6 +148,28 @@ def test_zorder_col_null_nan_huge_rows():
         assert got == want, res
 
 
+def test_numpy_cell_matches_jvm_encode_on_edge_rows():
+    """The numpy grid snap saturates like the JVM encode: ±1e300 and
+    ±inf clip to the edge cells (a bare int64 cast would wrap 1e300 to
+    INT64_MIN → cell 0), NaN snaps to 0, and the +180/+90 edge clamps
+    into the last cell."""
+    from geomesa_sql_spark import get_spark
+    from geomesa_sql_spark.cells import lonlat_to_cell
+    from geomesa_sql_spark.cells.column import zorder_cell_col
+
+    s = get_spark("cells-col", master="local[4]", shuffle_partitions=8)
+    inf, nan = float("inf"), float("nan")
+    rows = [(1e300, 1e300), (-1e300, -1e300), (1e300, -1e300), (-1e300, 1e300),
+            (nan, nan), (nan, 10.0), (inf, -inf), (-180.0, -90.0), (180.0, 90.0),
+            (-180.0, 90.0), (180.0, -90.0), (0.0, 0.0)]
+    df = s.createDataFrame(rows, "lon double, lat double")
+    lon = np.array([r[0] for r in rows])
+    lat = np.array([r[1] for r in rows])
+    for res in (1, 6, 12, 20, 29):
+        got = [r["c"] for r in df.select(zorder_cell_col("lon", "lat", res).alias("c")).collect()]
+        assert got == lonlat_to_cell(lon, lat, res).tolist(), res
+
+
 def test_tile_partition_filter_matches_assign_tiles(spark):
     """Review r3: layout's scalar tile formula must stay bit-identical
     to assign_tiles' Column formula (partition pruning correctness

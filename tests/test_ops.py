@@ -855,6 +855,117 @@ def test_dedup_keep_best(spark):
     assert kept == [2, 10, 99]
 
 
+def _cell_kernel_oracle(pdf, eps, s, min_pts):
+    """Brute-force twin of cluster._local_cluster for one cell: exact
+    core flags of the eps-inner points, components over their core
+    edges (label = min id), and each own non-core point's distinct
+    core-neighbour labels (noise when none)."""
+    if not len(pdf):
+        return []
+    ids = pdf["id"].to_numpy()
+    xs, ys = pdf["x"].to_numpy(), pdf["y"].to_numpy()
+    own = pdf["own"].to_numpy()
+    cx, cy = int(pdf["ccx"].iloc[0]), int(pdf["ccy"].iloc[0])
+    inner = np.ones(len(ids), dtype=bool)
+    for v, c in ((xs, cx), (ys, cy)):
+        inner &= (np.floor((v - eps) / s) <= c) & (c <= np.floor((v + eps) / s))
+    nb = (xs[:, None] - xs[None, :]) ** 2 + (ys[:, None] - ys[None, :]) ** 2 <= eps * eps
+    core = inner & (nb.sum(axis=1) >= min_pts)
+    lab = {}
+    for u in np.flatnonzero(core):
+        if u in lab:
+            continue
+        comp, stack = {u}, [u]
+        while stack:
+            for v in np.flatnonzero(nb[stack.pop()] & core):
+                if v not in comp:
+                    comp.add(v)
+                    stack.append(v)
+        m = min(ids[v] for v in comp)
+        lab.update({v: m for v in comp})
+    rows = [(ids[u], "corelab", lab[u], bool(own[u])) for u in lab]
+    for u in np.flatnonzero(own & ~core):
+        labs = sorted({lab[v] for v in np.flatnonzero(nb[u] & core)})
+        rows += [(ids[u], "border", v, True) for v in labs] or [(ids[u], "noise", -1, True)]
+    return sorted((int(i), k, int(la), o) for i, k, la, o in rows)
+
+
+def test_dbscan_local_kernel_matches_bruteforce_cells():
+    """The per-cell kernel on random cells (the cell region plus its
+    2·eps replication band), including cells with fewer than min_pts
+    points — which return their own points as noise without probing
+    distances — and dense ones that take the all-core fine-cell path."""
+    from geomesa_sql_spark.ops.cluster import _local_cluster
+
+    rng = np.random.default_rng(11)
+    eps, s = 1.0, 4.0
+    for trial in range(60):
+        min_pts = int(rng.integers(1, 7))
+        n = int(rng.integers(0, 3 * min_pts)) if trial % 3 else int(rng.integers(0, min_pts))
+        xy = rng.uniform(-2 * eps, s + 2 * eps, (n, 2))
+        if trial % 4 == 0 and n:
+            xy[: n // 2] = rng.normal(s / 2, 0.2, (n // 2, 2))  # dense blob
+        pdf = pd.DataFrame({
+            "id": rng.permutation(1000)[:n].astype(np.int64),
+            "x": xy[:, 0], "y": xy[:, 1],
+            "ccx": np.zeros(n, dtype=np.int64), "ccy": np.zeros(n, dtype=np.int64),
+            "own": np.all((xy >= 0) & (xy < s), axis=1),
+        })
+        got = _local_cluster(pdf, eps, s, min_pts)
+        assert sorted(
+            (int(r.id), r.kind, int(r.lab), bool(r.own)) for r in got.itertuples()
+        ) == _cell_kernel_oracle(pdf, eps, s, min_pts), (trial, n, min_pts)
+        if n < min_pts:
+            assert set(got["kind"]) <= {"noise"} and len(got) == int(pdf["own"].sum())
+
+
+def test_dbscan_incremental_fallbacks_counted(spark, monkeypatch):
+    """Every path where dbscan_incremental rebuilds (or reassembles
+    every point) instead of applying its delta is counted once per call
+    under its reason, and still equals a from-scratch rebuild."""
+    from geomesa_sql_spark.ops import cluster as C
+
+    schema = "id long, x double, y double"
+
+    def blob(start_id, cx, cy, n=24):
+        return [(start_id + k, cx + 0.05 * (k % 6), cy + 0.05 * (k // 6))
+                for k in range(n)]
+
+    kw = dict(key="id", x="x", y="y", eps=0.8, min_pts=3, coarse_cell=1.6)
+    # the chain spans many coarse cells, so its cells see different
+    # local components: the state carries equivalence edges
+    chain = [(500 + k, 0.3 + 0.7 * k, 0.0) for k in range(20)]
+    base_rows = blob(0, 0.0, 0.0) + blob(100, 50.0, 0.0) + chain
+    base = spark.createDataFrame(base_rows, schema)
+    _, st = C.dbscan(base, return_state=True, **kw)
+    assert st["eq"].count() > 0
+    spray = [(300 + k, 1.6 * k - 1.0, 0.0) for k in range(16)]
+    spray += [(400 + k, 50.0 + 1.6 * (k % 2), 1.6 * (k // 2)) for k in range(4)]
+    cases = {
+        "home_cells": ("_DRIVER_CELLS_MAX", 0, blob(200, 0.5, 0.5)),
+        "slice_rows": ("_DRIVER_SLICE_MAX", 0, blob(200, 0.5, 0.5)),
+        "eq_edges": ("_DRIVER_MERGE_MAX", 0, blob(200, 0.5, 0.5)),
+        "affected_ids": ("_AFFECTED_BROADCAST_MAX", 0, blob(200, 0.5, 0.5)),
+        "dirty_covers_all": (None, None, spray),
+    }
+    for reason, (cap, value, delta_rows) in cases.items():
+        with monkeypatch.context() as m:
+            if cap is not None:
+                m.setattr(C, cap, value)
+            full = spark.createDataFrame(base_rows + delta_rows, schema)
+            delta = spark.createDataFrame(delta_rows, schema)
+            C.incremental_fallbacks.clear()
+            res, st2 = C.dbscan_incremental(full, delta, st, **kw)
+            assert dict(C.incremental_fallbacks) == {reason: 1}, reason
+        got = sorted(map(tuple, res.collect()))
+        assert got == sorted(map(tuple, C.dbscan(full, **kw).collect())), reason
+        assert sorted(map(tuple, st2["delta"].collect())) == got, reason
+    C.incremental_fallbacks.clear()
+    full = spark.createDataFrame(base_rows + blob(200, 0.5, 0.5), schema)
+    C.dbscan_incremental(full, spark.createDataFrame(blob(200, 0.5, 0.5), schema), st, **kw)
+    assert not C.incremental_fallbacks
+
+
 def test_dbscan_incremental_equals_full_rebuild(spark):
     """Append-delta maintenance ≡ full rebuild, including deltas that
     BRIDGE two previously separate clusters (the global re-merge must
@@ -1060,6 +1171,13 @@ def test_distributed_cc_fallback_matches_unionfind(spark):
     assert got == want
 
 
+#: Spark jobs of the distributed connected-components loop (driver cap
+#: forced down) on a 20-node chain plus one pair, collect included:
+#: 69 measured — an eager checkpoint (several shuffles) and a change
+#: probe per pointer-jumping round
+CC_DISTRIBUTED_JOBS = 72
+
+
 def test_min_label_components_cap_switch(spark, monkeypatch):
     """Above the driver cap min_label_components must switch to the
     distributed loop and produce identical labels."""
@@ -1073,10 +1191,17 @@ def test_min_label_components_cap_switch(spark, monkeypatch):
     via_driver = {r.id: r.lab for r in
                   C.min_label_components(seeds, edges).collect()}
     monkeypatch.setattr(C, "_DRIVER_MERGE_MAX", 3)  # force fallback
-    via_dist = {r.id: r.lab for r in
-                C.min_label_components(seeds, edges).collect()}
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_distributed", "probe")
+    try:
+        via_dist = {r.id: r.lab for r in
+                    C.min_label_components(seeds, edges).collect()}
+    finally:
+        sc.setJobGroup(None, None)
     assert via_driver == via_dist
     assert via_driver[20] == 1 and via_driver[51] == 50
+    jobs = len(sc.statusTracker().getJobIdsForGroup("cc_distributed"))
+    assert 0 < jobs <= CC_DISTRIBUTED_JOBS, jobs
 
 
 def test_dbscan_incremental_chained_batches(spark):
@@ -1160,8 +1285,9 @@ def test_dbscan_incremental_delta_output_upserts_to_result(spark):
 
 def test_dbscan_incremental_rebuild_fallback(spark, monkeypatch):
     """r3: with the affected-id broadcast cap forced to 0, every batch
-    takes the full-reassembly fallback — results must stay byte-equal
-    to the broadcast path and to a from-scratch rebuild."""
+    reassembles every point from the new `local` rows instead of
+    upserting the affected ones into the previous result — results
+    must stay byte-equal to a from-scratch rebuild."""
     from geomesa_sql_spark.ops import cluster as C
 
     monkeypatch.setattr(C, "_AFFECTED_BROADCAST_MAX", 0)
@@ -1314,9 +1440,10 @@ def test_dbscan_key_type_validation(spark):
 
 
 def test_dbscan_incremental_distributed_cells_branch(spark, monkeypatch):
-    """Review r3: with _DRIVER_CELLS_MAX forced to 0 every batch takes
-    the distributed ring-expansion branch (no forced broadcast of the
-    cell frames) — results must equal a from-scratch rebuild."""
+    """Review r3: with _DRIVER_CELLS_MAX forced to 0 every batch has
+    more delta home cells than the driver cap, so it rebuilds the state
+    with a full dbscan (the distributed ring expansion is gone) —
+    results must equal a from-scratch rebuild."""
     from geomesa_sql_spark.ops import cluster as C
 
     monkeypatch.setattr(C, "_DRIVER_CELLS_MAX", 0)

@@ -428,3 +428,69 @@ def test_spatial_join_build_gateway_budget(spark, sf_dir, monkeypatch):
         build()
         counts[name] = sent[0]
     assert all(0 < c <= JOIN_BUILD_ROUND_TRIPS for c in counts.values()), counts
+
+
+#: Spark jobs of one localized dbscan_incremental call plus one collect
+#: of its result (the per-cell applyInPandas pass and seven lazy
+#: checkpoints over delta-sized id sets ran 26 for the call alone)
+DBSCAN_INCREMENTAL_JOBS = 16
+
+
+def _blobs(spark, n, seed, first_id=0, centre=None):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    if centre is None:
+        centres = rng.uniform(0, 60, (6, 2))
+        xy = centres[rng.integers(0, 6, n)] + rng.normal(0, 1.2, (n, 2))
+    else:
+        xy = np.asarray(centre) + rng.normal(0, 1.2, (n, 2))
+    rows = [(first_id + k, float(a), float(b)) for k, (a, b) in enumerate(xy)]
+    return spark.createDataFrame(rows, "id long, x double, y double"), xy
+
+
+def test_dbscan_local_pass_walks_sorted_cells(spark, monkeypatch):
+    """The per-cell kernel runs in one mapInPandas walk over cell-sorted
+    partitions, never a per-group applyInPandas (one Python dispatch a
+    cell)."""
+    from geomesa_sql_spark.ops import cluster as C
+
+    df, _ = _blobs(spark, 300, 3)
+    pts, eps, s = C._validated_pts(df, "id", "x", "y", 1.0, 5, None)
+    plans = []
+    DataFrame = type(df)
+    checkpoint = DataFrame.localCheckpoint
+
+    def spy(self, eager=True):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    local = C._compute_local(pts, s, eps, 5)
+    assert local.filter(F.col("kind") == "corelab").count() > 0
+    assert len(plans) == 1
+    assert "MapInPandas" in plans[0] and "FlatMapGroupsInPandas" not in plans[0], plans[0]
+
+
+def test_dbscan_incremental_job_budget(spark):
+    """A localized delta costs a bounded number of Spark jobs: the
+    delta-sized sets come from one bounded collect of the ring-2 slice
+    and are diffed on the driver."""
+    from geomesa_sql_spark.ops.cluster import dbscan, dbscan_incremental
+
+    base, xy = _blobs(spark, 1500, 5)
+    delta, _ = _blobs(spark, 150, 6, first_id=10_000, centre=xy[0])
+    kw = dict(key="id", x="x", y="y", eps=1.0, min_pts=5)
+    full = base.unionByName(delta)
+    _, state = dbscan(base, return_state=True, **kw)
+    state["result"].count()
+    sc = spark.sparkContext
+    sc.setJobGroup("dbscan_incremental_budget", "probe")
+    try:
+        res, _ = dbscan_incremental(full, delta, state, **kw)
+        got = sorted(map(tuple, res.collect()))
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("dbscan_incremental_budget"))
+    assert got == sorted(map(tuple, dbscan(full, **kw).collect()))
+    assert 0 < jobs <= DBSCAN_INCREMENTAL_JOBS, jobs
