@@ -629,14 +629,6 @@ def _home_cells(pts: DataFrame, s: float) -> DataFrame:
     ]).distinct()
 
 
-def _cell_groups(pdf: pd.DataFrame, cell_cols: list[str]):
-    """Contiguous cell-key groups of a cell-sorted frame."""
-    keys = pdf[cell_cols].to_numpy(np.int64)
-    cut = np.flatnonzero(np.any(keys[1:] != keys[:-1], axis=1)) + 1
-    bounds = [0, *cut.tolist(), len(pdf)]
-    return (pdf.iloc[a:b] for a, b in zip(bounds[:-1], bounds[1:]))
-
-
 def _compute_local(
     pts: DataFrame,
     s: float,
@@ -660,7 +652,8 @@ def _compute_local(
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.concat(
-            [_local_cluster(g, eps, s, int(min_pts)) for g in _cell_groups(pdf, cell_cols)],
+            [_local_cluster(g, eps, s, int(min_pts))
+             for _, g in pdf.groupby(cell_cols, sort=False)],
             ignore_index=True,
         )
 
@@ -674,14 +667,23 @@ def _compute_local(
 
 
 def _min_labels(i: np.ndarray, j: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Driver union-find over edges (i, j): every edge-touched node
-    (sorted) and the minimum node id of its component."""
+    """Driver components over edges (i, j): every edge-touched node
+    (sorted) and the min node id of its component. Each numpy round
+    hooks every root under the smallest root it shares an edge with
+    (parents only decrease, so roots end as component minima), then
+    jumps every node to its root."""
     nodes, inv = np.unique(np.concatenate([i, j]), return_inverse=True)
-    uf = _UF(len(nodes))
-    for a, b in zip(inv[: len(i)].tolist(), inv[len(i) :].tolist()):
-        uf.union(a, b)
-    # _UF roots every component at its smallest index = its min id
-    return nodes, nodes[[uf.find(k) for k in range(len(nodes))]]
+    a, b = inv[: len(i)], inv[len(i) :]
+    p = np.arange(len(nodes))
+    while True:
+        pa, pb = p[a], p[b]
+        split = pa != pb
+        if not split.any():
+            return nodes, nodes[p]
+        pa, pb = pa[split], pb[split]
+        np.minimum.at(p, np.maximum(pa, pb), np.minimum(pa, pb))
+        while not np.array_equal(q := p[p], p):
+            p = q
 
 
 def min_label_components(
@@ -691,7 +693,7 @@ def min_label_components(
     direction). Returns an (id, lab) mapping covering at least every
     edge-touched node — ids absent from the mapping are singletons, so
     callers resolve with a left join + ``coalesce(lab, id)``. Small
-    graphs (≤ _DRIVER_MERGE_MAX edges) union-find at the driver — the
+    graphs (≤ _DRIVER_MERGE_MAX edges) resolve at the driver — the
     MR merge-step shape; larger ones run the distributed
     pointer-jumping loop over ``seeds``."""
     spark = seeds.sparkSession
@@ -926,7 +928,7 @@ def dbscan_incremental(
     the driver over ONE bounded collect of the slice (previous `local`
     rows in ring2 plus the fresh rows) and one of the edge list; the
     label resolution is re-solved with :func:`min_label_components`'
-    union-find and DIFFED against the previous one. Per-point output
+    numpy solve and DIFFED against the previous one. Per-point output
     is recomputed only for (points with a row in a dirty cell) ∪
     (points carrying a label whose resolution changed — one scan of
     the new `local` rows when any did), anti-join-unioned with the
@@ -937,7 +939,8 @@ def dbscan_incremental(
     return_state=True)`` (home cells over ``_driver_cells_cap``, slice
     rows over ``_DRIVER_SLICE_MAX``, edges over ``_DRIVER_MERGE_MAX``,
     or a dirty set covering every occupied cell); past
-    ``_AFFECTED_BROADCAST_MAX`` affected ids every point is
+    ``_AFFECTED_BROADCAST_MAX`` affected ids (or relabelled rows, whose
+    bounded collect could otherwise drop ids) every point is
     reassembled. Each logs a warning and counts once in
     ``incremental_fallbacks`` under its reason.
 
@@ -1054,7 +1057,7 @@ def dbscan_incremental(
     )
     # labels whose resolution changed; the previous resolution is
     # re-solved from the previous edge list (it is that list's
-    # union-find by construction) instead of collecting it too
+    # components by construction) instead of collecting it too
     p_ids, p_labs = _min_labels(*(prev_eq[c].to_numpy(np.int64) for c in ("i", "j")))
     n_ids, n_labs = _min_labels(*(eq_pdf[c].to_numpy(np.int64) for c in ("i", "j")))
     keys = np.union1d(p_ids, n_ids)
@@ -1066,7 +1069,10 @@ def dbscan_incremental(
     # affected = (points with a row in a dirty cell) ∪ (points carrying a
     # label whose resolution changed) — the latter may sit anywhere
     affected = ids[in_dirty]
+    truncated = False
     if len(changed):
+        # ids repeat (a core point has a row per replica cell): a collect
+        # that hits its limit may have dropped some, so reassemble all
         relabel = (
             new_local.filter(F.col("kind") != "noise")
             .join(spark.createDataFrame(pd.DataFrame({"lab": changed}), "lab long"),
@@ -1075,16 +1081,17 @@ def dbscan_incremental(
             .limit(_AFFECTED_BROADCAST_MAX + 1)
             .toPandas()
         )
+        truncated = len(relabel) > _AFFECTED_BROADCAST_MAX
         affected = np.concatenate([affected, relabel["id"].to_numpy(np.int64)])
     affected = np.unique(affected)
     # pathological batches (a spray delta merging giant clusters) can
     # make the affected-id set a large fraction of the table; past the
     # broadcast comfort zone a full reassembly is both safer for the
     # driver and cheaper than shipping the id set to every task
-    full = len(affected) > _AFFECTED_BROADCAST_MAX
+    full = truncated or len(affected) > _AFFECTED_BROADCAST_MAX
     if full:
         _count_fallback("affected_ids", f"more than {_AFFECTED_BROADCAST_MAX} "
-                        "affected ids; reassembled every point")
+                        "affected ids or relabelled rows; reassembled every point")
         new_rows = _assemble_rows(new_local, F.broadcast(resolved))
         result = new_rows.localCheckpoint(eager=False)
     else:

@@ -119,19 +119,25 @@ def test_zorder_col_matches_numpy():
 
 
 def test_zorder_col_null_nan_huge_rows():
-    """Rows numpy cannot stand in for: the JVM's double→long floor
-    saturates (±1e300 → the clamp bounds), NaN floors to 0, and a NULL
+    """Edge rows of the JVM encode: its double→long floor saturates
+    (±1e300 and ±inf → the clamp bounds), NaN floors to 0, and a NULL
     coordinate is skipped by LEAST/GREATEST (→ the top index). Pinned
-    at every resolution the encode serves."""
+    at every resolution the encode serves; the numpy grid snap must
+    agree on every non-NULL row (a bare int64 cast would wrap 1e300 to
+    INT64_MIN → index 0)."""
     from geomesa_sql_spark import get_spark
-    from geomesa_sql_spark.cells import morton_encode
+    from geomesa_sql_spark.cells import lonlat_to_cell, morton_encode
     from geomesa_sql_spark.cells.column import zorder_cell_col
 
     s = get_spark("cells-col", master="local[4]", shuffle_partitions=8)
-    rows = [(None, 10.0), (10.0, None), (float("nan"), float("nan")),
-            (1e300, -1e300), (-1e300, 1e300), (-180.0, 90.0), (180.0, -90.0)]
+    inf, nan = float("inf"), float("nan")
+    rows = [(None, 10.0), (10.0, None), (nan, nan), (nan, 10.0),
+            (1e300, -1e300), (-1e300, 1e300), (1e300, 1e300), (inf, -inf),
+            (-180.0, 90.0), (180.0, -90.0), (180.0, 90.0), (0.0, 0.0)]
     df = s.createDataFrame(rows, "lon double, lat double")
-    for res in (1, 6, 12, 20, 31):
+    known = [r for r in rows if None not in r]
+    lon, lat = (np.array([r[k] for r in known]) for k in (0, 1))
+    for res in (1, 6, 12, 20, 29, 31):
         top = (1 << res) - 1
 
         def index(v, off, span):
@@ -139,35 +145,15 @@ def test_zorder_col_null_nan_huge_rows():
                 return top
             if v != v:
                 return 0
-            return min(max(int(np.floor((v + off) / span * float(1 << res))), 0), top)
+            return int(min(max(np.floor((v + off) / span * float(1 << res)), 0.0), top))
 
         got = [r["c"] for r in df.select(zorder_cell_col("lon", "lat", res).alias("c")).collect()]
         want = [int(morton_encode(np.array([index(x, 180.0, 360.0)]),
                                   np.array([index(y, 90.0, 180.0)]))[0])
                 for x, y in rows]
         assert got == want, res
-
-
-def test_numpy_cell_matches_jvm_encode_on_edge_rows():
-    """The numpy grid snap saturates like the JVM encode: ±1e300 and
-    ±inf clip to the edge cells (a bare int64 cast would wrap 1e300 to
-    INT64_MIN → cell 0), NaN snaps to 0, and the +180/+90 edge clamps
-    into the last cell."""
-    from geomesa_sql_spark import get_spark
-    from geomesa_sql_spark.cells import lonlat_to_cell
-    from geomesa_sql_spark.cells.column import zorder_cell_col
-
-    s = get_spark("cells-col", master="local[4]", shuffle_partitions=8)
-    inf, nan = float("inf"), float("nan")
-    rows = [(1e300, 1e300), (-1e300, -1e300), (1e300, -1e300), (-1e300, 1e300),
-            (nan, nan), (nan, 10.0), (inf, -inf), (-180.0, -90.0), (180.0, 90.0),
-            (-180.0, 90.0), (180.0, -90.0), (0.0, 0.0)]
-    df = s.createDataFrame(rows, "lon double, lat double")
-    lon = np.array([r[0] for r in rows])
-    lat = np.array([r[1] for r in rows])
-    for res in (1, 6, 12, 20, 29):
-        got = [r["c"] for r in df.select(zorder_cell_col("lon", "lat", res).alias("c")).collect()]
-        assert got == lonlat_to_cell(lon, lat, res).tolist(), res
+        got_known = [c for c, r in zip(got, rows) if None not in r]
+        assert lonlat_to_cell(lon, lat, res).tolist() == got_known, res
 
 
 def test_tile_partition_filter_matches_assign_tiles(spark):

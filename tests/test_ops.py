@@ -966,6 +966,37 @@ def test_dbscan_incremental_fallbacks_counted(spark, monkeypatch):
     assert not C.incremental_fallbacks
 
 
+def test_dbscan_incremental_relabel_collect_cap(spark, monkeypatch):
+    """A one-point bridge merges two chains, so every point of one
+    chain is relabelled far from the dirty cells. Its core points carry
+    the changed label in several replica cells: the relabel collect
+    holds more rows than there are affected ids. With the cap at the
+    affected-id count that collect hits its limit, and the step must
+    reassemble every point instead of upserting a truncated id set."""
+    from geomesa_sql_spark.ops import cluster as C
+
+    schema = "id long, x double, y double"
+    kw = dict(key="id", x="x", y="y", eps=0.8, min_pts=3, coarse_cell=1.6)
+    base_rows = [(k, 0.5 * k, 0.0) for k in range(40)]
+    base_rows += [(1000 + k, 20.5 + 0.5 * k, 0.0) for k in range(40)]
+    bridge = [(5000, 19.75, 0.0)]
+    _, st = C.dbscan(spark.createDataFrame(base_rows, schema), return_state=True, **kw)
+    full = spark.createDataFrame(base_rows + bridge, schema)
+    delta = spark.createDataFrame(bridge, schema)
+    C.incremental_fallbacks.clear()
+    _, st_upsert = C.dbscan_incremental(full, delta, st, **kw)
+    assert not C.incremental_fallbacks
+    n_affected = st_upsert["delta"].count()  # append-only: every affected id
+    want = sorted(map(tuple, C.dbscan(full, **kw).collect()))
+    with monkeypatch.context() as m:
+        m.setattr(C, "_AFFECTED_BROADCAST_MAX", n_affected)
+        res, st2 = C.dbscan_incremental(full, delta, st, **kw)
+    assert dict(C.incremental_fallbacks) == {"affected_ids": 1}
+    C.incremental_fallbacks.clear()
+    assert sorted(map(tuple, res.collect())) == want
+    assert sorted(map(tuple, st2["delta"].collect())) == want
+
+
 def test_dbscan_incremental_equals_full_rebuild(spark):
     """Append-delta maintenance ≡ full rebuild, including deltas that
     BRIDGE two previously separate clusters (the global re-merge must
@@ -1169,6 +1200,34 @@ def test_distributed_cc_fallback_matches_unionfind(spark):
             parent[max(ra, rb)] = min(ra, rb)
     want = {n: find(n) for n in nodes}
     assert got == want
+
+
+def test_min_labels_matches_unionfind():
+    """The vectorised driver components (_min_labels) against the
+    scalar union-find on random multigraphs (self-loops, negative ids)
+    and on the shapes that need the most hook rounds: chains in
+    ascending, descending and shuffled id order, and a star whose hub
+    is the largest id."""
+    from geomesa_sql_spark.ops.cluster import _UF, _min_labels
+
+    def twin(i, j):
+        nodes, inv = np.unique(np.concatenate([i, j]), return_inverse=True)
+        uf = _UF(len(nodes))
+        for a, b in zip(inv[: len(i)].tolist(), inv[len(i):].tolist()):
+            uf.union(a, b)
+        return nodes, nodes[[uf.find(k) for k in range(len(nodes))]]
+
+    rng = np.random.default_rng(11)
+    cases = [(rng.integers(-40, 300, e) * 7, rng.integers(-40, 300, e) * 7)
+             for e in rng.integers(1, 500, 150)]
+    perm = rng.permutation(3000)
+    cases += [(np.arange(1, 3000), np.arange(2999)),
+              (np.arange(2999, 0, -1), np.arange(2998, -1, -1)),
+              (perm[:-1], perm[1:]),
+              (np.full(2000, 10_000), np.arange(2000))]
+    for i, j in cases:
+        got, want = _min_labels(i, j), twin(i, j)
+        assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
 
 
 #: Spark jobs of the distributed connected-components loop (driver cap
