@@ -2,10 +2,10 @@
 
 Widens ``decode_image``'s foreign-file surface (no PIL/cv2 in this
 container): GIF87a/GIF89a decode with LZW, local/global palettes,
-interlacing, and multi-frame animations (so ``frame_sample`` gets a
-second real animated container besides MJPEG AVI). The reference engine
+interlacing, and multi-frame animations (``gif_frames``;
+``decode_image`` takes the first frame). The reference engine
 (bxkftechteam/geomesa-sql) has no media code — payload-side graft, same
-as ``io/jpeg.py`` / ``io/webp.py`` / ``io/flac.py``.
+as ``io/jpeg.py`` / ``io/webp.py``.
 
 Decoder surface: both signatures, global/local color tables, interlaced
 images, animation frames composited per the disposal method (none/keep,

@@ -18,7 +18,6 @@ entirely null in some file yields stats-absent → fall back to a scan.
 from __future__ import annotations
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
 
 
 def fast_count(path: str) -> int:
@@ -82,20 +81,3 @@ def fast_min_max(path: str, column: str):
             hi = st.max if hi is None or st.max > hi else hi
     return (lo, hi)
 
-
-def global_agg(df_or_path, column: str | None = None):
-    """COUNT(*) / (MIN, MAX) preferring footer stats, falling back to a
-    scan when given a DataFrame (plans can't be footer-answered)."""
-    if isinstance(df_or_path, DataFrame):
-        from pyspark.sql import functions as F
-
-        if column is None:
-            return df_or_path.count()
-        r = df_or_path.agg(F.min(column), F.max(column)).first()
-        return (r[0], r[1])
-    if column is None:
-        return fast_count(df_or_path)
-    # path form: None means "footer cannot answer exactly — scan it
-    # yourself" (there is no SparkSession here to scan with); an
-    # all-null column answers as (None, None)
-    return fast_min_max(df_or_path, column)

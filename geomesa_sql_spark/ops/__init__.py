@@ -31,8 +31,6 @@ from geomesa_sql_spark.ops.pack import (  # noqa: F401
     pack_sequences,
 )
 from geomesa_sql_spark.ops.multimodal import (  # noqa: F401
-    audio_features,
-    frame_sample,
     geotag_images,
     image_exif,
     image_stats,

@@ -790,17 +790,21 @@ def _assemble_rows(local: DataFrame, resolved: DataFrame) -> DataFrame:
 def _assemble_full(local: DataFrame, max_iter: int):
     """Global label merge + per-point output. Returns
     (result, eq_edges, resolved_nontrivial) — the two extra frames are
-    the incremental-maintenance state."""
+    the incremental-maintenance state. ``eq`` is lazily checkpointed
+    BEFORE the resolution reads it, so its collect_set exchange runs
+    once and the resolution and the returned state share its output."""
     corelab = local.filter(F.col("kind") == "corelab")
-    eq = _eq_edges(corelab)
+    eq = _eq_edges(corelab).localCheckpoint(eager=False)
     resolved = _resolve_labels(eq, max_iter)
     result = _assemble_rows(local, resolved)
     return result, eq, resolved.filter(F.col("lab") != F.col("cluster"))
 
 
 def _assemble(local: DataFrame, max_iter: int) -> DataFrame:
-    """Global label merge + per-point output from `local` rows."""
-    return _assemble_full(local, max_iter)[0]
+    """Global label merge + per-point output from `local` rows. No
+    state is returned, so ``eq`` has one consumer and no checkpoint."""
+    eq = _eq_edges(local.filter(F.col("kind") == "corelab"))
+    return _assemble_rows(local, _resolve_labels(eq, max_iter))
 
 
 def dbscan(
@@ -862,7 +866,7 @@ def dbscan(
     result = result.localCheckpoint(eager=False)
     state = {
         "local": local,
-        "eq": eq.localCheckpoint(eager=False),
+        "eq": eq,
         "resolved": resolved.localCheckpoint(eager=False),
         "result": result,
         "delta": result,  # initial build: everything is new

@@ -4,9 +4,8 @@ The graft table carries images as ``bytes`` + typed metadata
 (image_id, w, h, fmt — BASELINE.json input_hint). Operators run as
 ``mapInPandas`` over Arrow batches; decode uses the repo's from-scratch
 codecs — raw + full PNG (``io.images``), baseline+progressive JPEG
-(``io.jpeg``), WebP-lossless (``io.webp``), TIFF (``io.tiff``), and
-the container/audio codecs for frame_sample/audio_features. Format
-variants without a real decoder here (mp3, Vorbis/Opus, H.264+) raise
+(``io.jpeg``), WebP-lossless (``io.webp``), TIFF (``io.tiff``), GIF
+(``io.gif``) and BMP. A format without a decoder here raises
 NotImplementedError loudly behind the same batch plumbing.
 
 Payload discipline at scale: each operator projects only the columns
@@ -584,347 +583,3 @@ def transcode_images(
             )
 
     return df.select(id_col, "bytes", "fmt", "w", "h").mapInPandas(gen, schema)
-
-
-def frame_sample(
-    df: DataFrame,
-    every_n: int = 2,
-    id_col: str = "video_id",
-) -> DataFrame:
-    """Video frame sampling template: explode every Nth frame of an
-    opaque video payload into (id, frame_idx, bytes raw, w, h).
-
-    Container support mirrors decode_image's honesty contract:
-    ``rawv`` (concatenated raw RGB frames; frame count = len/(w·h·3)),
-    ``mjpeg``/``avi`` (RIFF/AVI Motion-JPEG) and ``mp4``/``mov``
-    (ISO BMFF with Motion-JPEG sample entries — io/mp4.py box walk) —
-    every frame decoded by the from-scratch io/jpeg.py codec — decode
-    for real; webm/mkv (and mp4 tracks carrying H.264/HEVC/VP9/AV1)
-    raise NotImplementedError behind the SAME plumbing (schema, Arrow
-    batching, null-payload row survival), so swapping in an
-    ffmpeg-backed decoder changes one function, not the pipeline. One input row fans out to ceil(frames/every_n) rows —
-    run AFTER any filter so only surviving videos pay the explode.
-    """
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.StringType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            ids, idxs, outs, ws, hs = [], [], [], [], []
-            for vid, data, fmt, w, h in zip(
-                pdf[id_col], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
-            ):
-                if data is None:
-                    # corrupt payload survives as one null row (a bad
-                    # video must not kill a 100 TB pass)
-                    ids.append(vid)
-                    idxs.append(None)
-                    outs.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    continue
-                if fmt in ("mjpeg", "avi", "gif", "mp4", "mov"):
-                    # real video decode: RIFF/AVI or ISO-BMFF walk + the
-                    # from-scratch JPEG decoder per frame (io/containers.py,
-                    # io/mp4.py), or animated-GIF canvases (io/gif.py)
-                    from geomesa_sql_spark.io.containers import mjpeg_avi_frames
-                    from geomesa_sql_spark.io.gif import gif_frames
-                    from geomesa_sql_spark.io.jpeg import decode_jpeg
-                    from geomesa_sql_spark.io.mp4 import mp4_frames
-
-                    try:
-                        if fmt == "gif":
-                            gf = gif_frames(bytes(data))
-                            decoded = [
-                                (fi, gf[fi]) for fi in range(0, len(gf), every_n)
-                            ]
-                        else:
-                            walk = (mp4_frames if fmt in ("mp4", "mov")
-                                    else mjpeg_avi_frames)
-                            jf = walk(bytes(data))
-                            if not jf:
-                                raise ValueError("video container with no frames")
-                            # decode fully before emitting: a corrupt frame
-                            # mid-stream must not leave partial rows beside
-                            # the null marker (atomic per video)
-                            decoded = [
-                                (fi, decode_jpeg(jf[fi]))
-                                for fi in range(0, len(jf), every_n)
-                            ]
-                        for fi, px in decoded:
-                            ids.append(vid)
-                            idxs.append(fi)
-                            outs.append(px.tobytes())
-                            ws.append(px.shape[1])
-                            hs.append(px.shape[0])
-                    except NotImplementedError:
-                        raise  # non-MJPG codec: loud, not a null row
-                    except Exception:
-                        # corrupt container/frame survives as one null row
-                        ids.append(vid)
-                        idxs.append(None)
-                        outs.append(None)
-                        ws.append(None)
-                        hs.append(None)
-                    continue
-                if fmt != "rawv":
-                    raise NotImplementedError(
-                        f"fmt {fmt!r}: webm/mkv decode needs a real "
-                        "inter-frame codec (absent); plumbing is "
-                        "container-agnostic"
-                    )
-                w, h = int(w), int(h)
-                fsize = w * h * 3
-                if fsize == 0:
-                    # zero-dimension metadata: corrupt row, survives
-                    # as one null row like a None payload
-                    ids.append(vid)
-                    idxs.append(None)
-                    outs.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    continue
-                n_frames = len(data) // fsize
-                if n_frames == 0:
-                    # truncated payload (< one frame): same survival
-                    # contract as a None payload — one null row, never
-                    # a silent disappearance
-                    ids.append(vid)
-                    idxs.append(None)
-                    outs.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    continue
-                buf = np.frombuffer(data, dtype=np.uint8, count=n_frames * fsize)
-                frames = buf.reshape(n_frames, fsize)
-                for fi in range(0, n_frames, every_n):
-                    ids.append(vid)
-                    idxs.append(fi)
-                    outs.append(frames[fi].tobytes())
-                    ws.append(w)
-                    hs.append(h)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": pd.array(idxs, dtype="Int32"),
-                    "bytes": outs,
-                    "w": pd.array(ws, dtype="Int32"),
-                    "h": pd.array(hs, dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, "bytes", "fmt", "w", "h").mapInPandas(gen, schema)
-
-
-def audio_features(
-    df: DataFrame, id_col: str = "audio_id", frame: int = 512
-) -> DataFrame:
-    """Audio feature-extraction template over opaque PCM payloads:
-    (id, n_samples, rms, zero_crossings, peak) from ``raws16le``
-    (16-bit little-endian mono PCM), ``wav`` (real RIFF/WAVE PCM 16-bit
-    containers via io/containers.py), ``flac`` (real lossless decode
-    via the from-scratch io/flac.py codec) or ``ogg``/``oga`` (Ogg
-    page walk via io/ogg.py — FLAC-in-Ogg decodes for real;
-    Vorbis/Opus raise loudly) — features over channel 0; transform
-    codecs (mp3/vorbis/opus) raise NotImplementedError behind the same
-    plumbing. All reductions are vectorized numpy over Arrow batches.
-    """
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.StringType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("rms", T.DoubleType()),
-            T.StructField("zero_crossings", T.LongType()),
-            # LONG: decode_flac handles 24/32-bit streams, and a
-            # full-scale 32-bit sample (-2^31 → |peak| 2^31) overflows
-            # a 32-bit column and would kill the whole task
-            T.StructField("peak", T.LongType()),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            ids, ns, rms, zc, pk = [], [], [], [], []
-            for aid, data, fmt in zip(pdf[id_col], pdf["bytes"], pdf["fmt"]):
-                ids.append(aid)
-                if data is None:
-                    ns.append(None)
-                    rms.append(None)
-                    zc.append(None)
-                    pk.append(None)
-                    continue
-                if fmt in ("wav", "flac", "ogg", "oga"):
-                    # real container/codec decode; features over
-                    # channel 0. Known-but-unsupported codec variants
-                    # raise loudly; malformed payloads survive null.
-                    from geomesa_sql_spark.io.containers import decode_wav
-                    from geomesa_sql_spark.io.flac import decode_flac
-                    from geomesa_sql_spark.io.ogg import decode_ogg
-
-                    try:
-                        dec = {"wav": decode_wav, "flac": decode_flac}.get(
-                            fmt, decode_ogg)
-                        ch, _rate = dec(bytes(data))
-                        x = ch[:, 0].astype(np.float64)
-                    except NotImplementedError:
-                        raise
-                    except Exception:
-                        ns.append(None)
-                        rms.append(None)
-                        zc.append(None)
-                        pk.append(None)
-                        continue
-                    ns.append(len(x))
-                    rms.append(float(np.sqrt((x * x).mean())) if len(x) else 0.0)
-                    s = np.signbit(x)
-                    zc.append(int((s[1:] != s[:-1]).sum()))
-                    pk.append(int(np.abs(x).max()) if len(x) else 0)
-                    continue
-                if fmt != "raws16le":
-                    raise NotImplementedError(
-                        f"fmt {fmt!r}: mp3 decode needs codec libs (absent)"
-                    )
-                if len(data) % 2:
-                    # torn 16-bit payload: corrupt row, survives null
-                    ns.append(None)
-                    rms.append(None)
-                    zc.append(None)
-                    pk.append(None)
-                    continue
-                x = np.frombuffer(data, dtype="<i2").astype(np.float64)
-                ns.append(len(x))
-                rms.append(float(np.sqrt((x * x).mean())) if len(x) else 0.0)
-                s = np.signbit(x)
-                zc.append(int((s[1:] != s[:-1]).sum()))
-                pk.append(int(np.abs(x).max()) if len(x) else 0)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_samples": pd.array(ns, dtype="Int64"),
-                    # nullable Float64: plain float64 coerces None to
-                    # NaN, which Arrow ships as a NON-null NaN (review
-                    # r3 — rms IS NULL then missed corrupt rows)
-                    "rms": pd.array(rms, dtype="Float64"),
-                    "zero_crossings": pd.array(zc, dtype="Int64"),
-                    "peak": pd.array(pk, dtype="Int64"),
-                }
-            )
-
-    return df.select(id_col, "bytes", "fmt").mapInPandas(gen, schema)
-
-
-def transcode_audio(
-    df: DataFrame,
-    to: str = "flac",
-    id_col: str = "audio_id",
-    default_rate: int = 16000,
-) -> DataFrame:
-    """Re-encode audio payloads: decode whatever ``fmt`` each row
-    carries (wav/flac/ogg/raws16le) → encode as ``to`` ('flac' —
-    lossless compression via io/flac.py, 'ogg' — the same frames in
-    Ogg-FLAC pages, or 'wav' — PCM-16 container).
-
-    The audio leg of the storage-compression pipeline stage (the image
-    leg is transcode_images): a PCM/WAV corpus shrinks ~2× as FLAC with
-    bit-exact decode guaranteed by the codec's STREAMINFO MD5. FLAC bps
-    is inferred from the sample range (16/24/32); WAV output clips
-    wider sources to 16-bit and reports lossless=false for them.
-    Arrow-batched mapInPandas, null/corrupt rows survive as NULL output
-    rows, ``bytes`` never rides a shuffle (narrow transformation).
-
-    Output: (id, bytes, n_samples, channels, fmt, ratio, lossless) —
-    ``ratio`` = encoded bytes / source bytes, the per-row metric a
-    resumable job records next to row counts.
-    """
-    if to not in ("flac", "wav", "ogg"):
-        raise ValueError(f"unsupported audio target {to!r}")
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("fmt", T.StringType()),
-            T.StructField("ratio", T.DoubleType()),
-            T.StructField("lossless", T.BooleanType()),
-        ]
-    )
-
-    def gen(batches):
-        from geomesa_sql_spark.io.containers import decode_wav, encode_wav
-        from geomesa_sql_spark.io.flac import decode_flac, encode_flac
-        from geomesa_sql_spark.io.ogg import decode_ogg, encode_ogg_flac
-
-        for pdf in batches:
-            ids, outs, ns, ch, rat, ll = [], [], [], [], [], []
-            for aid, data, fmt in zip(pdf[id_col], pdf["bytes"], pdf["fmt"]):
-                ids.append(aid)
-                if data is None:
-                    outs.append(None)
-                    ns.append(None)
-                    ch.append(None)
-                    rat.append(None)
-                    ll.append(None)
-                    continue
-                try:
-                    if fmt == "wav":
-                        x, rate = decode_wav(bytes(data))
-                    elif fmt == "flac":
-                        x, rate = decode_flac(bytes(data))
-                    elif fmt in ("ogg", "oga"):
-                        x, rate = decode_ogg(bytes(data))
-                    elif fmt == "raws16le":
-                        if len(data) % 2:
-                            raise ValueError("torn 16-bit payload")
-                        x = np.frombuffer(data, "<i2").astype(np.int64)[:, None]
-                        rate = default_rate
-                    else:
-                        raise NotImplementedError(
-                            f"fmt {fmt!r}: mp3 decode needs codec libs"
-                        )
-                    x = x.astype(np.int64, copy=False)
-                    if to in ("flac", "ogg"):
-                        peak = int(np.abs(x).max()) if x.size else 0
-                        bps = 16 if peak < 1 << 15 else (24 if peak < 1 << 23 else 32)
-                        enc = encode_flac if to == "flac" else encode_ogg_flac
-                        blob = enc(x, rate, bps=bps)
-                        exact = True
-                    else:
-                        clipped = np.clip(x, -32768, 32767)
-                        exact = bool((clipped == x).all())
-                        blob = encode_wav(clipped.astype(np.int16), rate)
-                except NotImplementedError:
-                    raise  # genuinely unsupported codec: loud
-                except Exception:
-                    # corrupt payload: null row survives the pass
-                    outs.append(None)
-                    ns.append(None)
-                    ch.append(None)
-                    rat.append(None)
-                    ll.append(None)
-                    continue
-                outs.append(blob)
-                ns.append(x.shape[0])
-                ch.append(x.shape[1])
-                rat.append(len(blob) / max(len(data), 1))
-                ll.append(exact)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "bytes": outs,
-                    "n_samples": pd.array(ns, dtype="Int64"),
-                    "channels": pd.array(ch, dtype="Int32"),
-                    "fmt": [to] * len(ids),
-                    "ratio": pd.array(rat, dtype="Float64"),
-                    "lossless": pd.array(ll, dtype="boolean"),
-                }
-            )
-
-    return df.select(id_col, "bytes", "fmt").mapInPandas(gen, schema)

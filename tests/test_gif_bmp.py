@@ -1,7 +1,7 @@
 """GIF (io/gif.py) and BMP (io/images.py) codecs: lossless round trips,
 foreign decode-only paths via hand-assembled streams (interlace,
 transparency, disposal), rejection of malformed payloads, and the
-decode_image / frame_sample integration."""
+decode_image dispatch."""
 
 import struct
 
@@ -150,30 +150,6 @@ def test_decode_image_dispatch():
     img = _art(12, 10)
     assert (decode_image(encode_gif(img), "gif", 10, 12) == img).all()
     assert (decode_image(encode_bmp(img), "bmp", 10, 12) == img).all()
-
-
-def test_frame_sample_gif_distributed(spark):
-    from geomesa_sql_spark.ops.multimodal import frame_sample
-
-    frames = [np.roll(_art(16, 12), i, axis=1) for i in range(5)]
-    gif = encode_gif(frames)
-    rows = [
-        ("g0", gif, 12, 16, "gif"),
-        ("g_corrupt", gif[:30], 12, 16, "gif"),
-        ("g_null", None, 12, 16, "gif"),
-    ]
-    df = spark.createDataFrame(
-        rows, "video_id string, bytes binary, w int, h int, fmt string"
-    )
-    out = frame_sample(df, every_n=2).toPandas()
-    good = out[out.video_id == "g0"].sort_values("frame_idx")
-    assert list(good.frame_idx) == [0, 2, 4]
-    for _, r in good.iterrows():
-        px = np.frombuffer(bytes(r["bytes"]), np.uint8).reshape(16, 12, 3)
-        assert (px == frames[int(r["frame_idx"])]).all()
-    for vid in ("g_corrupt", "g_null"):
-        sub = out[out.video_id == vid]
-        assert len(sub) == 1 and sub["bytes"].iloc[0] is None
 
 
 def test_gif_disposal_2_restores_global_background():

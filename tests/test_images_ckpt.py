@@ -197,77 +197,6 @@ def test_null_payload_rows_survive(spark):
     assert rz["#null"] is None and rz["#0"] is not None
 
 
-def test_frame_sample_video_template(spark):
-    """Video frame sampling: rawv container decodes for real (every Nth
-    frame, exact pixel round-trip), null payloads survive as one null
-    row, and foreign containers raise behind the same plumbing."""
-    import numpy as np
-
-    from geomesa_sql_spark.ops import frame_sample
-
-    w = h = 4
-    n_frames = 7
-
-    def vid(i):
-        return b"".join(
-            ((np.arange(w * h * 3) + i * 100 + f) % 256).astype("uint8").tobytes()
-            for f in range(n_frames)
-        )
-
-    rows = [("v0", vid(0), w, h, "rawv"), ("v1", vid(1), w, h, "rawv"),
-            ("vnull", None, w, h, "rawv")]
-    df = spark.createDataFrame(
-        rows, "video_id string, bytes binary, w int, h int, fmt string"
-    )
-    out = frame_sample(df, every_n=2).collect()
-    by_vid = {}
-    for r in out:
-        by_vid.setdefault(r.video_id, []).append(r)
-    assert sorted(r.frame_idx for r in by_vid["v0"]) == [0, 2, 4, 6]
-    f2 = next(r for r in by_vid["v1"] if r.frame_idx == 2)
-    expect = ((np.arange(w * h * 3) + 100 + 2) % 256).astype("uint8").tobytes()
-    assert bytes(f2.bytes) == expect and f2.w == w
-    assert len(by_vid["vnull"]) == 1 and by_vid["vnull"][0].frame_idx is None
-
-    import pytest as _pytest
-
-    # mp4 is a real container walk now (io/mp4.py): a corrupt payload
-    # survives as one null row; webm stays a loud stub
-    bad = spark.createDataFrame(
-        [("x", b"\x00", w, h, "mp4")],
-        "video_id string, bytes binary, w int, h int, fmt string",
-    )
-    rows = frame_sample(bad).collect()
-    assert len(rows) == 1 and rows[0].bytes is None
-    webm = spark.createDataFrame(
-        [("x", b"\x1a\x45\xdf\xa3", w, h, "webm")],
-        "video_id string, bytes binary, w int, h int, fmt string",
-    )
-    with _pytest.raises(Exception, match="webm|NotImplemented"):
-        frame_sample(webm).collect()
-
-
-def test_audio_features_template(spark):
-    """Audio feature extraction over 16-bit PCM: rms/zero-crossings/
-    peak match a numpy oracle; null payloads survive."""
-    import numpy as np
-
-    from geomesa_sql_spark.ops import audio_features
-
-    t = np.arange(4096)
-    sig = (np.sin(t / 10.0) * 1000).astype("<i2")
-    rows = [("a0", sig.tobytes(), "raws16le"), ("anull", None, "raws16le")]
-    df = spark.createDataFrame(rows, "audio_id string, bytes binary, fmt string")
-    got = {r.audio_id: r for r in audio_features(df).collect()}
-    x = sig.astype(np.float64)
-    assert got["a0"].n_samples == 4096
-    assert abs(got["a0"].rms - float(np.sqrt((x * x).mean()))) < 1e-9
-    s = np.signbit(x)
-    assert got["a0"].zero_crossings == int((s[1:] != s[:-1]).sum())
-    assert got["a0"].peak == int(np.abs(x).max())
-    assert got["anull"].rms is None
-
-
 def test_tile_mosaic_payload_discipline(spark):
     """Per-tile mosaic: representative = min image_id per tile (pandas
     oracle); and the groupBy shuffle never carries the binary payload
@@ -304,19 +233,6 @@ def test_tile_mosaic_payload_discipline(spark):
     for chunk in plan.split("Exchange")[1:]:
         header = chunk.split("\n", 1)[0]
         assert "bytes" not in header, header
-
-
-def test_frame_sample_truncated_payload_survives(spark):
-    """Review r2: a payload shorter than one frame must take the same
-    null-row survival path as a None payload, not silently vanish."""
-    from geomesa_sql_spark.ops import frame_sample
-
-    df = spark.createDataFrame(
-        [("short", b"\x01\x02\x03", 4, 4, "rawv")],
-        "video_id string, bytes binary, w int, h int, fmt string",
-    )
-    rows = frame_sample(df, every_n=1).collect()
-    assert len(rows) == 1 and rows[0].frame_idx is None and rows[0].bytes is None
 
 
 def test_phash_tiny_and_corrupt_images_survive(spark):

@@ -434,6 +434,9 @@ def test_spatial_join_build_gateway_budget(spark, sf_dir, monkeypatch):
 #: of its result (the per-cell applyInPandas pass and seven lazy
 #: checkpoints over delta-sized id sets ran 26 for the call alone)
 DBSCAN_INCREMENTAL_JOBS = 16
+#: Spark jobs of one full dbscan(return_state=True) call plus one count
+#: of its result, with the eq edge exchange run once (twice costs 9)
+DBSCAN_FULL_STATE_JOBS = 8
 
 
 def _blobs(spark, n, seed, first_id=0, centre=None):
@@ -475,16 +478,23 @@ def test_dbscan_local_pass_walks_sorted_cells(spark, monkeypatch):
 def test_dbscan_incremental_job_budget(spark):
     """A localized delta costs a bounded number of Spark jobs: the
     delta-sized sets come from one bounded collect of the ring-2 slice
-    and are diffed on the driver."""
+    and are diffed on the driver. The full build that makes its state
+    runs the eq edge exchange once."""
     from geomesa_sql_spark.ops.cluster import dbscan, dbscan_incremental
 
     base, xy = _blobs(spark, 1500, 5)
     delta, _ = _blobs(spark, 150, 6, first_id=10_000, centre=xy[0])
     kw = dict(key="id", x="x", y="y", eps=1.0, min_pts=5)
     full = base.unionByName(delta)
-    _, state = dbscan(base, return_state=True, **kw)
-    state["result"].count()
     sc = spark.sparkContext
+    sc.setJobGroup("dbscan_full_budget", "probe")
+    try:
+        _, state = dbscan(base, return_state=True, **kw)
+        state["result"].count()
+    finally:
+        sc.setJobGroup(None, None)
+    full_jobs = len(sc.statusTracker().getJobIdsForGroup("dbscan_full_budget"))
+    assert 0 < full_jobs <= DBSCAN_FULL_STATE_JOBS, full_jobs
     sc.setJobGroup("dbscan_incremental_budget", "probe")
     try:
         res, _ = dbscan_incremental(full, delta, state, **kw)
