@@ -12,17 +12,16 @@ The Spark-native equivalent is this thin facade over a SparkSession:
     eng.register_function("MY_FN", fn)                  # UDF registry
     eng.insert("imgs", rows_df)                         # DML (§2.9)
 
-Table names map to paths (parquet now, Iceberg identifiers when a
-catalog is configured — the TableIO seam of SURVEY.md §1); DML verbs
-delegate to the snapshot-commit machinery in io/dml.py when the path
-is a SnapshotTable directory, else to plain parquet append.
+Table names map to paths: an on-disk Iceberg table dir or plain
+parquet (the TableIO seam of SURVEY.md §1). DML verbs commit Iceberg
+snapshots through io/dml.py's IcebergDmlTable; a plain parquet path
+takes no DML (``create_table`` makes a DML-capable table).
 """
 
 from __future__ import annotations
 
 import itertools
 import logging
-import os
 import re as _re
 import threading
 import uuid
@@ -34,7 +33,9 @@ from pyspark.sql import functions as F
 
 from geomesa_sql_spark import sqltree
 from geomesa_sql_spark.functions import register_all
-from geomesa_sql_spark.io.dml import SnapshotTable
+from geomesa_sql_spark.io.dml import IcebergDmlTable
+from geomesa_sql_spark.io.iceberg import read_table
+from geomesa_sql_spark.io.iceberg_meta import IcebergTable
 from geomesa_sql_spark.plan.scan import GeoTable
 from geomesa_sql_spark.sqltree import _mask_literals
 
@@ -395,22 +396,16 @@ class Engine:
         return self._frames[name].schema
 
     def _read(self, path: str) -> DataFrame:
-        if os.path.exists(os.path.join(path, "_CURRENT")):
-            return SnapshotTable(self.spark, path, self.fid_col).read()
-        if os.path.exists(os.path.join(path, "metadata", "version-hint.text")):
-            # on-disk Iceberg table dir → the pure-Python format reader
-            # (snapshot isolation + v2 deletes applied); catalog-jar
-            # identifiers don't reach here (they aren't paths)
-            from geomesa_sql_spark.io.iceberg_meta import IcebergTable
-
-            return IcebergTable.load(path).read(self.spark)
-        return self.spark.read.parquet(path)
+        # a registered name is always a path: "./" keeps a bare file
+        # name off read_table's catalog-identifier branch (and its Py4J
+        # probe), so this is Iceberg dir → IcebergTable.read, else parquet
+        return read_table(self.spark, path if "/" in path else f"./{path}")
 
     # -------------------------------------------------------------- query
 
     def sql(self, query: str) -> DataFrame:
         """SELECT → Spark SQL; INSERT/UPDATE/DELETE/MERGE on a registered
-        snapshot or Iceberg table → snapshot commit returning a single-row
+        Iceberg table → Iceberg snapshot commit returning a single-row
         affected-count frame, like the reference's executeUpdate
         (nodes/GeoMesaPhysicalTableModify.scala:129-143 returns the
         count as a 1-row result).
@@ -807,22 +802,17 @@ class Engine:
                      why, detail, query)
 
     def table(self, name: str) -> GeoTable:
-        """Pushdown-accumulating scan handle (§2.1 S1/S2); snapshot
-        tables resolve to their current manifest's data dirs."""
+        """Pushdown-accumulating scan handle (§2.1 S1/S2); an Iceberg
+        table resolves to its current snapshot."""
         if name in self._views:
             raise ValueError(
                 f"{name!r} is a registered view (no storage path) — "
-                "pushdown scan handles need a parquet/snapshot table; "
+                "pushdown scan handles need a parquet/Iceberg table; "
                 "use Engine.df() for the DataFrame"
             )
         if name not in self._tables:
             raise ValueError(f"unknown table {name!r}")
-        path = self._tables[name]
-        if os.path.exists(os.path.join(path, "_CURRENT")):
-            st = SnapshotTable(self.spark, path, self.fid_col)
-            m = st._load_manifest(st._current_version())
-            return GeoTable(self.spark, tuple(m["dirs"]))
-        return GeoTable(self.spark, path)
+        return GeoTable(self.spark, self._tables[name])
 
     def df(self, name: str) -> DataFrame:
         """The frame ``name`` was registered with; DML verbs register
@@ -839,37 +829,26 @@ class Engine:
 
     # ---------------------------------------------------------------- DML
 
-    def _snapshot(self, name: str) -> SnapshotTable:
+    def _snapshot(self, name: str) -> IcebergDmlTable:
         path = self._tables[name]
-        if os.path.exists(os.path.join(path, "_CURRENT")):
-            return SnapshotTable(self.spark, path, self.fid_col)
-        from geomesa_sql_spark.io.dml import IcebergDmlTable
-        from geomesa_sql_spark.io.iceberg_meta import IcebergTable
-
         if IcebergTable.is_iceberg_dir(path):
-            # on-disk Iceberg dirs take the same DML surface: every
-            # verb commits a real Iceberg snapshot
+            # every verb commits a real Iceberg snapshot
             return IcebergDmlTable(self.spark, path, self.fid_col)
         raise ValueError(
-            f"table {name!r} is not a snapshot or Iceberg table; "
+            f"table {name!r} is not an Iceberg table; "
             "create it with Engine.create_table"
         )
 
     def create_table(
-        self, name: str, path: str, df: DataFrame, format: str = "snapshot"
+        self, name: str, path: str, df: DataFrame, format: str = "iceberg"
     ) -> None:
-        """Create a DML-capable table: ``format='snapshot'`` (the local
-        manifest format) or ``'iceberg'`` (pure-Python Iceberg v2 —
-        readable by any Iceberg runtime, schema-evolvable via
-        io.iceberg_meta add/rename/drop_column)."""
-        if format == "iceberg":
-            from geomesa_sql_spark.io.dml import IcebergDmlTable
-
-            IcebergDmlTable(self.spark, path, self.fid_col).create(df)
-        elif format == "snapshot":
-            SnapshotTable(self.spark, path, self.fid_col).create(df)
-        else:
+        """Create a DML-capable table: a pure-Python Iceberg v2 dir
+        (readable by any Iceberg runtime, schema-evolvable via
+        io.iceberg_meta add/rename/drop_column). ``format`` has the one
+        value ``'iceberg'``."""
+        if format != "iceberg":
             raise ValueError(f"unknown table format {format!r}")
+        IcebergDmlTable(self.spark, path, self.fid_col).create(df)
         self.register_table(name, path)
 
     def insert(self, name: str, rows: DataFrame) -> int:

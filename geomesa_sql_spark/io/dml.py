@@ -1,10 +1,11 @@
-"""DML over the TableIO seam: INSERT / UPDATE / DELETE as snapshot commits.
+"""DML over the TableIO seam: INSERT / UPDATE / DELETE / MERGE as
+Iceberg v2 snapshot commits.
 
 Reference semantics re-expressed (SURVEY.md §2.9):
 - ``GeoMesaPhysicalTableModify`` returns a single affected-row count and
   forbids updating ``__FID__`` (nodes/GeoMesaPhysicalTableModify.scala:93-95)
-  → ``SnapshotTable.update`` raises on the FID column and all three verbs
-  return exact affected counts.
+  → ``IcebergDmlTable.update`` raises on the FID column and all three
+  verbs return exact affected counts.
 - Insert honors user-provided FIDs, missing columns become nulls
   (modifier/GeoMesaSimpleFeatureInsert.scala:24-49, ModificationTest.scala:36-141)
   → ``insert`` aligns partial-column frames by name, null-filling.
@@ -12,32 +13,33 @@ Reference semantics re-expressed (SURVEY.md §2.9):
   (modifier/GeoMesaSimpleFeatureUpdate.scala:27-65, *Delete.scala:27-57)
   → copy-on-write snapshot rewrite keyed by the FID column.
 
-Mechanics are deliberately Iceberg-shaped so the code is a drop-in for a
-real Iceberg catalog at 100 TB (SURVEY.md §1: same DataFrame code either
-way): a table directory holds immutable parquet data dirs plus numbered
-JSON manifests; ``_CURRENT`` names the live manifest.
+The reference writes DML back into the store it reads from; here that
+store is an on-disk Iceberg v2 table written by the pure-Python format
+in ``io/iceberg_meta.py`` (readable by any Iceberg runtime). Every verb
+is one Iceberg snapshot commit:
 
-- INSERT = write ONE new data dir, commit manifest = old dirs + new dir.
-  No old data is read or rewritten — O(new rows), like an Iceberg append.
-- UPDATE/DELETE = copy-on-write: rewrite into a fresh data dir, commit a
-  manifest pointing only at it (Iceberg CoW ``MERGE INTO``/``DELETE``).
-  A real deployment would rewrite only affected files; at the parquet
-  seam we rewrite the table, which preserves semantics exactly.
-- Readers resolve ``_CURRENT`` once at ``read()``; a concurrent commit
-  never mutates files a reader holds (snapshot isolation). Old snapshots
-  remain readable via ``read(version=...)`` — time travel for free.
+- INSERT = ``append``: new data files in a new manifest, prior
+  manifests carried. No old data is read or rewritten — O(new rows).
+- UPDATE/MERGE = copy-on-write ``overwrite``: the new contents are
+  written as fresh data files and committed as the whole snapshot.
+- DELETE with a Column predicate = ``delete_where``: only the files
+  CONTAINING matches are rewritten; fid-frame and delete-all forms
+  (and tables carrying merge-on-read delete files) take the full
+  rewrite.
+- Readers resolve the current snapshot once at ``read()``; a commit
+  never mutates files a reader holds (snapshot isolation). Old
+  snapshots stay readable via ``read(snapshot_id=...)`` (time travel).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re as _re
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geomesa_sql_spark.io import iceberg_meta as im
 from geomesa_sql_spark.sqltree import _mask_literals
 
 
@@ -58,90 +60,31 @@ class FidUpdateError(ValueError):
     (nodes/GeoMesaPhysicalTableModify.scala:93-95)."""
 
 
-class SnapshotTable:
-    """A parquet table with manifest-tracked snapshot commits."""
+class IcebergDmlTable:
+    """An on-disk Iceberg v2 table taking INSERT / UPDATE / DELETE /
+    MERGE / compaction, each verb one Iceberg snapshot commit
+    (``io/iceberg_meta.py``)."""
 
     def __init__(self, spark: SparkSession, path: str, fid_col: str = "image_id"):
         self.spark = spark
         self.path = path.rstrip("/")
         self.fid_col = fid_col
 
-    # ------------------------------------------------------------ internals
+    def _table(self) -> im.IcebergTable:
+        return im.IcebergTable.load(self.path)
 
-    def _manifest_path(self, version: int) -> str:
-        return f"{self.path}/manifest-v{version}.json"
-
-    def _current_version(self) -> int:
-        with open(f"{self.path}/_CURRENT") as f:
-            return int(f.read().strip())
-
-    def _load_manifest(self, version: int) -> dict:
-        with open(self._manifest_path(version)) as f:
-            return json.load(f)
-
-    def _commit(self, dirs: list[str], schema_names: list[str]) -> int:
-        """Write manifest N+1 and flip _CURRENT. Local-FS rename stands in
-        for the catalog's atomic swap; on object storage this is the
-        Iceberg catalog commit."""
-        try:
-            version = self._current_version() + 1
-        except FileNotFoundError:
-            version = 0
-        manifest = {"version": version, "dirs": dirs, "columns": schema_names}
-        with open(self._manifest_path(version), "w") as f:
-            json.dump(manifest, f)
-        tmp = f"{self.path}/_CURRENT.tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, f"{self.path}/_CURRENT")
-        return version
-
-    def _write_data_dir(self, df: DataFrame) -> str:
-        d = f"{self.path}/data/{uuid.uuid4().hex}"
-        df.write.mode("errorifexists").parquet(d)
-        return d
-
-    # The two storage template methods every verb commits through —
-    # subclasses (IcebergDmlTable) swap the snapshot format by
-    # overriding ONLY these plus read/columns/create/compact.
-
-    def _commit_append(self, aligned: DataFrame) -> int:
-        """Append ``aligned`` (already cast to the table schema) as a
-        new snapshot; returns the exact row count from the WRITTEN
-        files (never recomputes a possibly non-deterministic plan)."""
-        d = self._write_data_dir(aligned)
-        n = int(self.spark.read.parquet(d).count())
-        m = self._load_manifest(self._current_version())
-        self._commit(m["dirs"] + [d], self.columns)
-        return n
-
-    def _commit_rewrite(self, df: DataFrame, count: bool = False) -> int | None:
-        """Commit ``df`` as the table's full new contents; with
-        ``count`` returns the written row count (same written-files
-        discipline as _commit_append)."""
-        cols = self.columns
-        d = self._write_data_dir(df)
-        n = int(self.spark.read.parquet(d).count()) if count else None
-        self._commit([d], cols)
-        return n
-
-    # -------------------------------------------------------------- surface
-
-    def create(self, df: DataFrame) -> "SnapshotTable":
-        os.makedirs(f"{self.path}/data", exist_ok=True)
-        d = self._write_data_dir(df)
-        self._commit([d], df.columns)
+    def create(self, df: DataFrame) -> "IcebergDmlTable":
+        im.create_table(df, self.path)
         return self
 
-    def read(self, version: int | None = None) -> DataFrame:
-        m = self._load_manifest(
-            self._current_version() if version is None else version
-        )
-        return self.spark.read.parquet(*m["dirs"]).select(*m["columns"])
+    def read(self, snapshot_id: int | None = None) -> DataFrame:
+        """The current snapshot, or the one ``snapshot_id`` names
+        (time travel)."""
+        return self._table().read(self.spark, snapshot_id=snapshot_id)
 
     @property
     def columns(self) -> list[str]:
-        return list(self._load_manifest(self._current_version())["columns"])
+        return [f["name"] for f in self._table().schema_fields()]
 
     def insert(self, rows: DataFrame) -> int:
         """Append; missing columns null-filled, extra columns rejected.
@@ -170,7 +113,9 @@ class SnapshotTable:
             raise ValueError(
                 f"INSERT rows not coercible to table schema: {ex}"
             ) from ex
-        return self._commit_append(aligned)
+        # the count is the commit's manifest stats, never a recompute
+        # of a possibly non-deterministic ``rows`` plan
+        return im.added_rows(im.append(aligned, self.path))
 
     def _hit_frame(self, fids: DataFrame) -> DataFrame:
         """Normalize a fid-frame ``where`` (the subquery-predicate path:
@@ -274,7 +219,7 @@ class SnapshotTable:
             ]
         )
         n = int(current.filter(cond).count())
-        self._commit_rewrite(updated)
+        im.overwrite(self.spark, self.path, updated)
         return n
 
     def merge(
@@ -302,9 +247,9 @@ class SnapshotTable:
         ``src.<col>`` (``Engine.sql`` rewrites the USING alias to
         ``src`` before calling here). Inserts are unaffected.
 
-        Beyond the reference (its Calcite surface has no MERGE) but
-        Iceberg-shaped like the rest of this module: at 100 TB the
-        same call maps onto a real catalog's ``MERGE INTO``.
+        Beyond the reference (its Calcite surface has no MERGE); one
+        Iceberg copy-on-write commit, the same shape as a catalog's
+        ``MERGE INTO``.
 
         The source must be key-unique — ANSI MERGE raises on a target
         row matched by several source rows, and so does this."""
@@ -441,114 +386,17 @@ class SnapshotTable:
             n_ins = 0
             final = updated
 
-        self._commit_rewrite(final)
+        im.overwrite(self.spark, self.path, final)
         return n_upd, n_ins
 
     def compact(self, target_files: int | None = None) -> int:
-        """Rewrite the current snapshot into ONE fresh data dir with
-        ``target_files`` parquet files (default: ceil(table bytes /
-        128 MB) — the classic small-files compaction after many
-        appends). Data is unchanged (same rows, one commit); earlier
-        snapshots stay readable. Returns the file count written."""
-        import glob as _glob
-        import math as _math
-
-        m = self._load_manifest(self._current_version())
-        if target_files is None:
-            nbytes = sum(
-                os.path.getsize(f)
-                for dd in m["dirs"]
-                for f in _glob.glob(os.path.join(dd, "*.parquet"))
-            )
-            target_files = max(1, _math.ceil(nbytes / (128 << 20)))
-        current = self.read()
-        d = self._write_data_dir(current.repartition(int(target_files)))
-        self._commit([d], self.columns)
-        return len(_glob.glob(os.path.join(d, "*.parquet")))
-
-    def delete(self, where: Column | DataFrame | None = None) -> int:
-        """Copy-on-write DELETE; ``where=None`` empties the table; a
-        DataFrame ``where`` is a frame of affected fids (subquery
-        predicates — see :meth:`_hit_frame`), applied as a left-anti
-        join. The count derives from before/after row totals, so the
-        (possibly non-deterministic) predicate is only ever evaluated
-        once — in the rewrite that actually commits (review r3)."""
-        current = self.read()
-        before = int(current.count())
-        if isinstance(where, DataFrame):
-            remaining = current.join(
-                self._hit_frame(where), self.fid_col, "left_anti"
-            )
-        else:
-            cond = F.lit(True) if where is None else where
-            remaining = current.filter(~cond | cond.isNull())
-        return before - self._commit_rewrite(remaining, count=True)
-
-
-class IcebergDmlTable(SnapshotTable):
-    """The same verb semantics (INSERT alignment/casts, copy-on-write
-    UPDATE, ANSI MERGE cardinality, subquery-fid frames) committing
-    real Iceberg v2 snapshots instead of the local manifest format —
-    so an Engine table registered as an on-disk Iceberg dir takes DML
-    through both the API and SQL-text surfaces. Only the storage
-    template methods differ; every verb body is inherited."""
-
-    def _table(self):
-        from geomesa_sql_spark.io import iceberg_meta as im
-
-        return im.IcebergTable.load(self.path)
-
-    def create(self, df: DataFrame) -> "IcebergDmlTable":
-        from geomesa_sql_spark.io import iceberg_meta as im
-
-        im.create_table(df, self.path)
-        return self
-
-    def read(self, version: int | None = None) -> DataFrame:
-        return self._table().read(self.spark, snapshot_id=version)
-
-    @property
-    def columns(self) -> list[str]:
-        return [f["name"] for f in self._table().schema_fields()]
-
-    def _commit_append(self, aligned: DataFrame) -> int:
-        from geomesa_sql_spark.io import iceberg_meta as im
-
-        return im.added_rows(im.append(aligned, self.path))
-
-    def _commit_rewrite(self, df: DataFrame, count: bool = False) -> int | None:
-        from geomesa_sql_spark.io import iceberg_meta as im
-
-        t = im.overwrite(self.spark, self.path, df)
-        return im.added_rows(t) if count else None
-
-    def delete(self, where=None) -> int:
-        """Column predicates route through the file-targeted
-        copy-on-write path (only files CONTAINING matches are
-        rewritten — at scale a keyed DELETE touches a handful of files,
-        not the table); fid-frame and delete-all forms use the generic
-        rewrite."""
-        from geomesa_sql_spark.io import iceberg_meta as im
-
-        if where is None or isinstance(where, DataFrame):
-            return super().delete(where)
-        t = self._table()
-        before = int(t.read(self.spark).count())
-        try:
-            t1 = im.delete_where(self.spark, self.path, where)
-        except ValueError:
-            # merge-on-read delete files present: CoW file targeting
-            # is unsound there — fall back to the full rewrite
-            return super().delete(where)
-        return before - int(t1.read(self.spark).count())
-
-    def compact(self, target_files: int | None = None) -> int:
         """Rewrite the current snapshot (folding any merge-on-read
-        delete files) into ``target_files`` parquet files."""
-        import glob as _glob
+        delete files) into ``target_files`` parquet files (default:
+        ceil(table bytes / 128 MB) — the classic small-files compaction
+        after many appends). Data is unchanged (same rows, one commit);
+        earlier snapshots stay readable. Returns the file count
+        written."""
         import math as _math
-
-        from geomesa_sql_spark.io import iceberg_meta as im
 
         t = self._table()
         if target_files is None:
@@ -559,3 +407,35 @@ class IcebergDmlTable(SnapshotTable):
         t1 = im.overwrite(self.spark, self.path, df)
         data, _, _ = t1.plan_files()
         return len(data)
+
+    def delete(self, where: Column | DataFrame | None = None) -> int:
+        """DELETE; ``where=None`` empties the table. A Column predicate
+        takes the file-targeted copy-on-write path (only files
+        CONTAINING matches are rewritten — at scale a keyed DELETE
+        touches a handful of files, not the table); a DataFrame
+        ``where`` is a frame of affected fids (subquery predicates —
+        see :meth:`_hit_frame`), applied as a left-anti join in a full
+        rewrite, as is delete-all. The count derives from before/after
+        row totals, so the (possibly non-deterministic) predicate is
+        only ever evaluated in the commit itself (review r3)."""
+        t = self._table()
+        current = t.read(self.spark)
+        before = int(current.count())
+        if isinstance(where, Column):
+            try:
+                t1 = im.delete_where(self.spark, self.path, where)
+            except ValueError:
+                # merge-on-read delete files present: CoW file targeting
+                # is unsound there — fall back to the full rewrite
+                pass
+            else:
+                return before - int(t1.read(self.spark).count())
+        if isinstance(where, DataFrame):
+            remaining = current.join(
+                self._hit_frame(where), self.fid_col, "left_anti"
+            )
+        else:
+            cond = F.lit(True) if where is None else where
+            remaining = current.filter(~cond | cond.isNull())
+        t1 = im.overwrite(self.spark, self.path, remaining)
+        return before - im.added_rows(t1)

@@ -21,9 +21,10 @@ Mapping of engine concepts onto Iceberg when active:
 - ``write_geo_table`` layout  → ``ALTER TABLE ... WRITE ORDERED BY cell``
   (+ ``PARTITIONED BY truncate(cell, 1<<2k)``): identical row-group
   pruning semantics, plus manifest-level file pruning.
-- ``SnapshotTable``           → native Iceberg snapshots: ``append()``,
+- ``IcebergDmlTable`` verbs   → the catalog's ``INSERT INTO``,
   ``MERGE INTO``/``DELETE FROM`` (copy-on-write or merge-on-read),
-  ``VERSION AS OF`` time travel.
+  ``VERSION AS OF`` time travel; locally the same verbs commit
+  snapshots of an on-disk Iceberg dir (``io/iceberg_meta.py``).
 - ``io.stats`` footer fast path → Iceberg manifests carry the same
   per-file column bounds; ``snapshot.summary['total-records']``.
 """
@@ -77,18 +78,6 @@ def read_table(
             f"{sorted(iceberg_kwargs)} cannot apply to bare parquet"
         )
     return spark.read.parquet(name_or_path)
-
-
-def append(df: DataFrame, name_or_path: str) -> None:
-    if "/" not in name_or_path and iceberg_available(df.sparkSession):
-        df.writeTo(name_or_path).append()
-        return
-    from geomesa_sql_spark.io import iceberg_meta
-
-    if iceberg_meta.IcebergTable.is_iceberg_dir(name_or_path):
-        iceberg_meta.append(df, name_or_path)
-        return
-    df.write.mode("append").parquet(name_or_path)
 
 
 def write_geo_iceberg(

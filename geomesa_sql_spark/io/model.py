@@ -36,6 +36,8 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from geomesa_sql_spark.io.iceberg_meta import IcebergTable
+
 _LOG = logging.getLogger(__name__)
 
 _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -45,7 +47,7 @@ _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 class TableSpec:
     name: str
     path: str
-    fmt: str  # 'parquet' | 'csv' | 'snapshot'
+    fmt: str  # 'parquet' | 'csv' | 'iceberg' | 'geojsonl'
 
 
 @dataclass
@@ -69,8 +71,8 @@ _GEOJSONL_EXTS = (".geojsonl", ".geojsons")
 
 def _table_format(path: str) -> str:
     if os.path.isdir(path):
-        # snapshot-table layout (io/dml.py) vs a plain parquet directory
-        return "snapshot" if os.path.exists(os.path.join(path, "_CURRENT")) else "parquet"
+        # an on-disk Iceberg table dir vs a plain parquet directory
+        return "iceberg" if IcebergTable.is_iceberg_dir(path) else "parquet"
     if path.endswith(".csv"):
         return "csv"
     if path.endswith(_GEOJSONL_EXTS):
@@ -134,7 +136,7 @@ def load_model(path: str) -> ModelSpec:
                 raise ValueError(f"table {name}.{tname}: no file/path operand")
             p = _resolve(p)
             fmt = top.get("format") or _table_format(p)
-            if fmt not in ("parquet", "csv", "snapshot", "geojsonl"):
+            if fmt not in ("parquet", "csv", "iceberg", "geojsonl"):
                 raise ValueError(
                     f"table {name}.{tname}: unknown format {fmt!r}"
                 )
@@ -157,10 +159,11 @@ def apply_model(engine, path: str) -> ModelSpec:
     """Wire a model file into an Engine + its Spark session.
 
     Default-schema tables register on the engine (bare names, full
-    router support; snapshot tables keep their DML surface). Other
-    schemas become Spark databases of external tables; snapshot
-    layouts there are rejected (their manifest indirection has no
-    external-table mapping — register them in the default schema).
+    router support; Iceberg tables keep their DML surface). Other
+    schemas become Spark databases of external tables; Iceberg dirs
+    there are rejected (a parquet external table over one would read
+    its data files without the snapshot's manifests and deletes —
+    register them in the default schema).
     Re-applying a model replaces prior definitions (CREATE OR REPLACE
     semantics via drop-first).
     """
@@ -177,12 +180,12 @@ def apply_model(engine, path: str) -> ModelSpec:
                     from geomesa_sql_spark.io.geojson import read_geojsonl
 
                     engine.register_view(t.name, read_geojsonl(spark, t.path))
-                else:  # parquet or snapshot — Engine._read dispatches
+                else:  # parquet or iceberg — Engine._read dispatches
                     engine.register_table(t.name, t.path)
             continue
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema.name}")
         for t in schema.tables:
-            if t.fmt in ("snapshot", "geojsonl"):
+            if t.fmt in ("iceberg", "geojsonl"):
                 raise ValueError(
                     f"{schema.name}.{t.name}: {t.fmt} tables are only "
                     "supported in the default schema (they need the "

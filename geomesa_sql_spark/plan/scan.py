@@ -45,17 +45,13 @@ class SpatialPred:
 
 @dataclass(frozen=True)
 class ScanSpec:
-    path: str | tuple[str, ...]
+    path: str
     filters: tuple[Any, ...] = ()          # Column (relational) | SpatialPred
     columns: tuple[str, ...] | None = None  # None = all
     offset: int = 0
     fetch: int | None = None
     cell_col: str | None = "cell"
     data_res: int | None = 12
-
-
-def _iceberg(path) -> bool:
-    return isinstance(path, str) and IcebergTable.is_iceberg_dir(path)
 
 
 def _table_res(path) -> int | None:
@@ -71,15 +67,14 @@ def _table_res(path) -> int | None:
 
     from geomesa_sql_spark.io.layout import DEFAULT_DATA_RES
 
-    p = path if isinstance(path, str) else (path[0] if path else "")
-    if _iceberg(p):
+    if IcebergTable.is_iceberg_dir(path):
         # write_geo_iceberg keeps the layout in table properties; any
         # other Iceberg table's 'cell' column is not a known layout
-        props = IcebergTable.load(p).metadata.get("properties", {})
+        props = IcebergTable.load(path).metadata.get("properties", {})
         if props.get("geo.cell.system", "z") != "z" or "geo.cell.res" not in props:
             return None
         return int(props["geo.cell.res"])
-    meta = _os.path.join(str(p), "_GEO_META.json")
+    meta = _os.path.join(path, "_GEO_META.json")
     try:
         with open(meta) as f:
             return int(_json.load(f)["res"])
@@ -88,8 +83,8 @@ def _table_res(path) -> int | None:
 
 
 class GeoTable:
-    """Pushdown-capable table handle over parquet path(s) or one
-    on-disk Iceberg table directory."""
+    """Pushdown-capable table handle over a parquet path or an on-disk
+    Iceberg table directory."""
 
     def __init__(self, spark: SparkSession, path: str, spec: ScanSpec | None = None,
                  pushdown: bool = True):
@@ -156,13 +151,12 @@ class GeoTable:
     def df(self) -> DataFrame:
         """Compile the accumulated spec to a DataFrame."""
         s = self.spec
-        if _iceberg(s.path):
+        if IcebergTable.is_iceberg_dir(s.path):
             # the table's current snapshot, deletes applied — not its
             # directory as plain parquet (data + delete files + metadata)
             out = IcebergTable.load(s.path).read(self.spark)
         else:
-            paths = [s.path] if isinstance(s.path, str) else list(s.path)
-            out = self.spark.read.parquet(*paths)
+            out = self.spark.read.parquet(s.path)
         for f in s.filters:
             if isinstance(f, SpatialPred):
                 out = spatial_filter(

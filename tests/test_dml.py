@@ -1,13 +1,13 @@
 """DML round-trips re-expressing the reference's ModificationTest
 (test/.../ModificationTest.scala:36-175): insert incl. nulls / partial
 columns / INSERT-SELECT, update with FID prohibition, delete, and exact
-affected-row counts — plus snapshot isolation (our Iceberg-shaped
-extension)."""
+affected-row counts — plus snapshot isolation and time travel over the
+Iceberg snapshots every verb commits."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from geomesa_sql_spark.io.dml import FidUpdateError, SnapshotTable
+from geomesa_sql_spark.io.dml import FidUpdateError, IcebergDmlTable
 
 
 @pytest.fixture()
@@ -20,7 +20,7 @@ def table(spark, sf_dir, tmp_path):
             "n_regionkey",
         )
     )
-    return SnapshotTable(spark, str(tmp_path / "t"), fid_col="fid").create(base)
+    return IcebergDmlTable(spark, str(tmp_path / "t"), fid_col="fid").create(base)
 
 
 def test_insert_full_and_count(spark, table):
@@ -87,7 +87,7 @@ def test_update_set_frame_rejects_dup_fid_and_missing_value(spark, table):
     fail like ANSI scalar subqueries do on >1 row (the check is a
     raise_error folded into the consumed value over ONE aggregation:
     no extra job, no double evaluation of the frame; it fires at
-    commit time, BEFORE _CURRENT flips, so the table is untouched);
+    commit time, BEFORE the snapshot commits, so the table is untouched);
     a frame with no value column errors clearly, not an IndexError."""
     good = spark.createDataFrame([(1, 5), (2, 6)], "fid long, v int")
     before = table.read().count()
@@ -119,8 +119,9 @@ def test_snapshot_isolation_time_travel(spark, table):
     n0 = v0.count()
     table.delete(None)
     assert table.read().count() == 0
-    # old snapshot still fully readable
-    assert table.read(version=0).count() == n0
+    # the first snapshot still fully readable
+    first = table._table().snapshots()[0]["snapshot-id"]
+    assert table.read(snapshot_id=first).count() == n0
     # and the handle captured before the commit still resolves
     assert v0.count() == n0
 
@@ -152,7 +153,7 @@ def test_insert_non_castable_rejected(spark, table):
 def test_merge_upsert_counts_and_values(spark, table):
     """MERGE = partial-row update for matched keys + insert for new
     keys, one atomic commit, exact counts, old snapshot intact."""
-    v0 = table._current_version()
+    v0 = table._table().snapshot()["snapshot-id"]
     n0 = table.read().count()
     src = spark.createDataFrame(
         [(0, "ZERO_PRIME"), (1, "ONE_PRIME"), (5000, "NEWLAND")],
@@ -168,7 +169,7 @@ def test_merge_upsert_counts_and_values(spark, table):
     new = got.filter(F.col("fid") == 5000).first()
     assert new.n_name == "NEWLAND" and new.n_regionkey is None
     # time travel: pre-merge snapshot unchanged
-    old = table.read(version=v0)
+    old = table.read(snapshot_id=v0)
     assert old.count() == n0
     assert old.filter(F.col("fid") == 0).first().n_name != "ZERO_PRIME"
 
@@ -191,22 +192,21 @@ def test_merge_modes_and_duplicate_keys(spark, table):
 
 
 def test_compact_small_files(spark, table):
-    """Many single-row appends -> compaction to one dir/few files with
+    """Many single-row appends -> compaction to few data files with
     identical data; the pre-compaction snapshot stays readable."""
     for i in range(5):
         table.insert(spark.createDataFrame(
             [(9000 + i, f"N{i}", 0)], "fid long, n_name string, n_regionkey long"
         ))
     before = {tuple(r) for r in table.read().collect()}
-    v_before = table._current_version()
-    n_dirs_before = len(table._load_manifest(v_before)["dirs"])
-    assert n_dirs_before >= 6
+    t = table._table()
+    v_before = t.snapshot()["snapshot-id"]
+    n_files_before = len(t.plan_files()[0])
+    assert n_files_before >= 6
     n_files = table.compact(target_files=2)
     assert n_files == 2
-    m = table._load_manifest(table._current_version())
-    assert len(m["dirs"]) == 1
     assert {tuple(r) for r in table.read().collect()} == before
-    assert table.read(version=v_before).count() == len(before)
+    assert table.read(snapshot_id=v_before).count() == len(before)
 
 
 def test_sql_text_merge(spark, sf_dir, tmp_path):
@@ -219,7 +219,7 @@ def test_sql_text_merge(spark, sf_dir, tmp_path):
         .select(F.col("n_nationkey").cast("long").alias("image_id"), "n_name")
     )
     d = str(tmp_path / "mt")
-    SnapshotTable(spark, d).create(base)
+    IcebergDmlTable(spark, d).create(base)
     eng.register_table("mtab", d)
     eng.register_view(
         "msrc",
@@ -377,7 +377,7 @@ def test_merge_set_exprs_validation(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "image_id long, n string, price double"
     )
-    t = SnapshotTable(spark, d).create(base)
+    t = IcebergDmlTable(spark, d).create(base)
     src = spark.createDataFrame([(1, 9.0)], "image_id long, price double")
 
     t.merge(src, set_exprs={"price": "src.price * 2"})

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geomesa_sql_spark.engine import Engine
+from geomesa_sql_spark.io.iceberg_meta import IcebergTable
 from geomesa_sql_spark.io.stats import fast_count, fast_min_max
 
 
@@ -51,6 +52,10 @@ def test_dml_roundtrip_via_engine(spark, sf_dir, tmp_path):
     e = Engine(spark, fid_col="n_nationkey")
     base = spark.read.parquet(f"{sf_dir}/nation.parquet")
     e.create_table("nat", str(tmp_path / "nat"), base)
+    # the one DML table format: an Iceberg dir, and no other format
+    assert IcebergTable.is_iceberg_dir(str(tmp_path / "nat"))
+    with pytest.raises(ValueError, match="unknown table format"):
+        e.create_table("nat_s", str(tmp_path / "nat_s"), base, format="snapshot")
     n0 = e.df("nat").count()
     assert e.insert("nat", base.limit(3).withColumn(
         "n_nationkey", F.col("n_nationkey") + 100)) == 3
@@ -76,8 +81,8 @@ def test_fast_min_max_absent_column(sf_dir):
 
 
 def test_geotable_over_snapshot_table(spark, sf_dir, tmp_path):
-    """Engine.table() resolves a snapshot table to its current data
-    dirs; the pushdown handle sees post-DML state."""
+    """Engine.table() resolves an Iceberg table to its current
+    snapshot; the pushdown handle sees post-DML state."""
     e = Engine(spark, fid_col="n_nationkey")
     base = spark.read.parquet(f"{sf_dir}/nation.parquet")
     e.create_table("natg", str(tmp_path / "natg"), base)

@@ -135,19 +135,36 @@ schemas:
     assert "altcat" not in [d.name for d in spark.catalog.listDatabases()]
 
 
-def test_apply_model_rejects_snapshot_outside_default(spark, tmp_path, sf_dir):
-    snap = tmp_path / "snapdir"
-    snap.mkdir()
-    (snap / "_CURRENT").write_text("v0")
+def test_apply_model_rejects_iceberg_outside_default(spark, tmp_path, sf_dir):
+    """An Iceberg table dir is classified as such (not as a bare parquet
+    dir): outside the default schema it is refused with a clear error,
+    since a parquet external table would read its data files without
+    the snapshot; in the default schema it registers, discovered or
+    declared with ``format: iceberg``."""
+    from geomesa_sql_spark.io.iceberg_meta import create_table
+
+    ice = tmp_path / "icedir"
+    create_table(spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string"), str(ice))
     path = _write(
         tmp_path / "m.json",
         '{"defaultSchema": "a", "schemas": ['
         f'{{"name": "a", "operand": {{"dir": "{sf_dir}"}}}},'
-        f'{{"name": "b", "tables": [{{"name": "s", "operand": {{"path": "{snap}"}}}}]}}'
+        f'{{"name": "b", "tables": [{{"name": "s", "operand": {{"path": "{ice}"}}}}]}}'
         "]}",
     )
-    with pytest.raises(ValueError, match="snapshot"):
+    with pytest.raises(ValueError, match="iceberg"):
         Engine.from_model(spark, path)
+
+    path = _write(
+        tmp_path / "m2.json",
+        '{"defaultSchema": "a", "schemas": [{"name": "a", "tables": ['
+        f'{{"name": "s", "operand": {{"path": "{ice}"}}}},'
+        f'{{"name": "s2", "operand": {{"path": "{ice}", "format": "iceberg"}}}}'
+        "]}]}",
+    )
+    assert [t.fmt for t in load_model(path).schemas[0].tables] == ["iceberg"] * 2
+    engine = Engine.from_model(spark, path)
+    assert engine.sql("SELECT COUNT(*) AS n FROM s2").first()["n"] == 2
 
 
 def _run_shell(engine, text, max_rows=100):

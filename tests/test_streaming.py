@@ -530,11 +530,11 @@ def test_drain_upsert_vs_memory_sink_append(spark, sf_dir, tmp_path):
 
 def test_drain_merge_into_snapshot_table(spark, sf_dir, tmp_path):
     """r3: foreachBatch -> Engine.merge upsert sink: after a
-    multi-batch drain the snapshot table holds exactly the final
+    multi-batch drain the Iceberg table holds exactly the final
     per-key totals (later batches updated earlier rows, one commit per
     batch), matching the batch aggregate."""
     from geomesa_sql_spark.engine import Engine
-    from geomesa_sql_spark.io.dml import SnapshotTable
+    from geomesa_sql_spark.io.iceberg_meta import IcebergTable
     from geomesa_sql_spark.streaming import (
         drain_merge_into,
         stateful_running_totals,
@@ -550,8 +550,7 @@ def test_drain_merge_into_snapshot_table(spark, sf_dir, tmp_path):
     empty = spark.createDataFrame(
         [], "event_type string, total_n long, total_value double"
     )
-    SnapshotTable(spark, t, fid_col="event_type").create(empty)
-    eng.register_table("totals", t)
+    eng.create_table("totals", t, empty)
 
     stream = (
         spark.readStream.schema(ev.schema)
@@ -573,7 +572,7 @@ def test_drain_merge_into_snapshot_table(spark, sf_dir, tmp_path):
     }
     assert res == want
     # multi-commit history: one snapshot per non-empty batch + create
-    assert SnapshotTable(spark, t, fid_col="event_type")._current_version() >= 3
+    assert len(IcebergTable.load(t).snapshots()) >= 4
 
 
 def test_streaming_exact_dedup_null_and_separator_groups(spark, tmp_path):
