@@ -189,17 +189,24 @@ def _rewrite_spatial_predicates(query: str) -> str:
         tail = "" if exact is None else f" AND {exact}"
         return f"({x} IS NOT NULL AND {y} IS NOT NULL AND {bbox}{tail})"
 
-    def _sub(m: _re.Match) -> str:
-        pred, x, y, wkt, dist = m.groups()
-        return _rewrite(m.group(0), pred, x, y, wkt, dist, point_first=True)
+    def _rewrite_calls(rx: _re.Pattern, text: str, point_first: bool) -> str:
+        # a match that starts inside a quoted literal is string data,
+        # not a call: its first char is blanked in the masked text
+        masked = _mask_literals(text)
 
-    def _sub_flip(m: _re.Match) -> str:
-        pred, wkt, x, y, dist = m.groups()
-        return _rewrite(m.group(0), pred, x, y, wkt, dist, point_first=False)
+        def _sub(m: _re.Match) -> str:
+            if masked[m.start()] != text[m.start()]:
+                return m.group(0)
+            if point_first:
+                pred, x, y, wkt, dist = m.groups()
+            else:
+                pred, wkt, x, y, dist = m.groups()
+            return _rewrite(m.group(0), pred, x, y, wkt, dist, point_first)
 
-    return _SPATIAL_PRED_FLIP_RE.sub(
-        _sub_flip, _SPATIAL_PRED_RE.sub(_sub, query)
-    )
+        return rx.sub(_sub, text)
+
+    query = _rewrite_calls(_SPATIAL_PRED_RE, query, True)
+    return _rewrite_calls(_SPATIAL_PRED_FLIP_RE, query, False)
 
 
 _PREDICATES = {"within", "intersects", "contains", "dwithinsphere", "dwithin",

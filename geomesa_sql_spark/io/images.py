@@ -1,15 +1,22 @@
 """Image payload codecs — stdlib-only (no PIL/cv2 in the environment).
 
 The graft input table carries images as opaque ``bytes`` with typed
-metadata (image_id, w, h, fmt — BASELINE.json input_hint). Two formats:
+metadata (image_id, w, h, fmt — BASELINE.json input_hint). The formats
+``decode_image`` reads are the keys of :data:`DECODERS`:
 
 - ``raw``: numpy (h, w, 3) uint8 ``tobytes()`` — zero-cost decode.
-- ``png``: real PNG (zlib + struct), 8-bit RGB, filter 0 — losslessly
-  decodable by any PNG reader; lets the PSNR≥40dB payload invariant be
-  exercised through an actual encode→decode round trip.
-- ``jpeg``: from-scratch baseline JFIF codec (`io/jpeg.py`: numpy DCT,
-  canonical Huffman, 4:4:4/4:2:0, restart markers) — the LOSSY leg of
-  the invariant, measured ≥40 dB at quality 90 in tests.
+- ``png``: real PNG (zlib + struct), every color type and bit depth,
+  filters 0-4 and Adam7; the encoder writes 8-bit RGB, filter 0 —
+  lets the PSNR≥40dB payload invariant be exercised through an actual
+  encode→decode round trip.
+- ``jpeg``/``jpg``: from-scratch baseline+progressive JFIF codec
+  (`io/jpeg.py`: numpy DCT, canonical Huffman, 4:4:4/4:2:0, restart
+  markers) — the LOSSY leg of the invariant, measured ≥40 dB at
+  quality 90 in tests.
+- ``tiff``/``tif``: from-scratch TIFF 6.0 codec (`io/tiff.py`).
+
+Any other ``fmt`` (NULL included) raises NotImplementedError naming
+it; the image operators never turn such a row into a NULL row.
 
 Per-row invariant vs the reference (BASELINE.json:15): decoded-pixel
 allclose (PSNR ≥ 40 dB for lossy — exercised by the jpeg codec; raw
@@ -60,7 +67,9 @@ def encode_png(pixels: np.ndarray) -> bytes:
 # Adam7 interlace passes: (x0, y0, dx, dy), spec order
 _ADAM7 = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
           (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-# 64 MP: same allocation-bomb cap rationale as io/gif.py _MAX_PIXELS
+# 64 MP: the spec-legal 2^31-1 x 2^31-1 header would make a 30-byte
+# payload allocate terabytes inside a Spark task, so an implausible
+# claim is refused instead; 64 MP is far above any real image payload
 _PNG_MAX_PIXELS = 1 << 26
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 _PNG_DEPTHS = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
@@ -165,7 +174,7 @@ def decode_png(data: bytes) -> np.ndarray:
                 )
             if w * h > _PNG_MAX_PIXELS:
                 # 32-bit header dims could demand terabytes from a
-                # 30-byte payload — same task-safety cap as io/gif.py
+                # 30-byte payload (see _PNG_MAX_PIXELS)
                 raise ValueError(f"implausible PNG dimensions {w}x{h}")
         elif tag == b"PLTE":
             if len(payload) % 3:
@@ -219,188 +228,56 @@ def decode_png(data: bytes) -> np.ndarray:
     return np.repeat(g[..., None], 3, axis=2)
 
 
-def encode_bmp(pixels: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 → BMP bytes (BITMAPINFOHEADER, 24-bit BI_RGB,
-    bottom-up rows, BGR order, 4-byte row padding)."""
-    pixels = np.ascontiguousarray(pixels, dtype=np.uint8)
-    h, w, _ = pixels.shape
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : w * 3] = pixels[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
-    body = rows.tobytes()
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    hdr = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 14 + 40)
-    return hdr + info + body
+def _decode_png(data: bytes, w: int, h: int) -> np.ndarray:
+    return decode_png(data)
 
 
-@clean_decode
-def _bmp_rle(payload: bytes, w: int, h: int, four_bit: bool) -> np.ndarray:
-    """RLE8/RLE4 → (h, w) palette indexes in STORAGE order (row 0 =
-    bottom scanline; the caller flips). Escapes: 0=end-of-line,
-    1=end-of-bitmap, 2=delta, n≥3=absolute run (word-aligned)."""
-    out = np.zeros((h, w), np.uint8)
-    x = y = i = 0
-    while i + 1 < len(payload):
-        n, v = payload[i], payload[i + 1]
-        i += 2
-        if n:  # encoded run: n pixels of v (RLE4 alternates nibbles)
-            if y >= h:
-                raise ValueError("BMP RLE run outside the bitmap")
-            take = min(n, w - x)
-            if take > 0:
-                if four_bit:
-                    pix = np.empty(take, np.uint8)
-                    pix[0::2] = v >> 4
-                    pix[1::2] = v & 0x0F
-                else:
-                    pix = np.full(take, v, np.uint8)
-                out[y, x : x + take] = pix
-            x += n
-        elif v == 0:  # end of line
-            x, y = 0, y + 1
-        elif v == 1:  # end of bitmap
-            return out
-        elif v == 2:  # delta
-            if i + 1 >= len(payload):
-                raise ValueError("truncated BMP RLE delta")
-            x += payload[i]
-            y += payload[i + 1]
-            i += 2
-        else:  # absolute mode: v literal pixels, padded to a word
-            nbytes = (v + 1) // 2 if four_bit else v
-            chunk = payload[i : i + nbytes]
-            if len(chunk) < nbytes:
-                raise ValueError("truncated BMP RLE absolute run")
-            i += nbytes + (nbytes & 1)
-            if y >= h:
-                raise ValueError("BMP RLE run outside the bitmap")
-            if four_bit:
-                b = np.frombuffer(chunk, np.uint8)
-                pix = np.empty(nbytes * 2, np.uint8)
-                pix[0::2] = b >> 4
-                pix[1::2] = b & 0x0F
-                pix = pix[:v]
-            else:
-                pix = np.frombuffer(chunk, np.uint8)
-            take = min(v, w - x)
-            if take > 0:
-                out[y, x : x + take] = pix[:take]
-            x += v
-    return out
+def _decode_jpeg(data: bytes, w: int, h: int) -> np.ndarray:
+    # from-scratch baseline JFIF decoder (io/jpeg.py) — the lossy leg
+    # of the PSNR>=40dB payload invariant; lazy import keeps the
+    # lossless fast path import-light
+    from geomesa_sql_spark.io.jpeg import decode_jpeg
+
+    return decode_jpeg(data)
 
 
-def decode_bmp(data: bytes) -> np.ndarray:
-    """BMP bytes → (h, w, 3) uint8.
+def _decode_tiff(data: bytes, w: int, h: int) -> np.ndarray:
+    # from-scratch TIFF 6.0 decoder (io/tiff.py): strips AND tiles,
+    # planar 1/2, none/LZW/deflate/PackBits/JPEG-in-TIFF, predictor,
+    # gray/RGB/palette/YCbCr, II/MM (float rasters: decode_tiff_raster)
+    from geomesa_sql_spark.io.tiff import decode_tiff
 
-    Foreign-file surface: uncompressed 1/4/8-bit palette, 16-bit
-    (RGB555 or BI_BITFIELDS masks), 24/32-bit, RLE8/RLE4 runs, bottom-up
-    and top-down rows."""
-    if len(data) < 54 or data[:2] != b"BM":
-        raise ValueError("not a BMP")
-    (offset,) = struct.unpack_from("<I", data, 10)
-    hsize, w, h = struct.unpack_from("<Iii", data, 14)
-    if hsize < 40:
-        raise ValueError("BMP core headers are not supported")
-    planes, bpp, compression = struct.unpack_from("<HHI", data, 26)
-    if compression not in (0, 1, 2, 3) or bpp not in (1, 4, 8, 16, 24, 32):
+    return decode_tiff(data)
+
+
+#: ``fmt`` → decoder(data, w, h) → (h, w, 3) uint8: the one table of
+#: image formats this engine decodes. ``decode_image`` dispatches on it
+#: and the image operators check a row's ``fmt`` against it before
+#: their per-row corrupt-payload guards.
+DECODERS = {
+    "raw": decode_raw,
+    "png": _decode_png,
+    "jpeg": _decode_jpeg,
+    "jpg": _decode_jpeg,
+    "tiff": _decode_tiff,
+    "tif": _decode_tiff,
+}
+
+
+def require_decoder(fmt):
+    """The decoder for ``fmt``; a format outside :data:`DECODERS` (a
+    NULL ``fmt`` included) raises NotImplementedError naming it."""
+    dec = DECODERS.get(fmt)
+    if dec is None:
         raise NotImplementedError(
-            f"BMP bpp={bpp} compression={compression}: PNG/JPEG-embedded "
-            "BMPs (BI_PNG/BI_JPEG) are not implemented"
+            f"image fmt {fmt!r} has no decoder (supported: "
+            f"{', '.join(DECODERS)})"
         )
-    topdown = h < 0
-    h = abs(h)
-    if w * h > _PNG_MAX_PIXELS:  # same task-safety cap as png/gif
-        raise ValueError(f"implausible BMP dimensions {w}x{h}")
-
-    def palette():
-        ncol = struct.unpack_from("<I", data, 46)[0] or (1 << bpp)
-        pal = np.frombuffer(data, np.uint8, 4 * ncol, 14 + hsize).reshape(ncol, 4)
-        return pal, ncol
-
-    if compression in (1, 2):  # RLE8 / RLE4
-        if (compression == 1) != (bpp == 8) or (compression == 2) != (bpp == 4):
-            raise ValueError("BMP RLE compression/bpp mismatch")
-        pal, ncol = palette()
-        idx = _bmp_rle(data[offset:], w, h, four_bit=compression == 2)
-        if not topdown:
-            idx = idx[::-1]
-        if int(idx.max(initial=0)) >= ncol:
-            raise ValueError("BMP palette index out of range")
-        return pal[idx][:, :, 2::-1].copy()
-
-    stride = ((w * bpp + 31) // 32) * 4
-    if offset + stride * h > len(data):
-        raise ValueError("truncated BMP pixel data")
-    rows = np.frombuffer(data, np.uint8, stride * h, offset).reshape(h, stride)
-    if not topdown:
-        rows = rows[::-1]
-    if bpp in (1, 4, 8):
-        pal, ncol = palette()
-        if bpp == 8:
-            idx = rows[:, :w]
-        else:
-            bits = np.unpackbits(rows, axis=1)[:, : w * bpp]
-            vals = bits.reshape(h, w, bpp)
-            weights = (1 << np.arange(bpp - 1, -1, -1)).astype(np.uint8)
-            idx = (vals * weights).sum(axis=2).astype(np.uint8)
-        if int(idx.max(initial=0)) >= ncol:
-            raise ValueError("BMP palette index out of range")
-        return pal[idx][:, :, 2::-1].copy()  # BGRA table → RGB
-    if bpp == 16:
-        v = rows[:, : w * 2].copy().view("<u2").reshape(h, w).astype(np.uint32)
-        if compression == 3:
-            rm, gm, bm = struct.unpack_from("<III", data, 54)
-            if not (rm and gm and bm):
-                raise ValueError("BMP bitfields with a zero channel mask")
-        else:
-            rm, gm, bm = 0x7C00, 0x03E0, 0x001F  # RGB555 default
-        chans = []
-        for m in (rm, gm, bm):
-            shift = (m & -m).bit_length() - 1
-            maxv = m >> shift
-            chans.append(((v & m) >> shift) * 255 // maxv)
-        return np.stack(chans, axis=2).astype(np.uint8)
-    px = rows[:, : w * (bpp // 8)].reshape(h, w, bpp // 8)
-    return px[:, :, 2::-1].copy()  # BGR(A) → RGB
+    return dec
 
 
 def decode_image(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
-    if fmt == "raw":
-        return decode_raw(data, w, h)
-    if fmt == "png":
-        return decode_png(data)
-    if fmt in ("jpeg", "jpg"):
-        # from-scratch baseline JFIF decoder (io/jpeg.py) — the lossy
-        # leg of the PSNR>=40dB payload invariant; lazy import keeps the
-        # lossless fast path import-light
-        from geomesa_sql_spark.io.jpeg import decode_jpeg
-
-        return decode_jpeg(data)
-    if fmt == "webp":
-        # from-scratch VP8L lossless decoder (io/webp.py); lossy VP8
-        # streams raise loudly inside decode_webp
-        from geomesa_sql_spark.io.webp import decode_webp
-
-        return decode_webp(data)
-    if fmt == "gif":
-        # from-scratch LZW decoder (io/gif.py); first frame of
-        # animations, palettes/interlace/transparency handled
-        from geomesa_sql_spark.io.gif import decode_gif
-
-        return decode_gif(data)
-    if fmt == "bmp":
-        return decode_bmp(data)
-    if fmt in ("tiff", "tif"):
-        # from-scratch TIFF 6.0 decoder (io/tiff.py): strips AND tiles,
-        # planar 1/2, none/LZW/deflate/PackBits/JPEG-in-TIFF, predictor,
-        # gray/RGB/palette/YCbCr, II/MM (float rasters: decode_tiff_raster)
-        from geomesa_sql_spark.io.tiff import decode_tiff
-
-        return decode_tiff(data)
-    raise NotImplementedError(
-        f"fmt {fmt!r}: no decoder (PIL/cv2 absent in this container); "
-        "plumbing (schema, partitioning, batch shape) is format-agnostic"
-    )
+    return require_decoder(fmt)(data, w, h)
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

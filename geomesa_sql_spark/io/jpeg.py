@@ -510,12 +510,16 @@ def encode_jpeg(
     ``subsampling``: '444' (full chroma) or '420' (chroma box-averaged
     2×2 — the layout cameras/libjpeg default to, and the path that
     exercises the decoder's generic MCU walker + upsampler).
+
+    A side outside 1..65,535 (SOF's 16-bit fields) raises ValueError.
     """
     if subsampling not in ("444", "420"):
         raise ValueError("subsampling must be '444' or '420'")
     sub = 2 if subsampling == "420" else 1
     pixels = np.ascontiguousarray(pixels, dtype=np.uint8)
     h, w, _ = pixels.shape
+    if not (1 <= w <= 0xFFFF and 1 <= h <= 0xFFFF):
+        raise ValueError(f"JPEG cannot encode a {w}x{h} image (sides 1..65535)")
     ycc = _rgb_to_ycbcr(pixels)
     qt = [_quality_scale(Q_LUM, quality), _quality_scale(Q_CHR, quality)]
 

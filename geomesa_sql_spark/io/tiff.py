@@ -4,7 +4,7 @@ Widens ``decode_image``'s foreign-file surface (no PIL in this
 container) with the last mainstream still-image container: TIFF 6.0
 (public spec), both byte orders. The reference engine
 (bxkftechteam/geomesa-sql) has no media code — this is payload-side
-graft like ``io/jpeg.py`` / ``io/webp.py``; the GeoTIFF tags below are
+graft like ``io/jpeg.py``; the GeoTIFF tags below are
 the raster half of the engine's raster↔vector tiling (north-star
 surface), parsed per the public OGC GeoTIFF 1.1 spec.
 
@@ -52,7 +52,8 @@ import numpy as np
 
 from geomesa_sql_spark.io.errors import clean_decode
 
-# 64 MP task-safety cap, same rationale as io/gif.py / decode_png
+# 64 MP task-safety cap (as decode_png's): 32-bit header dimensions
+# would let a few-byte payload allocate gigabytes inside a Spark task
 _MAX_PIXELS = 1 << 26
 
 # tag ids (TIFF 6.0 §8; GeoTIFF 1.1 §7)

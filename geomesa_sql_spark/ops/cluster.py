@@ -116,6 +116,8 @@ def _connected_components(
         lab = new
         if changed == 0:
             break
+    else:
+        _count_unconverged(max_iter)
     return lab
 
 
@@ -619,6 +621,22 @@ def _count_fallback(reason: str, detail: str) -> None:
     with _FALLBACKS_LOCK:
         incremental_fallbacks[reason] += 1
     _LOG.warning("dbscan_incremental did not apply its delta (%s): %s", reason, detail)
+
+
+#: times the distributed connected-components loop stopped at
+#: ``max_iter`` before its labels stopped changing — its (id, lab)
+#: result is then partial (one component may carry several labels);
+#: every such stop also logs a warning
+cc_unconverged: Counter[str] = Counter()
+
+
+def _count_unconverged(max_iter: int) -> None:
+    with _FALLBACKS_LOCK:
+        cc_unconverged["max_iter"] += 1
+    _LOG.warning(
+        "connected components did not converge in max_iter=%d rounds; "
+        "labels are partial", max_iter,
+    )
 
 
 def _home_cells(pts: DataFrame, s: float) -> DataFrame:

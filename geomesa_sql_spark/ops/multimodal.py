@@ -4,9 +4,12 @@ The graft table carries images as ``bytes`` + typed metadata
 (image_id, w, h, fmt — BASELINE.json input_hint). Operators run as
 ``mapInPandas`` over Arrow batches; decode uses the repo's from-scratch
 codecs — raw + full PNG (``io.images``), baseline+progressive JPEG
-(``io.jpeg``), WebP-lossless (``io.webp``), TIFF (``io.tiff``), GIF
-(``io.gif``) and BMP. A format without a decoder here raises
-NotImplementedError loudly behind the same batch plumbing.
+(``io.jpeg``) and TIFF (``io.tiff``), listed once in
+``io.images.DECODERS``. A row with a non-NULL payload whose ``fmt``
+has no decoder there (a NULL ``fmt`` included) fails the task with
+NotImplementedError naming the format: the check runs before the
+per-row guards that turn a corrupt payload into a NULL row, so a
+format the engine cannot read is never mistaken for a corrupt image.
 
 Payload discipline at scale: each operator projects only the columns
 it needs, so Catalyst prunes ``bytes`` out of any plan that doesn't
@@ -23,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geomesa_sql_spark.io.images import decode_image, encode_raw
+from geomesa_sql_spark.io.images import encode_raw, require_decoder
 
 
 def image_stats(
@@ -75,14 +78,13 @@ def image_stats(
                 idxs = np.nonzero((codes == gi) & valid)[0]
                 if not len(idxs):
                     continue
+                decode = require_decoder(fmt)  # outside the per-row guard
                 w, h = int(w), int(h)
                 stack = np.empty((len(idxs), h * w * 3), dtype=np.uint8)
                 ok = np.ones(len(idxs), dtype=bool)
                 for j, i in enumerate(idxs):
                     try:
-                        stack[j] = decode_image(
-                            bytes(blobs[i]), fmt, w, h
-                        ).reshape(-1)
+                        stack[j] = decode(bytes(blobs[i]), w, h).reshape(-1)
                     except Exception:
                         ok[j] = False  # truncated blob: null stats row
                 if not ok.all():  # fancy-index copies — skip when clean
@@ -371,6 +373,7 @@ def phash_images(df: DataFrame, id_col: str = "image_id") -> DataFrame:
                 idxs = np.nonzero((codes == gi) & valid)[0]
                 if not len(idxs):
                     continue
+                decode = require_decoder(fmt)  # outside the per-row guard
                 w, h = int(w), int(h)
                 if w < 8 or h < 8:
                     continue  # sub-8px: no 8x8 hash — row stays NULL
@@ -379,7 +382,7 @@ def phash_images(df: DataFrame, id_col: str = "image_id") -> DataFrame:
                 ok = np.ones(len(idxs), dtype=bool)
                 for j, i in enumerate(idxs):
                     try:
-                        stack[j] = decode_image(bytes(blobs[i]), fmt, w, h)
+                        stack[j] = decode(bytes(blobs[i]), w, h)
                     except Exception:
                         ok[j] = False  # corrupt blob: row stays NULL
                 if not ok.all():  # fancy-index copies — skip when clean
@@ -455,8 +458,9 @@ def resize_images(df: DataFrame, out_size: int, id_col: str = "image_id") -> Dat
                     outs.append(None)
                     sums.append(None)
                     continue
+                decode = require_decoder(fmt)  # outside the per-row guard
                 try:
-                    px = decode_image(bytes(data), fmt, int(w), int(h))
+                    px = decode(bytes(data), int(w), int(h))
                 except Exception:
                     ids.append(iid)  # truncated blob: null row survives
                     outs.append(None)
@@ -491,7 +495,7 @@ def transcode_images(
     id_col: str = "image_id",
 ) -> DataFrame:
     """Re-encode image payloads: decode whatever ``fmt`` each row
-    carries → encode as ``to`` ('jpeg', 'png', 'raw' or 'webp' — VP8L lossless).
+    carries → encode as ``to`` ('jpeg', 'png', 'raw' or 'tiff').
 
     The storage-compression stage of a training-data pipeline (late
     r4, riding the from-scratch io/jpeg.py codec): a 100 TB raw/png
@@ -506,7 +510,7 @@ def transcode_images(
     resumable job can record fidelity as a per-partition metric next to
     the row counts (ckpt/manifest.py lineage discipline).
     """
-    if to not in ("jpeg", "png", "raw", "webp", "tiff"):
+    if to not in ("jpeg", "png", "raw", "tiff"):
         raise ValueError(f"unsupported target format {to!r}")
     schema = T.StructType(
         [
@@ -522,7 +526,6 @@ def transcode_images(
     def gen(batches):
         from geomesa_sql_spark.io.images import encode_png, psnr
         from geomesa_sql_spark.io.jpeg import decode_jpeg, encode_jpeg
-        from geomesa_sql_spark.io.webp import encode_webp
 
         for pdf in batches:
             ids, outs, ws, hs, qs = [], [], [], [], []
@@ -536,8 +539,9 @@ def transcode_images(
                     hs.append(None)
                     qs.append(None)
                     continue
+                decode = require_decoder(fmt)  # outside the per-row guard
                 try:
-                    px = decode_image(bytes(data), fmt, int(w), int(h))
+                    px = decode(bytes(data), int(w), int(h))
                     if to == "jpeg":
                         blob = encode_jpeg(
                             px, quality=quality, subsampling=subsampling,
@@ -546,9 +550,6 @@ def transcode_images(
                         q = psnr(px, decode_jpeg(blob))
                     elif to == "png":
                         blob = encode_png(px)
-                        q = float("inf")
-                    elif to == "webp":
-                        blob = encode_webp(px)  # VP8L lossless
                         q = float("inf")
                     elif to == "tiff":
                         from geomesa_sql_spark.io.tiff import encode_tiff
@@ -559,8 +560,8 @@ def transcode_images(
                         blob = encode_raw(px)
                         q = float("inf")
                 except Exception:
-                    # corrupt blob OR un-encodable shape (e.g. VP8L's
-                    # 16384 dimension cap): null row survives — a single
+                    # corrupt blob OR un-encodable shape (e.g. JPEG's
+                    # 65,535-pixel side): null row survives — a single
                     # bad image must not kill a 100 TB pass
                     outs.append(None)
                     ws.append(None)

@@ -1,17 +1,16 @@
 """Randomized cross-codec laws.
 
 1. Round-trip law: random content survives encode→decode bit-exact for
-   every lossless codec (png/webp/gif/bmp/tiff), and above the
-   PSNR bar for jpeg.
+   every lossless codec (png/tiff), and above the PSNR bar for jpeg.
 2. Robustness law: MUTATED streams (byte flips, truncations, random
    prefixes) either decode to SOMETHING or raise ValueError /
    NotImplementedError — never IndexError/KeyError/struct.error (which
    would escape the null-row `except Exception` guards as confusing
    task logs, and signal unvalidated offsets), and never hang.
 
-The r4f review found two escapes of exactly this class (GIF GCE
-IndexError, image-descriptor struct.error); this pins the whole
-surface.
+Two escapes of exactly this class were once found in a retired GIF
+decoder (a GCE IndexError and an image-descriptor struct.error); this
+pins the whole surface.
 """
 
 import struct
@@ -20,27 +19,16 @@ import zlib
 import numpy as np
 import pytest
 
-from geomesa_sql_spark.io.gif import decode_gif, encode_gif
-from geomesa_sql_spark.io.images import (
-    decode_bmp,
-    decode_png,
-    encode_bmp,
-    encode_png,
-    psnr,
-)
+from geomesa_sql_spark.io.images import decode_png, encode_png, psnr
 from geomesa_sql_spark.io.jpeg import decode_jpeg, encode_jpeg
 from geomesa_sql_spark.io.tiff import decode_tiff, encode_tiff
-from geomesa_sql_spark.io.webp import decode_webp, encode_webp
 
 OK_ERRORS = (ValueError, NotImplementedError, zlib.error)
 
 
-def _rand_img(rng, max_side=33, colors=None):
+def _rand_img(rng, max_side=33):
     h = int(rng.integers(1, max_side))
     w = int(rng.integers(1, max_side))
-    if colors:
-        pal = rng.integers(0, 256, (colors, 3)).astype(np.uint8)
-        return pal[rng.integers(0, colors, (h, w))]
     return rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
 
 
@@ -49,13 +37,9 @@ def test_lossless_image_roundtrip_law():
     for trial in range(12):
         img = _rand_img(rng)
         assert (decode_png(encode_png(img)) == img).all()
-        assert (decode_webp(encode_webp(img)) == img).all()
-        assert (decode_bmp(encode_bmp(img)) == img).all()
         comp = ("none", "packbits", "lzw", "deflate")[trial % 4]
         assert (decode_tiff(encode_tiff(img, comp, predictor=trial % 2 == 0))
                 == img).all()
-        gimg = _rand_img(rng, colors=int(rng.integers(2, 257)))
-        assert (decode_gif(encode_gif(gimg)) == gimg).all()
 
 
 def test_jpeg_psnr_law():
@@ -92,9 +76,6 @@ def _mutations(rng, blob, rounds):
     "name,decode,build",
     [
         ("png", decode_png, lambda rng: encode_png(_rand_img(rng))),
-        ("webp", decode_webp, lambda rng: encode_webp(_rand_img(rng))),
-        ("bmp", decode_bmp, lambda rng: encode_bmp(_rand_img(rng))),
-        ("gif", decode_gif, lambda rng: encode_gif(_rand_img(rng, colors=20))),
         (
             "jpeg",
             decode_jpeg,

@@ -588,6 +588,29 @@ def test_sql_literal_predicates_match_bare_udfs(spark, tmp_path):
         assert got == want, f"answers changed; first differing rows: {diff}"
 
 
+def test_sql_predicate_inside_string_literal_unchanged(spark):
+    """A spatial call spelled inside a quoted string literal is data:
+    the literal-geometry rewrite leaves it as spark.sql reads it, in
+    either argument order, while a real call outside the literal in the
+    same statement is still rewritten."""
+    from geomesa_sql_spark.engine import _rewrite_spatial_predicates
+
+    eng = Engine(spark)
+    within = "ST_Within(ST_MakePoint(x, y), ST_GeomFromText('POINT (1 1)'))"
+    contains = "ST_Contains(ST_GeomFromText('POINT (1 1)'), ST_MakePoint(x, y))"
+    for call in (within, contains):
+        q = f'SELECT "{call}" AS s'
+        assert eng.sql(q).first()["s"] == call == spark.sql(q).first()["s"]
+        q = (f'SELECT "{call}" AS s, {call} AS hit '
+             "FROM VALUES (1.0D, 1.0D), (2.0D, 2.0D) AS t(x, y)")
+        rewritten = _rewrite_spatial_predicates(q)
+        assert rewritten.startswith(f'SELECT "{call}" AS s, (x IS NOT NULL')
+        assert rewritten.count("ST_MakePoint") == 1, rewritten
+        got = sorted(map(tuple, eng.sql(q).collect()))
+        assert got == sorted(map(tuple, spark.sql(q).collect()))
+        assert got == [(call, False), (call, True)]
+
+
 def test_sql_dml_where_gets_spatial_rewrite(spark, sf_dir, tmp_path):
     """DELETE ... WHERE ST_Contains(<literal>, ST_MakePoint(lon, lat))
     runs through the same rewrite as a SELECT: the affected count and

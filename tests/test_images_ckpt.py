@@ -72,19 +72,50 @@ def test_phash_and_resize(spark):
 
 
 def test_unsupported_format_raises():
-    # every fixture fmt now decodes for real (raw/png/jpeg/webp/tiff);
-    # genuinely unknown formats stay a loud NotImplementedError
-    with pytest.raises(NotImplementedError):
-        decode_image(b"v2.0", "exr", 4, 4)
+    # raw/png/jpeg/tiff decode for real; any other fmt is a loud
+    # NotImplementedError naming it
+    for fmt in ("exr", "webp", None):
+        with pytest.raises(NotImplementedError, match=repr(fmt)):
+            decode_image(b"v2.0", fmt, 4, 4)
     # truncated tiff: clean ValueError from the from-scratch decoder
     with pytest.raises(ValueError):
         decode_image(b"II*\x00", "tiff", 4, 4)
-    # malformed webp: clean ValueError from the from-scratch decoder
-    with pytest.raises(ValueError):
-        decode_image(b"RIFF....WEBP", "webp", 4, 4)
     # truncated jpeg: clean ValueError from the from-scratch decoder
     with pytest.raises(ValueError):
         decode_image(b"\xff\xd8\xff", "jpeg", 4, 4)
+
+
+def test_format_without_decoder_raises_from_every_operator(spark):
+    """A row with a payload whose fmt has no decoder (a NULL fmt
+    included) fails each image operator, naming the format: it is not a
+    corrupt payload, so it never becomes a NULL row. A corrupt png row
+    of the same frame, run without that row, still gives NULL."""
+    from geomesa_sql_spark.ops import transcode_images
+
+    px = image_pixels(1, 16)
+    df = spark.createDataFrame(
+        [
+            ("ok", encode_png(px), "png", 16, 16),
+            ("corrupt", encode_png(px)[:20], "png", 16, 16),
+            ("webp", b"RIFF\x00\x00\x00\x00WEBPVP8L", "webp", 16, 16),
+            ("nofmt", encode_png(px), None, 16, 16),
+        ],
+        "image_id string, bytes binary, fmt string, w int, h int",
+    )
+    ops = {
+        "image_stats": image_stats,
+        "phash_images": phash_images,
+        "resize_images": lambda d: resize_images(d, 8),
+        "transcode_images": lambda d: transcode_images(d, to="png"),
+    }
+    for name, op in ops.items():
+        for bad, shown in (("webp", "'webp'"), ("nofmt", "None")):
+            frame = df.filter(f"image_id IN ('ok', '{bad}')")
+            with pytest.raises(Exception, match=f"NotImplementedError: image fmt {shown}"):
+                op(frame).collect()
+        # column 1 is each operator's first decoded output
+        got = {r[0]: r[1] for r in op(df.filter("fmt = 'png'")).collect()}
+        assert got["ok"] is not None and got["corrupt"] is None, name
 
 
 def test_checkpoint_resume(spark, tmp_path):

@@ -330,6 +330,36 @@ def test_transcode_images_op(spark):
     assert decode_png(bytes(back["a"].bytes)).shape == (32, 48, 3)
 
 
+def test_encode_rejects_sides_outside_sof_range():
+    """SOF stores each side in 16 bits: a side over 65,535 (or an empty
+    image) is a ValueError, not a struct.error from the header pack."""
+    for shape in ((2, 70_000, 3), (70_000, 2, 3), (0, 4, 3)):
+        with pytest.raises(ValueError, match="sides 1..65535"):
+            encode_jpeg(np.zeros(shape, dtype=np.uint8))
+    assert decode_jpeg(encode_jpeg(np.zeros((1, 1, 3), np.uint8))).shape == (1, 1, 3)
+
+
+def test_transcode_survives_unencodable_dimensions(spark):
+    """A 70,000-px-wide image decodes fine but exceeds JPEG's 65,535
+    side — it must become a NULL row while the other rows still
+    encode, not kill the task."""
+    from geomesa_sql_spark.io.images import encode_raw
+    from geomesa_sql_spark.ops.multimodal import transcode_images
+
+    wide = np.zeros((2, 70_000, 3), dtype=np.uint8)
+    ok = np.full((4, 4, 3), 7, dtype=np.uint8)
+    df = spark.createDataFrame(
+        [
+            ("wide", encode_raw(wide), 70_000, 2, "raw"),
+            ("ok", encode_raw(ok), 4, 4, "raw"),
+        ],
+        "image_id string, bytes binary, w int, h int, fmt string",
+    )
+    out = transcode_images(df, to="jpeg").toPandas().set_index("image_id")
+    assert out.loc["wide", "bytes"] is None
+    assert psnr(ok, decode_jpeg(bytes(out.loc["ok", "bytes"]))) >= 40.0
+
+
 def _cmyk_stream(planes4, q, transform):
     """4-component file (Adobe APP14 transform flag), one scan per
     component — the print/scan shape the public encoder never emits."""

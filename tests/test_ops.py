@@ -1263,6 +1263,34 @@ def test_min_label_components_cap_switch(spark, monkeypatch):
     assert 0 < jobs <= CC_DISTRIBUTED_JOBS, jobs
 
 
+def test_connected_components_unconverged_warns_and_counts(
+        spark, monkeypatch, caplog):
+    """A distributed components loop stopped by ``max_iter`` before its
+    labels settle returns partial labels: it logs a warning and counts
+    the stop. A converged run does neither."""
+    import logging
+
+    from geomesa_sql_spark.ops import cluster as C
+
+    edges_py = [(i, i + 1) for i in range(1, 20)]
+    seeds = spark.createDataFrame([(n,) for n in range(1, 21)], "id long")
+    edges = spark.createDataFrame(edges_py, "i long, j long")
+    monkeypatch.setattr(C, "_DRIVER_MERGE_MAX", 3)  # force the loop
+    C.cc_unconverged.clear()
+    with caplog.at_level(logging.WARNING, logger=C.__name__):
+        partial = C.min_label_components(seeds, edges, max_iter=1).collect()
+    assert len({r.lab for r in partial}) > 1  # one component, many labels
+    assert dict(C.cc_unconverged) == {"max_iter": 1}
+    assert any("did not converge in max_iter=1" in r.getMessage()
+               for r in caplog.records)
+    C.cc_unconverged.clear()
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=C.__name__):
+        full = C.min_label_components(seeds, edges).collect()
+    assert {r.lab for r in full} == {1}
+    assert not C.cc_unconverged and not caplog.records
+
+
 def test_dbscan_incremental_chained_batches(spark):
     """r3: state dict flows through SEVERAL incremental steps; the
     delta-proportional assembly (edge swap + resolution-map diff +
