@@ -7,7 +7,7 @@ not the one that looks expensive. Prints one JSON line.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
      SPARK_GRAFT_CPUS   (default 32)
      SPARK_GRAFT_PROFILE (comma list: dbscan,minhash,mvtwkb,knn,sjoin,
-                          exif — default all)
+                          exif,pyudf — default all)
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     which = set(
         os.environ.get(
-            "SPARK_GRAFT_PROFILE", "dbscan,minhash,mvtwkb,knn,sjoin,exif"
+            "SPARK_GRAFT_PROFILE", "dbscan,minhash,mvtwkb,knn,sjoin,exif,pyudf"
         ).split(",")
     )
     spark = get_spark("bench_extra", master=f"local[{cpus}]")
@@ -213,6 +213,22 @@ def main() -> None:
             timed("exif_geotag_only", lambda: noop(geotag_images(imgs)))
             timed("exif_roundtrip", lambda: image_exif(
                 geotag_images(imgs)).agg(F.sum("exif_lon")).collect())
+
+    if "pyudf" in which:
+        # the fixed cost of one Python task: a 4-partition pandas-UDF
+        # stage whose UDF imports the engine package, as every engine
+        # UDF does, against the same query with the UDF left out
+        @F.pandas_udf("long")
+        def _plus1(v: _pd.Series) -> _pd.Series:
+            import geomesa_sql_spark  # noqa: F401
+
+            return v + 1
+
+        ids = spark.range(0, 40_000, 1, 4)
+        timed("python_stage_s", lambda: ids.select(F.sum(_plus1("id"))).collect(),
+              repeats=7, warm=2)
+        timed("jvm_stage_s", lambda: ids.select(F.sum(F.col("id") + 1)).collect(),
+              repeats=7, warm=2)
 
     print(json.dumps({"profile": out, "sf": sf_dir, "cpus": cpus}))
 

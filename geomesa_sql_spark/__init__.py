@@ -23,6 +23,7 @@ Nothing here links against the reference; geometry, cells and codecs are
 pure numpy/stdlib (no shapely/h3/sedona in the environment).
 """
 
+from geomesa_sql_spark import _zipcache  # noqa: F401  (per-task zip re-read, see module)
 from geomesa_sql_spark.session import get_spark  # noqa: F401
 
 

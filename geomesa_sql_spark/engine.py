@@ -457,7 +457,10 @@ class Engine:
         if run is None:
             return self.spark.sql(query)
         n = run(_Statement(query), root)
-        return self.spark.createDataFrame([(n,)], "affected bigint")
+        # a VALUES row is a LocalRelation: collecting it runs no Spark
+        # job and no Python worker (createDataFrame over a Python list
+        # is an RDD scan, and its collect ran a Python task per statement)
+        return self.spark.sql(f"VALUES (CAST({int(n)} AS BIGINT)) AS t(affected)")
 
     def _target(self, rel) -> str:
         """The registered table a DML statement writes."""

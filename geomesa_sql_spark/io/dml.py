@@ -36,7 +36,7 @@ from __future__ import annotations
 import os
 import re as _re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from geomesa_sql_spark.io import iceberg_meta as im
@@ -146,11 +146,13 @@ class IcebergDmlTable:
         (subquery predicates — see :meth:`_hit_frame`), applied as a
         left-join marker so the rewrite stays one distributed pass.
 
-        The affected count evaluates ``where`` separately from the
-        rewrite, so a NON-DETERMINISTIC predicate (rand() etc.) can
-        report a count that differs from the rows actually rewritten —
-        use a deterministic predicate (ANSI UPDATE makes the same
-        assumption)."""
+        The predicate is evaluated once per row into a hit column that
+        both the rewrite and the affected count read; the count is an
+        ``Observation`` over the rewrite's own input, so no separate
+        count job runs. The observed node sits right under the rewrite's
+        projection and never below a filter: an observation the
+        optimizer prunes never reports, and ``Observation.get`` would
+        wait forever."""
         if self.fid_col in set_exprs:
             raise FidUpdateError(
                 f"cannot update row-identity column {self.fid_col!r}"
@@ -160,11 +162,11 @@ class IcebergDmlTable:
         if unknown:
             raise ValueError(f"unknown columns in UPDATE: {sorted(unknown)}")
         current = self.read()
+        hit = "__dml_hit__"
         if isinstance(where, DataFrame):
-            marker = "__dml_hit__"
-            hits = self._hit_frame(where).withColumn(marker, F.lit(True))
+            hits = self._hit_frame(where).withColumn(hit, F.lit(True))
             current = current.join(hits, self.fid_col, "left")
-            cond = F.col(marker).isNotNull()
+            cond = F.col(hit).isNotNull()
         else:
             cond = F.lit(True) if where is None else where
         exprs: dict[str, Column] = {}
@@ -206,10 +208,14 @@ class IcebergDmlTable:
                 exprs[k] = F.expr(v)
             else:
                 exprs[k] = v
+        obs = Observation()
+        current = current.withColumn(hit, cond).observe(
+            obs, F.count_if(F.col(hit)).alias("n")
+        )
         updated = current.select(
             *[
                 (
-                    F.when(cond, exprs[c].cast(current.schema[c].dataType))
+                    F.when(F.col(hit), exprs[c].cast(current.schema[c].dataType))
                     .otherwise(F.col(c))
                     .alias(c)
                     if c in exprs
@@ -218,9 +224,8 @@ class IcebergDmlTable:
                 for c in cols
             ]
         )
-        n = int(current.filter(cond).count())
         im.overwrite(self.spark, self.path, updated)
-        return n
+        return int(obs.get["n"])
 
     def merge(
         self,
@@ -415,21 +420,24 @@ class IcebergDmlTable:
         touches a handful of files, not the table); a DataFrame
         ``where`` is a frame of affected fids (subquery predicates —
         see :meth:`_hit_frame`), applied as a left-anti join in a full
-        rewrite, as is delete-all. The count derives from before/after
-        row totals, so the (possibly non-deterministic) predicate is
-        only ever evaluated in the commit itself (review r3)."""
-        t = self._table()
-        current = t.read(self.spark)
-        before = int(current.count())
+        rewrite, as is delete-all. The count comes from manifest stats
+        (rows of the files dropped minus rows written back), so the
+        (possibly non-deterministic) predicate is only ever evaluated
+        in the commit itself (review r3) and no recount job runs; only
+        a table carrying merge-on-read delete files counts its rows
+        with a job, as its files' record counts include deleted rows."""
         if isinstance(where, Column):
             try:
-                t1 = im.delete_where(self.spark, self.path, where)
+                return im.removed_rows(im.delete_where(self.spark, self.path, where))
             except ValueError:
                 # merge-on-read delete files present: CoW file targeting
                 # is unsound there — fall back to the full rewrite
                 pass
-            else:
-                return before - int(t1.read(self.spark).count())
+        t = self._table()
+        current = t.read(self.spark)
+        data, deletes, _ = t.plan_files(spark=self.spark)
+        before = (int(current.count()) if deletes
+                  else sum(f["record_count"] for f in data))
         if isinstance(where, DataFrame):
             remaining = current.join(
                 self._hit_frame(where), self.fid_col, "left_anti"

@@ -1111,6 +1111,21 @@ def added_rows(t: IcebergTable) -> int:
     )
 
 
+def removed_rows(t: IcebergTable) -> int:
+    """Rows the current snapshot's copy-on-write commit removed: the
+    record counts of the data files it dropped minus the rows it wrote
+    back in their place, from the manifest-list stats (no data read).
+    Exact when the dropped files carry no merge-on-read deletes, which
+    ``delete_where`` requires."""
+    snap = t.snapshot()
+    _, manifests, _ = read_avro(_read(snap["manifest-list"]))
+    return sum(
+        m["deleted_rows_count"] - m["added_rows_count"]
+        for m in manifests
+        if m["added_snapshot_id"] == snap["snapshot-id"]
+    )
+
+
 def _metadata_only_commit(t: IcebergTable, meta: dict) -> IcebergTable:
     """Write the next metadata.json version with no new snapshot.
     Readers pinned to the previous version file are unaffected."""

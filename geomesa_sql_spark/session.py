@@ -14,6 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """The ``spark.driver.memory`` default: half the host's physical
+    memory (``phys_bytes``, read from ``sysconf`` when None), between 1g
+    and 24g. A heap near the host's memory lets G1 keep garbage until
+    the kernel's OOM killer ends the driver; a fixed 24g did that on a
+    16 GB host."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):  # no sysconf names here
+            return "24g"
+    return f"{min(max(phys_bytes // 2 >> 20, 1 << 10), 24 << 10)}m"
+
+
 def get_spark(
     app_name: str = "geomesa_sql_spark",
     master: str | None = None,
@@ -61,7 +75,10 @@ def get_spark(
         # batches, overlapping JVM scan/serialize with Python compute —
         # measured 1.8× on the image-decode stage vs 64k-row batches
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

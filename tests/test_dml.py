@@ -525,3 +525,92 @@ def test_dml_differential_fuzz(spark, sf_dir, tmp_path):
         eng.sql(stmt)
         con.execute(stmt)
     assert state_eng() == state_duck(), "diverged after the commented statements"
+
+
+def _bounded(fn, timeout: float = 180.0):
+    """``fn()`` on a daemon thread, failing instead of hanging: an UPDATE
+    count is an ``Observation``, and one the optimizer pruned never
+    reports, so its ``get`` would wait forever."""
+    import threading
+
+    out: dict = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except BaseException as ex:  # re-raised on the test thread
+            out["error"] = ex
+
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(timeout)
+    assert not th.is_alive(), f"no result within {timeout} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+def test_dml_counts_without_recount(spark, sf_dir, tmp_path):
+    """UPDATE counts come from an Observation on the rewrite's input and
+    DELETE counts from manifest stats; each shape below must report the
+    rows it changed, and return at all, against a plain count taken
+    before the statement: a constant-false WHERE, rows whose predicate
+    is NULL, a subquery WHERE, no WHERE, an emptied table, and a table
+    carrying merge-on-read position deletes (whose DELETE keeps its
+    count job)."""
+    from geomesa_sql_spark.engine import Engine
+    from geomesa_sql_spark.io import iceberg_meta as im
+
+    eng = Engine(spark, fid_col="n_nationkey")
+    path = str(tmp_path / "natc")
+    eng.create_table("natc", path, spark.read.parquet(f"{sf_dir}/nation.parquet"))
+    eng.sql("INSERT INTO natc (n_nationkey) VALUES (900), (901)")  # NULL region
+
+    def count(where: str) -> int:
+        return eng.df("natc").filter(where).count()
+
+    def sql(stmt: str) -> int:
+        return _bounded(lambda: eng.sql(stmt).first().affected)
+
+    assert sql("UPDATE natc SET n_name = 'Z' WHERE 1 = 0") == 0
+    assert sql("DELETE FROM natc WHERE 1 = 0") == 0
+    n1 = count("n_regionkey = 1")
+    assert sql("UPDATE natc SET n_name = 'R1' WHERE n_regionkey = 1") == n1
+    assert count("n_name = 'R1'") == n1
+    n2 = count("n_regionkey = 2")
+    assert sql("DELETE FROM natc WHERE n_regionkey = 2") == n2
+    assert count("n_regionkey IS NULL") == 2  # NULL predicate rows survive
+    sub = "n_nationkey IN (SELECT n_nationkey FROM natc WHERE n_regionkey = 3)"
+    n3 = count("n_regionkey = 3")
+    assert sql(f"UPDATE natc SET n_name = 'R3' WHERE {sub}") == n3
+    assert sql(f"DELETE FROM natc WHERE {sub}") == n3
+    assert count("n_regionkey = 3") == 0
+
+    def position_delete(where: str) -> None:
+        data, _, _ = im.IcebergTable.load(path).plan_files()
+        im.add_position_deletes(spark, path, (
+            spark.read.parquet(*[f["path"] for f in data])
+            .filter(where)
+            .select(
+                F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/").alias("file_path"),
+                F.col("_metadata.row_index").alias("pos"),
+            )
+        ))
+        eng.register_table("natc", path)
+        assert count(where) == 0
+
+    # a DELETE over position deletes takes the full rewrite with a count
+    # job; an UPDATE reads through them
+    position_delete("n_regionkey = 4")
+    n0 = count("n_regionkey = 0")
+    assert sql("DELETE FROM natc WHERE n_regionkey = 0") == n0
+    position_delete("n_regionkey = 1 AND n_nationkey % 2 = 0")
+    nn = count("n_regionkey IS NOT NULL")
+    assert nn > 0
+    assert sql("UPDATE natc SET n_name = 'NN' WHERE n_regionkey IS NOT NULL") == nn
+
+    total = eng.df("natc").count()
+    assert sql("UPDATE natc SET n_name = 'ALL'") == total
+    assert sql("DELETE FROM natc") == total
+    assert sql("UPDATE natc SET n_name = 'NONE'") == 0
+    assert sql("DELETE FROM natc WHERE n_regionkey IS NULL") == 0

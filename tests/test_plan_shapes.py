@@ -504,3 +504,43 @@ def test_dbscan_incremental_job_budget(spark):
     jobs = len(sc.statusTracker().getJobIdsForGroup("dbscan_incremental_budget"))
     assert got == sorted(map(tuple, dbscan(full, **kw).collect()))
     assert 0 < jobs <= DBSCAN_INCREMENTAL_JOBS, jobs
+
+
+# Spark jobs of one Engine.sql DELETE / UPDATE, the result collect
+# included: DELETE is the hit-file collect (a distinct: two jobs under
+# AQE) plus the rewrite, with its count from manifest stats; UPDATE is
+# the rewrite alone, counted by an Observation on it. The result frame
+# is a VALUES row, which collects with no job.
+DML_DELETE_JOBS = 4
+DML_UPDATE_JOBS = 2
+
+
+def test_dml_statement_job_budget(spark, tmp_path):
+    from geomesa_sql_spark.engine import Engine
+
+    eng = Engine(spark, fid_col="pid")
+    eng.create_table("dmlj", str(tmp_path / "dmlj"), spark.range(0, 2000, 1, 4).select(
+        F.col("id").alias("pid"), (F.col("id") % 360 - 180.0).alias("lon")))
+    sc = spark.sparkContext
+    for group, stmt, budget, want in (
+        ("dml_delete", "DELETE FROM dmlj WHERE pid % 89 = 3", DML_DELETE_JOBS, 23),
+        ("dml_update", "UPDATE dmlj SET lon = lon + 0.5 WHERE pid % 97 = 5", DML_UPDATE_JOBS, 21),
+    ):
+        sc.setJobGroup(group, "probe")
+        try:
+            got = eng.sql(stmt).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert got[0].affected == want
+        assert 0 < jobs <= budget, (stmt, jobs)
+
+    out = eng.sql("DELETE FROM dmlj WHERE pid = 7")
+    assert out.schema.simpleString() == "struct<affected:bigint>"
+    assert "ExistingRDD" not in _plan(out)
+    sc.setJobGroup("dml_result", "probe")
+    try:
+        assert out.collect()[0].affected == 1
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("dml_result")) == []

@@ -31,6 +31,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from geomesa_sql_spark.session import default_driver_memory  # noqa: E402
+
 
 def build_pyfiles_zip() -> str:
     zpath = "/tmp/spark_graft_bench/geomesa_sql_spark.zip"
@@ -55,7 +57,8 @@ def spark_submit(script: str, cpus: int, zpath: str, env_extra: dict,
     cmd = [
         shutil.which("spark-submit") or "spark-submit",
         "--master", master,
-        "--driver-memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "--driver-memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         "--py-files", zpath,
         script,
     ]
