@@ -7,7 +7,7 @@ not the one that looks expensive. Prints one JSON line.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
      SPARK_GRAFT_CPUS   (default 32)
      SPARK_GRAFT_PROFILE (comma list: dbscan,minhash,mvtwkb,knn,sjoin,
-                          exif,pyudf — default all)
+                          exif,pyudf,icebergprune — default all)
 """
 
 from __future__ import annotations
@@ -44,7 +44,8 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     which = set(
         os.environ.get(
-            "SPARK_GRAFT_PROFILE", "dbscan,minhash,mvtwkb,knn,sjoin,exif,pyudf"
+            "SPARK_GRAFT_PROFILE",
+            "dbscan,minhash,mvtwkb,knn,sjoin,exif,pyudf,icebergprune",
         ).split(",")
     )
     spark = get_spark("bench_extra", master=f"local[{cpus}]")
@@ -229,6 +230,39 @@ def main() -> None:
               repeats=7, warm=2)
         timed("jvm_stage_s", lambda: ids.select(F.sum(F.col("id") + 1)).collect(),
               repeats=7, warm=2)
+
+    if "icebergprune" in which:
+        # Iceberg data files one GeoTable bbox read plans, against the
+        # table's total, on three layouts of the same points: z- and
+        # s2-clustered (write_geo_iceberg) and key order as
+        # Engine.create_table writes it; 16 files each
+        import tempfile
+
+        from geomesa_sql_spark.engine import Engine
+        from geomesa_sql_spark.io.fixtures import orders_points
+        from geomesa_sql_spark.io.iceberg import write_geo_iceberg
+        from geomesa_sql_spark.io.iceberg_meta import IcebergTable
+        from geomesa_sql_spark.plan.scan import GeoTable
+
+        pts = orders_points(spark, sf_dir).select(
+            F.col("o_orderkey").alias("image_id"), "lon", "lat")
+        n = 16
+        box = "POLYGON ((10 10, 40 10, 40 30, 10 30, 10 10))"
+        with tempfile.TemporaryDirectory() as tmp:
+            write_geo_iceberg(pts, f"{tmp}/z", partitions=n)
+            write_geo_iceberg(pts, f"{tmp}/s2", res=10, partitions=n,
+                              cell_system="s2")
+            Engine(spark).create_table(
+                "pts", f"{tmp}/input", pts.repartitionByRange(n, "image_id"))
+            for tag in ("z", "s2", "input"):
+                path = f"{tmp}/{tag}"
+                data = {f["path"] for f in IcebergTable.load(path).plan_files()[0]}
+                read = GeoTable(spark, path).where_spatial(
+                    "intersects", box, x="lon", y="lat").df()
+                kept = {"/" + p.split(":", 1)[-1].lstrip("/")
+                        for p in read.inputFiles()}
+                out[f"iceberg_bbox_{tag}_files_kept"] = len(kept & data)
+                out[f"iceberg_bbox_{tag}_files_total"] = len(data)
 
     print(json.dumps({"profile": out, "sf": sf_dir, "cpus": cpus}))
 

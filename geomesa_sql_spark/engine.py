@@ -221,6 +221,24 @@ class _NotRouted(Exception):
     """(why, [detail]): a spatial shape the router cannot plan faithfully."""
 
 
+def _check_plannable(df: DataFrame, bails: list[str]) -> None:
+    """Optimize a statement the router left (partly) to plain Spark SQL.
+    Spark rejects a Python UDF in the ON clause of an outer, semi or anti
+    join only when it optimizes the plan, so without this check such a
+    statement came back as a frame that failed at its first action.
+    That failure becomes a ValueError naming the bail reasons."""
+    try:
+        df._jdf.queryExecution().optimizedPlan()
+    except Exception as exc:
+        if "PYTHON_UDF_IN_ON_CLAUSE" not in str(exc):
+            raise
+        raise ValueError(
+            f"spatial join not routed ({'; '.join(dict.fromkeys(bails))}), and "
+            "Spark cannot plan a Python UDF in the ON clause of an outer, semi "
+            "or anti join"
+        ) from None
+
+
 def _st_call(e) -> bool:
     return (e is not None and e.cls == "UnresolvedFunction"
             and e.name()[-1].upper().startswith("ST_"))
@@ -283,10 +301,11 @@ class _Side:
 
 class _Statement:
     """A statement being routed: its text, its splices keyed by source span
-    (a later one of a span wins, one nested in another is dropped), views."""
+    (a later one of a span wins, one nested in another is dropped), views,
+    and the reasons of the shapes left to plain Spark SQL."""
 
     def __init__(self, text: str):
-        self.text, self.edits, self.views = text, {}, []
+        self.text, self.edits, self.views, self.bails = text, {}, [], []
 
     def render(self, lo: int, hi: int, extra: dict | None = None) -> str:
         out, pos = [], lo
@@ -444,10 +463,13 @@ class Engine:
         row like ANSI UPDATE, against the pre-update snapshot)."""
         verb = query.split(None, 1)[0].upper() if query.strip() else ""
         if verb not in _DML_VERBS:
-            routed = self._route(query)
-            if routed is not None:
-                return routed
-            return self.spark.sql(_rewrite_spatial_predicates(query))
+            st = _Statement(query)
+            out = self._route_statement(st)
+            if out is None:
+                out = self.spark.sql(_rewrite_spatial_predicates(query))
+            if st.bails:
+                _check_plannable(out, st.bails)
+            return out
         if verb == "MERGE":
             query = _complete_merge(query)
         root = sqltree.parse(self.spark, query)
@@ -603,6 +625,11 @@ class Engine:
         the rest of the statement runs as plain Spark SQL over it.
         Outer/semi/anti joins need ``fid_col`` on the preserved side.
         None when nothing routed; fallbacks are counted and logged."""
+        return self._route_statement(_Statement(query))
+
+    def _route_statement(self, st: _Statement) -> DataFrame | None:
+        """``_route`` over ``st``, whose ``bails`` collect the fallbacks."""
+        query = st.text
         up = query.upper()
         if "ST_" not in up or ("JOIN" not in up and "EXISTS" not in up):
             return None
@@ -610,7 +637,6 @@ class Engine:
             root = sqltree.parse(self.spark, query)
         except ParseException:
             return None  # spark.sql reports the syntax error itself
-        st = _Statement(query)
         try:
             self._walk(st, root, [], [])
             if not st.views:
@@ -619,8 +645,8 @@ class Engine:
                 return self.spark.sql(
                     _rewrite_spatial_predicates(st.render(0, len(query))))
             except Exception as exc:
-                self._bail("statement failed to resolve over the routed views",
-                           query, f": {exc}")
+                self._bail(st, "statement failed to resolve over the routed views",
+                           f": {exc}")
                 return None
         finally:  # the returned frame captured its analyzed plan above
             for view in st.views:
@@ -643,7 +669,7 @@ class Engine:
             elif node.cls == "Filter":
                 self._route_exists(st, node, scope, chain)
         except _NotRouted as nr:
-            self._bail(nr.args[0], st.text, *nr.args[1:])
+            self._bail(st, *nr.args)
 
     def _route_join(self, st: _Statement, node, scope: list, chain: list) -> None:
         jt = node.d["joinType"].get("object", "").rsplit(".", 1)[-1].rstrip("$")
@@ -802,14 +828,16 @@ class Engine:
             raise _NotRouted("operand frame has duplicate column names")
         return df
 
-    def _bail(self, why: str, query: str, detail: str = "") -> None:
-        """Count one router fallback under ``why`` and log it."""
+    def _bail(self, st: _Statement, why: str, detail: str = "") -> None:
+        """Count one router fallback under ``why``, note it on ``st`` and
+        log it."""
+        st.bails.append(why)
         with self._fallbacks_lock:
             self.route_fallbacks[why] += 1
         _LOG.warning("SQL-text spatial join NOT routed (%s%s) — plain spark.sql "
                      "plans a Python-UDF ON clause as a cartesian "
                      "BroadcastNestedLoopJoin, or rejects it: %.200s",
-                     why, detail, query)
+                     why, detail, st.text)
 
     def table(self, name: str) -> GeoTable:
         """Pushdown-accumulating scan handle (§2.1 S1/S2); an Iceberg

@@ -1,11 +1,14 @@
 """Iceberg seam — same DataFrame code over an Iceberg catalog.
 
 The graft input is specified as Iceberg tables (BASELINE.json
-input_hint); this container has no Iceberg runtime jar, so the engine
-runs on parquet paths locally and switches to catalog identifiers when
-the jar is present — the ``TableIO`` seam of SURVEY.md §1/§7. Nothing
-else in the engine changes: `GeoTable`, DML, layout and the joins all
-operate on DataFrames.
+input_hint). Without the Iceberg runtime jar, an on-disk Iceberg table
+directory is read by the engine's own format reader,
+``io/iceberg_meta.IcebergTable.read`` (snapshots, manifest-bounds file
+pruning, merge-on-read deletes); with the jar, a catalog identifier
+reads through Spark's catalog — the ``TableIO`` seam of SURVEY.md
+§1/§7. Nothing else in the engine changes: `GeoTable`, DML, layout and
+the joins all operate on DataFrames. A bbox read with file pruning is
+``plan/scan.GeoTable(...).where_spatial(...)``.
 
 Production configuration (documented, import-try gated here):
 
@@ -95,9 +98,9 @@ def write_geo_iceberg(
 
     The cell column is added, files are range-partitioned + sorted by
     it, so every data file gets a TIGHT cell range in its manifest
-    entry — a bbox query then prunes at the MANIFEST level
-    (``read_geo_iceberg``), before any file footer (or even file
-    listing) is touched. At 100 TB that means a spatial query's
+    entry — a bbox query (``GeoTable(spark, path).where_spatial(...)``)
+    then prunes at the MANIFEST level, before any file footer (or even
+    file listing) is touched. At 100 TB that means a spatial query's
     planning cost scales with files *matched*, not files *stored*;
     row-group pruning inside the surviving files still applies via the
     same sorted cell parquet stats. Layout metadata rides in table
@@ -143,55 +146,3 @@ def write_geo_iceberg(
             "geo.cell.system": cell_system,
         },
     )
-
-
-def read_geo_iceberg(
-    spark: SparkSession,
-    path: str,
-    bbox: tuple | None = None,
-    exact: bool = True,
-    **kwargs,
-) -> DataFrame:
-    """Bbox read over a ``write_geo_iceberg`` table with three pruning
-    tiers: manifest-level file pruning (Z-order cell ranges vs per-file
-    cell bounds), row-group pruning (the same cell-range predicate
-    against sorted parquet stats), then the exact x/y box filter
-    (``exact=False`` returns the cell-cover superset for callers doing
-    their own refinement). Time travel kwargs pass through."""
-    from geomesa_sql_spark.io.iceberg_meta import IcebergTable
-    from geomesa_sql_spark.plan.filter import (
-        _ranges_predicate,
-        cell_prune_ranges,
-    )
-    from pyspark.sql import functions as F
-
-    t = IcebergTable.load(path)
-    props = t.metadata.get("properties", {})
-    if bbox is None:
-        return t.read(spark, **kwargs)
-    if "geo.cell.res" not in props:
-        raise ValueError(f"{path!r} was not written by write_geo_iceberg")
-    res = int(props["geo.cell.res"])
-    x, y = props.get("geo.x", "lon"), props.get("geo.y", "lat")
-    minx, miny, maxx, maxy = bbox
-    if props.get("geo.cell.system", "z") == "s2":
-        from geomesa_sql_spark.cells import s2 as _s2
-
-        # max_level=res: ranges from cells finer than the stored level
-        # exclude the stored ids themselves (advice r4 — silent misses
-        # on bboxes small relative to the cell size)
-        ranges = _s2.cover_rect_ranges(
-            minx, miny, maxx, maxy, max_cells=64, max_level=res
-        )
-        cell_col = "s2_cell"
-    else:
-        ranges = cell_prune_ranges(minx, miny, maxx, maxy, res)
-        cell_col = "cell"
-    df = t.read(spark, bounds={cell_col: ranges}, **kwargs)
-    df = df.filter(_ranges_predicate(cell_col, ranges))
-    if exact:
-        df = df.filter(
-            (F.col(x) >= minx) & (F.col(x) <= maxx)
-            & (F.col(y) >= miny) & (F.col(y) <= maxy)
-        )
-    return df

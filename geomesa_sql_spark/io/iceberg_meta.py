@@ -669,6 +669,8 @@ def _overlaps(data_file: dict, want: dict, type_by_id: dict) -> bool:
         if flo is None or fhi is None or t is None:
             continue  # no stats for this column: cannot prune on it
         lo, hi = _decode_bound(t, flo), _decode_bound(t, fhi)
+        if lo != lo or hi != hi:
+            continue  # parquet-mr lets a NaN into a double's min/max
         # a single (lo, hi) pair or a list of disjoint ranges (e.g. the
         # Z-order covering of a bbox) — keep the file if ANY overlaps
         ranges = rng if isinstance(rng, list) else [rng]

@@ -865,8 +865,13 @@ def dbscan(
     — sphere-mode state carries 3-D cell keys (ccx, ccy, ccz in the
     chordal embedding's grid) and must be continued with
     ``dbscan_incremental(..., metric='sphere')``. Result and state are
-    LAZY checkpoints, materialized by the first action consuming them:
-    ``df`` must read the same rows until then, or they silently change.
+    LAZY checkpoints, materialized by the first action consuming them,
+    so this call does not snapshot its input: ``df`` must stay
+    unchanged until the returned result or state is first consumed, or
+    the caller must pin it first (``df.localCheckpoint()``, or a read of
+    a fixed Iceberg snapshot). A table rewritten in between (an
+    Engine DML commit, an overwritten parquet path) silently changes
+    the clusters.
     """
     pts, eps, s = _validated_pts(
         df, key, x, y, eps, min_pts, coarse_cell, metric
@@ -967,8 +972,10 @@ def dbscan_incremental(
     ``incremental_fallbacks`` under its reason.
 
     Returns (result, new_state); ``result`` and ``local`` are lazy
-    checkpoints like :func:`dbscan`'s: ``df_all`` and ``delta`` must
-    read the same rows until their first consuming action."""
+    checkpoints like :func:`dbscan`'s, so this call does not snapshot
+    its inputs either: ``df_all`` and ``delta`` must stay unchanged
+    until the returned result or state is first consumed, or the caller
+    must pin them first (``localCheckpoint()``)."""
     if isinstance(prev_state, DataFrame):  # pre-r3 state shape
         p_result, p_eq, p_resolved = _assemble_full(prev_state, max_iter)
         prev_state = {

@@ -79,6 +79,44 @@ def _ranges_predicate(cell_col: str, ranges: list[tuple[int, int]]) -> Column:
     return pred if pred is not None else F.lit(True)
 
 
+def pred_envelope(
+    predicate: str, g: Geom, distance: float | None = None
+) -> tuple[list[tuple[float, float]], float, float]:
+    """``(x segments, ylo, yhi)``: a box every point that
+    ``ST_<predicate>(point, g[, distance])`` keeps lies in. The
+    envelope of ``g``, padded by the distance for ``dwithin``. For
+    ``dwithin_sphere`` (``g`` a POINT, distance in metres) the cap's
+    conservative degree box — the proven over-cover of
+    geom/geodesic.sphere_deg_bounds — split into two longitude segments
+    when it spills past ±180, since the haversine metric wraps."""
+    if predicate != "dwithin_sphere":
+        pad = float(distance) if predicate == "dwithin" else 0.0
+        minx, miny, maxx, maxy = g.envelope()
+        return [(minx - pad, maxx + pad)], miny - pad, maxy + pad
+    from geomesa_sql_spark.geom import model
+    from geomesa_sql_spark.geom.geodesic import sphere_deg_bounds
+
+    if g.type != model.POINT:
+        raise NotImplementedError(
+            "dwithin_sphere needs a POINT literal (geodesic distance to "
+            "an extended geometry is undefined here — buffer+intersects "
+            "or the planar dwithin cover those)"
+        )
+    cx, cy = float(g.coords[0]), float(g.coords[1])
+    dlat_a, dlon_a = sphere_deg_bounds(np.array([cy]), float(distance))
+    dlat, dlon = float(np.atleast_1d(dlat_a)[0]), float(dlon_a[0])
+    lo, hi = cx - dlon, cx + dlon
+    if dlon >= 180.0:
+        segs = [(-180.0, 180.0)]
+    elif lo < -180.0:
+        segs = [(-180.0, hi), (lo + 360.0, 180.0)]
+    elif hi > 180.0:
+        segs = [(lo, 180.0), (-180.0, hi - 360.0)]
+    else:
+        segs = [(lo, hi)]
+    return segs, max(cy - dlat, -90.0), min(cy + dlat, 90.0)
+
+
 def spatial_filter(
     df: DataFrame,
     predicate: str,
@@ -98,95 +136,39 @@ def spatial_filter(
     """
     g = geom_from_wkt(geom) if isinstance(geom, str) else geom
     pred = predicate.lower()
-    if pred == "dwithin_sphere":
-        return _sphere_filter(df, g, float(distance), x, y, cell_col, data_res)
-    pad = float(distance) if pred == "dwithin" else 0.0
-    minx, miny, maxx, maxy = g.envelope()
-    minx, miny, maxx, maxy = minx - pad, miny - pad, maxx + pad, maxy + pad
-
-    out = df
-    # 1. cell-range prune (storage-level, analog of the Z-index scan)
-    if cell_col is not None and cell_col in df.columns and data_res is not None:
-        ranges = cell_prune_ranges(minx, miny, maxx, maxy, data_res)
-        out = out.filter(_ranges_predicate(cell_col, ranges))
-
-    if x is not None:
-        # 2. bbox prefilter on the coordinate columns (parquet-pushable)
-        out = out.filter(
-            (F.col(x) >= minx) & (F.col(x) <= maxx) & (F.col(y) >= miny) & (F.col(y) <= maxy)
-        )
-        # 3. exact refine, skipped when the bbox IS the exact predicate
-        needs_refine = not (
-            _is_rectangle(g) and pred in ("intersects", "coveredby")
-        )
-        if needs_refine:
-            out = out.filter(st_predicate_point_cols(pred, F.col(x), F.col(y), g, distance))
-        return out
-
-    if wkb is None:
-        raise ValueError("need x/y or wkb")
-    lit = F.lit(bytearray(geom_to_wkb(g)))
-    return out.filter(st_predicate_wkb(pred, F.col(wkb), lit, distance))
-
-
-def _sphere_filter(
-    df: DataFrame,
-    g: Geom,
-    meters: float,
-    x: str | None,
-    y: str | None,
-    cell_col: str | None,
-    data_res: int | None,
-) -> DataFrame:
-    """``ST_DWithinSphere(point_rows, literal point, metres)`` with the
-    same push-down ladder as the planar path: conservative degree bbox
-    (split into two longitude segments when the cap spills past ±180,
-    since the haversine metric wraps) → cell ranges → sargable bbox →
-    pure-Column haversine refine (geom/geodesic.py). The degree bounds
-    are the proven over-cover of join/spatial._sphere_deg_bounds, so
-    pruning never drops a true row."""
-    from geomesa_sql_spark.geom.geodesic import sphere_distance_cols
-    from geomesa_sql_spark.join.spatial import _sphere_deg_bounds
-
-    if x is None or y is None:
+    if pred == "dwithin_sphere" and (x is None or y is None):
         raise NotImplementedError(
             "dwithin_sphere filters point rows (x/y lon-lat columns); "
             "for WKB rows use the scalar ST_DWithinSphere UDF"
         )
-    from geomesa_sql_spark.geom import model
-
-    if g.type != model.POINT:
-        raise NotImplementedError(
-            "dwithin_sphere needs a POINT literal (geodesic distance to "
-            "an extended geometry is undefined here — buffer+intersects "
-            "or the planar dwithin cover those)"
-        )
-    cx, cy = float(g.coords[0]), float(g.coords[1])
-    dlat_a, dlon_a = _sphere_deg_bounds(np.array([cy]), float(meters))
-    dlat, dlon = float(np.atleast_1d(dlat_a)[0]), float(dlon_a[0])
-    ylo, yhi = max(cy - dlat, -90.0), min(cy + dlat, 90.0)
-    lo, hi = cx - dlon, cx + dlon
-    if dlon >= 180.0:
-        segs = [(-180.0, 180.0)]
-    elif lo < -180.0:
-        segs = [(-180.0, hi), (lo + 360.0, 180.0)]
-    elif hi > 180.0:
-        segs = [(lo, 180.0), (-180.0, hi - 360.0)]
-    else:
-        segs = [(lo, hi)]
+    segs, ylo, yhi = pred_envelope(pred, g, distance)
 
     out = df
+    # 1. cell-range prune (storage-level, analog of the Z-index scan)
     if cell_col is not None and cell_col in df.columns and data_res is not None:
-        ranges: list[tuple[int, int]] = []
-        for slo, shi in segs:
-            ranges.extend(cell_prune_ranges(slo, ylo, shi, yhi, data_res))
+        ranges = [r for lo, hi in segs
+                  for r in cell_prune_ranges(lo, ylo, hi, yhi, data_res)]
         out = out.filter(_ranges_predicate(cell_col, ranges))
+
+    if x is None:
+        if wkb is None:
+            raise ValueError("need x/y or wkb")
+        lit = F.lit(bytearray(geom_to_wkb(g)))
+        return out.filter(st_predicate_wkb(pred, F.col(wkb), lit, distance))
+
+    # 2. bbox prefilter on the coordinate columns (parquet-pushable)
     box = None
-    for slo, shi in segs:
-        c = (F.col(x) >= slo) & (F.col(x) <= shi)
+    for lo, hi in segs:
+        c = (F.col(x) >= lo) & (F.col(x) <= hi)
         box = c if box is None else (box | c)
     out = out.filter(box & (F.col(y) >= ylo) & (F.col(y) <= yhi))
-    return out.filter(
-        sphere_distance_cols(F.col(x), F.col(y), F.lit(cx), F.lit(cy))
-        <= float(meters)
-    )
+    # 3. exact refine, skipped when the bbox IS the exact predicate
+    if pred == "dwithin_sphere":
+        from geomesa_sql_spark.geom.geodesic import sphere_distance_cols
+
+        cx, cy = (F.lit(float(v)) for v in g.coords[:2])
+        return out.filter(
+            sphere_distance_cols(F.col(x), F.col(y), cx, cy) <= float(distance))
+    if not (_is_rectangle(g) and pred in ("intersects", "coveredby")):
+        out = out.filter(st_predicate_point_cols(pred, F.col(x), F.col(y), g, distance))
+    return out

@@ -835,6 +835,49 @@ def test_router_fallbacks_counted_once(spark, sf_dir, tmp_path):
     })
 
 
+def test_router_bail_on_outer_semi_anti_raises(spark, sf_dir, tmp_path):
+    """A LEFT JOIN or [NOT] EXISTS over tables without the fid_col key
+    is a router bail that plain Spark SQL cannot plan (a Python UDF in
+    the ON clause of an outer/semi/anti join): Engine.sql raises a
+    ValueError naming the reason, counted once. An uncorrelated EXISTS
+    bails too but Spark answers it, so it still answers."""
+    from collections import Counter
+
+    from geomesa_sql_spark.io.fixtures import nation_squares, orders_points
+
+    eng = Engine(spark)  # fid_col='image_id' — not a column of either table
+    p1, p2 = str(tmp_path / "p"), str(tmp_path / "n")
+    orders_points(spark, sf_dir).filter(F.col("o_orderkey") <= 500).select(
+        "o_orderkey", "lon", "lat"
+    ).write.parquet(p1)
+    nation_squares(spark, sf_dir).select("n_nationkey", "poly").write.parquet(p2)
+    eng.register_table("bxpts", p1)
+    eng.register_table("bxnsq", p2)
+    call = "ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly)"
+    for q, why in (
+        (f"SELECT p.o_orderkey, s.n_nationkey FROM bxpts p LEFT JOIN bxnsq s ON {call}",
+         "LEFT spatial join needs a unique key"),
+        (f"SELECT p.o_orderkey FROM bxpts p WHERE EXISTS (SELECT 1 FROM bxnsq s "
+         f"WHERE {call})", "LEFT_SEMI spatial join needs a unique key"),
+        (f"SELECT p.o_orderkey FROM bxpts p WHERE NOT EXISTS (SELECT 1 FROM bxnsq s "
+         f"WHERE {call})", "LEFT_ANTI spatial join needs a unique key"),
+    ):
+        with pytest.raises(ValueError, match=why):
+            eng.sql(q)
+        assert eng.route_fallbacks[why] == 1
+    square = "ST_GeomFromText('POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))')"
+    q = (f"SELECT count(*) FROM bxpts p WHERE EXISTS (SELECT 1 FROM bxnsq s "
+         f"WHERE ST_Intersects({square}, s.poly))")
+    assert eng.sql(q).collect() == spark.sql(q).collect()
+    assert sum(eng.route_fallbacks.values()) == 4
+    assert eng.route_fallbacks == Counter({
+        "LEFT spatial join needs a unique key": 1,
+        "LEFT_SEMI spatial join needs a unique key": 1,
+        "LEFT_ANTI spatial join needs a unique key": 1,
+        "unsupported ST_ predicate or operand shape in ON": 1,
+    })
+
+
 def test_sql_alias_qualified_operands_orient(spark, sf_dir, tmp_path):
     """Qualified geometry operands orient the join even when BOTH
     tables carry the operand column names (previously an ambiguity

@@ -2,7 +2,8 @@
 generic Avro OCF round trips + mutation robustness, Iceberg create/
 append/time-travel, manifest-bounds file pruning, v2 position and
 equality deletes (merge-on-read, sequence-number rule), copy-on-write
-delete_where, and the io/iceberg.py seam dispatch. Oracles are plain
+delete_where, the io/iceberg.py seam dispatch, and GeoTable bbox reads
+over Z and S2 layouts (against pushdown=False). Oracles are plain
 parquet reads of the same rows."""
 
 import glob
@@ -180,6 +181,14 @@ def test_iceberg_bounds_pruning(spark, tmp_path):
     # double bounds prune on x too
     _, _, s2 = t.plan_files(bounds={"x": (0.0, 50.0)})
     assert s2["files_kept"] < 8
+    # a NaN in a double column reaches the parquet max: that file has
+    # no usable bounds and is kept, never pruned with its other rows
+    nan = str(tmp_path / "t3nan")
+    im.create_table(spark.createDataFrame(
+        [(1, 5.0), (2, float("nan")), (3, 7.0)], "k long, x double"
+    ).coalesce(1), nan)
+    got = im.IcebergTable.load(nan).read(spark, bounds={"x": (4.0, 6.0)})
+    assert got.filter("x between 4 and 6").count() == 1
 
 
 def test_iceberg_position_deletes(spark, tmp_path):
@@ -346,39 +355,62 @@ def test_iceberg_distributed_stats_commit(spark, tmp_path):
     assert stats["files_kept"] == 40  # hash-partitioned: none prunable
 
 
-def test_geo_iceberg_manifest_bbox_pruning(spark, tmp_path):
-    """Spatial x Iceberg: a bbox read prunes files at the manifest
-    level via Z-order cell bounds, and matches a plain filter oracle."""
-    from geomesa_sql_spark.io.iceberg import (
-        read_geo_iceberg,
-        write_geo_iceberg,
-    )
-    from geomesa_sql_spark.io.iceberg_meta import IcebergTable
-    from geomesa_sql_spark.plan.filter import cell_prune_ranges
-
-    path = str(tmp_path / "tg")
-    df = spark.range(20000).select(
+def _geo_pts(spark, n=20000):
+    return spark.range(n).select(
         F.col("id").alias("k"),
         ((F.col("id") * 7919 % 36000) / 100.0 - 180.0).alias("lon"),
         ((F.col("id") * 104729 % 17000) / 100.0 - 85.0).alias("lat"),
     )
+
+
+def _box(minx, miny, maxx, maxy):
+    return (f"POLYGON (({minx} {miny}, {maxx} {miny}, {maxx} {maxy}, "
+            f"{minx} {maxy}, {minx} {miny}))")
+
+
+def _bbox_read(spark, path, bbox, pushdown=True):
+    from geomesa_sql_spark.plan.scan import GeoTable
+
+    return GeoTable(spark, path, pushdown=pushdown).where_spatial(
+        "intersects", _box(*bbox), x="lon", y="lat").df()
+
+
+def _kept(files):
+    return {f["path"].split(":", 1)[-1].lstrip("/") for f in files}
+
+
+def _planned(df, path):
+    """The table's current data files that a frame scans."""
+    every = _kept(im.IcebergTable.load(path).plan_files()[0])
+    return {p.split(":", 1)[-1].lstrip("/") for p in df.inputFiles()} & every
+
+
+def test_geo_iceberg_manifest_bbox_pruning(spark, tmp_path):
+    """Spatial x Iceberg: a GeoTable bbox read prunes files at the
+    manifest level via Z-order cell bounds, and matches a plain filter
+    oracle."""
+    from geomesa_sql_spark.io.iceberg import write_geo_iceberg
+    from geomesa_sql_spark.io.iceberg_meta import IcebergTable
+    from geomesa_sql_spark.plan.filter import cell_prune_ranges
+
+    path = str(tmp_path / "tg")
+    df = _geo_pts(spark)
     write_geo_iceberg(df, path, partitions=16)
     bbox = (10.0, 10.0, 30.0, 25.0)
     t = IcebergTable.load(path)
     ranges = cell_prune_ranges(*bbox, 12)
-    _, _, stats = t.plan_files(bounds={"cell": ranges})
+    kept, _, stats = t.plan_files(bounds={"cell": ranges})
     assert stats["files_total"] == 16
     assert stats["files_kept"] < 16  # manifest-level spatial pruning
-    got = read_geo_iceberg(spark, path, bbox=bbox).orderBy("k")
+    got = _bbox_read(spark, path, bbox).orderBy("k")
+    # the bbox read plans exactly the files the cell ranges keep
+    assert _planned(got, path) == _kept(kept)
     want = df.filter(
         (F.col("lon") >= 10.0) & (F.col("lon") <= 30.0)
         & (F.col("lat") >= 10.0) & (F.col("lat") <= 25.0)
     ).orderBy("k")
     assert [r["k"] for r in got.collect()] == [r["k"] for r in want.collect()]
     assert got.count() > 0
-    # superset mode: cover >= exact
-    cover = read_geo_iceberg(spark, path, bbox=bbox, exact=False)
-    assert cover.count() >= got.count()
     # properties survive an append (carried forward)
     from geomesa_sql_spark.io import iceberg_meta as im2
 
@@ -393,6 +425,68 @@ def test_geo_iceberg_manifest_bbox_pruning(spark, tmp_path):
     )
     t2 = IcebergTable.load(path)
     assert t2.metadata["properties"]["geo.cell.res"] == "12"
+
+
+def test_geotable_bbox_read_after_mor_deletes(spark, tmp_path):
+    """A pruned GeoTable read applies position and equality deletes
+    the way the unpruned read does; pushdown=False plans every file."""
+    from geomesa_sql_spark.io.iceberg import write_geo_iceberg
+
+    path = str(tmp_path / "tgdel")
+    write_geo_iceberg(_geo_pts(spark), path, partitions=16)
+    bbox = (10.0, 10.0, 30.0, 25.0)
+    first = _bbox_read(spark, path, bbox)
+    files, before = sorted(_planned(first, path)), first.count()
+    assert 0 < len(files) < 16
+    # position deletes: every other bbox row of one planned file
+    pos = (spark.read.parquet("/" + files[0])
+           .select("lon", "lat", F.col("_metadata.row_index").alias("pos"))
+           .filter("lon BETWEEN 10 AND 30 AND lat BETWEEN 10 AND 25 AND pos % 2 = 0")
+           .select(F.lit("/" + files[0]).alias("file_path"), "pos"))
+    assert pos.count() > 0
+    im.add_position_deletes(spark, path, pos)
+    hit = [r["k"] for r in _bbox_read(spark, path, bbox).collect()]
+    assert 0 < len(hit) < before
+    im.add_equality_deletes(spark, path, spark.createDataFrame(
+        [(k,) for k in hit[::3]], "k long"), on=["k"])
+    got = _bbox_read(spark, path, bbox)
+    want = _bbox_read(spark, path, bbox, pushdown=False)
+    assert len(_planned(got, path)) == len(files)
+    assert len(_planned(want, path)) == 16
+    rows = sorted(r["k"] for r in got.collect())
+    assert rows == sorted(r["k"] for r in want.collect())
+    assert 0 < len(rows) < len(hit) and not set(hit[::3]) & set(rows)
+
+
+def test_geotable_dwithin_reads_match_unpruned(spark, tmp_path):
+    """dwithin pads the pruning box by its distance; a dwithin_sphere
+    cap across ±180 prunes by two longitude segments. Both answer as
+    the unpruned read does, on a z layout and on a table without one."""
+    from geomesa_sql_spark.io.iceberg import write_geo_iceberg
+    from geomesa_sql_spark.plan.scan import GeoTable
+
+    df = _geo_pts(spark)
+    geo, plain = str(tmp_path / "tgz"), str(tmp_path / "tgp")
+    write_geo_iceberg(df, geo, partitions=16)
+    im.create_table(df.repartitionByRange(8, "lon"), plain)
+    cases = [
+        ("dwithin", "POINT (20 15)", 3.0),
+        ("dwithin_sphere", "POINT (179.5 -20)", 400_000.0),
+    ]
+    for path in (geo, plain):
+        for pred, wkt, d in cases:
+            def read(pushdown):
+                return GeoTable(spark, path, pushdown=pushdown).where_spatial(
+                    pred, wkt, x="lon", y="lat", distance=d).df()
+
+            got, want = read(True), read(False)
+            n = len(_planned(want, path))
+            assert 0 < len(_planned(got, path)) < n, (path, pred)
+            rows = sorted(r["k"] for r in got.collect())
+            assert rows == sorted(r["k"] for r in want.collect()) and rows
+        lons = [r["lon"] for r in GeoTable(spark, path).where_spatial(
+            *cases[1][:2], x="lon", y="lat", distance=cases[1][2]).df().collect()]
+        assert min(lons) < -179.0 and max(lons) > 179.0  # both sides of ±180
 
 
 def test_iceberg_expire_snapshots(spark, tmp_path):
@@ -692,3 +786,289 @@ def test_iceberg_rollback(spark, tmp_path):
     # new commits build on the restored state
     im.append(_mkdf(spark, 200, 210), path)
     assert im.IcebergTable.load(path).read(spark).count() == 210
+
+
+# ---- moved from the retired Data Source test module: S2 layout reads and
+# ---- the review r4m regressions (iceberg_meta/avro/read_table)
+
+
+def _mk(spark, a, b):
+    return spark.range(a, b).selectExpr(
+        "id", "CAST(id * 2 AS DOUBLE) AS v", "CAST(id AS STRING) AS s"
+    )
+
+
+def test_geo_iceberg_s2_layout(spark, tmp_path):
+    """S2 x Iceberg: the sphere-uniform layout — s2-clustered files
+    get tight s2_cell bounds in manifests, a bbox read prunes at the
+    manifest level via cover_rect_ranges and matches a plain filter."""
+    from pyspark.sql import functions as F
+
+    from geomesa_sql_spark.cells import s2 as s2m
+    from geomesa_sql_spark.io.iceberg import write_geo_iceberg
+
+    path = str(tmp_path / "s2g")
+    df = spark.range(20000).select(
+        F.col("id").alias("k"),
+        ((F.col("id") * 7919 % 36000) / 100.0 - 180.0).alias("lon"),
+        ((F.col("id") * 104729 % 17000) / 100.0 - 85.0).alias("lat"),
+    )
+    write_geo_iceberg(df, path, res=10, partitions=16, cell_system="s2")
+    bbox = (20.0, 10.0, 40.0, 30.0)
+    t = im.IcebergTable.load(path)
+    assert t.metadata["properties"]["geo.cell.system"] == "s2"
+    ranges = s2m.cover_rect_ranges(*bbox, max_cells=64)
+    # no merged range may straddle the int64 sign wall (faces 3|4 are
+    # uint64-adjacent; BETWEEN over signed ids would break)
+    assert all((lo >= 0) == (hi >= 0) for lo, hi in ranges)
+    _, _, stats = t.plan_files(bounds={"s2_cell": ranges})
+    assert stats["files_total"] == 16 and stats["files_kept"] < 16
+    got = _bbox_read(spark, path, bbox).toPandas()
+    want = df.filter(
+        (F.col("lon") >= bbox[0]) & (F.col("lon") <= bbox[2])
+        & (F.col("lat") >= bbox[1]) & (F.col("lat") <= bbox[3])
+    ).toPandas()
+    assert sorted(got["k"]) == sorted(want["k"]) and len(got) > 0
+
+
+def test_geo_iceberg_s2_small_bbox_matches_plain_filter(spark, tmp_path):
+    """Advice r4 (high): a bbox far smaller than one stored S2 cell
+    used to build prune ranges finer than the stored level, and the
+    stored ids fell outside every range — rows silently dropped. The
+    read path now caps the covering at geo.cell.res."""
+    from pyspark.sql import functions as F
+
+    from geomesa_sql_spark.io.iceberg import write_geo_iceberg
+
+    path = str(tmp_path / "s2small")
+    # 5000 points packed into ~0.005 deg around (20, 10): far smaller
+    # than one level-10 cell, so an uncapped covering descends past 10
+    df = spark.range(5000).select(
+        F.col("id").alias("k"),
+        (F.lit(20.0) + (F.col("id") % 100) / 20000.0).alias("lon"),
+        (F.lit(10.0) + (F.col("id") % 97) / 19000.0).alias("lat"),
+    )
+    write_geo_iceberg(df, path, res=10, partitions=4, cell_system="s2")
+    bbox = (20.0, 10.0, 20.001, 10.001)
+    got = _bbox_read(spark, path, bbox).toPandas()
+    want = df.filter(
+        (F.col("lon") >= bbox[0]) & (F.col("lon") <= bbox[2])
+        & (F.col("lat") >= bbox[1]) & (F.col("lat") <= bbox[3])
+    ).toPandas()
+    assert len(want) > 0
+    assert sorted(got["k"]) == sorted(want["k"])
+
+
+def test_null_entry_seq_inherits_manifest_seq(tmp_path):
+    """Foreign writers record null sequence_number on entries added by
+    a manifest (spec inheritance); `or 0` made every data file seq=0 so
+    equality deletes applied to nothing (r4m finding)."""
+    from geomesa_sql_spark.io.avro import write_avro
+    from geomesa_sql_spark.io.iceberg_meta import (
+        _MANIFEST_ENTRY_SCHEMA,
+        _manifest_entries,
+    )
+
+    entry = {
+        "status": 1,
+        "snapshot_id": 7,
+        "sequence_number": None,
+        "file_sequence_number": None,
+        "data_file": {
+            "content": 0,
+            "file_path": "/x.parquet",
+            "file_format": "PARQUET",
+            "partition": {},  # required v2 tuple (r5)
+            "record_count": 1,
+            "file_size_in_bytes": 10,
+            "lower_bounds": None,
+            "upper_bounds": None,
+            "equality_ids": None,
+        },
+    }
+    mp = str(tmp_path / "m0.avro")
+    with open(mp, "wb") as f:
+        f.write(write_avro(_MANIFEST_ENTRY_SCHEMA, [entry]))
+    got = _manifest_entries(mp, 5)
+    assert got[0]["sequence_number"] == 5
+
+
+def test_equality_delete_null_keys_and_linear_plan(spark, tmp_path):
+    """Null delete keys match null rows (Iceberg semantics) and many
+    equality-delete files stay a LINEAR chain of anti-joins (the old
+    older/newer split doubled the plan per file)."""
+    import pandas as pd
+
+    path = str(tmp_path / "eqnull")
+    df = spark.createDataFrame(
+        pd.DataFrame({"k": [1.0, None, 3.0, 4.0], "v": [10, 20, 30, 40]}),
+        "k long, v long",
+    )
+    im.create_table(df, path)
+    im.add_equality_deletes(
+        spark, path,
+        spark.createDataFrame(pd.DataFrame({"k": [None]}), "k long"),
+        on=["k"],
+    )
+    got = im.IcebergTable.load(path).read(spark).toPandas()
+    assert sorted(got["v"]) == [10, 30, 40]  # the NULL-k row deleted
+    # 8 more single-key delete commits: linear plan, correct result
+    for key in [1, 3, 99, 98, 97, 96, 95, 94]:
+        im.add_equality_deletes(
+            spark, path,
+            spark.createDataFrame([(key,)], "k long"),
+            on=["k"],
+        )
+    got = im.IcebergTable.load(path).read(spark).toPandas()
+    assert sorted(got["v"]) == [40]
+
+
+def test_equality_delete_dropped_key_raises(spark, tmp_path):
+    path = str(tmp_path / "eqdrop")
+    im.create_table(_mk(spark, 0, 10), path)
+    im.add_equality_deletes(
+        spark, path, spark.createDataFrame([(3,)], "id long"), on=["id"]
+    )
+    im.drop_column(path, "id")
+    with pytest.raises(ValueError, match="equality-delete"):
+        im.IcebergTable.load(path).read(spark).count()
+
+
+def test_read_table_kwargs_never_silently_dropped(spark, tmp_path):
+    from geomesa_sql_spark.io.iceberg import read_table
+
+    pq = str(tmp_path / "plain.parquet")
+    spark.range(5).write.parquet(pq)
+    with pytest.raises(ValueError, match="not an Iceberg table"):
+        read_table(spark, pq, as_of_ms=123)
+    # no kwargs: bare parquet still reads
+    assert read_table(spark, pq).count() == 5
+
+
+def test_delete_where_does_not_rescan_kept_footers(spark, tmp_path, monkeypatch):
+    """CoW delete cost must be proportional to files REWRITTEN:
+    untouched manifest entries re-emit verbatim, no footer re-reads
+    (r4m finding: every kept file's footer was re-opened)."""
+    from geomesa_sql_spark.io import iceberg_meta as imod
+
+    path = str(tmp_path / "cow")
+    imod.create_table(_mk(spark, 0, 100).repartition(10), path)
+    calls = []
+    orig = imod._parquet_file_stats
+
+    def counting(p, fields):
+        calls.append(p)
+        return orig(p, fields)
+
+    monkeypatch.setattr(imod, "_parquet_file_stats", counting)
+    imod.delete_where(spark, path, "id = 7")
+    # only the replacement file(s) for the single hit file get footer
+    # stats — never the ~9 kept files
+    assert 0 < len(calls) <= 2, calls
+    t = imod.IcebergTable.load(path)
+    got = t.read(spark).toPandas()
+    assert len(got) == 99 and 7 not in set(got["id"])
+    # time travel to the pre-delete snapshot still sees 100
+    first = sorted(t.snapshots(), key=lambda s: s["sequence-number"])[0]
+    assert t.read(spark, snapshot_id=first["snapshot-id"]).count() == 100
+
+
+def test_avro_empty_rows_zero_blocks():
+    from geomesa_sql_spark.io.avro import read_avro, write_avro
+
+    schema = {"type": "record", "name": "r",
+              "fields": [{"name": "x", "type": "long"}]}
+    blob = write_avro(schema, [])
+    _, rows, _ = read_avro(blob)
+    assert rows == []
+    # no data block after the header: the file ends at the header sync
+    hdr_only = write_avro(schema, [])
+    assert blob == hdr_only and blob.endswith(write_avro(schema, [])[-16:])
+
+
+def test_foreign_null_seq_equality_delete_end_to_end(spark, tmp_path):
+    """End-to-end twin of the seq-inheritance unit test: rewrite a
+    table's manifests the way foreign writers emit them (entry
+    sequence_number = null, inherited from the manifest list) and
+    prove equality deletes still apply (r4m: they were silent no-ops
+    at seq=0)."""
+    import glob
+
+    from geomesa_sql_spark.io.avro import read_avro, write_avro
+
+    path = str(tmp_path / "ice_foreign")
+    im.create_table(_mk(spark, 0, 30), path)
+    im.add_equality_deletes(
+        spark, path, spark.createDataFrame([(5,), (7,)], "id long"), on=["id"]
+    )
+    # null out every manifest entry's sequence numbers in place
+    for mp in glob.glob(f"{path}/metadata/*-m*.avro") + glob.glob(
+        f"{path}/metadata/*.avro"
+    ):
+        with open(mp, "rb") as f:
+            schema_meta, entries, meta = read_avro(f.read())
+        if not entries or "data_file" not in entries[0]:
+            continue  # manifest lists
+        for e in entries:
+            e["sequence_number"] = None
+            e["file_sequence_number"] = None
+        import json as _json
+
+        schema = _json.loads(meta["avro.schema"].decode())
+        with open(mp, "wb") as f:
+            f.write(write_avro(schema, entries))
+    got = im.IcebergTable.load(path).read(spark).toPandas()
+    assert sorted(got["id"]) == [i for i in range(30) if i not in (5, 7)]
+
+
+def _uri_rewrite_manifests(path):
+    """Rewrite every manifest's data_file.file_path to a file:// URI,
+    the way foreign (JVM) Iceberg writers record paths."""
+    import glob
+    import json as _json
+
+    from geomesa_sql_spark.io.avro import read_avro, write_avro
+
+    for mp in glob.glob(f"{path}/metadata/*.avro"):
+        with open(mp, "rb") as f:
+            _, entries, meta = read_avro(f.read())
+        if not entries or "data_file" not in entries[0]:
+            continue  # manifest lists keep plain paths (opened locally)
+        changed = False
+        for e in entries:
+            p = e["data_file"]["file_path"]
+            if not p.startswith("file:"):
+                e["data_file"]["file_path"] = "file://" + p
+                changed = True
+        if changed:
+            schema = _json.loads(meta["avro.schema"].decode())
+            with open(mp, "wb") as f:
+                f.write(write_avro(schema, entries))
+
+
+def test_foreign_file_uri_equality_delete_end_to_end(spark, tmp_path):
+    """Advice r4 (medium): manifests recording file: URIs made seq_df's
+    raw path miss the normalized __file join key, __seq went NULL, and
+    equality deletes silently resurrected rows. Both sides now share
+    _norm_path_py."""
+    path = str(tmp_path / "ice_uri")
+    im.create_table(_mk(spark, 0, 30), path)
+    im.add_equality_deletes(
+        spark, path, spark.createDataFrame([(5,), (7,)], "id long"), on=["id"]
+    )
+    _uri_rewrite_manifests(path)
+    got = im.IcebergTable.load(path).read(spark).toPandas()
+    assert sorted(got["id"]) == [i for i in range(30) if i not in (5, 7)]
+
+
+def test_foreign_file_uri_delete_where(spark, tmp_path):
+    """delete_where's hit-file targeting must also normalize the
+    manifest side: with file: URIs, the hit set (normalized __file)
+    never matched raw entry paths, so no manifest was rewritten and
+    the delete was a no-op."""
+    path = str(tmp_path / "ice_uri_dw")
+    im.create_table(_mk(spark, 0, 30), path)
+    _uri_rewrite_manifests(path)
+    im.delete_where(spark, path, "id < 5")
+    got = im.IcebergTable.load(path).read(spark).toPandas()
+    assert sorted(got["id"]) == list(range(5, 30))
