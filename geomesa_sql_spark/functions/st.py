@@ -7,19 +7,26 @@ into GeoMesa filters (RexNodeTranslator.scala:170-196). Our surface:
 
 - **Column fast paths** (JVM-side, whole-stage codegen, no Python):
   point-vs-point distance/DWithin, bbox tests — plain Column arithmetic.
-- **Vectorized pandas UDFs** (Arrow batches) for everything touching
-  WKB: relate predicates, WKT codecs, envelopes, cell encoding.
+- **Batch-vectorized pandas UDFs** (one kernel call per Arrow batch)
+  on the hot paths: relate predicates, DWithin, point-vs-literal
+  predicates, envelopes, point WKB, cell encoding, geodesic distances.
+- **Per-row pandas UDFs** (an Arrow batch per call, a Python loop over
+  its rows) for the rest of the Calcite surface, each declared through
+  :func:`_rowwise`, the one place that owns the row loop, the NULL
+  rule, WKB decode/encode and error-to-NULL mapping.
+- **Arrow row UDFs** (``F.udf(..., useArrow=True)``), the only non-pandas
+  UDFs here, for the S2 helpers that take an int64 cell id: a pandas UDF
+  would turn a batch holding a NULL id into float64 and lose bits above
+  2^53.
 - ``register_all(spark)`` exposes the UDF forms to ``spark.sql`` under
   their Calcite names (ST_Intersects, ST_AsText, ...), so the SQL
   surface of the reference keeps working.
-
-Per BASELINE.json input_hint: no per-row Python UDFs anywhere — every
-UDF here is a pandas_udf over Arrow batches.
 """
 
 from __future__ import annotations
 
 import functools
+import json
 import re as _re
 
 import numpy as np
@@ -31,6 +38,7 @@ from pyspark.sql import types as T
 from geomesa_sql_spark.cells import lonlat_to_cell
 from geomesa_sql_spark.geom import geom_from_wkb, geom_from_wkt, geom_to_wkt
 from geomesa_sql_spark.geom import kernel, model
+from geomesa_sql_spark.geom.geojson import geom_from_geojson, geom_to_geojson
 from geomesa_sql_spark.geom.model import Geom
 from geomesa_sql_spark.geom.wkb import geom_to_ewkb, geom_to_wkb, wkb_srid
 
@@ -340,55 +348,7 @@ def st_cell(
     return _cell(x, y)
 
 
-# -------------------------------------------------------------- registration
-
-
-@F.pandas_udf(T.StringType())
-def _st_astext(wkb: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if g is None else geom_to_wkt(g) for g in _decode_series(wkb)], dtype=object
-    )
-
-
-@F.pandas_udf(T.BinaryType())
-def _st_geomfromtext(wkt: pd.Series) -> pd.Series:
-    cache: dict[str, bytes] = {}
-    out = []
-    for s in wkt:
-        if s is None:
-            out.append(None)
-            continue
-        b = cache.get(s)
-        if b is None:
-            b = cache[s] = geom_to_wkb(geom_from_wkt(s))
-        out.append(b)
-    return pd.Series(out, dtype=object)
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_x(wkb: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if g is None else float(g.coords[0]) for g in _decode_series(wkb)]
-    )
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_y(wkb: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if g is None else float(g.coords[1]) for g in _decode_series(wkb)]
-    )
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_distance(wa: pd.Series, wb: pd.Series) -> pd.Series:
-    ga = _decode_series(wa)
-    gb = _decode_series(wb)
-    return pd.Series(
-        [
-            None if (a is None or b is None) else kernel.distance(a, b)
-            for a, b in zip(ga, gb)
-        ]
-    )
+# ------------------------------------------------- batch-vectorized UDFs
 
 
 def _geodesic_points(wa: pd.Series, wb: pd.Series):
@@ -426,37 +386,6 @@ def _st_distance_spheroid(wa: pd.Series, wb: pd.Series) -> pd.Series:
     from geomesa_sql_spark.geom.geodesic import spheroid_distance
 
     return pd.Series(spheroid_distance(*_geodesic_points(wa, wb)))
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_area_sphere(wkb: pd.Series) -> pd.Series:
-    """Geodesic polygon area (m², authalic sphere, great-circle edges
-    — geom/geodesic.sphere_geom_area; exact van Oosterom–Strackee
-    solid angles). Non-areal geometries → 0.0, NULL → NULL."""
-    from geomesa_sql_spark.geom.geodesic import sphere_geom_area
-
-    return pd.Series(
-        [
-            None if g is None else sphere_geom_area(g)
-            for g in _decode_series(wkb)
-        ],
-        dtype="float64",
-    )
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_perimeter_sphere(wkb: pd.Series) -> pd.Series:
-    """Geodesic perimeter/length (m, mean-sphere haversine edge sums —
-    geom/geodesic.sphere_geom_perimeter)."""
-    from geomesa_sql_spark.geom.geodesic import sphere_geom_perimeter
-
-    return pd.Series(
-        [
-            None if g is None else sphere_geom_perimeter(g)
-            for g in _decode_series(wkb)
-        ],
-        dtype="float64",
-    )
 
 
 @F.pandas_udf(T.BooleanType())
@@ -539,25 +468,828 @@ def st_envelope_wkb(wkb: pd.Series) -> pd.DataFrame:
     )
 
 
+# ------------------------------------------------------ per-row UDF builder
+
+# argument kinds of a _rowwise UDF
+_GEOM, _WKB, _TEXT, _NUM, _INT = "geom", "wkb", "text", "num", "int"
+
+
+def _column(kind: str, s: pd.Series) -> list:
+    """One argument column as row values, None where the row is NULL."""
+    if kind == _GEOM:
+        return _decode_series(s)
+    if kind == _WKB:
+        return [None if b is None else bytes(b) for b in s]
+    if kind == _TEXT:
+        return [None if v is None else str(v) for v in s]
+    # Arrow delivers a NULL INT or DOUBLE as NaN in a float64 series,
+    # so `is None` would let it through
+    conv = int if kind == _INT else float
+    return [None if pd.isna(v) else conv(v) for v in s]
+
+
+def _rowwise(return_type, *kinds: str, null_on: tuple = (), memo: bool = False):
+    """Declare a per-row ST_ function as a pandas UDF:
+    ``_rowwise(T.BinaryType(), _GEOM, _NUM)(f)`` over ``f(g, d)`` is the
+    UDF ``(wkb, d) -> wkb``. Every per-row UDF of the SQL surface is
+    declared here, so this is the one place that decides:
+
+    - **NULL**: a row with a NULL in any argument gives NULL and never
+      reaches ``f``. Numeric kinds (``_NUM``, ``_INT``) test
+      ``pd.isna``; binary and text kinds (``_GEOM``, ``_WKB``,
+      ``_TEXT``) test ``is None``.
+    - **Decoding**: ``_GEOM`` arguments go through the per-batch
+      :func:`_decode_series` cache; ``_WKB`` arrives as bytes, ``_TEXT``
+      as str, ``_NUM`` as float and ``_INT`` as int.
+    - **Encoding**: a returned Geom is encoded with ``geom_to_wkb``;
+      bytes and every other value pass through unchanged; None is NULL.
+    - **Errors**: an exception whose type is in ``null_on`` makes that
+      row NULL; any other exception fails the task.
+    - ``memo``: compute each distinct argument row once per batch. The
+      row is the dict key, so only the hashable kinds (all but
+      ``_GEOM``) may be memoized.
+    """
+
+    def build(fn):
+        def call(args):
+            try:
+                r = fn(*args)
+                return geom_to_wkb(r) if isinstance(r, Geom) else r
+            except null_on:
+                return None
+
+        @F.pandas_udf(return_type)
+        def udf(*cols: pd.Series) -> pd.Series:
+            seen: dict = {}
+
+            def row(args):
+                if any(a is None for a in args):
+                    return None
+                if not memo:
+                    return call(args)
+                if args not in seen:
+                    seen[args] = call(args)
+                return seen[args]
+
+            return pd.Series(
+                [row(args) for args in zip(*map(_column, kinds, cols))], dtype=object
+            )
+
+        return udf
+
+    return build
+
+
+# ---------------------------------------------------------- per-row helpers
+
+
+def _map_coords(g: Geom, fn) -> Geom:
+    if g.type == model.POINT:
+        return Geom(model.POINT, fn(g.coords.reshape(1, 2))[0])
+    if g.type == model.LINESTRING:
+        return Geom(model.LINESTRING, fn(g.coords))
+    if g.type == model.POLYGON:
+        return Geom(model.POLYGON, [fn(r) for r in g.coords])
+    return Geom(g.type, [_map_coords(p, fn) for p in g.coords])
+
+
+@functools.lru_cache(maxsize=64)
+def _crs_fn(src: str, dst: str):
+    """ST_Transform's coordinate function for one CRS pair, built once
+    per worker. Every supported pair — 4326/4269 geographic, 3857 web
+    mercator, UTM zones (geom/crs.py's Krüger-series table, the codes
+    migrating data actually lives in) — resolves through ONE
+    implementation, transform_fn, chaining non-trivial pairs through
+    geographic degrees (one source of truth keeps the oracle hash gates
+    honest). Unsupported codes raise loudly — the reference gets
+    arbitrary CRS from proj4j, which this engine does not ship."""
+    from geomesa_sql_spark.geom.crs import supported_crs_table, transform_fn
+
+    fn = transform_fn(src, dst)
+    if fn is None:
+        raise NotImplementedError(
+            f"ST_Transform {src}->{dst}; supported: {supported_crs_table()}"
+        )
+    return fn
+
+
+def _de9im(a: Geom, b: Geom) -> str:
+    from geomesa_sql_spark.geom.de9im import de9im
+
+    return de9im(a, b)
+
+
+def _is_simple(g: Geom) -> bool:
+    from geomesa_sql_spark.geom.de9im import is_simple
+
+    return is_simple(g)
+
+
+def _overlay(op: str, a: Geom, b: Geom) -> Geom:
+    from geomesa_sql_spark.geom.overlay import overlay
+
+    return overlay(a, b, op)
+
+
+def _of_type(g: Geom, want: str) -> Geom | None:
+    # typed constructors: NULL when the decoded type is not the
+    # requested one (H2GIS semantics)
+    return g if g.type == want else None
+
+
+def _nth_point(g: Geom, n: int) -> Geom | None:
+    """1-based nth vertex of a LineString (None otherwise) — the
+    PostGIS/Calcite ST_PointN contract."""
+    if g.type != model.LINESTRING:
+        return None
+    pts = g.all_coords()
+    if n < 1 or n > len(pts):
+        return None
+    return Geom(model.POINT, pts[n - 1])
+
+
+def _rotation(theta: float):
+    # PostGIS ST_Rotate rotates about the origin, angle in radians CCW
+    ct, st_ = np.cos(theta), np.sin(theta)
+    m = np.array([[ct, -st_], [st_, ct]])
+    return lambda c: c @ m.T
+
+
+def _closed_parts(g: Geom) -> bool | None:
+    # boundary-closure accessor (H2GIS/Calcite: defined for
+    # LINESTRING/MULTILINESTRING, NULL for every other type)
+    if g.type == model.LINESTRING:
+        parts = [g]
+    elif g.type == model.MULTILINESTRING:
+        parts = g.flatten()
+    else:
+        return None
+    if not parts:
+        # JTS MultiLineString.isClosed(): empty -> false, not
+        # vacuously true
+        return False
+    return all(
+        len(p.coords) > 1 and bool(np.all(p.coords[0] == p.coords[-1]))
+        for p in parts
+    )
+
+
+def _jts_is_rectangle(g: Geom) -> bool:
+    # JTS isRectangle: a single polygon, no holes, 4 corners, every
+    # vertex on the envelope corner set and all 4 corners present.
+    # Structural (exact comparisons on STORED coordinates) — a
+    # computed-area equality would be float-brittle for cells whose
+    # shoelace sum rounds differently from (dx * dy).
+    if g.type != model.POLYGON or len(g.coords) != 1:
+        return False
+    ring = np.asarray(g.coords[0], dtype=np.float64)
+    if len(ring) != 5:
+        return False
+    x0, y0, x1, y1 = g.envelope()
+    if x0 == x1 or y0 == y1:
+        return False
+    on_corner = np.isin(ring[:, 0], (x0, x1)) & np.isin(ring[:, 1], (y0, y1))
+    if not on_corner.all():
+        return False
+    corners = {(x, y) for x, y in ring[:-1]}
+    if corners != {(x0, y0), (x1, y0), (x1, y1), (x0, y1)}:
+        return False
+    # consecutive vertices must differ in exactly one ordinate
+    # (rules out the bowtie vertex order)
+    dx = ring[1:, 0] != ring[:-1, 0]
+    dy = ring[1:, 1] != ring[:-1, 1]
+    return bool((dx ^ dy).all())
+
+
+def _grid_cells(g: Geom, nx: int, ny: int):
+    # Calcite grid makers: divide a geometry's envelope into nx x ny cells
+    x0, y0, x1, y1 = g.envelope()
+    if nx < 1 or ny < 1 or x0 > x1 or y0 > y1:
+        return None
+    return np.linspace(x0, x1, nx + 1), np.linspace(y0, y1, ny + 1)
+
+
+def _hull_pts(g: Geom) -> np.ndarray:
+    h = kernel.convex_hull(g)
+    if h.type == model.POLYGON:
+        return h.coords[0][:-1]
+    if h.type == model.LINESTRING:
+        return h.coords
+    if h.type == model.POINT:
+        return h.coords.reshape(1, 2)
+    return np.empty((0, 2))
+
+
+def _clip_halfplane(poly: list, a: float, b: float, c: float) -> list:
+    # Sutherland–Hodgman: keep a*x + b*y <= c
+    out: list = []
+    n = len(poly)
+    for i in range(n):
+        p, q = poly[i], poly[(i + 1) % n]
+        pin = a * p[0] + b * p[1] <= c + 1e-12
+        qin = a * q[0] + b * q[1] <= c + 1e-12
+        if pin:
+            out.append(p)
+        if pin != qin:
+            t = (c - a * p[0] - b * p[1]) / (a * (q[0] - p[0]) + b * (q[1] - p[1]))
+            out.append((p[0] + t * (q[0] - p[0]), p[1] + t * (q[1] - p[1])))
+    return out
+
+
+def _caliper_frames(h: np.ndarray):
+    e = np.roll(h, -1, axis=0) - h
+    ln = np.hypot(e[:, 0], e[:, 1])
+    keep = ln > 0
+    d = e[keep] / ln[keep][:, None]
+    # anchors stay aligned with the FILTERED edges (zero-length
+    # edges may drop anywhere, not just at the tail)
+    return d, np.stack([-d[:, 1], d[:, 0]], axis=1), h[keep]
+
+
+# ------------------------------------------------------ per-row functions
+
+
+@_rowwise(T.DoubleType(), _GEOM)
+def _st_area_sphere(g: Geom) -> float:
+    """Geodesic polygon area (m², authalic sphere, great-circle edges
+    — geom/geodesic.sphere_geom_area; exact van Oosterom–Strackee
+    solid angles). Non-areal geometries → 0.0."""
+    from geomesa_sql_spark.geom.geodesic import sphere_geom_area
+
+    return sphere_geom_area(g)
+
+
+@_rowwise(T.DoubleType(), _GEOM)
+def _st_perimeter_sphere(g: Geom) -> float:
+    """Geodesic perimeter/length (m, mean-sphere haversine edge sums —
+    geom/geodesic.sphere_geom_perimeter)."""
+    from geomesa_sql_spark.geom.geodesic import sphere_geom_perimeter
+
+    return sphere_geom_perimeter(g)
+
+
+@_rowwise(T.BinaryType(), _GEOM, _GEOM)
+def _union(a: Geom, b: Geom) -> Geom:
+    # dissolving union via the overlay kernel (JTS OverlayOp
+    # parity); GeometryCollection operands — which JTS rejects —
+    # fall back to the predicate-equivalent collection union
+    try:
+        return _overlay("union", a, b)
+    except ValueError:
+        return kernel.union_geom(a, b)
+
+
+@_rowwise(T.BinaryType(), _GEOM, _GEOM, null_on=(ValueError,))
+def _split(a: Geom, b: Geom) -> Geom:
+    from geomesa_sql_spark.geom.overlay import split_geom
+
+    return split_geom(a, b)  # ValueError: unsupported dimension pair
+
+
+@_rowwise(T.BinaryType(), _INT, _INT, _INT)
+def _tile_envelope(z: int, x: int, y: int) -> Geom | None:
+    # PostGIS ST_TileEnvelope(zoom, x, y): Web-Mercator XYZ tile
+    # bounds in EPSG:3857 (the PostGIS default grid — y grows
+    # south, origin top-left at (-A, A) with A = pi * 6378137)
+    A = 20037508.342789244
+    if not 0 <= z <= 30:
+        return None
+    n = 1 << z
+    if not (0 <= x < n and 0 <= y < n):
+        return None
+    size = 2.0 * A / n
+    return model.box(-A + x * size, A - (y + 1) * size, -A + (x + 1) * size, A - y * size)
+
+
+@_rowwise(T.BinaryType(), _WKB, _TEXT, _TEXT)
+def _transform(b: bytes, src: str, dst: str) -> bytes | Geom:
+    """ST_Transform(geom, 'EPSG:s', 'EPSG:d'), through :func:`_crs_fn`."""
+    if src == dst:
+        return b
+    return _map_coords(geom_from_wkb(b), _crs_fn(src, dst))
+
+
+@_rowwise(T.BooleanType(), _GEOM, _GEOM)
+def _envelopes_intersect(ga: Geom, gb: Geom) -> bool:
+    a, b = ga.envelope(), gb.envelope()
+    return a[0] <= b[2] and b[0] <= a[2] and a[1] <= b[3] and b[1] <= a[3]
+
+
+@_rowwise(T.DoubleType(), _GEOM, _GEOM)
+def _azimuth(a: Geom, b: Geom) -> float | None:
+    """North-based clockwise azimuth in radians between two points
+    (PostGIS ST_Azimuth); NULL for coincident points."""
+    if a.type != model.POINT or b.type != model.POINT:
+        return None
+    dx = float(b.coords[0] - a.coords[0])
+    dy = float(b.coords[1] - a.coords[1])
+    if dx == 0.0 and dy == 0.0:
+        return None
+    return float(np.arctan2(dx, dy) % (2.0 * np.pi))
+
+
+@_rowwise(T.BinaryType(), _GEOM, _NUM)
+def _line_interpolate(g: Geom, f: float) -> Geom | None:
+    """Point at ``f`` ∈ [0,1] of a LineString's length
+    (PostGIS ST_LineInterpolatePoint)."""
+    if g.type != model.LINESTRING:
+        return None
+    f = min(max(f, 0.0), 1.0)
+    pts = g.coords
+    seg = np.diff(pts, axis=0)
+    ln = np.hypot(seg[:, 0], seg[:, 1])
+    total = float(ln.sum())
+    if total == 0.0:
+        return Geom(model.POINT, pts[0].copy())
+    target = f * total
+    cum = np.concatenate([[0.0], np.cumsum(ln)])
+    i = int(np.searchsorted(cum, target, side="right") - 1)
+    i = min(i, len(seg) - 1)
+    t = (target - cum[i]) / ln[i] if ln[i] > 0 else 0.0
+    return Geom(model.POINT, pts[i] + t * seg[i])
+
+
+@_rowwise(T.BinaryType(), _WKB, _INT)
+def _transform_srid(b: bytes, dst: int) -> bytes:
+    """ST_TransformSrid — the Calcite/PostGIS 2-arg ST_Transform
+    idiom (Calcite's fun=spatial table exposes
+    ST_Transform(geom, srid INT), the signature a migrating user
+    writes): source CRS comes from the geometry's EWKB SRID tag
+    (untagged = 4326), target from the integer arg; the result
+    carries the target tag so chained transforms compose. Spark
+    UDF names are single-arity, so Engine.sql rewrites 2-arg
+    ST_Transform(g, n) call sites to this name; plain spark.sql
+    users can call it directly."""
+    src = wkb_srid(b) or 4326
+    g = geom_from_wkb(b)
+    if src != dst:
+        g = _map_coords(g, _crs_fn(f"EPSG:{src}", f"EPSG:{dst}"))
+    return geom_to_ewkb(g, dst)
+
+
+@_rowwise(T.BooleanType(), _TEXT, _TEXT)
+def _relate_match(m: str, p: str) -> bool | None:
+    # PostGIS ST_RelateMatch(matrix, pattern): string-level
+    if len(p) != 9 or len(m) != 9:
+        return None
+    for got, want in zip(m, p.upper()):
+        if want == "*":
+            continue
+        if want == "T":
+            if got == "F":
+                return False
+        elif got != want:
+            return False
+    return True
+
+
+@_rowwise(T.BinaryType(), _GEOM)
+def _make_polygon(g: Geom) -> Geom | None:
+    """ST_MakePolygon(shell): closed LineString ring -> Polygon
+    (single-arity form; holes variant not exposed — Spark UDF
+    names are single-arity). NULL for non-LineString or unclosed
+    input, mirroring the *FromText NULL-on-mismatch convention."""
+    if (
+        g.type != model.LINESTRING
+        or len(g.coords) < 4
+        or not bool(np.all(g.coords[0] == g.coords[-1]))
+    ):
+        return None
+    return Geom(model.POLYGON, [g.coords])
+
+
+@_rowwise(T.BinaryType(), _GEOM, _INT)
+def _geometry_n(g: Geom, i: int) -> Geom | None:
+    # JTS getGeometryN: 1-based DIRECT child of a multi/collection;
+    # for a single geometry, n=1 returns the geometry itself
+    if g.type in (
+        model.MULTIPOINT, model.MULTILINESTRING, model.MULTIPOLYGON,
+        model.GEOMETRYCOLLECTION,
+    ):
+        return g.coords[i - 1] if 1 <= i <= len(g.coords) else None
+    return g if i == 1 else None
+
+
+@_rowwise(T.StringType(), _WKB)
+def _as_ewkt(b: bytes) -> str:
+    s = wkb_srid(b)
+    txt = geom_to_wkt(geom_from_wkb(b))
+    return f"SRID={s};{txt}" if s else txt
+
+
+@_rowwise(T.BinaryType(), _TEXT, null_on=(Exception,))
+def _geom_from_ewkt(s: str) -> bytes:
+    s = s.strip()
+    srid = 0
+    msrid = _re.match(r"(?i)^SRID\s*=\s*(\d+)\s*;\s*", s)
+    if msrid:
+        srid = int(msrid.group(1))
+        s = s[msrid.end():]
+    return geom_to_ewkb(geom_from_wkt(s), srid)
+
+
+@_rowwise(T.BinaryType(), _GEOM, _INT, _INT)
+def _make_grid(g: Geom, nx: int, ny: int) -> Geom | None:
+    grid = _grid_cells(g, nx, ny)
+    if grid is None:
+        return None
+    xs, ys = grid
+    cells = [
+        model.box(xs[i], ys[j], xs[i + 1], ys[j + 1])
+        for j in range(len(ys) - 1)
+        for i in range(len(xs) - 1)
+    ]
+    return Geom(model.MULTIPOLYGON, cells)
+
+
+@_rowwise(T.BinaryType(), _GEOM, _INT, _INT)
+def _make_grid_points(g: Geom, nx: int, ny: int) -> Geom | None:
+    grid = _grid_cells(g, nx, ny)
+    if grid is None:
+        return None
+    xs, ys = grid
+    cx = (xs[:-1] + xs[1:]) / 2.0
+    cy = (ys[:-1] + ys[1:]) / 2.0
+    return Geom(model.MULTIPOINT, [model.point(x, y) for y in cy for x in cx])
+
+
+@_rowwise(T.BinaryType(), _GEOM)
+def _point_on_surface(g: Geom) -> Geom | None:
+    from geomesa_sql_spark.geom.de9im import _interior_points
+
+    if g.dimension() == 2:
+        pts = _interior_points(g)  # guaranteed strictly interior
+        return model.point(pts[0, 0], pts[0, 1]) if len(pts) else None
+    if g.dimension() == 1:
+        # a vertex ON the line (middle vertex of the first part)
+        c = g.flatten()[0].coords
+        v = c[len(c) // 2]
+        return model.point(float(v[0]), float(v[1]))
+    c = g.all_coords()
+    return model.point(float(c[0, 0]), float(c[0, 1])) if len(c) else None
+
+
+@_rowwise(T.BinaryType(), _GEOM, _NUM)
+def _reduce_precision(g: Geom, s: float) -> Geom | None:
+    if s <= 0.0:
+        return None
+    return _map_coords(g, lambda c: np.round(c / s) * s)
+
+
+@_rowwise(T.BinaryType(), _GEOM)
+def _octagonal_env(g: Geom) -> Geom | None:
+    # octagonal envelope: the bbox clipped by the four diagonal
+    # half-planes
+    c = g.all_coords()
+    if not len(c):
+        return None
+    x, y = c[:, 0], c[:, 1]
+    poly = [
+        (x.min(), y.min()), (x.max(), y.min()),
+        (x.max(), y.max()), (x.min(), y.max()),
+    ]
+    s, d = x + y, x - y
+    for a, b, cc in (
+        (-1.0, -1.0, -float(s.min())), (1.0, 1.0, float(s.max())),
+        (-1.0, 1.0, -float(d.min())), (1.0, -1.0, float(d.max())),
+    ):
+        poly = _clip_halfplane(poly, a, b, cc)
+    uniq: list = []
+    for p in poly:
+        if not uniq or (abs(p[0] - uniq[-1][0]) > 1e-12
+                        or abs(p[1] - uniq[-1][1]) > 1e-12):
+            uniq.append(p)
+    if len(uniq) >= 3:
+        return model.polygon(np.asarray(uniq))
+    if len(uniq) == 2:
+        return Geom(model.LINESTRING, np.asarray(uniq))
+    return model.point(*uniq[0]) if uniq else None
+
+
+@_rowwise(T.BinaryType(), _GEOM)
+def _min_rectangle(g: Geom) -> Geom:
+    # rotating calipers over the convex hull
+    h = _hull_pts(g)
+    if len(h) < 3:
+        # JTS degenerate contract: the hull itself
+        return kernel.convex_hull(g)
+    dirs, norms, _ = _caliper_frames(h)
+    pd_ = h @ dirs.T   # (n_pts, n_edges) projections
+    pn_ = h @ norms.T
+    areas = (pd_.max(0) - pd_.min(0)) * (pn_.max(0) - pn_.min(0))
+    bi = int(np.argmin(areas))
+    d, n = dirs[bi], norms[bi]
+    lo_d, hi_d = pd_[:, bi].min(), pd_[:, bi].max()
+    lo_n, hi_n = pn_[:, bi].min(), pn_[:, bi].max()
+    corners = np.array([
+        d * lo_d + n * lo_n, d * hi_d + n * lo_n,
+        d * hi_d + n * hi_n, d * lo_d + n * hi_n,
+    ])
+    return model.polygon(corners)
+
+
+@_rowwise(T.BinaryType(), _GEOM)
+def _min_diameter(g: Geom) -> Geom | None:
+    h = _hull_pts(g)
+    if len(h) == 0:
+        return None
+    if len(h) < 3:
+        p = h[0]
+        # width 0: the perpendicular segment degenerates to a
+        # point on the line (JTS returns a 0-length segment)
+        return Geom(model.LINESTRING, np.array([p, p]))
+    dirs, norms, anchors = _caliper_frames(h)
+    pn_ = h @ norms.T              # (n_pts, n_edges)
+    base = np.einsum("ej,ej->e", anchors, norms)  # offset per edge
+    dist = pn_ - base[None, :]
+    widths = np.abs(dist).max(0)
+    bi = int(np.argmin(widths))
+    pi = int(np.abs(dist[:, bi]).argmax())
+    far = h[pi]
+    foot = far - dist[pi, bi] * norms[bi]
+    return Geom(model.LINESTRING, np.array([foot, far]))
+
+
+@_rowwise(T.BinaryType(), _GEOM, _GEOM, _NUM)
+def _snap(a: Geom, b: Geom, t: float) -> Geom:
+    # vertex snapping (JTS additionally snaps to segment
+    # interiors; vertex-only is the documented subset here)
+    targets = b.all_coords()
+
+    def snap_coords(c: np.ndarray) -> np.ndarray:
+        if not len(targets) or not len(c):
+            return c
+        d2 = ((c[:, None, :] - targets[None, :, :]) ** 2).sum(-1)
+        j = d2.argmin(1)
+        hit = d2[np.arange(len(c)), j] <= t * t
+        c = c.copy()
+        c[hit] = targets[j[hit]]
+        return c
+
+    return _map_coords(a, snap_coords)
+
+
+@_rowwise(T.BinaryType(), _GEOM, _NUM, _NUM, _NUM, _NUM, _INT)
+def _as_mvt_geom(g: Geom, x0: float, y0: float, x1: float, y1: float, e: int):
+    # PostGIS ST_AsMVTGeom (no-clip form): geometry → tile-local
+    # integer coordinates (y grows DOWN from the envelope top), the
+    # SQL-surface twin of ops/vector_tiles quantization. Coordinates
+    # may exceed [0, extent) — clipping is the renderer's job (the
+    # same producer-clipping tradeoff io/mvt.py documents).
+    if x1 <= x0 or y1 <= y0 or e < 1:
+        return None
+    sx = e / (x1 - x0)
+    sy = e / (y1 - y0)
+
+    def qc(c):
+        cc = np.asarray(c, dtype=np.float64)
+        out = np.empty_like(cc)
+        out[..., 0] = np.floor((cc[..., 0] - x0) * sx)
+        out[..., 1] = np.floor((y1 - cc[..., 1]) * sy)
+        return out
+
+    return _map_coords(g, qc)
+
+
+@_rowwise(T.ArrayType(T.LongType()), _GEOM, _INT)
+def _s2_covering(g: Geom, level: int) -> list:
+    # S2_Covering(wkb, level): fixed-level S2 cells covering the
+    # geometry's lon/lat envelope (array<long>) — the SQL building
+    # block for user-side prune predicates (arrays_overlap /
+    # array_contains against an s2-indexed column). Capped like
+    # cells/s2.cover_rect: an oversized cover raises rather than
+    # silently truncating (dropping cells would drop matches).
+    from geomesa_sql_spark.cells import s2 as _s2
+
+    x0, y0, x1, y1 = g.envelope()
+    if x0 != x0:  # empty geometry
+        return []
+    x0, x1 = max(-180.0, x0), min(180.0, x1)
+    y0, y1 = max(-90.0, y0), min(90.0, y1)
+    return [int(c) for c in _s2.cover_rect(x0, y0, x1, y1, level)]
+
+
+_TYPE_CODE = {
+    model.POINT: 1, model.LINESTRING: 2, model.POLYGON: 3, model.MULTIPOINT: 4,
+    model.MULTILINESTRING: 5, model.MULTIPOLYGON: 6, model.GEOMETRYCOLLECTION: 7,
+}
+
+
+def _interior_rings(g: Geom) -> int | None:
+    return len(g.coords) - 1 if g.type == model.POLYGON else None
+
+
+# one-argument geometry measures and accessors: name -> (type, f(g))
+_GEOM_MEASURES = {
+    "ST_AsText": (T.StringType(), geom_to_wkt),
+    "ST_AsWKT": (T.StringType(), geom_to_wkt),
+    "ST_AsGeoJSON": (T.StringType(), geom_to_geojson),
+    "ST_X": (T.DoubleType(), lambda g: float(g.coords[0])),
+    "ST_Y": (T.DoubleType(), lambda g: float(g.coords[1])),
+    # planar 2D engine: Z/M are honestly absent, not silently zero
+    "ST_Z": (T.DoubleType(), lambda g: None),
+    "ST_Is3D": (T.BooleanType(), lambda g: False),
+    "ST_CoordDim": (T.IntegerType(), lambda g: 2),
+    "ST_Area": (T.DoubleType(), kernel.area),
+    "ST_Length": (T.DoubleType(), kernel.length),
+    # perimeter: boundary length of the polygonal parts; 0 otherwise
+    "ST_Perimeter": (
+        T.DoubleType(),
+        lambda g: float(
+            sum(kernel.length(p) for p in g.flatten() if p.type == model.POLYGON)
+        ),
+    ),
+    # ST_NPoints counts every coordinate of any geometry (ring-closure
+    # duplicates included), the count ST_NumPoints reports
+    "ST_NumPoints": (T.IntegerType(), lambda g: len(g.all_coords())),
+    "ST_NPoints": (T.IntegerType(), lambda g: len(g.all_coords())),
+    "ST_NumGeometries": (T.IntegerType(), lambda g: len(g.flatten())),
+    # Calcite/PostGIS both spell the interior-ring count with and
+    # without the trailing S
+    "ST_NumInteriorRing": (T.IntegerType(), _interior_rings),
+    "ST_NumInteriorRings": (T.IntegerType(), _interior_rings),
+    "ST_GeometryType": (T.StringType(), lambda g: g.type),
+    "ST_GeometryTypeCode": (T.IntegerType(), lambda g: _TYPE_CODE.get(g.type)),
+    "ST_Dimension": (T.IntegerType(), kernel.dimension),
+    "ST_IsEmpty": (T.BooleanType(), lambda g: g.all_coords().size == 0),
+    "ST_IsValid": (T.BooleanType(), kernel.is_valid),
+    "ST_IsSimple": (T.BooleanType(), _is_simple),
+    "ST_IsClosed": (T.BooleanType(), _closed_parts),
+    "ST_IsRing": (
+        T.BooleanType(),
+        lambda g: (bool(_closed_parts(g)) and _is_simple(g))
+        if g.type == model.LINESTRING
+        else None,
+    ),
+    "ST_IsRectangle": (T.BooleanType(), _jts_is_rectangle),
+    "ST_XMin": (T.DoubleType(), lambda g: g.envelope()[0]),
+    "ST_YMin": (T.DoubleType(), lambda g: g.envelope()[1]),
+    "ST_XMax": (T.DoubleType(), lambda g: g.envelope()[2]),
+    "ST_YMax": (T.DoubleType(), lambda g: g.envelope()[3]),
+    "ST_ConvexHull": (T.BinaryType(), kernel.convex_hull),
+    "ST_Boundary": (T.BinaryType(), kernel.boundary),
+    "ST_Centroid": (
+        T.BinaryType(),
+        lambda g: Geom(model.POINT, np.array(kernel.centroid(g), dtype=np.float64)),
+    ),
+    "ST_StartPoint": (T.BinaryType(), lambda g: _nth_point(g, 1)),
+    "ST_EndPoint": (T.BinaryType(), lambda g: _nth_point(g, len(g.all_coords()))),
+    "ST_ExteriorRing": (
+        T.BinaryType(),
+        lambda g: Geom(model.LINESTRING, g.coords[0])
+        if g.type == model.POLYGON and len(g.coords)
+        else None,
+    ),
+}
+
+
 def register_all(spark: SparkSession) -> None:
     """Expose the ST_* surface to spark.sql under Calcite's names."""
-    spark.udf.register("ST_AsText", _st_astext)
-    spark.udf.register("ST_AsWKT", _st_astext)
-    spark.udf.register("ST_GeomFromText", _st_geomfromtext)
-    spark.udf.register("ST_X", _st_x)
-    spark.udf.register("ST_Y", _st_y)
+    binary, boolean = T.BinaryType(), T.BooleanType()
+    for name, (rtype, fn) in _GEOM_MEASURES.items():
+        spark.udf.register(name, _rowwise(rtype, _GEOM)(fn))
+    from_wkb = _rowwise(binary, _WKB, null_on=(Exception,))(geom_from_wkb)
+    as_ewkb = _rowwise(binary, _WKB)(lambda b: geom_to_ewkb(geom_from_wkb(b), wkb_srid(b)))
+    per_row = {
+        # parse each distinct text once per batch
+        "ST_GeomFromText": _rowwise(binary, _TEXT, memo=True)(geom_from_wkt),
+        "ST_GeomFromGeoJSON": _rowwise(binary, _TEXT, null_on=(Exception,))(
+            lambda s: geom_from_geojson(json.loads(s))
+        ),
+        "ST_GeomFromEWKT": _geom_from_ewkt,
+        # validate + canonicalize to little-endian 2D WKB (accepts
+        # big-endian and EWKB-with-SRID input; NULL on undecodable
+        # bytes); geometry columns ARE WKB, so AsBinary strips any
+        # EWKB SRID tag
+        "ST_GeomFromWKB": from_wkb,
+        "ST_AsBinary": from_wkb,
+        "ST_AsWKB": from_wkb,
+        # the stored buffer IS (E)WKB, already carrying its SRID tag
+        # when one was set; round-trip through the decoder to normalize
+        "ST_AsEWKB": as_ewkb,
+        "ST_GeomFromEWKB": as_ewkb,
+        "ST_AsEWKT": _as_ewkt,
+        "ST_SRID": _rowwise(T.IntegerType(), _WKB)(wkb_srid),
+        # tag the top-level header PostGIS-EWKB-style. geom_from_wkb
+        # round-trips the tag, so tagged geometries stay usable across
+        # the whole pandas-UDF surface; the JVM point fast paths
+        # (cells/column.py) expect plain 21-byte point WKB and are
+        # documented to take untagged input
+        "ST_SetSRID": _rowwise(binary, _GEOM, _INT)(geom_to_ewkb),
+        "ST_Transform": _transform,
+        "ST_TransformSrid": _transform_srid,
+        "ST_Distance": _rowwise(T.DoubleType(), _GEOM, _GEOM)(kernel.distance),
+        "ST_AreaSphere": _st_area_sphere,
+        "ST_LengthSphere": _st_perimeter_sphere,
+        "ST_PerimeterSphere": _st_perimeter_sphere,
+        "ST_MakeEnvelope": _rowwise(binary, _NUM, _NUM, _NUM, _NUM)(model.box),
+        "ST_TileEnvelope": _tile_envelope,
+        # dissolve costs tens of ms per geometry — buffer each distinct
+        # (wkb, d) once per batch (joins repeat the small side's rows)
+        "ST_Buffer": _rowwise(binary, _WKB, _NUM, memo=True)(
+            lambda b, d: kernel.buffer_geom(geom_from_wkb(b), d)
+        ),
+        "ST_Simplify": _rowwise(binary, _GEOM, _NUM)(kernel.simplify),
+        "ST_Union": _union,
+        "ST_Split": _split,
+        "ST_EnvelopesIntersect": _envelopes_intersect,
+        "ST_MakeLine": _rowwise(binary, _GEOM, _GEOM)(
+            lambda a, b: Geom(
+                model.LINESTRING, np.concatenate([a.all_coords(), b.all_coords()])
+            )
+        ),
+        "ST_MakePolygon": _make_polygon,
+        "ST_PointN": _rowwise(binary, _GEOM, _INT)(_nth_point),
+        "ST_GeometryN": _geometry_n,
+        "ST_InteriorRingN": _rowwise(binary, _GEOM, _INT)(
+            lambda g, i: Geom(model.LINESTRING, g.coords[i])
+            if g.type == model.POLYGON and 1 <= i < len(g.coords)
+            else None
+        ),
+        # affine transforms (PostGIS-parity names)
+        "ST_Translate": _rowwise(binary, _GEOM, _NUM, _NUM)(
+            lambda g, dx, dy: _map_coords(g, lambda c: c + np.array([dx, dy]))
+        ),
+        "ST_Scale": _rowwise(binary, _GEOM, _NUM, _NUM)(
+            lambda g, sx, sy: _map_coords(g, lambda c: c * np.array([sx, sy]))
+        ),
+        "ST_Rotate": _rowwise(binary, _GEOM, _NUM)(
+            lambda g, theta: _map_coords(g, _rotation(theta))
+        ),
+        "ST_Azimuth": _azimuth,
+        "ST_LineInterpolatePoint": _line_interpolate,
+        # point of A nearest to B (PostGIS ST_ClosestPoint, A-side):
+        # candidates on A scored by their TRUE distance to B
+        "ST_ClosestPoint": _rowwise(binary, _GEOM, _GEOM)(
+            lambda a, b: Geom(model.POINT, kernel.closest_point(a, b))
+        ),
+        # PostGIS arity split: ST_Relate(a, b) -> the 9-char DE-9IM
+        # matrix; NULL for a GeometryCollection (JTS RelateOp parity)
+        "ST_Relate": _rowwise(T.StringType(), _GEOM, _GEOM, null_on=(ValueError,))(_de9im),
+        "ST_RelateMatch": _relate_match,
+        "ST_MakeGrid": _make_grid,
+        "ST_MakeGridPoints": _make_grid_points,
+        "ST_PointOnSurface": _point_on_surface,
+        "ST_ReducePrecision": _reduce_precision,
+        "ST_OctagonalEnvelope": _octagonal_env,
+        "ST_MinimumRectangle": _min_rectangle,
+        "ST_MinimumDiameter": _min_diameter,
+        "ST_Snap": _snap,
+        "ST_AsMVTGeom": _as_mvt_geom,
+        "S2_Covering": _s2_covering,
+    }
+    # boolean overlay constructors (geom/overlay.py — Calcite inherits
+    # these from JTS OverlayOp via jdbc/Driver.scala:51-56; NULL on
+    # GeometryCollection operands, which JTS rejects too)
+    for name, op in (
+        ("ST_Intersection", "intersection"),
+        ("ST_Difference", "difference"),
+        ("ST_SymDifference", "symdifference"),
+        ("ST_SymmetricDifference", "symdifference"),  # PostGIS alias
+    ):
+        per_row[name] = _rowwise(binary, _GEOM, _GEOM, null_on=(ValueError,))(
+            functools.partial(_overlay, op)
+        )
+    # derived DE-9IM predicates; matrix index layout:
+    # 0..8 = II IB IE BI BB BE EI EB EE
+    for name, check in (
+        ("ST_Covers", lambda m: m[6] == "F" and m[7] == "F"
+         and any(m[i] != "F" for i in (0, 1, 3, 4))),
+        ("ST_CoveredBy", lambda m: m[2] == "F" and m[5] == "F"
+         and any(m[i] != "F" for i in (0, 1, 3, 4))),
+        ("ST_ContainsProperly", lambda m: m[0] != "F" and m[3] == "F"
+         and m[4] == "F" and m[6] == "F" and m[7] == "F"),
+    ):
+        per_row[name] = _rowwise(boolean, _GEOM, _GEOM, null_on=(ValueError,))(
+            lambda a, b, check=check: check(_de9im(a, b))
+        )
+    # typed constructors from WKT and their VARBINARY twins (Calcite
+    # fun=spatial table): NULL on unparsable input or another type
+    for suffix, want in (
+        ("Point", model.POINT), ("Line", model.LINESTRING), ("Poly", model.POLYGON),
+        ("MPoint", model.MULTIPOINT), ("MLine", model.MULTILINESTRING),
+        ("MPoly", model.MULTIPOLYGON),
+    ):
+        per_row[f"ST_{suffix}FromText"] = _rowwise(binary, _TEXT, null_on=(Exception,))(
+            lambda s, want=want: _of_type(geom_from_wkt(s), want)
+        )
+        if suffix in ("Point", "Line", "Poly"):
+            per_row[f"ST_{suffix}FromWKB"] = _rowwise(binary, _WKB, null_on=(Exception,))(
+                lambda b, want=want: _of_type(geom_from_wkb(b), want)
+            )
+    for name, udf in per_row.items():
+        spark.udf.register(name, udf)
+
+    # ---- batch-vectorized UDFs (one kernel call per Arrow batch) and
+    # their SQL names; each handles NULL itself
     spark.udf.register("ST_MakePoint", st_point_wkb)
     spark.udf.register("ST_Point", st_point_wkb)
-    spark.udf.register("ST_Distance", _st_distance)
     # geography measures (geom/geodesic.py — PostGIS names; the planar
     # ST_Distance above keeps the reference's JTS Cartesian contract)
     spark.udf.register("ST_DistanceSphere", _st_distance_sphere)
     spark.udf.register("ST_Distance_Sphere", _st_distance_sphere)
     spark.udf.register("ST_DistanceSpheroid", _st_distance_spheroid)
     spark.udf.register("ST_DWithinSphere", _st_dwithin_sphere)
-    spark.udf.register("ST_AreaSphere", _st_area_sphere)
-    spark.udf.register("ST_LengthSphere", _st_perimeter_sphere)
-    spark.udf.register("ST_PerimeterSphere", _st_perimeter_sphere)
     spark.udf.register("ST_Envelope", st_envelope_wkb)
     for pred in RELATE_PREDICATES:
 
@@ -599,281 +1331,6 @@ def register_all(spark: SparkSession) -> None:
     spark.udf.register("ST_DWithin", _dwithin)
     spark.udf.register("ST_PointPredicate", _st_point_predicate)
 
-    @F.pandas_udf(T.BinaryType())
-    def _buffer(wkb: pd.Series, d: pd.Series) -> pd.Series:
-        # dissolve costs tens of ms per geometry — buffer each distinct
-        # (wkb, d) once per batch (joins repeat the small side's rows)
-        cache: dict[tuple[bytes, float], bytes] = {}
-        out = []
-        for b, dist in zip(wkb, d):
-            # pd.isna for the numeric arg: Arrow delivers NULL doubles
-            # as NaN, and a NaN distance would poison every ring coord
-            if b is None or pd.isna(dist):
-                out.append(None)
-                continue
-            key = (bytes(b), float(dist))
-            if key not in cache:
-                cache[key] = geom_to_wkb(
-                    kernel.buffer_geom(geom_from_wkb(key[0]), key[1])
-                )
-            out.append(cache[key])
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Buffer", _buffer)
-
-    @F.pandas_udf(T.BinaryType())
-    def _union(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        # dissolving union via the overlay kernel (JTS OverlayOp
-        # parity); GeometryCollection operands — which JTS rejects —
-        # fall back to the predicate-equivalent collection union
-        from geomesa_sql_spark.geom import overlay as _ov
-
-        out = []
-        for a, b in zip(wa, wb):
-            if a is None or b is None:
-                out.append(None)
-                continue
-            ga, gb = geom_from_wkb(bytes(a)), geom_from_wkb(bytes(b))
-            try:
-                out.append(geom_to_wkb(_ov.overlay(ga, gb, "union")))
-            except ValueError:
-                out.append(geom_to_wkb(kernel.union_geom(ga, gb)))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Union", _union)
-
-    # boolean overlay constructors (geom/overlay.py — Calcite inherits
-    # these from JTS OverlayOp via jdbc/Driver.scala:51-56; NULL on
-    # GeometryCollection operands, which JTS rejects too)
-    def _overlay_udf(op: str):
-        from geomesa_sql_spark.geom import overlay as _ov
-
-        @F.pandas_udf(T.BinaryType())
-        def _fn(wa: pd.Series, wb: pd.Series) -> pd.Series:
-            out = []
-            for a, b in zip(wa, wb):
-                if a is None or b is None:
-                    out.append(None)
-                    continue
-                try:
-                    out.append(
-                        geom_to_wkb(
-                            _ov.overlay(
-                                geom_from_wkb(bytes(a)), geom_from_wkb(bytes(b)), op
-                            )
-                        )
-                    )
-                except ValueError:
-                    out.append(None)
-            return pd.Series(out, dtype=object)
-
-        return _fn
-
-    spark.udf.register("ST_Intersection", _overlay_udf("intersection"))
-    spark.udf.register("ST_Difference", _overlay_udf("difference"))
-    _symdiff = _overlay_udf("symdifference")
-    spark.udf.register("ST_SymDifference", _symdiff)
-    spark.udf.register("ST_SymmetricDifference", _symdiff)  # PostGIS alias
-
-    @F.pandas_udf(T.BinaryType())
-    def _split(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        from geomesa_sql_spark.geom import overlay as _ov
-
-        out = []
-        for a, b in zip(wa, wb):
-            if a is None or b is None:
-                out.append(None)
-                continue
-            try:
-                out.append(
-                    geom_to_wkb(
-                        _ov.split_geom(
-                            geom_from_wkb(bytes(a)), geom_from_wkb(bytes(b))
-                        )
-                    )
-                )
-            except ValueError:
-                out.append(None)  # unsupported dimension pair
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Split", _split)
-
-    @F.pandas_udf(T.BinaryType())
-    def _union_aggr(wkb: pd.Series) -> bytes:
-        # grouped-agg dissolving union (Calcite's ST_UnionAggr /
-        # PostGIS ST_Union(agg)); one overlay pass over the group's
-        # pooled parts — isolated parts skip the splitting entirely
-        from geomesa_sql_spark.geom import overlay as _ov
-
-        geoms = [g for g in _decode_series(wkb) if g is not None]
-        if not geoms:
-            return None
-        return geom_to_wkb(_ov.union_all(geoms))
-
-    spark.udf.register("ST_UnionAggr", _union_aggr)
-    spark.udf.register("ST_Union_Aggr", _union_aggr)  # Calcite spelling
-
-    @F.pandas_udf(T.BinaryType())
-    def _makeenv(
-        minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series
-    ) -> pd.Series:
-        from geomesa_sql_spark.geom.model import box
-
-        return pd.Series(
-            [
-                None
-                if pd.isna(a) or pd.isna(b) or pd.isna(c) or pd.isna(e)
-                else geom_to_wkb(box(float(a), float(b), float(c), float(e)))
-                for a, b, c, e in zip(minx, miny, maxx, maxy)
-            ],
-            dtype=object,
-        )
-
-    spark.udf.register("ST_MakeEnvelope", _makeenv)
-
-    @F.pandas_udf(T.BinaryType())
-    def _tile_envelope(z: pd.Series, tx: pd.Series, ty: pd.Series) -> pd.Series:
-        # PostGIS ST_TileEnvelope(zoom, x, y): Web-Mercator XYZ tile
-        # bounds in EPSG:3857 (the PostGIS default grid — y grows
-        # south, origin top-left at (-A, A) with A = pi * 6378137)
-        from geomesa_sql_spark.geom.model import box
-
-        A = 20037508.342789244
-        out = []
-        for zz, xx, yy in zip(z, tx, ty):
-            # pd.isna, not `is None`: Arrow delivers NULL ints to the
-            # UDF as float NaN (review r4d)
-            if pd.isna(zz) or pd.isna(xx) or pd.isna(yy):
-                out.append(None)
-                continue
-            zz, xx, yy = int(zz), int(xx), int(yy)
-            if not 0 <= zz <= 30:
-                out.append(None)
-                continue
-            n = 1 << zz
-            if not (0 <= xx < n and 0 <= yy < n):
-                out.append(None)
-                continue
-            size = 2.0 * A / n
-            out.append(
-                geom_to_wkb(
-                    box(
-                        -A + xx * size,
-                        A - (yy + 1) * size,
-                        -A + (xx + 1) * size,
-                        A - yy * size,
-                    )
-                )
-            )
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_TileEnvelope", _tile_envelope)
-
-    def _measure(fn, dtype=T.DoubleType()):
-        @F.pandas_udf(dtype)
-        def _udf(wkb: pd.Series) -> pd.Series:
-            return pd.Series(
-                [None if g is None else fn(g) for g in _decode_series(wkb)]
-            )
-
-        return _udf
-
-    spark.udf.register("ST_Area", _measure(kernel.area))
-    spark.udf.register("ST_Length", _measure(kernel.length))
-    spark.udf.register("ST_NumPoints", _measure(lambda g: len(g.all_coords()), T.IntegerType()))
-    spark.udf.register("ST_GeometryType", _measure(lambda g: g.type, T.StringType()))
-    spark.udf.register(
-        "ST_IsEmpty", _measure(lambda g: g.all_coords().size == 0, T.BooleanType())
-    )
-    spark.udf.register("ST_XMin", _measure(lambda g: g.envelope()[0]))
-    spark.udf.register("ST_YMin", _measure(lambda g: g.envelope()[1]))
-    spark.udf.register("ST_XMax", _measure(lambda g: g.envelope()[2]))
-    spark.udf.register("ST_YMax", _measure(lambda g: g.envelope()[3]))
-
-    @F.pandas_udf(T.BinaryType())
-    def _simplify(wkb: pd.Series, tol: pd.Series) -> pd.Series:
-        out = []
-        for b, t in zip(wkb, tol):
-            if b is None or pd.isna(t):
-                out.append(None)
-            else:
-                out.append(
-                    geom_to_wkb(kernel.simplify(geom_from_wkb(bytes(b)), float(t)))
-                )
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Simplify", _simplify)
-
-    @F.pandas_udf(T.BinaryType())
-    def _hull(wkb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if g is None else geom_to_wkb(kernel.convex_hull(g))
-                for g in _decode_series(wkb)
-            ],
-            dtype=object,
-        )
-
-    spark.udf.register("ST_ConvexHull", _hull)
-
-    def _map_coords(g: Geom, fn) -> Geom:
-        if g.type == "Point":
-            return Geom("Point", fn(g.coords.reshape(1, 2))[0])
-        if g.type == "LineString":
-            return Geom("LineString", fn(g.coords))
-        if g.type == "Polygon":
-            return Geom("Polygon", [fn(r) for r in g.coords])
-        return Geom(g.type, [_map_coords(p, fn) for p in g.coords])
-
-    @F.pandas_udf(T.BinaryType())
-    def _transform(wkb: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
-        """ST_Transform. Every supported pair — 4326/4269 geographic,
-        3857 web mercator, UTM zones (geom/crs.py's Krüger-series
-        table, the codes migrating data actually lives in) — resolves
-        through ONE implementation, transform_fn, chaining non-trivial
-        pairs through geographic degrees (the r4 review folded the old
-        standalone mercator twins into it: one source of truth keeps
-        the oracle hash gates honest). Unsupported codes raise loudly —
-        the reference gets arbitrary CRS from proj4j, which this
-        container doesn't have (VERDICT r3 missing #2)."""
-        from geomesa_sql_spark.geom.crs import supported_crs_table, transform_fn
-
-        fns: dict[tuple[str, str], object] = {}
-        out = []
-        for b, s, d in zip(wkb, src, dst):
-            if b is None or s is None or d is None:
-                out.append(None)  # NULL-in -> NULL-out (review r3)
-                continue
-            if s == d:
-                out.append(bytes(b))
-                continue
-            if (s, d) not in fns:
-                fns[(s, d)] = transform_fn(s, d)
-            fn = fns[(s, d)]
-            if fn is None:
-                raise NotImplementedError(
-                    f"ST_Transform {s}->{d}; supported: {supported_crs_table()}"
-                )
-            out.append(geom_to_wkb(_map_coords(geom_from_wkb(bytes(b)), fn)))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Transform", _transform)
-
-    @F.pandas_udf(T.BinaryType())
-    def _centroid(wkb: pd.Series) -> pd.Series:
-        out = []
-        for g in _decode_series(wkb):
-            if g is None:
-                out.append(None)
-            else:
-                cx, cy = kernel.centroid(g)
-                out.append(geom_to_wkb(Geom("Point", np.array([cx, cy]))))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Centroid", _centroid)
-
-    # ---- remaining Calcite fun=spatial names (cheap surface parity) ----
-
     @F.pandas_udf(T.BooleanType())
     def _disjoint(wa: pd.Series, wb: pd.Series) -> pd.Series:
         # SQL three-valued: NULL geom → NULL (unlike the join-refine
@@ -889,847 +1346,20 @@ def register_all(spark: SparkSession) -> None:
 
     spark.udf.register("ST_Disjoint", _disjoint)
 
-    @F.pandas_udf(T.BooleanType())
-    def _env_intersect(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        out = []
-        for ga, gb in zip(_decode_series(wa), _decode_series(wb)):
-            if ga is None or gb is None:
-                out.append(None)
-                continue
-            a = ga.envelope()
-            b = gb.envelope()
-            out.append(
-                a[0] <= b[2] and b[0] <= a[2] and a[1] <= b[3] and b[1] <= a[3]
-            )
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_EnvelopesIntersect", _env_intersect)
-
     @F.pandas_udf(T.BinaryType())
-    def _makeline(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        out = []
-        for ga, gb in zip(_decode_series(wa), _decode_series(wb)):
-            if ga is None or gb is None:
-                out.append(None)
-                continue
-            coords = np.concatenate([ga.all_coords(), gb.all_coords()])
-            out.append(geom_to_wkb(Geom("LineString", coords)))
-        return pd.Series(out, dtype=object)
+    def _union_aggr(wkb: pd.Series) -> bytes:
+        # grouped-agg dissolving union (Calcite's ST_UnionAggr /
+        # PostGIS ST_Union(agg)); one overlay pass over the group's
+        # pooled parts — isolated parts skip the splitting entirely
+        from geomesa_sql_spark.geom import overlay as _ov
 
-    spark.udf.register("ST_MakeLine", _makeline)
-
-    spark.udf.register(
-        "ST_NumGeometries",
-        _measure(lambda g: len(g.flatten()), T.IntegerType()),
-    )
-
-    def _nth_point(g: Geom, n: int):
-        """1-based nth vertex of a LineString (None otherwise) — the
-        PostGIS/Calcite ST_PointN contract."""
-        if g is None or g.type != "LineString":
+        geoms = [g for g in _decode_series(wkb) if g is not None]
+        if not geoms:
             return None
-        pts = g.all_coords()
-        if n < 1 or n > len(pts):
-            return None
-        return geom_to_wkb(Geom("Point", pts[n - 1]))
+        return geom_to_wkb(_ov.union_all(geoms))
 
-    @F.pandas_udf(T.BinaryType())
-    def _pointn(wkb: pd.Series, n: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                _nth_point(g, int(k)) if k is not None else None
-                for g, k in zip(_decode_series(wkb), n)
-            ],
-            dtype=object,
-        )
-
-    spark.udf.register("ST_PointN", _pointn)
-
-    @F.pandas_udf(T.BinaryType())
-    def _startpoint(wkb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_nth_point(g, 1) for g in _decode_series(wkb)], dtype=object
-        )
-
-    spark.udf.register("ST_StartPoint", _startpoint)
-
-    @F.pandas_udf(T.BinaryType())
-    def _endpoint(wkb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if g is None or g.type != "LineString"
-                else _nth_point(g, len(g.all_coords()))
-                for g in _decode_series(wkb)
-            ],
-            dtype=object,
-        )
-
-    spark.udf.register("ST_EndPoint", _endpoint)
-
-    # ---- affine transforms + line referencing (PostGIS-parity names
-    # the reference's users reach for next; all vectorized per row via
-    # the same _map_coords machinery as ST_Transform)
-
-    def _affine(fn_builder):
-        @F.pandas_udf(T.BinaryType())
-        def _udf(wkb: pd.Series, *args: pd.Series) -> pd.Series:
-            out = []
-            for vals in zip(wkb, *args):
-                b, params = vals[0], vals[1:]
-                if b is None or any(p is None for p in params):
-                    out.append(None)
-                    continue
-                fn = fn_builder(*[float(p) for p in params])
-                out.append(geom_to_wkb(_map_coords(geom_from_wkb(bytes(b)), fn)))
-            return pd.Series(out, dtype=object)
-
-        return _udf
-
-    spark.udf.register(
-        "ST_Translate",
-        _affine(lambda dx, dy: (lambda c: c + np.array([dx, dy]))),
-    )
-    spark.udf.register(
-        "ST_Scale",
-        _affine(lambda sx, sy: (lambda c: c * np.array([sx, sy]))),
-    )
-
-    def _rot(theta: float):
-        ct, st_ = np.cos(theta), np.sin(theta)
-        m = np.array([[ct, -st_], [st_, ct]])
-        return lambda c: c @ m.T
-
-    # PostGIS ST_Rotate rotates about the origin, angle in radians CCW
-    spark.udf.register("ST_Rotate", _affine(_rot))
-
-    @F.pandas_udf(T.DoubleType())
-    def _azimuth(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        """North-based clockwise azimuth in radians between two points
-        (PostGIS ST_Azimuth); NULL for coincident points."""
-        out = []
-        for a, b in zip(_decode_series(wa), _decode_series(wb)):
-            if a is None or b is None or a.type != "Point" or b.type != "Point":
-                out.append(None)
-                continue
-            dx = float(b.coords[0] - a.coords[0])
-            dy = float(b.coords[1] - a.coords[1])
-            if dx == 0.0 and dy == 0.0:
-                out.append(None)
-                continue
-            out.append(float(np.arctan2(dx, dy) % (2.0 * np.pi)))
-        return pd.Series(out, dtype="float64")
-
-    spark.udf.register("ST_Azimuth", _azimuth)
-
-    @F.pandas_udf(T.BinaryType())
-    def _line_interpolate(wkb: pd.Series, frac: pd.Series) -> pd.Series:
-        """Point at ``frac`` ∈ [0,1] of a LineString's length
-        (PostGIS ST_LineInterpolatePoint)."""
-        out = []
-        for g, f in zip(_decode_series(wkb), frac):
-            if g is None or f is None or g.type != "LineString":
-                out.append(None)
-                continue
-            f = min(max(float(f), 0.0), 1.0)
-            pts = g.coords
-            seg = np.diff(pts, axis=0)
-            ln = np.hypot(seg[:, 0], seg[:, 1])
-            total = float(ln.sum())
-            if total == 0.0:
-                out.append(geom_to_wkb(Geom("Point", pts[0].copy())))
-                continue
-            target = f * total
-            cum = np.concatenate([[0.0], np.cumsum(ln)])
-            i = int(np.searchsorted(cum, target, side="right") - 1)
-            i = min(i, len(seg) - 1)
-            t = (target - cum[i]) / ln[i] if ln[i] > 0 else 0.0
-            out.append(geom_to_wkb(Geom("Point", pts[i] + t * seg[i])))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_LineInterpolatePoint", _line_interpolate)
-
-    @F.pandas_udf(T.BinaryType())
-    def _closest_point(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        """Point of geometry A nearest to geometry B (PostGIS
-        ST_ClosestPoint, A-side): candidates on A scored by their TRUE
-        distance to B — see ``kernel.closest_point``."""
-        out = []
-        for a, b in zip(_decode_series(wa), _decode_series(wb)):
-            if a is None or b is None:
-                out.append(None)
-                continue
-            out.append(geom_to_wkb(Geom("Point", kernel.closest_point(a, b))))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_ClosestPoint", _closest_point)
-
-    # ---- WKB / SRID accessors (inherited Calcite fun=spatial surface,
-    # jdbc/Driver.scala:51-56 — the functions a sqlline user migrating
-    # real queries reaches for first; VERDICT r2 missing #2)
-
-    @F.pandas_udf(T.BinaryType())
-    def _geom_from_wkb(wb: pd.Series) -> pd.Series:
-        """ST_GeomFromWKB: validate + canonicalize to little-endian 2D
-        WKB (accepts big-endian and EWKB-with-SRID input; NULL on
-        undecodable bytes)."""
-        out = []
-        for b in wb:
-            if b is None:
-                out.append(None)
-                continue
-            try:
-                out.append(geom_to_wkb(geom_from_wkb(bytes(b))))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_GeomFromWKB", _geom_from_wkb)
-    # geometry columns ARE WKB; AsBinary strips any EWKB SRID tag
-    spark.udf.register("ST_AsBinary", _geom_from_wkb)
-    spark.udf.register("ST_AsWKB", _geom_from_wkb)
-
-    @F.pandas_udf(T.IntegerType())
-    def _srid(wb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else wkb_srid(bytes(b)) for b in wb],
-            dtype="Int32",
-        )
-
-    spark.udf.register("ST_SRID", _srid)
-
-    @F.pandas_udf(T.BinaryType())
-    def _set_srid(wb: pd.Series, srid: pd.Series) -> pd.Series:
-        """ST_SetSRID: tag the top-level header PostGIS-EWKB-style.
-        geom_from_wkb round-trips the tag, so tagged geometries stay
-        usable across the whole pandas-UDF surface; the JVM point
-        fast paths (cells/column.py) expect plain 21-byte point WKB
-        and are documented to take untagged input."""
-        out = []
-        for b, s in zip(wb, srid):
-            if b is None or s is None:
-                out.append(None)
-                continue
-            out.append(geom_to_ewkb(geom_from_wkb(bytes(b)), int(s)))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_SetSRID", _set_srid)
-
-    @F.pandas_udf(T.BinaryType())
-    def _transform_srid(wb: pd.Series, srid: pd.Series) -> pd.Series:
-        """ST_TransformSrid — the Calcite/PostGIS 2-arg ST_Transform
-        idiom (Calcite's fun=spatial table exposes
-        ST_Transform(geom, srid INT), the signature a migrating user
-        writes): source CRS comes from the geometry's EWKB SRID tag
-        (untagged = 4326), target from the integer arg; the result
-        carries the target tag so chained transforms compose. Spark
-        UDF names are single-arity, so Engine.sql rewrites 2-arg
-        ST_Transform(g, n) call sites to this name; plain spark.sql
-        users can call it directly."""
-        from geomesa_sql_spark.geom.crs import supported_crs_table, transform_fn
-        from geomesa_sql_spark.geom.wkb import wkb_srid
-
-        fns: dict[tuple[str, str], object] = {}
-        out = []
-        for b, s in zip(wb, srid):
-            if b is None or s is None:
-                out.append(None)
-                continue
-            b = bytes(b)
-            dst = int(s)
-            src = wkb_srid(b) or 4326
-            if src == dst:
-                out.append(geom_to_ewkb(geom_from_wkb(b), dst))
-                continue
-            key = (f"EPSG:{src}", f"EPSG:{dst}")
-            if key not in fns:
-                fns[key] = transform_fn(*key)
-            fn = fns[key]
-            if fn is None:
-                raise NotImplementedError(
-                    f"ST_Transform {key[0]}->{key[1]}; "
-                    f"supported: {supported_crs_table()}"
-                )
-            out.append(geom_to_ewkb(_map_coords(geom_from_wkb(b), fn), dst))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_TransformSrid", _transform_srid)
-
-    @F.pandas_udf(T.BinaryType())
-    def _boundary(wb: pd.Series) -> pd.Series:
-        out = []
-        for g in _decode_series(wb):
-            if g is None:
-                out.append(None)
-                continue
-            bg = kernel.boundary(g)
-            out.append(None if bg is None else geom_to_wkb(bg))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Boundary", _boundary)
-
-    @F.pandas_udf(T.BooleanType())
-    def _is_valid(wb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if g is None else kernel.is_valid(g) for g in _decode_series(wb)]
-        )
-
-    spark.udf.register("ST_IsValid", _is_valid)
-    spark.udf.register(
-        "ST_Dimension", _measure(kernel.dimension, T.IntegerType())
-    )
-
-    # PostGIS arity split: ST_Relate(a, b) -> the 9-char DE-9IM matrix;
-    # ST_RelateMatch(matrix, pattern) -> boolean (string-level, exactly
-    # PostGIS's function of the same name)
-    from geomesa_sql_spark.geom.de9im import de9im as _de9im_fn
-
-    @F.pandas_udf(T.StringType())
-    def _relate_matrix(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        out = []
-        for a, b in zip(_decode_series(wa), _decode_series(wb)):
-            if a is None or b is None:
-                out.append(None)
-                continue
-            try:
-                out.append(_de9im_fn(a, b))
-            except ValueError:  # GeometryCollection: JTS RelateOp parity
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Relate", _relate_matrix)
-
-    @F.pandas_udf(T.BooleanType())
-    def _relate_match(mat: pd.Series, pat: pd.Series) -> pd.Series:
-        def match(m, p):
-            if m is None or p is None or len(p) != 9 or len(m) != 9:
-                return None
-            for got, want in zip(m, p.upper()):
-                if want == "*":
-                    continue
-                if want == "T":
-                    if got == "F":
-                        return False
-                elif got != want:
-                    return False
-            return True
-
-        return pd.Series([match(m, p) for m, p in zip(mat, pat)])
-
-    spark.udf.register("ST_RelateMatch", _relate_match)
-
-    from geomesa_sql_spark.geom.de9im import is_simple as _is_simple_fn
-
-    @F.pandas_udf(T.BooleanType())
-    def _is_simple(wb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if g is None else _is_simple_fn(g)
-             for g in _decode_series(wb)]
-        )
-
-    spark.udf.register("ST_IsSimple", _is_simple)
-
-    # ------------------------------------------------ Calcite-table fill-in
-    # (round-3 continuation): derived DE-9IM predicates, typed WKT
-    # constructors, ring accessors, Z/3D stubs, precision, and the two
-    # aggregate functions — closing the remaining gap against Calcite's
-    # fun=spatial operator table (jdbc/Driver.scala:51-56).
-
-    def _matrix_pred(check):
-        @F.pandas_udf(T.BooleanType())
-        def _udf(wa: pd.Series, wb: pd.Series) -> pd.Series:
-            out = []
-            for a, b in zip(_decode_series(wa), _decode_series(wb)):
-                if a is None or b is None:
-                    out.append(None)
-                    continue
-                try:
-                    out.append(check(_de9im_fn(a, b)))
-                except ValueError:  # GeometryCollection
-                    out.append(None)
-            return pd.Series(out, dtype=object)
-
-        return _udf
-
-    # matrix index layout: 0..8 = II IB IE BI BB BE EI EB EE
-    spark.udf.register(
-        "ST_Covers",
-        _matrix_pred(lambda m: m[6] == "F" and m[7] == "F"
-                     and any(m[i] != "F" for i in (0, 1, 3, 4))),
-    )
-    spark.udf.register(
-        "ST_CoveredBy",
-        _matrix_pred(lambda m: m[2] == "F" and m[5] == "F"
-                     and any(m[i] != "F" for i in (0, 1, 3, 4))),
-    )
-    spark.udf.register(
-        "ST_ContainsProperly",
-        _matrix_pred(lambda m: m[0] != "F" and m[3] == "F" and m[4] == "F"
-                     and m[6] == "F" and m[7] == "F"),
-    )
-
-    def _typed_from_text(*want_types):
-        @F.pandas_udf(T.BinaryType())
-        def _udf(wkt: pd.Series) -> pd.Series:
-            out = []
-            for s in wkt:
-                if s is None:
-                    out.append(None)
-                    continue
-                try:
-                    g = geom_from_wkt(str(s))
-                except Exception:
-                    out.append(None)
-                    continue
-                out.append(geom_to_wkb(g) if g.type in want_types else None)
-            return pd.Series(out, dtype=object)
-
-        return _udf
-
-    from geomesa_sql_spark.geom import model as _m
-
-    spark.udf.register("ST_PointFromText", _typed_from_text(_m.POINT))
-    spark.udf.register("ST_LineFromText", _typed_from_text(_m.LINESTRING))
-    spark.udf.register("ST_PolyFromText", _typed_from_text(_m.POLYGON))
-    spark.udf.register("ST_MPointFromText", _typed_from_text(_m.MULTIPOINT))
-    spark.udf.register("ST_MLineFromText", _typed_from_text(_m.MULTILINESTRING))
-    spark.udf.register("ST_MPolyFromText", _typed_from_text(_m.MULTIPOLYGON))
-
-    def _typed_from_wkb(*want_types):
-        # VARBINARY twins of the *FromText family (Calcite fun=spatial
-        # table): canonicalize like ST_GeomFromWKB, NULL when the
-        # decoded type is not the requested one (H2GIS semantics)
-        @F.pandas_udf(T.BinaryType())
-        def _udf(wb: pd.Series) -> pd.Series:
-            out = []
-            for b in wb:
-                if b is None:
-                    out.append(None)
-                    continue
-                try:
-                    g = geom_from_wkb(bytes(b))
-                except Exception:
-                    out.append(None)
-                    continue
-                out.append(geom_to_wkb(g) if g.type in want_types else None)
-            return pd.Series(out, dtype=object)
-
-        return _udf
-
-    spark.udf.register("ST_PointFromWKB", _typed_from_wkb(_m.POINT))
-    spark.udf.register("ST_LineFromWKB", _typed_from_wkb(_m.LINESTRING))
-    spark.udf.register("ST_PolyFromWKB", _typed_from_wkb(_m.POLYGON))
-
-    # boundary-closure accessors (H2GIS/Calcite: defined for
-    # LINESTRING/MULTILINESTRING, NULL for every other type)
-    def _closed_parts(g):
-        if g.type == _m.LINESTRING:
-            parts = [g]
-        elif g.type == _m.MULTILINESTRING:
-            parts = g.flatten()
-        else:
-            return None
-        if not parts:
-            # JTS MultiLineString.isClosed(): empty -> false, not
-            # vacuously true
-            return False
-        return all(
-            len(p.coords) > 1 and bool(np.all(p.coords[0] == p.coords[-1]))
-            for p in parts
-        )
-
-    spark.udf.register(
-        "ST_IsClosed", _measure(_closed_parts, T.BooleanType())
-    )
-    spark.udf.register(
-        "ST_IsRing",
-        _measure(
-            lambda g: (bool(_closed_parts(g)) and _is_simple_fn(g))
-            if g.type == _m.LINESTRING
-            else None,
-            T.BooleanType(),
-        ),
-    )
-
-    # ST_NPoints counts every coordinate of any geometry (ring-closure
-    # duplicates included) — same count our ST_NumPoints reports
-    spark.udf.register(
-        "ST_NPoints", _measure(lambda g: len(g.all_coords()), T.IntegerType())
-    )
-    # perimeter: boundary length of the polygonal parts; 0 otherwise
-    spark.udf.register(
-        "ST_Perimeter",
-        _measure(
-            lambda g: float(
-                sum(
-                    kernel.length(p)
-                    for p in g.flatten()
-                    if p.type == _m.POLYGON
-                )
-            )
-        ),
-    )
-    # 2D engine: coordinate dimension is always 2
-    spark.udf.register(
-        "ST_CoordDim", _measure(lambda g: 2, T.IntegerType())
-    )
-
-    @F.pandas_udf(T.BinaryType())
-    def _make_polygon(wb: pd.Series) -> pd.Series:
-        """ST_MakePolygon(shell): closed LineString ring -> Polygon
-        (single-arity form; holes variant not exposed — Spark UDF
-        names are single-arity). NULL for non-LineString or unclosed
-        input, mirroring the *FromText NULL-on-mismatch convention."""
-        out = []
-        for g in _decode_series(wb):
-            if (
-                g is None
-                or g.type != _m.LINESTRING
-                or len(g.coords) < 4
-                or not bool(np.all(g.coords[0] == g.coords[-1]))
-            ):
-                out.append(None)
-                continue
-            out.append(geom_to_wkb(Geom(_m.POLYGON, [g.coords])))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_MakePolygon", _make_polygon)
-
-    # planar 2D engine: Z/M are honestly absent, not silently zero
-    spark.udf.register(
-        "ST_Is3D", _measure(lambda g: False, T.BooleanType())
-    )
-    spark.udf.register("ST_Z", _measure(lambda g: None))
-    _TYPE_CODE = {
-        _m.POINT: 1, _m.LINESTRING: 2, _m.POLYGON: 3, _m.MULTIPOINT: 4,
-        _m.MULTILINESTRING: 5, _m.MULTIPOLYGON: 6, _m.GEOMETRYCOLLECTION: 7,
-    }
-    spark.udf.register(
-        "ST_GeometryTypeCode",
-        _measure(lambda g: _TYPE_CODE.get(g.type), T.IntegerType()),
-    )
-    spark.udf.register(
-        "ST_NumInteriorRing",
-        _measure(
-            lambda g: len(g.coords) - 1 if g.type == _m.POLYGON else None,
-            T.IntegerType(),
-        ),
-    )
-
-    def _ring_udf(pick):
-        @F.pandas_udf(T.BinaryType())
-        def _udf(wkb: pd.Series, n: pd.Series) -> pd.Series:
-            out = []
-            for g, i in zip(_decode_series(wkb), n):
-                r = None if g is None or i is None else pick(g, int(i))
-                out.append(None if r is None else geom_to_wkb(r))
-            return pd.Series(out, dtype=object)
-
-        return _udf
-
-    spark.udf.register(
-        "ST_InteriorRingN",
-        _ring_udf(
-            lambda g, i: Geom(_m.LINESTRING, g.coords[i])
-            if g.type == _m.POLYGON and 1 <= i < len(g.coords)
-            else None
-        ),
-    )
-
-    @F.pandas_udf(T.BinaryType())
-    def _exterior_ring(wkb: pd.Series) -> pd.Series:
-        out = []
-        for g in _decode_series(wkb):
-            if g is None or g.type != _m.POLYGON or not len(g.coords):
-                out.append(None)
-            else:
-                out.append(geom_to_wkb(Geom(_m.LINESTRING, g.coords[0])))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_ExteriorRing", _exterior_ring)
-
-    # ------------------------------------------- Calcite-table fill-in, 2
-    # (round-3 continuation, second pass): part accessor, rectangle
-    # test, GeoJSON + EWKT/EWKB text surfaces, and the grid makers —
-    # the last names of Calcite's fun=spatial table
-    # (jdbc/Driver.scala:51-56) still absent here.
-
-    _MULTI_TYPES = (
-        _m.MULTIPOINT, _m.MULTILINESTRING, _m.MULTIPOLYGON,
-        _m.GEOMETRYCOLLECTION,
-    )
-
-    @F.pandas_udf(T.BinaryType())
-    def _geometry_n(wkb: pd.Series, n: pd.Series) -> pd.Series:
-        # JTS getGeometryN: 1-based DIRECT child of a multi/collection;
-        # for a single geometry, n=1 returns the geometry itself
-        out = []
-        for g, i in zip(_decode_series(wkb), n):
-            if g is None or i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            if g.type in _MULTI_TYPES:
-                parts = list(g.coords)
-                out.append(
-                    geom_to_wkb(parts[i - 1]) if 1 <= i <= len(parts) else None
-                )
-            else:
-                out.append(geom_to_wkb(g) if i == 1 else None)
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_GeometryN", _geometry_n)
-
-    def _is_rectangle(g: Geom) -> bool:
-        # JTS isRectangle: a single polygon, no holes, 4 corners, every
-        # vertex on the envelope corner set and all 4 corners present.
-        # Structural (exact comparisons on STORED coordinates) — a
-        # computed-area equality would be float-brittle for cells whose
-        # shoelace sum rounds differently from (dx * dy).
-        if g.type != _m.POLYGON or len(g.coords) != 1:
-            return False
-        ring = np.asarray(g.coords[0], dtype=np.float64)
-        if len(ring) != 5:
-            return False
-        x0, y0, x1, y1 = g.envelope()
-        if x0 == x1 or y0 == y1:
-            return False
-        on_corner = (
-            np.isin(ring[:, 0], (x0, x1)) & np.isin(ring[:, 1], (y0, y1))
-        )
-        if not on_corner.all():
-            return False
-        corners = {(x, y) for x, y in ring[:-1]}
-        if corners != {(x0, y0), (x1, y0), (x1, y1), (x0, y1)}:
-            return False
-        # consecutive vertices must differ in exactly one ordinate
-        # (rules out the bowtie vertex order)
-        dx = ring[1:, 0] != ring[:-1, 0]
-        dy = ring[1:, 1] != ring[:-1, 1]
-        return bool((dx ^ dy).all())
-
-    spark.udf.register(
-        "ST_IsRectangle", _measure(_is_rectangle, T.BooleanType())
-    )
-    # Calcite/PostGIS both spell the interior-ring count with and
-    # without the trailing S
-    spark.udf.register(
-        "ST_NumInteriorRings",
-        _measure(
-            lambda g: len(g.coords) - 1 if g.type == _m.POLYGON else None,
-            T.IntegerType(),
-        ),
-    )
-
-    # ---- GeoJSON text surface (RFC 7946 geometry objects, 2D) ----
-    # pure converters shared with the io/geojson.py file source
-    from geomesa_sql_spark.geom.geojson import (
-        geom_from_geojson as _from_geojson,
-        geom_to_geojson as _to_geojson,
-    )
-
-    @F.pandas_udf(T.StringType())
-    def _as_geojson(wkb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if g is None else _to_geojson(g)
-             for g in _decode_series(wkb)],
-            dtype=object,
-        )
-
-    spark.udf.register("ST_AsGeoJSON", _as_geojson)
-
-    @F.pandas_udf(T.BinaryType())
-    def _geom_from_geojson(txt: pd.Series) -> pd.Series:
-        import json
-
-        out = []
-        for s in txt:
-            if s is None:
-                out.append(None)
-                continue
-            try:
-                out.append(geom_to_wkb(_from_geojson(json.loads(str(s)))))
-            except Exception:
-                out.append(None)  # malformed JSON → NULL (constructor parity)
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_GeomFromGeoJSON", _geom_from_geojson)
-
-    # ---- EWKT / EWKB (PostGIS extended forms; SRID rides the EWKB
-    # tag this engine already uses for ST_SRID/ST_SetSRID) ----
-
-    @F.pandas_udf(T.StringType())
-    def _as_ewkt(wkb: pd.Series) -> pd.Series:
-        from geomesa_sql_spark.geom.wkb import wkb_srid
-        from geomesa_sql_spark.geom.wkt import geom_to_wkt
-
-        out = []
-        for b in wkb:
-            if b is None:
-                out.append(None)
-                continue
-            b = bytes(b)
-            s = wkb_srid(b)
-            txt = geom_to_wkt(geom_from_wkb(b))
-            out.append(f"SRID={s};{txt}" if s else txt)
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_AsEWKT", _as_ewkt)
-
-    @F.pandas_udf(T.BinaryType())
-    def _geom_from_ewkt(txt: pd.Series) -> pd.Series:
-        from geomesa_sql_spark.geom.wkb import geom_to_ewkb as _to_ewkb
-
-        out = []
-        for s in txt:
-            if s is None:
-                out.append(None)
-                continue
-            s = str(s).strip()
-            srid = 0
-            msrid = _re.match(r"(?i)^SRID\s*=\s*(\d+)\s*;\s*", s)
-            if msrid:
-                srid = int(msrid.group(1))
-                s = s[msrid.end():]
-            try:
-                out.append(_to_ewkb(geom_from_wkt(s), srid))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_GeomFromEWKT", _geom_from_ewkt)
-
-    @F.pandas_udf(T.BinaryType())
-    def _as_ewkb(wkb: pd.Series) -> pd.Series:
-        # the stored buffer IS (E)WKB — already carrying its SRID tag
-        # when one was set; round-trip through the decoder to normalize
-        from geomesa_sql_spark.geom.wkb import geom_to_ewkb as _to_ewkb
-        from geomesa_sql_spark.geom.wkb import wkb_srid
-
-        out = []
-        for b in wkb:
-            if b is None:
-                out.append(None)
-                continue
-            b = bytes(b)
-            out.append(_to_ewkb(geom_from_wkb(b), wkb_srid(b)))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_AsEWKB", _as_ewkb)
-    spark.udf.register("ST_GeomFromEWKB", _as_ewkb)  # same normalization
-
-    # ---- grid makers (Calcite: divide a geometry's envelope into
-    # nx x ny cells; cells as polygons, or their center points) ----
-
-    def _grid_cells(g: Geom, nx: int, ny: int):
-        x0, y0, x1, y1 = g.envelope()
-        if nx < 1 or ny < 1 or x0 > x1 or y0 > y1:
-            return None
-        xs = np.linspace(x0, x1, nx + 1)
-        ys = np.linspace(y0, y1, ny + 1)
-        return xs, ys
-
-    @F.pandas_udf(T.BinaryType())
-    def _make_grid(wkb: pd.Series, nx: pd.Series, ny: pd.Series) -> pd.Series:
-        from geomesa_sql_spark.geom.model import box as _box
-
-        out = []
-        for g, a, b in zip(_decode_series(wkb), nx, ny):
-            if g is None or a is None or b is None:
-                out.append(None)
-                continue
-            grid = _grid_cells(g, int(a), int(b))
-            if grid is None:
-                out.append(None)
-                continue
-            xs, ys = grid
-            cells = [
-                _box(xs[i], ys[j], xs[i + 1], ys[j + 1])
-                for j in range(len(ys) - 1)
-                for i in range(len(xs) - 1)
-            ]
-            out.append(geom_to_wkb(Geom(_m.MULTIPOLYGON, cells)))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_MakeGrid", _make_grid)
-
-    @F.pandas_udf(T.BinaryType())
-    def _make_grid_points(
-        wkb: pd.Series, nx: pd.Series, ny: pd.Series
-    ) -> pd.Series:
-        out = []
-        for g, a, b in zip(_decode_series(wkb), nx, ny):
-            if g is None or a is None or b is None:
-                out.append(None)
-                continue
-            grid = _grid_cells(g, int(a), int(b))
-            if grid is None:
-                out.append(None)
-                continue
-            xs, ys = grid
-            cx = (xs[:-1] + xs[1:]) / 2.0
-            cy = (ys[:-1] + ys[1:]) / 2.0
-            pts = [
-                Geom(_m.POINT, np.array([x, y]))
-                for y in cy
-                for x in cx
-            ]
-            out.append(geom_to_wkb(Geom(_m.MULTIPOINT, pts)))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_MakeGridPoints", _make_grid_points)
-
-    from geomesa_sql_spark.geom.de9im import _interior_points as _int_pts
-
-    @F.pandas_udf(T.BinaryType())
-    def _point_on_surface(wkb: pd.Series) -> pd.Series:
-        from geomesa_sql_spark.geom.model import point as _point
-
-        out = []
-        for g in _decode_series(wkb):
-            if g is None:
-                out.append(None)
-                continue
-            if g.dimension() == 2:
-                pts = _int_pts(g)  # guaranteed strictly interior
-                out.append(
-                    geom_to_wkb(_point(pts[0, 0], pts[0, 1]))
-                    if len(pts) else None
-                )
-            elif g.dimension() == 1:
-                # a vertex ON the line (middle vertex of the first part)
-                c = g.flatten()[0].coords
-                v = c[len(c) // 2]
-                out.append(geom_to_wkb(_point(float(v[0]), float(v[1]))))
-            else:
-                c = g.all_coords()
-                out.append(
-                    geom_to_wkb(_point(float(c[0, 0]), float(c[0, 1])))
-                    if len(c) else None
-                )
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_PointOnSurface", _point_on_surface)
-
-    @F.pandas_udf(T.BinaryType())
-    def _reduce_precision(wkb: pd.Series, grid: pd.Series) -> pd.Series:
-        def snap(g: Geom, s: float) -> Geom:
-            if g.type == _m.POINT:
-                return Geom(_m.POINT, np.round(g.coords / s) * s)
-            if g.type == _m.LINESTRING:
-                return Geom(_m.LINESTRING, np.round(g.coords / s) * s)
-            if g.type == _m.POLYGON:
-                return Geom(_m.POLYGON, [np.round(r / s) * s for r in g.coords])
-            return Geom(g.type, [snap(p, s) for p in g.coords])
-
-        out = []
-        for g, s in zip(_decode_series(wkb), grid):
-            if g is None or s is None or float(s) <= 0.0:
-                out.append(None)
-            else:
-                out.append(geom_to_wkb(snap(g, float(s))))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_ReducePrecision", _reduce_precision)
+    spark.udf.register("ST_UnionAggr", _union_aggr)
+    spark.udf.register("ST_Union_Aggr", _union_aggr)  # Calcite spelling
 
     # aggregate functions (GROUPED_AGG pandas UDFs — usable in SQL
     # GROUP BY): ST_Extent = bbox of the group as an envelope polygon;
@@ -1756,193 +1386,15 @@ def register_all(spark: SparkSession) -> None:
             return None
         types = {g.type for g in geoms}
         multi_of = {
-            _m.POINT: _m.MULTIPOINT,
-            _m.LINESTRING: _m.MULTILINESTRING,
-            _m.POLYGON: _m.MULTIPOLYGON,
+            model.POINT: model.MULTIPOINT,
+            model.LINESTRING: model.MULTILINESTRING,
+            model.POLYGON: model.MULTIPOLYGON,
         }
         if len(types) == 1 and (t := types.pop()) in multi_of:
             return geom_to_wkb(Geom(multi_of[t], geoms))
-        return geom_to_wkb(Geom(_m.GEOMETRYCOLLECTION, geoms))
+        return geom_to_wkb(Geom(model.GEOMETRYCOLLECTION, geoms))
 
     spark.udf.register("ST_Collect", _collect)
-
-    # geometry-shape extras: octagonal envelope (bbox clipped by the
-    # four diagonal half-planes), rotating-calipers minimum rectangle /
-    # diameter over the existing convex hull, and vertex snapping
-    def _hull_pts(g: Geom) -> np.ndarray:
-        h = kernel.convex_hull(g)
-        if h.type == _m.POLYGON:
-            return h.coords[0][:-1]
-        if h.type == _m.LINESTRING:
-            return h.coords
-        if h.type == _m.POINT:
-            return h.coords.reshape(1, 2)
-        return np.empty((0, 2))
-
-    def _clip_halfplane(poly: list, a: float, b: float, c: float) -> list:
-        # Sutherland–Hodgman: keep a*x + b*y <= c
-        out: list = []
-        n = len(poly)
-        for i in range(n):
-            p, q = poly[i], poly[(i + 1) % n]
-            pin = a * p[0] + b * p[1] <= c + 1e-12
-            qin = a * q[0] + b * q[1] <= c + 1e-12
-            if pin:
-                out.append(p)
-            if pin != qin:
-                t = (c - a * p[0] - b * p[1]) / (
-                    a * (q[0] - p[0]) + b * (q[1] - p[1])
-                )
-                out.append((p[0] + t * (q[0] - p[0]), p[1] + t * (q[1] - p[1])))
-        return out
-
-    @F.pandas_udf(T.BinaryType())
-    def _octagonal_env(wkb: pd.Series) -> pd.Series:
-        from geomesa_sql_spark.geom.model import point as _point, polygon as _polygon
-
-        out = []
-        for g in _decode_series(wkb):
-            if g is None:
-                out.append(None)
-                continue
-            c = g.all_coords()
-            if not len(c):
-                out.append(None)
-                continue
-            x, y = c[:, 0], c[:, 1]
-            poly = [
-                (x.min(), y.min()), (x.max(), y.min()),
-                (x.max(), y.max()), (x.min(), y.max()),
-            ]
-            s, d = x + y, x - y
-            for a, b, cc in (
-                (-1.0, -1.0, -float(s.min())), (1.0, 1.0, float(s.max())),
-                (-1.0, 1.0, -float(d.min())), (1.0, -1.0, float(d.max())),
-            ):
-                poly = _clip_halfplane(poly, a, b, cc)
-            uniq: list = []
-            for p in poly:
-                if not uniq or (abs(p[0] - uniq[-1][0]) > 1e-12
-                                or abs(p[1] - uniq[-1][1]) > 1e-12):
-                    uniq.append(p)
-            if len(uniq) >= 3:
-                out.append(geom_to_wkb(_polygon(np.asarray(uniq))))
-            elif len(uniq) == 2:
-                out.append(geom_to_wkb(Geom(_m.LINESTRING, np.asarray(uniq))))
-            elif uniq:
-                out.append(geom_to_wkb(_point(*uniq[0])))
-            else:
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_OctagonalEnvelope", _octagonal_env)
-
-    def _caliper_frames(h: np.ndarray):
-        e = np.roll(h, -1, axis=0) - h
-        ln = np.hypot(e[:, 0], e[:, 1])
-        keep = ln > 0
-        d = e[keep] / ln[keep][:, None]
-        # anchors stay aligned with the FILTERED edges (zero-length
-        # edges may drop anywhere, not just at the tail)
-        return d, np.stack([-d[:, 1], d[:, 0]], axis=1), h[keep]
-
-    @F.pandas_udf(T.BinaryType())
-    def _min_rectangle(wkb: pd.Series) -> pd.Series:
-        from geomesa_sql_spark.geom.model import polygon as _polygon
-
-        out = []
-        for g in _decode_series(wkb):
-            if g is None:
-                out.append(None)
-                continue
-            h = _hull_pts(g)
-            if len(h) < 3:
-                # JTS degenerate contract: the hull itself
-                out.append(geom_to_wkb(kernel.convex_hull(g)))
-                continue
-            dirs, norms, _ = _caliper_frames(h)
-            pd_ = h @ dirs.T   # (n_pts, n_edges) projections
-            pn_ = h @ norms.T
-            areas = (pd_.max(0) - pd_.min(0)) * (pn_.max(0) - pn_.min(0))
-            bi = int(np.argmin(areas))
-            d, n = dirs[bi], norms[bi]
-            lo_d, hi_d = pd_[:, bi].min(), pd_[:, bi].max()
-            lo_n, hi_n = pn_[:, bi].min(), pn_[:, bi].max()
-            corners = np.array([
-                d * lo_d + n * lo_n, d * hi_d + n * lo_n,
-                d * hi_d + n * hi_n, d * lo_d + n * hi_n,
-            ])
-            out.append(geom_to_wkb(_polygon(corners)))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_MinimumRectangle", _min_rectangle)
-
-    @F.pandas_udf(T.BinaryType())
-    def _min_diameter(wkb: pd.Series) -> pd.Series:
-        out = []
-        for g in _decode_series(wkb):
-            if g is None:
-                out.append(None)
-                continue
-            h = _hull_pts(g)
-            if len(h) == 0:
-                out.append(None)
-                continue
-            if len(h) < 3:
-                p = h[0]
-                # width 0: the perpendicular segment degenerates to a
-                # point on the line (JTS returns a 0-length segment)
-                out.append(geom_to_wkb(Geom(_m.LINESTRING, np.array([p, p]))))
-                continue
-            dirs, norms, anchors = _caliper_frames(h)
-            pn_ = h @ norms.T              # (n_pts, n_edges)
-            base = np.einsum("ej,ej->e", anchors, norms)  # offset per edge
-            dist = pn_ - base[None, :]
-            widths = np.abs(dist).max(0)
-            bi = int(np.argmin(widths))
-            pi = int(np.abs(dist[:, bi]).argmax())
-            far = h[pi]
-            foot = far - dist[pi, bi] * norms[bi]
-            out.append(geom_to_wkb(Geom(_m.LINESTRING, np.array([foot, far]))))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_MinimumDiameter", _min_diameter)
-
-    @F.pandas_udf(T.BinaryType())
-    def _snap(wa: pd.Series, wb: pd.Series, tol: pd.Series) -> pd.Series:
-        def snap_coords(c: np.ndarray, targets: np.ndarray, t: float) -> np.ndarray:
-            if not len(targets) or not len(c):
-                return c
-            d2 = ((c[:, None, :] - targets[None, :, :]) ** 2).sum(-1)
-            j = d2.argmin(1)
-            hit = d2[np.arange(len(c)), j] <= t * t
-            c = c.copy()
-            c[hit] = targets[j[hit]]
-            return c
-
-        def snap_geom(g: Geom, targets: np.ndarray, t: float) -> Geom:
-            if g.type == _m.POINT:
-                return Geom(_m.POINT, snap_coords(g.coords.reshape(1, 2), targets, t)[0])
-            if g.type == _m.LINESTRING:
-                return Geom(_m.LINESTRING, snap_coords(g.coords, targets, t))
-            if g.type == _m.POLYGON:
-                return Geom(
-                    _m.POLYGON,
-                    [snap_coords(r, targets, t) for r in g.coords],
-                )
-            return Geom(g.type, [snap_geom(p, targets, t) for p in g.coords])
-
-        out = []
-        for a, b, t in zip(_decode_series(wa), _decode_series(wb), tol):
-            if a is None or b is None or t is None:
-                out.append(None)
-                continue
-            # vertex snapping (JTS additionally snaps to segment
-            # interiors; vertex-only is the documented subset here)
-            out.append(geom_to_wkb(snap_geom(a, b.all_coords(), float(t))))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_Snap", _snap)
 
     # ----- S2 cell surface (cells/s2.py — the north rule's H3/S2
     # index, exposed to SQL text like the rest of the fun=spatial
@@ -1995,55 +1447,6 @@ def register_all(spark: SparkSession) -> None:
         "S2_Level", F.udf(_s2_level_one, T.IntegerType(), useArrow=True)
     )
 
-    # PostGIS ST_AsMVTGeom (no-clip form): geometry → tile-local
-    # integer coordinates (y grows DOWN from the envelope top), the
-    # SQL-surface twin of ops/vector_tiles quantization. Coordinates
-    # may exceed [0, extent) — clipping is the renderer's job (the
-    # same producer-clipping tradeoff io/mvt.py documents).
-    @F.pandas_udf(T.BinaryType())
-    def _as_mvt_geom(
-        wkb: pd.Series,
-        bminx: pd.Series,
-        bminy: pd.Series,
-        bmaxx: pd.Series,
-        bmaxy: pd.Series,
-        ext: pd.Series,
-    ) -> pd.Series:
-        from geomesa_sql_spark.geom.model import Geom
-
-        def _q(g, x0, y0, x1, y1, e):
-            sx = e / (x1 - x0)
-            sy = e / (y1 - y0)
-
-            def qc(c):
-                out = np.empty_like(np.asarray(c, dtype=np.float64))
-                cc = np.asarray(c, dtype=np.float64)
-                out[..., 0] = np.floor((cc[..., 0] - x0) * sx)
-                out[..., 1] = np.floor((y1 - cc[..., 1]) * sy)
-                return out
-
-            if g.type in ("Point", "LineString"):
-                return Geom(g.type, qc(g.coords))
-            if g.type == "Polygon":
-                return Geom(g.type, [qc(r) for r in g.coords])
-            return Geom(g.type, [_q(p, x0, y0, x1, y1, e) for p in g.coords])
-
-        out = []
-        for b, x0, y0, x1, y1, e in zip(wkb, bminx, bminy, bmaxx, bmaxy, ext):
-            if (
-                b is None
-                or pd.isna(x0) or pd.isna(y0) or pd.isna(x1) or pd.isna(y1)
-                or pd.isna(e) or x1 <= x0 or y1 <= y0 or e < 1
-            ):
-                out.append(None)
-                continue
-            g = geom_from_wkb(bytes(b))
-            out.append(geom_to_wkb(_q(g, float(x0), float(y0), float(x1),
-                                      float(y1), float(int(e)))))
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("ST_AsMVTGeom", _as_mvt_geom)
-
     # id-taking S2 family — Arrow row UDFs per the null-int rule above
     def _s2_parent_one(cid, level):
         if cid is None or level is None:
@@ -2090,32 +1493,3 @@ def register_all(spark: SparkSession) -> None:
     spark.udf.register(
         "S2_CellCenter", F.udf(_s2_center_one, T.BinaryType(), useArrow=True)
     )
-
-    # S2_Covering(wkb, level): fixed-level S2 cells covering the
-    # geometry's lon/lat envelope (array<long>) — the SQL building
-    # block for user-side prune predicates (arrays_overlap /
-    # array_contains against an s2-indexed column). Capped like
-    # cells/s2.cover_rect: an oversized cover raises rather than
-    # silently truncating (dropping cells would drop matches).
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _s2_covering(wkb: pd.Series, level: pd.Series) -> pd.Series:
-        from geomesa_sql_spark.cells import s2 as _s2
-
-        out = []
-        for b, lv in zip(wkb, level):
-            if b is None or pd.isna(lv):
-                out.append(None)
-                continue
-            env = geom_from_wkb(bytes(b)).envelope()
-            if env[0] != env[0]:  # empty geometry
-                out.append([])
-                continue
-            x0, y0, x1, y1 = env
-            x0, x1 = max(-180.0, x0), min(180.0, x1)
-            y0, y1 = max(-90.0, y0), min(90.0, y1)
-            out.append(
-                [int(c) for c in _s2.cover_rect(x0, y0, x1, y1, int(lv))]
-            )
-        return pd.Series(out, dtype=object)
-
-    spark.udf.register("S2_Covering", _s2_covering)

@@ -279,6 +279,7 @@ def _parquet_file_stats(path: str, ice_fields: list[dict]) -> dict:
     lo: dict[int, bytes] = {}
     hi: dict[int, bytes] = {}
     dead: set[int] = set()
+    nan: set[int] = set()
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
@@ -295,6 +296,13 @@ def _parquet_file_stats(path: str, ice_fields: list[dict]) -> dict:
                 continue
             fid = f["id"]
             mn, mx = st.min, st.max
+            if fid in nan or mn != mn or mx != mx:
+                # parquet-mr lets a NaN into a double's min/max; the
+                # spec forbids a NaN bound, so the file records none
+                nan.add(fid)
+                lo.pop(fid, None)
+                hi.pop(fid, None)
+                continue
             cur = lo.get(fid)
             if cur is None or _decode_bound(f["type"], cur) > mn:
                 lo[fid] = _encode_bound(f["type"], mn)

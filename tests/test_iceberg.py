@@ -187,8 +187,21 @@ def test_iceberg_bounds_pruning(spark, tmp_path):
     im.create_table(spark.createDataFrame(
         [(1, 5.0), (2, float("nan")), (3, 7.0)], "k long, x double"
     ).coalesce(1), nan)
-    got = im.IcebergTable.load(nan).read(spark, bounds={"x": (4.0, 6.0)})
+    t_nan = im.IcebergTable.load(nan)
+    got = t_nan.read(spark, bounds={"x": (4.0, 6.0)})
     assert got.filter("x between 4 and 6").count() == 1
+    # the writer records no NaN bound (the spec forbids one): x gets no
+    # bounds in that file, k keeps its own, and a range around 7.0
+    # still keeps the file
+    from geomesa_sql_spark.io.avro import read_avro
+
+    _, (man,), _ = read_avro(im._read(t_nan.snapshot()["manifest-list"]))
+    (entry,) = im._manifest_entries(man["manifest_path"], 0)
+    lo, hi = (im._as_map(entry["data_file"][k]) for k in ("lower_bounds", "upper_bounds"))
+    ids = {c["name"]: c["id"] for c in t_nan.schema_fields()}
+    assert ids["x"] not in lo and ids["x"] not in hi
+    assert ids["k"] in lo and ids["k"] in hi
+    assert t_nan.plan_files(bounds={"x": (6.5, 7.5)})[2]["files_kept"] == 1
 
 
 def test_iceberg_position_deletes(spark, tmp_path):

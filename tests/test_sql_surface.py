@@ -701,24 +701,171 @@ def test_calcite_fillin_final_names(spark):
     assert row.closed_null is None
 
 
-def test_numeric_null_args_yield_null(spark):
-    """Review r4d: Arrow delivers NULL numeric UDF args as NaN, so
-    `is None` checks were dead — NULL coords/distances/zooms must
-    yield NULL, not NaN geometries or task crashes."""
-    from geomesa_sql_spark.functions import register_all
+def _wkb_lit(wkt: str) -> tuple[str, str]:
+    from geomesa_sql_spark.geom import geom_from_wkt
+    from geomesa_sql_spark.geom.wkb import geom_to_wkb
 
+    return ("BINARY", "X'" + geom_to_wkb(geom_from_wkt(wkt)).hex() + "'")
+
+
+def _null_cases() -> dict:
+    """Every per-row ST_/S2_ name with one valid argument row: (SQL
+    type, literal) per position."""
+    from geomesa_sql_spark.cells import s2
+
+    pt, pt2 = _wkb_lit("POINT (1 2)"), _wkb_lit("POINT (3 5)")
+    line = _wkb_lit("LINESTRING (0 0, 1 1, 2 0)")
+    ring = _wkb_lit("LINESTRING (0 0, 3 0, 3 3, 0 0)")
+    poly = _wkb_lit("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
+    poly2 = _wkb_lit("POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))")
+    holed = _wkb_lit(
+        "POLYGON ((0 0, 9 0, 9 9, 0 9, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))"
+    )
+    cut = _wkb_lit("LINESTRING (2 -1, 2 5)")
+    multi = _wkb_lit("MULTIPOINT ((1 1), (2 2))")
+    cell = ("BIGINT", f"{int(s2.lonlat_to_cell_id([1.0], [2.0], 10)[0])}L")
+
+    def i(v):
+        return ("INT", str(v))
+
+    def d(v):
+        return ("DOUBLE", f"{v!r}D")
+
+    def s(v):
+        return ("STRING", f"'{v}'")
+
+    one_geom = {
+        pt: "ST_AsText ST_AsWKT ST_X ST_Y ST_Z ST_SRID ST_AsEWKT ST_AsEWKB "
+            "ST_GeomFromEWKB ST_GeomFromWKB ST_AsBinary ST_AsWKB "
+            "ST_PointFromWKB ST_AsGeoJSON ST_Is3D ST_CoordDim",
+        line: "ST_Length ST_LengthSphere ST_StartPoint ST_EndPoint "
+              "ST_LineFromWKB ST_NumPoints ST_NPoints ST_IsSimple",
+        ring: "ST_IsClosed ST_IsRing ST_MakePolygon",
+        poly: "ST_Area ST_AreaSphere ST_PerimeterSphere ST_Perimeter "
+              "ST_GeometryType ST_GeometryTypeCode ST_IsEmpty ST_XMin ST_YMin "
+              "ST_XMax ST_YMax ST_ConvexHull ST_Centroid ST_Boundary "
+              "ST_IsValid ST_Dimension ST_ExteriorRing ST_IsRectangle "
+              "ST_PolyFromWKB ST_PointOnSurface ST_OctagonalEnvelope "
+              "ST_MinimumRectangle ST_MinimumDiameter",
+        holed: "ST_NumInteriorRing ST_NumInteriorRings",
+        multi: "ST_NumGeometries",
+    }
+    cases = {n: [g] for g, names in one_geom.items() for n in names.split()}
+    two_geoms = {
+        (pt, pt2): "ST_Distance ST_DistanceSphere ST_Distance_Sphere "
+                   "ST_DistanceSpheroid ST_Azimuth ST_MakeLine",
+        (poly, poly2): "ST_Union ST_Intersection ST_Difference "
+                       "ST_SymDifference ST_SymmetricDifference ST_Relate "
+                       "ST_EnvelopesIntersect ST_Disjoint",
+        (poly, pt): "ST_Covers ST_ContainsProperly",
+        (pt, poly): "ST_CoveredBy",
+        (line, pt): "ST_ClosestPoint",
+        (poly, cut): "ST_Split",
+    }
+    cases.update(
+        {n: list(gs) for gs, names in two_geoms.items() for n in names.split()}
+    )
+    cases.update({
+        "ST_GeomFromText": [s("POINT (1 2)")],
+        "ST_PointFromText": [s("POINT (1 2)")],
+        "ST_LineFromText": [s("LINESTRING (0 0, 1 1)")],
+        "ST_PolyFromText": [s("POLYGON ((0 0, 1 0, 1 1, 0 0))")],
+        "ST_MPointFromText": [s("MULTIPOINT ((1 1), (2 2))")],
+        "ST_MLineFromText": [s("MULTILINESTRING ((0 0, 1 1), (2 2, 3 3))")],
+        "ST_MPolyFromText": [s("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)))")],
+        "ST_GeomFromEWKT": [s("SRID=4326;POINT (1 2)")],
+        "ST_GeomFromGeoJSON": [s('{"type": "Point", "coordinates": [1, 2]}')],
+        "ST_RelateMatch": [s("FF1FF0102"), s("FF*FF****")],
+        "ST_MakePoint": [d(1.0), d(2.0)],
+        "ST_Point": [d(1.0), d(2.0)],
+        "ST_MakeEnvelope": [d(0.0), d(0.0), d(1.0), d(1.0)],
+        "ST_TileEnvelope": [i(2), i(1), i(1)],
+        "ST_Buffer": [pt, d(1.0)],
+        "ST_Simplify": [line, d(0.5)],
+        "ST_ReducePrecision": [line, d(0.5)],
+        "ST_LineInterpolatePoint": [line, d(0.5)],
+        "ST_Translate": [poly, d(1.0), d(2.0)],
+        "ST_Scale": [poly, d(2.0), d(3.0)],
+        "ST_Rotate": [poly, d(1.0)],
+        "ST_Snap": [line, pt, d(1.5)],
+        "ST_DWithin": [pt, pt2, d(10.0)],
+        "ST_DWithinSphere": [pt, pt2, d(1e6)],
+        "ST_PointN": [line, i(2)],
+        "ST_InteriorRingN": [holed, i(1)],
+        "ST_GeometryN": [multi, i(1)],
+        "ST_SetSRID": [poly, i(4326)],
+        "ST_TransformSrid": [pt, i(3857)],
+        "ST_Transform": [pt, s("EPSG:4326"), s("EPSG:3857")],
+        "ST_MakeGrid": [poly, i(2), i(2)],
+        "ST_MakeGridPoints": [poly, i(2), i(2)],
+        "ST_AsMVTGeom": [poly, d(0.0), d(0.0), d(8.0), d(8.0), i(4096)],
+        "S2_CellId": [d(1.0), d(2.0), i(10)],
+        "S2_Covering": [poly, i(4)],
+        "S2_Token": [cell],
+        "S2_Level": [cell],
+        "S2_CellCenter": [cell],
+        "S2_Parent": [cell, i(5)],
+        "S2_Contains": [cell, cell],
+    })
+    return cases
+
+
+# Registered names outside the NULL table: the grouped aggregates skip
+# NULL rows instead of answering per row; the relate predicates and
+# ST_PointPredicate are the join-refine and rewrite kernels, where a
+# NULL geometry or coordinate is False, not NULL (test_st_predicates_*,
+# ST_PointPredicate's docstring); ST_Envelope returns a struct.
+_NULL_TABLE_EXEMPT = {
+    "st_unionaggr", "st_union_aggr", "st_extent", "st_collect",
+    "st_intersects", "st_equals", "st_crosses", "st_contains",
+    "st_overlaps", "st_touches", "st_within", "st_pointpredicate",
+    "st_envelope",
+}
+
+
+def test_numeric_null_args_yield_null(spark):
+    """One NULL table for the per-row ST_/S2_ surface. For every
+    argument position a row with a NULL there shares one Arrow batch
+    with the valid row: the NULL row gives NULL (Arrow delivers a NULL
+    INT/DOUBLE as NaN, so an `is None` test let it through as a crash or
+    an answer), and the valid row gives the value it gives alone."""
     register_all(spark)
-    row = spark.sql("""
-        SELECT ST_MakePoint(CAST(NULL AS DOUBLE), 1.0D) AS p,
-               ST_Buffer(ST_MakePoint(1.0D, 1.0D), CAST(NULL AS DOUBLE)) AS b,
-               ST_Simplify(ST_GeomFromText('LINESTRING (0 0, 1 1, 2 0)'),
-                           CAST(NULL AS DOUBLE)) AS s,
-               ST_MakeEnvelope(0.0D, 0.0D, CAST(NULL AS DOUBLE), 1.0D) AS e,
-               ST_TileEnvelope(CAST(NULL AS INT), 0, 0) AS t_null,
-               ST_TileEnvelope(-1, 0, 0) AS t_neg
-    """).first()
-    assert row.p is None and row.b is None and row.s is None
-    assert row.e is None and row.t_null is None and row.t_neg is None
+    cases = _null_cases()
+    registered = {
+        f.name
+        for f in spark.catalog.listFunctions()
+        if f.name.startswith(("st_", "s2_"))
+        and "UDFRegistration" in (f.className or "")
+    }
+    assert _NULL_TABLE_EXEMPT <= registered
+    assert registered - _NULL_TABLE_EXEMPT == {n.lower() for n in cases}
+
+    names = sorted(cases)
+    alone = spark.sql(
+        "SELECT " + ", ".join(
+            f"{n}({', '.join(lit for _, lit in cases[n])}) AS c{k}"
+            for k, n in enumerate(names)
+        )
+    ).first()
+    for k, name in enumerate(names):
+        args = cases[name]
+        assert alone[k] is not None or name == "ST_Z", name
+        rows = [
+            f"({r}, " + ", ".join(
+                f"CAST(NULL AS {t})" if j == r - 1 else lit
+                for j, (t, lit) in enumerate(args)
+            ) + ")"
+            for r in range(len(args) + 1)
+        ]
+        cols = ", ".join(f"a{j}" for j in range(len(args)))
+        got = dict(spark.sql(
+            f"SELECT r, {name}({cols}) FROM (SELECT /*+ COALESCE(1) */ * "
+            f"FROM VALUES {', '.join(rows)} AS t(r, {cols}))"
+        ).collect())
+        assert got == {0: alone[k], **{r: None for r in range(1, len(args) + 1)}}, name
+
+    row = spark.sql("SELECT ST_TileEnvelope(-1, 0, 0) AS t_neg").first()
+    assert row.t_neg is None
 
 
 def test_st_dwithin_null_geom_constant_radius_is_null(spark):
