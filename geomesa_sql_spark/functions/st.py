@@ -162,7 +162,7 @@ def st_predicate_point_cols(
         gx, gy = float(g.coords[0]), float(g.coords[1])
         return (x - gx) * (x - gx) + (y - gy) * (y - gy) <= float(distance) ** 2
 
-    if _is_rectangle(g) and pred_l in ("within", "intersects", "contains", "coveredby"):
+    if _jts_is_rectangle(g) and pred_l in ("within", "intersects", "contains", "coveredby"):
         minx, miny, maxx, maxy = g.envelope()
         if pred_l == "within":
             # JTS: a point on the boundary is NOT within — strict interior
@@ -182,21 +182,6 @@ def st_predicate_point_cols(
     return _kernel(x, y)
 
 
-def _is_rectangle(g: Geom) -> bool:
-    """Axis-aligned rectangle: one 5-vertex ring whose every edge is
-    horizontal or vertical (two distinct x and y values alone would
-    also admit the self-crossing bow-tie (0 0, 1 1, 0 1, 1 0, 0 0))."""
-    if g.type != "Polygon" or len(g.coords) != 1:
-        return False
-    ring = g.coords[0]
-    if len(ring) != 5:
-        return False
-    xs = set(ring[:, 0].tolist())
-    ys = set(ring[:, 1].tolist())
-    d = np.diff(ring, axis=0)
-    return len(xs) == 2 and len(ys) == 2 and bool(((d[:, 0] == 0) ^ (d[:, 1] == 0)).all())
-
-
 def point_predicate_sql(
     pred: str, x: str, y: str, g: Geom, wkt: str, distance: float | None = None
 ) -> str | None:
@@ -214,7 +199,7 @@ def point_predicate_sql(
             f"(({x} - ({gx!r}D)) * ({x} - ({gx!r}D)) + ({y} - ({gy!r}D)) * "
             f"({y} - ({gy!r}D)) <= ({float(distance) ** 2!r}D))"
         )
-    if _is_rectangle(g) and pred in ("within", "intersects"):
+    if _jts_is_rectangle(g) and pred in ("within", "intersects"):
         if pred == "intersects":
             return None
         minx, miny, maxx, maxy = g.envelope()

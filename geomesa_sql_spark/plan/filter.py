@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from geomesa_sql_spark.cells import cover_envelope
 from geomesa_sql_spark.cells.curve import res_for_extent
 from geomesa_sql_spark.functions.st import (
-    _is_rectangle,
+    _jts_is_rectangle,
     st_predicate_point_cols,
     st_predicate_wkb,
 )
@@ -169,6 +169,6 @@ def spatial_filter(
         cx, cy = (F.lit(float(v)) for v in g.coords[:2])
         return out.filter(
             sphere_distance_cols(F.col(x), F.col(y), cx, cy) <= float(distance))
-    if not (_is_rectangle(g) and pred in ("intersects", "coveredby")):
+    if not (_jts_is_rectangle(g) and pred in ("intersects", "coveredby")):
         out = out.filter(st_predicate_point_cols(pred, F.col(x), F.col(y), g, distance))
     return out

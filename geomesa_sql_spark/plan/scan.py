@@ -57,26 +57,19 @@ class ScanSpec:
     data_res: int | None = 12
 
 
-def _table_res(path) -> int | None:
+def _table_res(path) -> int:
     """Cell resolution the table was WRITTEN with: read the layout
     metadata io.layout.write_geo_table drops next to the data (review
     r3 — a res=8 table scanned with the res-12 default built ranges
     the stored cells could never fall in, silently losing rows).
-    Falls back to the shared default when absent. An Iceberg table
-    reports ``geo.cell.res`` of a z layout, else None; its scan prunes
-    through ``_layout_ranges``, never through this value."""
+    Falls back to the shared default when absent. An Iceberg scan never
+    reads this value: it prunes through ``_layout_ranges``, from the
+    table metadata ``_iceberg_read`` loads."""
     import json as _json
     import os as _os
 
     from geomesa_sql_spark.io.layout import DEFAULT_DATA_RES
 
-    if IcebergTable.is_iceberg_dir(path):
-        # write_geo_iceberg keeps the layout in table properties; any
-        # other Iceberg table's 'cell' column is not a known layout
-        props = IcebergTable.load(path).metadata.get("properties", {})
-        if props.get("geo.cell.system", "z") != "z" or "geo.cell.res" not in props:
-            return None
-        return int(props["geo.cell.res"])
     meta = _os.path.join(path, "_GEO_META.json")
     try:
         with open(meta) as f:

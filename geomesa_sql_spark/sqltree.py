@@ -5,12 +5,14 @@ and returns the unresolved plan as a tree of :class:`Node` built from
 ONE ``toJSON()`` transfer. A node's character span comes from its
 JVM-side ``origin()``, fetched lazily, so only the nodes the SQL-text
 router splices and the DML fields ``Engine.sql`` reads cost Py4J calls.
-``frame`` analyses a parsed query node as ``spark.sql`` analyses text;
+``walk`` reaches every node, subquery plans included; ``frame``
+analyses a parsed query node as ``spark.sql`` analyses text;
 ``_mask_literals`` is the one quote-aware scan of statement text.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import re
 
@@ -40,21 +42,30 @@ class Node:
             raise ValueError(f"{self.cls} carries no source position")
         return int(m.group(1)), int(m.group(2)) + 1
 
-    def sub(self, field: str, step, item: int | None = None) -> Node | None:
-        """The tree in JSON field ``field`` (its element ``item`` for a
-        list field), reached on the JVM side by ``step``."""
-        arr = self.d.get(field)
-        arr = arr[item] if arr and item is not None else arr
-        return _build(iter(arr), self, step) if arr else None
+    def trees(self, field: str):
+        """The trees in JSON field ``field``: the field's own, or one per
+        element of a list field (a tuple element's ``_1``/``_2`` walked)."""
+        return _trees(self, self.d.get(field), lambda j: _field(j, self.cls, field))
+
+    def sub(self, field: str, item: int = 0) -> Node | None:
+        """Tree ``item`` of JSON field ``field`` (see ``trees``), or None."""
+        return next(itertools.islice(self.trees(field), item, None), None)
 
     def name(self, field: str = "nameParts") -> list[str]:
         return self.d[field].strip("[]").split(", ")  # "[a, b]"
 
-    def ctes(self) -> list[tuple[str, Node]]:
-        """``UnresolvedWith``: (name, SubqueryAlias) per definition."""
-        return [(c["_1"], _build(iter(c["_2"]), self,
-                                 lambda j, i=i: j.cteRelations().apply(i)._2()))
-                for i, c in enumerate(self.d["cteRelations"])]
+
+# (node class, field) -> whether the field holds a scala Option
+_OPTION: dict[tuple[str, str], bool] = {}
+
+
+def _field(j, cls: str, field: str):
+    """Field ``field`` of JVM node ``j`` (of class ``cls``), unwrapped from
+    its Option; the JSON spells Some(e) as e, so the JVM tells, once."""
+    v = getattr(j, field)()
+    if (cls, field) not in _OPTION:
+        _OPTION[cls, field] = v.getClass().getName() == "scala.Some"
+    return v.get() if _OPTION[cls, field] else v
 
 
 def _build(it, parent: Node | None, step) -> Node:
@@ -88,11 +99,31 @@ def conjuncts(e: Node) -> list[Node]:
     return conjuncts(e.kids[0]) + conjuncts(e.kids[1]) if e.cls == "And" else [e]
 
 
-def nodes(e: Node):
-    """``e`` and every node below it, pre-order (no JVM calls)."""
-    yield e
-    for k in e.kids:
-        yield from nodes(k)
+def walk(n: Node):
+    """``n`` and every node reachable from it, pre-order, without JVM
+    calls: children and the trees in each node's fields (select list,
+    condition, SET pairs, CTE bodies, subquery plans; a function's
+    FILTER, which repeats a child, is reached twice)."""
+    yield n
+    for k in n.kids:
+        yield from walk(k)
+    for f in n.d:
+        for t in n.trees(f):
+            yield from walk(t)
+
+
+def _trees(parent: Node, v, step):
+    """The trees inside JSON value ``v`` under ``parent``, which ``step``
+    reaches on the JVM side: a tree is a list of node dicts, and lists
+    and tuples (``_1``, ``_2``) of trees are walked into."""
+    if isinstance(v, list) and v and isinstance(v[0], dict) and "num-children" in v[0]:
+        yield _build(iter(v), parent, step)
+    elif isinstance(v, list):
+        for i, x in enumerate(v):
+            yield from _trees(parent, x, lambda j, i=i: step(j).apply(i))
+    elif isinstance(v, dict):
+        for k, x in v.items():
+            yield from _trees(parent, x, lambda j, k=k: getattr(step(j), k)())
 
 
 def _mask_literals(s: str) -> str:

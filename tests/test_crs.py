@@ -254,21 +254,21 @@ def test_two_arg_transform_calcite_idiom(spark, sf_dir, tmp_path):
     EWKB SRID tag (untagged = 4326), output tagged with the target so
     chains compose; Engine.sql rewrites 2-arg call sites to
     ST_TransformSrid while leaving the 3-arg form alone."""
-    from geomesa_sql_spark.engine import Engine, _rewrite_two_arg_transform
+    from geomesa_sql_spark.engine import Engine, _rewrite_spatial_predicates
 
-    # pure-text rewrite unit checks
-    assert _rewrite_two_arg_transform(
+    # rewrite unit checks through the text entry
+    assert _rewrite_spatial_predicates(
         "SELECT ST_Transform(g, 32618) FROM t"
     ) == "SELECT ST_TransformSrid(g, 32618) FROM t"
     three = "SELECT ST_Transform(g, 'EPSG:4326', 'EPSG:32618') FROM t"
-    assert _rewrite_two_arg_transform(three) == three
+    assert _rewrite_spatial_predicates(three) == three
     nested = "SELECT ST_Transform(ST_Point(a, b), 3857) FROM t"
     assert (
-        _rewrite_two_arg_transform(nested)
+        _rewrite_spatial_predicates(nested)
         == "SELECT ST_TransformSrid(ST_Point(a, b), 3857) FROM t"
     )
     lit = "SELECT ST_Transform(g, s, d), 'ST_Transform(x, 1)' FROM t"
-    assert _rewrite_two_arg_transform(lit) == lit  # 3-arg + literal kept
+    assert _rewrite_spatial_predicates(lit) == lit  # 3-arg + literal kept
 
     eng = Engine(spark)
     spark.read.parquet(f"{sf_dir}/nation.parquet").createOrReplaceTempView(

@@ -315,6 +315,26 @@ def test_sql_spatial_predicate_pushdown(spark, sf_dir, tmp_path):
     bare = spark.sql(q)  # un-rewritten: bare UDF evaluation
     assert sorted(r[0] for r in got.collect()) == sorted(r[0] for r in bare.collect())
 
+    # spellings the parser reads as the same call: backticked columns, a
+    # double-quoted WKT, a comment and a newline inside the call, and
+    # lower-case names
+    rect = ("POLYGON ((0.0025 0.0025, 40.0025 0.0025, 40.0025 30.0025, "
+            "0.0025 30.0025, 0.0025 0.0025))")
+    for pred in (
+        f"ST_Within(ST_MakePoint(`lon`, `lat`), ST_GeomFromText('{rect}'))",
+        f'ST_Within(ST_MakePoint(lon, lat), ST_GeomFromText("{rect}"))',
+        f"ST_Within(ST_MakePoint(lon, lat) /* pt */,\n ST_GeomFromText('{rect}'))",
+        f"st_within(st_makepoint(lon, lat), st_geomfromtext('{rect}'))",
+    ):
+        qs = f"SELECT o_orderkey FROM pts WHERE {pred}"
+        got_s = eng.sql(qs)
+        plan_s = got_s._jdf.queryExecution().executedPlan().toString()
+        assert "GreaterThanOrEqual(lon" in plan_s, (pred, plan_s[:1500])
+        assert "st_makepoint" not in plan_s.lower(), (pred, plan_s[:1500])
+        assert sorted(r[0] for r in got_s.collect()) == sorted(
+            r[0] for r in spark.sql(qs).collect()
+        )
+
     # DWithin expands the envelope by the distance literal
     qd = ("SELECT o_orderkey FROM pts WHERE ST_DWithin(ST_MakePoint(lon, lat), "
           "ST_GeomFromText('POINT (10.005 10.005)'), 20.0)")
@@ -570,9 +590,17 @@ def test_sql_literal_predicates_match_bare_udfs(spark, tmp_path):
     preds += [
         f"ST_Touches(ST_MakePoint(lon, lat), ST_GeomFromText('{_LIT_HOLED}'))",
         f"ST_Equals(ST_MakePoint(lon, lat), ST_GeomFromText('{_LIT_POINT}'))",
+        # spellings the parser reads as the same call
+        f"ST_Within(ST_MakePoint(`lon`, `lat`), ST_GeomFromText('{_LIT_HOLED}'))",
+        f'ST_Contains(ST_GeomFromText("{_LIT_MULTI}"), ST_MakePoint(lon, lat))',
+        f"ST_DWithin(ST_MakePoint(lon, lat) /* pt */,\n"
+        f" ST_GeomFromText('{_LIT_LINE}'), 1.5)",
+        f"st_intersects(st_geomfromtext('{_LIT_RECT}'), st_makepoint(lon, lat))",
     ]
     for pred in preds:
-        assert "ST_MakePoint" not in _rewrite_spatial_predicates(pred), pred
+        # a bare expression is not a statement: the rewrite parses one
+        rewritten = _rewrite_spatial_predicates(f"SELECT {pred}")
+        assert "st_makepoint" not in rewritten.lower(), pred
     # one query per side and position: the WHERE forms as a UNION ALL
     # keyed by predicate, the SELECT-list forms as one column each
     where_q = " UNION ALL ".join(
@@ -611,6 +639,56 @@ def test_sql_predicate_inside_string_literal_unchanged(spark):
         assert got == [(call, False), (call, True)]
 
 
+def test_sql_literal_rewrite_degenerate_ring_not_rectangle(spark):
+    """A zero-area back-and-forth ring has a rectangle's envelope and
+    corner values but is no rectangle (ST_IsRectangle says False): the
+    rewrite's exact test must answer as the relate UDF does, not with
+    the envelope's comparisons."""
+    ring = "POLYGON ((0 0, 1 0, 0 0, 0 1, 0 0))"
+    q = ("SELECT x, y, "
+         f"ST_Within(ST_MakePoint(x, y), ST_GeomFromText('{ring}')) AS w, "
+         f"ST_Intersects(ST_MakePoint(x, y), ST_GeomFromText('{ring}')) AS i, "
+         f"ST_IsRectangle(ST_GeomFromText('{ring}')) AS r "
+         "FROM VALUES (0.5D, 0.5D), (0.5D, 0.0D), (0.0D, 0.5D), (2.0D, 2.0D) AS t(x, y)")
+    got = sorted(map(tuple, Engine(spark).sql(q).collect()))
+    assert got == sorted(map(tuple, spark.sql(q).collect()))
+    assert [r[2:] for r in got] == [(False, True, False), (False, True, False),
+                                    (False, False, False), (False, False, False)]
+
+
+def test_sql_literal_rewrite_composes_with_routed_join(spark, sf_dir, tmp_path):
+    """A literal-geometry predicate on a routed join's point side, in the
+    WHERE clause and inside a CTE operand: the rewrite's text is made from
+    the router's qualifier moves (``p.`` -> the view's name), so the join
+    still routes (no fallback, no BroadcastNestedLoopJoin), the literal
+    call is gone from the plan, and the rows equal plain spark.sql's."""
+    from geomesa_sql_spark.io.fixtures import nation_squares, orders_points
+
+    eng = Engine(spark)
+    p1, p2 = str(tmp_path / "p"), str(tmp_path / "n")
+    orders_points(spark, sf_dir).select("o_orderkey", "lon", "lat").write.parquet(p1)
+    nation_squares(spark, sf_dir).select("n_nationkey", "poly").write.parquet(p2)
+    eng.register_table("cmp_pts", p1)
+    eng.register_table("cmp_nsq", p2)
+    lit = ("ST_GeomFromText('POLYGON ((-40.0037 -20.0013, 30.0041 -45.0029, "
+           "80.0017 10.0023, 20.0031 60.0019, -55.0043 25.0037))')")
+    for q in (
+        "SELECT p.o_orderkey, s.n_nationkey FROM cmp_pts p JOIN cmp_nsq s "
+        "ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly) "
+        f"WHERE ST_Contains({lit}, ST_MakePoint(p.lon, p.lat))",
+        f"WITH w AS (SELECT * FROM cmp_pts WHERE ST_Contains({lit}, "
+        "ST_MakePoint(lon, lat))) SELECT p.o_orderkey, s.n_nationkey "
+        "FROM w p JOIN cmp_nsq s ON ST_Intersects(ST_MakePoint(p.lon, p.lat), s.poly)",
+    ):
+        got = eng.sql(q)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" not in plan, plan[:1500]
+        assert "ST_Contains" not in plan and "GreaterThanOrEqual(lon" in plan, plan[:1500]
+        want = sorted(map(tuple, spark.sql(q).collect()))
+        assert want and sorted(map(tuple, got.collect())) == want
+        assert not eng.route_fallbacks
+
+
 def test_sql_dml_where_gets_spatial_rewrite(spark, sf_dir, tmp_path):
     """DELETE ... WHERE ST_Contains(<literal>, ST_MakePoint(lon, lat))
     runs through the same rewrite as a SELECT: the affected count and
@@ -629,10 +707,52 @@ def test_sql_dml_where_gets_spatial_rewrite(spark, sf_dir, tmp_path):
     assert want_gone and want_left
 
     eng = Engine(spark)
-    eng.create_table("dml_pts", str(tmp_path / "dml_pts"), src)
+    eng.create_table("dml_pts", str(tmp_path / "dml_pts"),
+                     src.withColumn("g", F.expr("ST_MakePoint(lon, lat)")))
     n = eng.sql(f"DELETE FROM dml_pts WHERE {pred}").collect()[0][0]
     assert n == len(want_gone)
     assert {r[0] for r in eng.sql("SELECT image_id FROM dml_pts").collect()} == want_left
+
+    # spellings the parser reads as the same call, one box each: every
+    # one reaches the delete as coordinate comparisons, no ST_MakePoint
+    from unittest import mock
+
+    def box(x0, y0, x1, y1):
+        return f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))"
+
+    shaped = " OR ".join([
+        f"ST_Within(ST_MakePoint(`lon`, `lat`), ST_GeomFromText('{box(0, 0, 40, 30)}'))",
+        f'ST_Within(ST_MakePoint(lon, lat), ST_GeomFromText("{box(-90, -60, -50, -20)}"))',
+        f"ST_Contains(ST_GeomFromText('{box(100, 20, 140, 60)}') /* poly */,\n"
+        "  ST_MakePoint(lon, lat))",
+        f"st_within(st_makepoint(lon, lat), st_geomfromtext('{box(-170, 50, -130, 85)}'))",
+    ])
+    left = spark.sql(f"SELECT image_id FROM dml_src WHERE NOT ({pred})")
+    want_gone = {r[0] for r in left.filter(F.expr(shaped)).collect()}
+    assert want_gone
+    with mock.patch.object(Engine, "delete", autospec=True,
+                           side_effect=Engine.delete) as delete:
+        n = eng.sql(f"DELETE FROM dml_pts WHERE {shaped}").collect()[0][0]
+    where = str(delete.call_args.args[2])
+    assert "lon >=" in where and "st_makepoint" not in where.lower(), where
+    assert n == len(want_gone)
+    want_left -= want_gone
+    assert {r[0] for r in eng.sql("SELECT image_id FROM dml_pts").collect()} == want_left
+
+    # the SET list takes the 2-arg ST_Transform rename too
+    n = eng.sql("UPDATE dml_pts SET g = ST_Transform(g, 3857) "
+                "WHERE image_id % 2 = 0").collect()[0][0]
+    assert n == sum(1 for k in want_left if k % 2 == 0)
+    got = {r[0]: (r[1], r[2]) for r in eng.sql(
+        "SELECT image_id, ST_SRID(g), ST_X(g) FROM dml_pts").collect()}
+    want = {r[0]: (r[1], r[2]) for r in spark.sql(
+        "SELECT image_id, ST_SRID(ST_TransformSrid(g, 3857)), "
+        "ST_X(ST_Transform(g, 'EPSG:4326', 'EPSG:3857')) FROM "
+        "(SELECT image_id, ST_MakePoint(lon, lat) AS g FROM dml_src) "
+        "WHERE image_id % 2 = 0").collect()}
+    assert {k: v for k, v in got.items() if k % 2 == 0} == {
+        k: want[k] for k in want_left if k % 2 == 0}
+    assert {s for k, (s, _) in got.items() if k % 2} <= {0, 4326}
 
 
 def test_sql_right_join_not_silently_inner(spark, sf_dir, tmp_path):
