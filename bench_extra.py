@@ -7,7 +7,8 @@ not the one that looks expensive. Prints one JSON line.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
      SPARK_GRAFT_CPUS   (default 32)
      SPARK_GRAFT_PROFILE (comma list: dbscan,minhash,mvtwkb,knn,sjoin,
-                          exif,pyudf,icebergprune — default all)
+                          exif,pyudf,icebergprune,icebergcommit —
+                          default all)
 """
 
 from __future__ import annotations
@@ -45,7 +46,8 @@ def main() -> None:
     which = set(
         os.environ.get(
             "SPARK_GRAFT_PROFILE",
-            "dbscan,minhash,mvtwkb,knn,sjoin,exif,pyudf,icebergprune",
+            "dbscan,minhash,mvtwkb,knn,sjoin,exif,pyudf,icebergprune,"
+            "icebergcommit",
         ).split(",")
     )
     spark = get_spark("bench_extra", master=f"local[{cpus}]")
@@ -263,6 +265,63 @@ def main() -> None:
                         for p in read.inputFiles()}
                 out[f"iceberg_bbox_{tag}_files_kept"] = len(kept & data)
                 out[f"iceberg_bbox_{tag}_files_total"] = len(data)
+
+    if "icebergcommit" in which:
+        # per-statement cost of the Iceberg DML verbs on a 20k-row
+        # Engine.create_table table: median Engine.sql wall time of
+        # INSERT, UPDATE and DELETE and of Engine.compact, and the median
+        # time of the metadata commit (iceberg_meta._commit) inside them
+        import statistics
+        import tempfile
+
+        from geomesa_sql_spark.engine import Engine
+        from geomesa_sql_spark.io import iceberg_meta as im
+
+        rows = spark.range(20_000, numPartitions=8).select(
+            F.col("id").alias("pid"),
+            ((F.col("id") * 7919 % 36000) / 100.0 - 180.0).alias("lon"),
+            ((F.col("id") * 104729 % 17000) / 100.0 - 85.0).alias("lat"),
+            (F.col("id") % 10).cast("int").alias("cat"),
+            (F.col("id") % 1000 / 10.0).alias("val"),
+        )
+        commit_s: list[float] = []
+        real_commit = im._commit
+
+        def timed_commit(*a, **kw):
+            t0 = time.perf_counter()
+            try:
+                return real_commit(*a, **kw)
+            finally:
+                commit_s.append(time.perf_counter() - t0)
+
+        verbs = {
+            "insert": "INSERT INTO pts SELECT pid + {off}, lon, lat, cat, val "
+                      "FROM src WHERE pid % 200 = {k}",
+            "update": "UPDATE pts SET lon = lon + 0.125 WHERE pid % 97 = {k}",
+            "delete": "DELETE FROM pts WHERE pid % 89 = {k}",
+        }
+        wall: dict[str, list[float]] = {v: [] for v in (*verbs, "compact")}
+        im._commit = timed_commit
+        try:
+            with tempfile.TemporaryDirectory() as tmp:
+                eng = Engine(spark, fid_col="pid")
+                eng.register_view("src", rows)
+                eng.create_table("pts", f"{tmp}/pts", rows)
+                commit_s.clear()
+                for i in range(8):  # the first round warms up
+                    for verb, sql in verbs.items():
+                        q = sql.format(k=i, off=(i + 1) * 1_000_000)
+                        wall[verb].append(act(lambda: eng.sql(q).collect()))
+                    wall["compact"].append(act(lambda: eng.compact("pts")))
+                    if i == 0:
+                        commit_s.clear()
+                        for ts in wall.values():
+                            ts.clear()
+        finally:
+            im._commit = real_commit
+        for verb, ts in wall.items():
+            out[f"iceberg_{verb}_s"] = round(statistics.median(ts), 4)
+        out["iceberg_commit_ms"] = round(statistics.median(commit_s) * 1e3, 2)
 
     print(json.dumps({"profile": out, "sf": sf_dir, "cpus": cpus}))
 

@@ -689,7 +689,12 @@ class Engine:
             sub = ex.sub("plan") if ex.cls == "Exists" else None
             where = sub.kids[0] if sub is not None and sub.cls == "Project" else None
             call = where.sub("condition") if where is not None and where.cls == "Filter" else None
-            if not _st_call(call):
+            # an operand that names no column leaves nothing to join: the
+            # plain plan (and the literal rewrite) answers it; any other
+            # shape goes on to _splice, which routes it or bails
+            if not _st_call(call) or not all(
+                    any(n.cls == "UnresolvedAttribute" for n in sqltree.walk(a))
+                    for a in call.kids[:2]):
                 continue
             cspan = c.span()
             if ex is c:  # a bare Exists carries its parent's origin: the

@@ -89,11 +89,11 @@ class IcebergDmlTable:
     def insert(self, rows: DataFrame) -> int:
         """Append; missing columns null-filled, extra columns rejected.
         Returns affected-row count (ModificationTest.scala:36-141)."""
-        cols = self.columns
+        schema = self._table().spark_schema(self.spark)
+        cols = schema.fieldNames()
         extra = set(rows.columns) - set(cols)
         if extra:
             raise ValueError(f"unknown columns in INSERT: {sorted(extra)}")
-        current = self.read()
         # Cast EVERY column to the table schema, not just null fills:
         # Calcite coerces INSERT rows to the table row type
         # (reference parity); without the cast a type-mismatched INSERT
@@ -103,7 +103,7 @@ class IcebergDmlTable:
             aligned = rows.select(
                 *[
                     (F.col(c) if c in rows.columns else F.lit(None))
-                    .cast(current.schema[c].dataType)
+                    .cast(schema[c].dataType)
                     .alias(c)
                     for c in cols
                 ]

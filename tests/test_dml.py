@@ -150,6 +150,29 @@ def test_insert_non_castable_rejected(spark, table):
         table.insert(rows)
 
 
+def test_insert_types_come_from_the_iceberg_schema(spark, table, tmp_path, monkeypatch):
+    """INSERT casts to the table's types without planning a read of the
+    table: a field-id table's Spark schema is built from its Iceberg
+    schema. A table with an opaque passthrough column (an array, kept
+    as-is in parquet, recorded as binary) still casts to the type its
+    data files hold."""
+    from geomesa_sql_spark.io import iceberg_meta as im
+
+    want = dict(table.read().dtypes)
+    with monkeypatch.context() as m:
+        m.setattr(im.IcebergTable, "read", lambda *a, **k: pytest.fail("read planned"))
+        assert table.insert(spark.createDataFrame([(4000, 3.0)], "fid int, n_regionkey double")) == 1
+    got = table.read()
+    assert dict(got.dtypes) == want
+    assert got.filter(F.col("fid") == 4000).first()["n_regionkey"] == 3
+
+    opaque = IcebergDmlTable(spark, str(tmp_path / "opaque"), fid_col="fid").create(
+        spark.createDataFrame([(1, [1.0, 2.0])], "fid long, v array<double>"))
+    assert opaque.insert(spark.createDataFrame([(2,)], "fid int")) == 1
+    rows = sorted(opaque.read().collect())
+    assert [(r.fid, r.v) for r in rows] == [(1, [1.0, 2.0]), (2, None)]
+
+
 def test_merge_upsert_counts_and_values(spark, table):
     """MERGE = partial-row update for matched keys + insert for new
     keys, one atomic commit, exact counts, old snapshot intact."""

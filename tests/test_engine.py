@@ -959,8 +959,9 @@ def test_router_bail_on_outer_semi_anti_raises(spark, sf_dir, tmp_path):
     """A LEFT JOIN or [NOT] EXISTS over tables without the fid_col key
     is a router bail that plain Spark SQL cannot plan (a Python UDF in
     the ON clause of an outer/semi/anti join): Engine.sql raises a
-    ValueError naming the reason, counted once. An uncorrelated EXISTS
-    bails too but Spark answers it, so it still answers."""
+    ValueError naming the reason, counted once. An EXISTS whose spatial
+    call has a literal operand has nothing to join: it is no routing
+    candidate, counts no fallback and answers as plain Spark does."""
     from collections import Counter
 
     from geomesa_sql_spark.io.fixtures import nation_squares, orders_points
@@ -989,13 +990,55 @@ def test_router_bail_on_outer_semi_anti_raises(spark, sf_dir, tmp_path):
     q = (f"SELECT count(*) FROM bxpts p WHERE EXISTS (SELECT 1 FROM bxnsq s "
          f"WHERE ST_Intersects({square}, s.poly))")
     assert eng.sql(q).collect() == spark.sql(q).collect()
-    assert sum(eng.route_fallbacks.values()) == 4
+    assert sum(eng.route_fallbacks.values()) == 3
     assert eng.route_fallbacks == Counter({
         "LEFT spatial join needs a unique key": 1,
         "LEFT_SEMI spatial join needs a unique key": 1,
         "LEFT_ANTI spatial join needs a unique key": 1,
-        "unsupported ST_ predicate or operand shape in ON": 1,
     })
+
+
+def test_exists_with_literal_operand_is_not_a_join(spark, tmp_path, caplog):
+    """``EXISTS (.. WHERE ST_Within(ST_MakePoint(a, b), <WKT literal>))``
+    has nothing to join: the router leaves it alone (no fallback, no
+    cartesian warning) and the rows equal plain spark.sql's. A
+    correlated operand the router cannot plan still bails by name."""
+    import logging
+    from collections import Counter
+
+    from geomesa_sql_spark.geom.model import box
+    from geomesa_sql_spark.geom.wkb import geom_to_wkb
+
+    eng = Engine(spark, fid_col="id")
+    p1, p2 = str(tmp_path / "p"), str(tmp_path / "q")
+    spark.createDataFrame(
+        [(1, 0.5, 0.5), (2, 5.0, 5.0), (3, 0.2, 0.9), (4, None, 0.5)],
+        "id long, a double, b double",
+    ).write.parquet(p1)
+    spark.createDataFrame(
+        [(1, bytearray(geom_to_wkb(box(0, 0, 1, 1))))], "gid long, poly binary"
+    ).write.parquet(p2)
+    eng.register_table("lxp", p1)
+    eng.register_table("lxq", p2)
+    square = "ST_GeomFromText('POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))')"
+    q = ("SELECT p.id FROM lxp p WHERE {}EXISTS (SELECT 1 FROM lxq s WHERE "
+         f"ST_Within(ST_MakePoint(p.a, p.b), {square})) ORDER BY p.id")
+    with caplog.at_level(logging.WARNING, logger="geomesa_sql_spark.engine"):
+        got, got_not = (eng.sql(q.format(neg)).collect() for neg in ("", "NOT "))
+    want = spark.sql(q.format("")).collect()
+    assert got == want and [r.id for r in want] == [1, 3]
+    # plain Spark fails the NOT EXISTS form with an internal error (a
+    # Python UDF over outer columns in an anti join): its rows are the
+    # complement of the EXISTS form's
+    assert [r.id for r in got_not] == [2, 4]
+    assert not eng.route_fallbacks
+    assert not [r for r in caplog.records if "cartesian" in r.getMessage()]
+    buffered = ("SELECT p.id FROM lxp p WHERE EXISTS (SELECT 1 FROM lxq s WHERE "
+                "ST_Intersects(ST_Buffer(ST_MakePoint(p.a, p.b), 0.1), s.poly))")
+    with pytest.raises(ValueError, match="operand shape"):
+        eng.sql(buffered)
+    assert eng.route_fallbacks == Counter(
+        {"unsupported ST_ predicate or operand shape in ON": 1})
 
 
 def test_sql_alias_qualified_operands_orient(spark, sf_dir, tmp_path):

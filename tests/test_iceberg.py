@@ -801,6 +801,155 @@ def test_iceberg_rollback(spark, tmp_path):
     assert im.IcebergTable.load(path).read(spark).count() == 210
 
 
+def test_concurrent_commit_second_writer_refused(spark, tmp_path, monkeypatch):
+    """Two writers load the table at the same version and both append:
+    the second commit is refused with an error naming the table and the
+    version, the first commit's rows stay readable, and the table takes
+    the next commit. The version file is the commit point, so the
+    second writer can no longer overwrite the first one's metadata."""
+    import re
+
+    path = str(tmp_path / "cc")
+    im.create_table(_mkdf(spark, 0, 100), path)
+    a, b = im.IcebergTable.load(path), im.IcebergTable.load(path)
+    assert a.version == b.version == 1
+
+    def append_from(handle, df):
+        # the writer commits on top of the version it loaded earlier
+        with monkeypatch.context() as m:
+            m.setattr(im.IcebergTable, "load", classmethod(lambda cls, p: handle))
+            return im.append(df, path)
+
+    assert append_from(a, _mkdf(spark, 100, 150)).version == 2
+    with pytest.raises(
+        im.CommitConflictError, match=rf"{re.escape(os.path.abspath(path))}.*version 2"
+    ):
+        append_from(b, _mkdf(spark, 500, 600))
+    t = im.IcebergTable.load(path)
+    assert t.version == 2
+    assert sorted(r.k for r in t.read(spark).collect()) == list(range(150))
+    t3 = im.append(_mkdf(spark, 150, 160), path)
+    assert t3.version == 3
+    assert im.IcebergTable.load(path).read(spark).count() == 160
+    # a metadata-only commit from a stale handle is refused the same way
+    with monkeypatch.context() as m:
+        m.setattr(im.IcebergTable, "load", classmethod(lambda cls, p: b))
+        with pytest.raises(im.CommitConflictError, match="version 2"):
+            im.add_column(path, "z", "long")
+    assert im.IcebergTable.load(path).version == 3
+
+
+def test_concurrent_metadata_commits_lose_no_update(spark, tmp_path):
+    """Eight threads (more than a 4-core host's cores) each add three
+    columns, retrying each metadata-only commit on CommitConflictError;
+    with a short switch interval the commits interleave. A lost update would
+    drop a column or a version: every column lands, one version each,
+    and concurrent loads never read a half-written version file."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "mt")
+    im.create_table(_mkdf(spark, 0, 10), path)
+    errors = []
+
+    def writer(w):
+        try:
+            for c in range(3):
+                for _ in range(500):
+                    try:
+                        im.add_column(path, f"c{w}_{c}", "long")
+                        break
+                    except im.CommitConflictError:
+                        im.IcebergTable.load(path)  # a reader meanwhile
+                else:
+                    raise AssertionError(f"writer {w} never committed")
+        except Exception as ex:  # surfaced by the assertion below
+            errors.append(ex)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(w,)) for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    t = im.IcebergTable.load(path)
+    assert t.version == 1 + 8 * 3
+    names = {f["name"] for f in t.schema_fields()}
+    assert {f"c{w}_{c}" for w in range(8) for c in range(3)} <= names
+    assert t.read(spark).count() == 10
+
+
+def test_load_walks_past_a_stale_or_broken_hint(spark, tmp_path):
+    """The version hint is only a shortcut: left stale (a crash between
+    the version-file write and the hint write), empty, unparsable or
+    missing, ``load`` still returns the newest version and the next
+    commit succeeds on top of it."""
+    path = str(tmp_path / "hint")
+    im.create_table(_mkdf(spark, 0, 10), path)
+    im.append(_mkdf(spark, 10, 20), path)
+    hint = os.path.join(path, "metadata", "version-hint.text")
+    n = 20
+    for text in ("1", "", "v3\x00", None):
+        os.unlink(hint)
+        if text is not None:
+            with open(hint, "x") as f:
+                f.write(text)
+        newest = im.IcebergTable.load(path)
+        assert newest.version == n // 10
+        assert newest.read(spark).count() == n
+        t = im.append(_mkdf(spark, n, n + 10), path)
+        n += 10
+        assert t.version == n // 10
+        assert im.IcebergTable.load(path).read(spark).count() == n
+
+
+def test_commit_path_never_truncates_an_existing_file(spark, tmp_path, monkeypatch):
+    """Every commit verb runs with ``open`` in iceberg_meta refusing a
+    truncating mode on an existing path, and ``os.replace``/``os.rename``
+    refusing an existing target: a commit only creates files. Truncating
+    the version hint in place cost a disk flush on every commit."""
+    from geomesa_sql_spark.io.dml import IcebergDmlTable
+
+    real_open, real_replace, real_rename = open, os.replace, os.rename
+    reopened = []
+
+    def guarded_open(file, mode="r", *a, **kw):
+        if "w" in mode and os.path.exists(file):
+            reopened.append((file, mode))
+            raise AssertionError(f"open({file!r}, {mode!r}) truncates an existing file")
+        return real_open(file, mode, *a, **kw)
+
+    def guarded(real):
+        def move(src, dst, *a, **kw):
+            if os.path.exists(dst):
+                reopened.append((dst, real.__name__))
+                raise AssertionError(f"{real.__name__} over existing {dst!r}")
+            return real(src, dst, *a, **kw)
+        return move
+
+    path = str(tmp_path / "guard")
+    monkeypatch.setattr(im, "open", guarded_open, raising=False)
+    monkeypatch.setattr(os, "replace", guarded(real_replace))
+    monkeypatch.setattr(os, "rename", guarded(real_rename))
+    im.create_table(_mkdf(spark, 0, 200).repartition(2), path)
+    first = im.IcebergTable.load(path).snapshot()["snapshot-id"]
+    im.append(_mkdf(spark, 200, 300), path)
+    im.overwrite(spark, path, _mkdf(spark, 0, 250))
+    im.delete_where(spark, path, "k < 50")
+    assert IcebergDmlTable(spark, path, fid_col="k").compact() == 1
+    t = im.rollback(path, snapshot_id=first)
+    monkeypatch.undo()
+    assert not reopened
+    assert t.version == 6
+    assert im.IcebergTable.load(path).read(spark).count() == 200
+
+
 # ---- moved from the retired Data Source test module: S2 layout reads and
 # ---- the review r4m regressions (iceberg_meta/avro/read_table)
 
